@@ -52,23 +52,36 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = ap.parse_args(argv)
 
-    from ir_analyses_spark.etl import pipeline
     from ir_analyses_spark.etl.config_toml import load_config, xbrl_mappings
-    from ir_analyses_spark.queries import summary as summary_q
     from ir_analyses_spark.session import get_spark
 
     company_mapping, report_mapping = xbrl_mappings(load_config(args.config))
     spark = get_spark(app_name="ir_analyses_backfill", cpus=args.cpus)
-
-    bundle = pipeline.backfill_from_csvs(
-        spark, args.csv_glob, args.out_dir, company_mapping, report_mapping
+    load_and_report(
+        spark, args.csv_glob, args.out_dir, company_mapping, report_mapping,
+        args.summary,
     )
-    for qname in ("company_rejects", "report_rejects"):
-        n = bundle[qname].count()
+    return 0
+
+
+def load_and_report(
+    spark, csvs, out_dir: str, company_mapping, report_mapping, summary: bool
+) -> None:
+    """Backfill ``csvs`` (a glob or a list of paths) into ``out_dir`` and
+    report: quarantine counts to stderr, the silver table counts to stdout
+    as one JSON line, then with ``summary`` one JSON line per company.
+    Shared by this CLI and ingest.py."""
+    from ir_analyses_spark.etl import pipeline
+    from ir_analyses_spark.queries import summary as summary_q
+
+    rejects = pipeline.backfill_from_csvs(
+        spark, csvs, out_dir, company_mapping, report_mapping
+    )
+    for qname, n in rejects.items():
         if n:
             print(f"{qname}: {n} rows quarantined", file=sys.stderr)
 
-    tables = pipeline.read_silver(spark, args.out_dir)
+    tables = pipeline.read_silver(spark, out_dir)
     print(
         json.dumps(
             {name: df.count() for name, df in sorted(tables.items())},
@@ -76,7 +89,7 @@ def main(argv: list[str] | None = None) -> int:
         )
     )
 
-    if args.summary:
+    if summary:
         rows = summary_q.financial_summary(
             tables["companies"],
             tables["reports"],
@@ -85,7 +98,6 @@ def main(argv: list[str] | None = None) -> int:
         ).collect()
         for r in rows:
             print(json.dumps(r.asDict(), ensure_ascii=False, default=str))
-    return 0
 
 
 if __name__ == "__main__":

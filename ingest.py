@@ -104,9 +104,8 @@ def main(argv: list[str] | None = None, transport=None) -> int:
             )
             return 3
 
-        from ir_analyses_spark.etl import pipeline
+        from backfill import load_and_report
         from ir_analyses_spark.etl.config_toml import load_config, xbrl_mappings
-        from ir_analyses_spark.queries import summary as summary_q
         from ir_analyses_spark.session import get_spark
 
         # the reference loads its config before any ingest work
@@ -115,31 +114,10 @@ def main(argv: list[str] | None = None, transport=None) -> int:
         company_mapping, report_mapping = xbrl_mappings(load_config(args.config))
 
         spark = get_spark(app_name="ir_analyses_ingest", cpus=args.cpus)
-        bundle = pipeline.backfill_from_csvs(
-            spark, paths, args.out_dir, company_mapping, report_mapping
+        load_and_report(
+            spark, paths, args.out_dir, company_mapping, report_mapping,
+            args.summary,
         )
-        for qname in ("company_rejects", "report_rejects"):
-            n = bundle[qname].count()
-            if n:
-                print(f"{qname}: {n} rows quarantined", file=sys.stderr)
-
-        tables = pipeline.read_silver(spark, args.out_dir)
-        print(
-            json.dumps(
-                {name: df.count() for name, df in sorted(tables.items())},
-                ensure_ascii=False,
-            )
-        )
-
-        if args.summary:
-            rows = summary_q.financial_summary(
-                tables["companies"],
-                tables["reports"],
-                tables["facts"],
-                tables["items"],
-            ).collect()
-            for r in rows:
-                print(json.dumps(r.asDict(), ensure_ascii=False, default=str))
         return 0
     finally:
         if tmp_dest is not None:

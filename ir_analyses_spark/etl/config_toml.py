@@ -26,7 +26,6 @@ import tomllib
 
 from . import conform
 from .conform import XBRL_COMPANY_MAPPING, XBRL_REPORT_MAPPING
-from .standardize import FILING_ID
 
 logger = logging.getLogger(__name__)
 
@@ -137,28 +136,19 @@ def conform_all_with_mappings(
     With the mappings absent OR value-equal to the in-code defaults this
     DELEGATES to ``conform_all`` — the CLIs always pass materialized
     dicts from ``xbrl_mappings`` (the defaults when no file overrides
-    them), so delegation must key on VALUE, not None-ness, or the
-    default path would never actually share conform_all's composition
-    (review-caught). Only a genuine override takes the explicit-mapping
-    composition below — the same four conform functions, same bundle
-    shape."""
+    them), so delegation must key on VALUE, not None-ness.
+    A genuine override takes ``conform_mapped``, the same composition
+    with the override's mappings, same bundle shape."""
     if company_mapping in (None, XBRL_COMPANY_MAPPING) and report_mapping in (
         None,
         XBRL_REPORT_MAPPING,
     ):
         return conform.conform_all(std)
-    companies, company_rejects = conform.conform_companies(std, company_mapping)
-    reports, report_rejects = conform.conform_reports(std, companies, report_mapping)
-    items = conform.conform_items(std)
-    facts = conform.conform_facts(std, reports, items)
-    return {
-        "companies": companies.drop(FILING_ID),
-        "reports": reports.drop(FILING_ID),
-        "items": items,
-        "facts": facts,
-        "company_rejects": company_rejects,
-        "report_rejects": report_rejects,
-    }
+    return conform.conform_mapped(
+        std,
+        company_mapping or XBRL_COMPANY_MAPPING,
+        report_mapping or XBRL_REPORT_MAPPING,
+    )
 
 
 #: ``[curation]`` keys accepted by :func:`curation_settings`, mapped to

@@ -18,6 +18,12 @@ aborting the other 15,999 filings in the batch.
 Config-driven extraction: which XBRL elements feed which column stays data,
 not code (reference config/config.toml:35-49) — pass a ``{column:
 element_id}`` mapping; defaults mirror the reference's config.
+
+Projections and aggregates are written as SQL expression strings
+(``selectExpr`` / ``F.expr``): each one is a single parse on the JVM,
+where a composed ``Column`` costs a py4j round trip per function call
+(PySpark 4 also ships each call's call site), and a load plans these
+frames on the driver between its Spark jobs.
 """
 
 from __future__ import annotations
@@ -47,17 +53,28 @@ XBRL_REPORT_MAPPING = {
 
 #: financial-statement row selector (reference utils/data_mapper.py:174-176)
 FINANCIAL_ELEMENT_PATTERN = "jppfs_cor:|jpigp_cor:"
+_IS_FINANCIAL = f"element_id RLIKE '{FINANCIAL_ELEMENT_PATTERN}'"
 
 
-def _scalar_string(
-    is_numeric: F.Column, value: F.Column, value_text: F.Column
-) -> F.Column:
-    """The reference's extraction-edge value rule: numerics become
+def _quoted(name: str) -> str:
+    """``name`` as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_string(text: str) -> str:
+    """``text`` as a SQL string literal."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _scalar_string(row: str) -> str:
+    """SQL of the reference's extraction-edge value rule over the struct
+    column ``row`` (is_numeric, value, value_text): numerics become
     ``str(int(value))`` (decimal truncation toward zero), text passes
     through (reference utils/data_mapper.py:87-92). Only used at the cover
     extraction edge — never in the fact table (SURVEY §7.3.3)."""
-    return F.when(is_numeric, value.cast("long").cast("string")).otherwise(
-        value_text
+    return (
+        f"CASE WHEN {row}.is_numeric THEN CAST(CAST({row}.value AS BIGINT) AS STRING)"
+        f" ELSE {row}.value_text END"
     )
 
 
@@ -66,9 +83,12 @@ def extract_cover_values(std: DataFrame, mapping: dict[str, str]) -> DataFrame:
     twin of ``{key: _get_value(df, element_id)}``
     (reference utils/data_mapper.py:137-141,247-250).
 
-    First-matching-row semantics are made deterministic by ``_row_seq``
-    (``min_by`` = the filing's earliest row for that element). The pivot is
-    bounded by the declared element list, never the full element_id domain
+    One ``groupBy(filing_id)`` with one ``min_by`` per mapped element,
+    ordered by ``_row_seq`` where the row carries that element and NULL
+    elsewhere: ``min_by`` skips NULL orderings, so each column is the
+    filing's earliest row for its element (the reference's first-match
+    rule, made deterministic) and the aggregate stays bounded by the
+    declared element list, never the full element_id domain
     (SURVEY §7.3.6).
 
     Every filing present in ``std`` gets an output row — a filing with NO
@@ -77,32 +97,17 @@ def extract_cover_values(std: DataFrame, mapping: dict[str, str]) -> DataFrame:
     (the reference raises ValueError for such filings,
     reference utils/data_mapper.py:142-151; silently producing nothing
     would put it in neither the tables nor the rejects)."""
-    element_ids = list(mapping.values())
-    first_per_element = (
-        std.filter(F.col("element_id").isin(element_ids))
-        .groupBy(FILING_ID, "element_id")
-        .agg(
-            F.min_by(
-                F.struct("is_numeric", "value", "value_text"), F.col(ROW_SEQ)
-            ).alias("r")
-        )
-        .select(
-            FILING_ID,
-            "element_id",
-            _scalar_string(
-                F.col("r.is_numeric"), F.col("r.value"), F.col("r.value_text")
-            ).alias("v"),
-        )
+    first = std.groupBy(FILING_ID).agg(
+        *[
+            F.expr(
+                "min_by(struct(is_numeric, value, value_text), CASE WHEN"
+                f" element_id = {_sql_string(eid)} THEN {ROW_SEQ} END) AS {_quoted(k)}"
+            )
+            for k, eid in mapping.items()
+        ]
     )
-    pivoted = (
-        first_per_element.groupBy(FILING_ID)
-        .pivot("element_id", element_ids)
-        .agg(F.first("v"))
-    )
-    all_filings = std.select(FILING_ID).distinct()
-    pivoted = all_filings.join(pivoted, FILING_ID, "left")
-    return pivoted.select(
-        FILING_ID, *[F.col(f"`{eid}`").alias(k) for k, eid in mapping.items()]
+    return first.selectExpr(
+        FILING_ID, *[f"{_scalar_string(_quoted(k))} AS {_quoted(k)}" for k in mapping]
     )
 
 
@@ -123,17 +128,8 @@ def get_value(
         )
     return (
         matches.groupBy(FILING_ID)
-        .agg(
-            F.min_by(
-                F.struct("is_numeric", "value", "value_text"), F.col(ROW_SEQ)
-            ).alias("r")
-        )
-        .select(
-            FILING_ID,
-            _scalar_string(
-                F.col("r.is_numeric"), F.col("r.value"), F.col("r.value_text")
-            ).alias("value"),
-        )
+        .agg(F.expr(f"min_by(struct(is_numeric, value, value_text), {ROW_SEQ}) AS r"))
+        .selectExpr(FILING_ID, f"{_scalar_string('r')} AS value")
     )
 
 
@@ -145,29 +141,34 @@ def conform_companies(
     quarantined with the reference's error message shape
     (reference utils/data_mapper.py:102-151)."""
     cov = extract_cover_values(std, mapping or XBRL_COMPANY_MAPPING)
-    missing = F.concat_ws(
-        ",",
-        F.when(F.col("edinet_code").isNull(), F.lit("edinet_code")),
-        F.when(F.col("company_name").isNull(), F.lit("company_name")),
+    return _companies_from_cover(_with_company_id(cov))
+
+
+def _with_company_id(cov: DataFrame) -> DataFrame:
+    """``cov`` plus ``_missing`` (the required company keys the filing
+    lacks, comma-joined) and ``company_id`` (NULL when any is missing)."""
+    return cov.selectExpr(
+        "*",
+        "concat_ws(',', CASE WHEN edinet_code IS NULL THEN 'edinet_code' END,"
+        " CASE WHEN company_name IS NULL THEN 'company_name' END) AS _missing",
+    ).selectExpr(
+        "*", "CASE WHEN _missing = '' THEN xxhash64(edinet_code) END AS company_id"
     )
-    cov = cov.withColumn("_missing", missing)
-    rejects = cov.filter(F.col("_missing") != "").select(
+
+
+def _companies_from_cover(cov: DataFrame) -> tuple[DataFrame, DataFrame]:
+    rejects = cov.filter("_missing != ''").selectExpr(
+        FILING_ID, "concat('required keys missing: ', _missing) AS reason"
+    )
+    companies = cov.filter("company_id IS NOT NULL").selectExpr(
+        "company_id",
+        "edinet_code",
+        "security_code",
+        "industry_code",
+        "company_name",
+        "current_timestamp() AS created_at",
+        "current_timestamp() AS updated_at",
         FILING_ID,
-        F.concat(F.lit("required keys missing: "), F.col("_missing")).alias("reason"),
-    )
-    companies = (
-        cov.filter(F.col("_missing") == "")
-        .drop("_missing")
-        .select(
-            F.xxhash64("edinet_code").alias("company_id"),
-            "edinet_code",
-            "security_code",
-            "industry_code",
-            "company_name",
-            F.current_timestamp().alias("created_at"),
-            F.current_timestamp().alias("updated_at"),
-            FILING_ID,
-        )
     )
     return companies, rejects
 
@@ -182,73 +183,61 @@ def conform_reports(
     ``report_id = xxhash64(company_id, fiscal_year, quarter_type)`` — the
     natural key the reference's roadmap says upserts *should* use
     (SURVEY §7.3.2)."""
+    cov = extract_cover_values(std, mapping or XBRL_REPORT_MAPPING).join(
+        companies.select(FILING_ID, "company_id"), FILING_ID, "left"
+    )
+    return _reports_from_cover(cov)
+
+
+def _reports_from_cover(cov: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Reports and their rejects from a cover frame carrying each filing's
+    ``company_id`` (NULL when its company was rejected or is missing)."""
     from .parsers import extract_fiscal_year, extract_quarter_type
 
-    cov = extract_cover_values(std, mapping or XBRL_REPORT_MAPPING)
-    parsed = (
-        cov.withColumn("fiscal_year", extract_fiscal_year(F.col("fiscal_year_and_quarter")))
-        .withColumn("quarter_type", extract_quarter_type(F.col("fiscal_year_and_quarter")))
-        .withColumn(
-            "fiscal_year_end_d",
-            F.coalesce(
-                F.expr("try_to_date(fiscal_year_end, 'yyyy/M/d')"),
-                F.expr("try_to_date(fiscal_year_end, 'yyyy-M-d')"),
-            ),
-        )
-        .withColumn(
-            "filing_date_d",
-            F.coalesce(
-                F.expr("try_to_date(filing_date, 'yyyy/M/d')"),
-                F.expr("try_to_date(filing_date, 'yyyy-M-d')"),
-            ),
-        )
-    )
-    reason = (
-        F.when(
-            F.col("fiscal_year_and_quarter").isNull()
-            | (F.col("fiscal_year_and_quarter") == ""),
-            F.lit("invalid fiscal_year_and_quarter"),
-        )
-        .when(F.col("fiscal_year").isNull(), F.lit("fiscal year extraction failed"))
-        .when(F.col("quarter_type").isNull(), F.lit("quarter extraction failed"))
+    def to_date(c: str) -> str:
+        return f"coalesce(try_to_date({c}, 'yyyy/M/d'), try_to_date({c}, 'yyyy-M-d'))"
+
+    period = F.col("fiscal_year_and_quarter")
+    parsed = cov.select(
+        "*",
+        extract_fiscal_year(period).alias("fiscal_year"),
+        extract_quarter_type(period).alias("quarter_type"),
+        F.expr(f"{to_date('fiscal_year_end')} AS fiscal_year_end_d"),
+        F.expr(f"{to_date('filing_date')} AS filing_date_d"),
+    ).selectExpr(
+        "*",
         # fiscal_year_end is NOT NULL in the warehouse (reference
         # sql/ddl.sql:171-203); an unparsable date would crash the
-        # reference's insert — here it quarantines
-        .when(
-            F.col("fiscal_year_end").isNotNull()
-            & F.col("fiscal_year_end_d").isNull(),
-            F.lit("invalid fiscal_year_end date"),
-        )
-        .when(F.col("fiscal_year_end").isNull(), F.lit("missing fiscal_year_end"))
+        # reference's insert — here it quarantines. A filing whose company
+        # was rejected upstream has no company_id: it is quarantined too
+        # rather than silently dropped (the reference's per-filing
+        # transaction rolls BOTH inserts back together; set-oriented
+        # conformance must keep that filing visible somewhere).
+        """CASE
+            WHEN fiscal_year_and_quarter IS NULL OR fiscal_year_and_quarter = ''
+                THEN 'invalid fiscal_year_and_quarter'
+            WHEN fiscal_year IS NULL THEN 'fiscal year extraction failed'
+            WHEN quarter_type IS NULL THEN 'quarter extraction failed'
+            WHEN fiscal_year_end IS NOT NULL AND fiscal_year_end_d IS NULL
+                THEN 'invalid fiscal_year_end date'
+            WHEN fiscal_year_end IS NULL THEN 'missing fiscal_year_end'
+            WHEN company_id IS NULL THEN 'company rejected or missing'
+        END AS _reason""",
     )
-    parsed = parsed.withColumn("_reason", reason)
-    valid = parsed.filter(F.col("_reason").isNull())
-    # A filing whose company was rejected upstream has no company_id to
-    # join; the inner join below would silently drop its report. Surface it
-    # in the quarantine instead (the reference's per-filing transaction
-    # rolls BOTH inserts back together; set-oriented conformance must keep
-    # that filing visible somewhere).
-    orphaned = valid.join(
-        companies.select(FILING_ID), FILING_ID, "left_anti"
-    ).select(FILING_ID, F.lit("company rejected or missing").alias("reason"))
-    rejects = parsed.filter(F.col("_reason").isNotNull()).select(
-        FILING_ID, F.col("_reason").alias("reason")
-    ).unionByName(orphaned)
-    reports = (
-        valid
-        .join(companies.select(FILING_ID, "company_id"), FILING_ID)
-        .select(
-            F.xxhash64("company_id", "fiscal_year", "quarter_type").alias("report_id"),
-            "company_id",
-            "document_type",
-            "fiscal_year",
-            "quarter_type",
-            F.col("fiscal_year_end_d").alias("fiscal_year_end"),
-            F.col("filing_date_d").alias("filing_date"),
-            F.current_timestamp().alias("created_at"),
-            F.current_timestamp().alias("updated_at"),
-            FILING_ID,
-        )
+    rejects = parsed.filter("_reason IS NOT NULL").selectExpr(
+        FILING_ID, "_reason AS reason"
+    )
+    reports = parsed.filter("_reason IS NULL").selectExpr(
+        "xxhash64(company_id, fiscal_year, quarter_type) AS report_id",
+        "company_id",
+        "document_type",
+        "fiscal_year",
+        "quarter_type",
+        "fiscal_year_end_d AS fiscal_year_end",
+        "filing_date_d AS filing_date",
+        "current_timestamp() AS created_at",
+        "current_timestamp() AS updated_at",
+        FILING_ID,
     )
     return reports, rejects
 
@@ -256,71 +245,67 @@ def conform_reports(
 def conform_items(std: DataFrame) -> DataFrame:
     """Item master candidates: financial-statement rows, first occurrence
     per ``element_id``, consolidated-type → category
-    (reference utils/data_mapper.py:154-210). The row_number dedup is the
-    deterministic form of ``drop_duplicates`` (SURVEY §2A A1); NULL
-    consolidated_type falls to Non-consolidated exactly like np.where on
-    NaN (reference utils/data_mapper.py:186-190)."""
-    w = Window.partitionBy("element_id").orderBy(ROW_SEQ)
+    (reference utils/data_mapper.py:154-210). The earliest-row ``min_by``
+    per element is the deterministic form of ``drop_duplicates``
+    (SURVEY §2A A1); NULL consolidated_type falls to Non-consolidated
+    exactly like np.where on NaN (reference utils/data_mapper.py:186-190)."""
     return (
-        std.filter(F.col("element_id").rlike(FINANCIAL_ELEMENT_PATTERN))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            F.xxhash64("element_id").alias("item_id"),
+        std.filter(_IS_FINANCIAL)
+        .groupBy("element_id")
+        .agg(
+            F.expr(
+                "min_by(struct(item_name_jp, consolidated_type, unit_id),"
+                f" {ROW_SEQ}) AS r"
+            )
+        )
+        .selectExpr(
+            "xxhash64(element_id) AS item_id",
             "element_id",
-            F.col("item_name_jp").alias("item_name"),
-            F.when(F.col("consolidated_type") == "連結", F.lit("Consolidated"))
-            .otherwise(F.lit("Non-consolidated"))
-            .alias("category"),
-            F.col("unit_id").alias("unit_type"),
-            F.current_timestamp().alias("created_at"),
-            F.current_timestamp().alias("updated_at"),
+            "r.item_name_jp AS item_name",
+            "CASE WHEN r.consolidated_type = '連結' THEN 'Consolidated'"
+            " ELSE 'Non-consolidated' END AS category",
+            "r.unit_id AS unit_type",
+            "current_timestamp() AS created_at",
+            "current_timestamp() AS updated_at",
         )
     )
 
 
-def conform_facts(
-    std: DataFrame, reports: DataFrame, items: DataFrame
-) -> DataFrame:
+def conform_facts(std: DataFrame, reports: DataFrame) -> DataFrame:
     """EAV fact rows (reference utils/data_mapper.py:286-332) — the
     set-oriented version of the reference's readability-over-vectorization
-    row loop. Item ids come from a broadcast join on ``element_id`` (J4:
-    the dict-lookup-per-row becomes one map-side join against the ≤10k-row
-    item master); report ids from the per-filing report frame.
+    row loop. Item ids are ``xxhash64(element_id)``, the key the item master
+    mints for the same element (J4: the dict-lookup-per-row needs no join at
+    all); report ids come from the per-filing report frame.
 
     The canonical ``value`` is DecimalType(20,0), mirroring numeric(20)
     (reference sql/ddl.sql:228); duration_type derives from the context id
     (reference utils/data_mapper.py:320-322; NULL context → Instant, where
-    the reference would crash — documented divergence)."""
-    facts = std.filter(F.col("element_id").rlike(FINANCIAL_ELEMENT_PATTERN))
+    the reference would crash — documented divergence).
+
+    ``_row_seq`` is the source row order, kept as lineage: the reference
+    keeps facts in insertion order and its summary data_map is a dict built
+    over that order (LAST row per element wins,
+    reference utils/service/financial_service.py:127); queries reproduce
+    that rule deterministically from this column."""
     return (
-        facts.join(
-            F.broadcast(items.select("element_id", "item_id")), "element_id"
-        )
+        std.filter(_IS_FINANCIAL)
         .join(reports.select(FILING_ID, "report_id"), FILING_ID)
-        .select(
-            F.xxhash64(
-                "report_id", "item_id", "context_id", "period_type",
-                "consolidated_type",
-            ).alias("data_id"),
+        .selectExpr(
+            "xxhash64(report_id, xxhash64(element_id), context_id, period_type,"
+            " consolidated_type) AS data_id",
             "report_id",
-            "item_id",
+            "xxhash64(element_id) AS item_id",
             "context_id",
             "period_type",
             "consolidated_type",
-            F.when(F.col("context_id").contains("Duration"), F.lit("Duration"))
-            .otherwise(F.lit("Instant"))
-            .alias("duration_type"),
-            F.col("value").cast("decimal(20,0)").alias("value"),
+            "CASE WHEN contains(context_id, 'Duration') THEN 'Duration'"
+            " ELSE 'Instant' END AS duration_type",
+            "CAST(value AS DECIMAL(20,0)) AS value",
             "value_text",
             "is_numeric",
-            # source row order, kept as lineage: the reference keeps facts
-            # in insertion order and its summary data_map is a dict built
-            # over that order (LAST row per element wins,
-            # reference utils/service/financial_service.py:127); queries
-            # reproduce that rule deterministically from this column
-            F.col(ROW_SEQ).alias("_row_seq"),
-            F.current_timestamp().alias("created_at"),
+            f"{ROW_SEQ} AS _row_seq",
+            "current_timestamp() AS created_at",
         )
     )
 
@@ -328,16 +313,31 @@ def conform_facts(
 def conform_all(std: DataFrame) -> dict[str, DataFrame]:
     """Bronze → the full 4-table bundle + quarantines, one DAG — the
     set-oriented ``map_data_to_models`` (reference
-    utils/data_mapper.py:335-348) generalized to many filings."""
-    companies, company_rejects = conform_companies(std)
-    reports, report_rejects = conform_reports(std, companies)
-    items = conform_items(std)
-    facts = conform_facts(std, reports, items)
+    utils/data_mapper.py:335-348) generalized to many filings, with the
+    reference config's XBRL mappings."""
+    return conform_mapped(std, XBRL_COMPANY_MAPPING, XBRL_REPORT_MAPPING)
+
+
+def conform_mapped(
+    std: DataFrame, company_mapping: dict[str, str], report_mapping: dict[str, str]
+) -> dict[str, DataFrame]:
+    """``conform_all`` with explicit XBRL mappings. One cover aggregate
+    feeds both dims, and each filing's report takes its ``company_id``
+    from the same row: no join between the two. A key names one silver
+    column, so the two mappings may not share one."""
+    shared = set(company_mapping) & set(report_mapping)
+    if shared:
+        raise ValueError(f"company and report mappings share keys {sorted(shared)}")
+    cov = _with_company_id(
+        extract_cover_values(std, {**company_mapping, **report_mapping})
+    )
+    companies, company_rejects = _companies_from_cover(cov)
+    reports, report_rejects = _reports_from_cover(cov)
     return {
         "companies": companies.drop(FILING_ID),
         "reports": reports.drop(FILING_ID),
-        "items": items,
-        "facts": facts,
+        "items": conform_items(std),
+        "facts": conform_facts(std, reports),
         "company_rejects": company_rejects,
         "report_rejects": report_rejects,
     }

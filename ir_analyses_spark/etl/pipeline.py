@@ -1,23 +1,27 @@
 """End-to-end backfill orchestration (SURVEY §3.2/§3.3 re-shaped): the
-reference's per-file ingest loop as ONE Spark DAG.
+reference's per-file ingest loop as one scan, one conform, facts replaced
+per report.
 
 Reference flow (scripts/bypass_import_csv.py:42-78): glob → per file:
 chardet → read_csv → standardize → map → per-row ORM inserts in a fresh
-UoW. Here: one multi-encoding scan → one standardize → one conform →
-four idempotent table writes. Per-filing sequencing disappears because
-surrogate keys are deterministic hashes (no flush-to-get-an-id), and
-re-running the backfill converges to the same tables (upsert on natural
-keys; facts replaced per report partition).
+UoW. Here: one multi-encoding scan → one standardize, materialized once →
+one conform → four idempotent table writes that read the materialized
+frames instead of re-running the scan. Per-filing sequencing disappears
+because surrogate keys are deterministic hashes (no flush-to-get-an-id),
+and re-running the backfill converges to the same tables (upsert on
+natural keys; each report's facts replaced as a unit).
 
 Scale posture: facts partition by ``fiscal_year`` on disk (the query
-surface's hottest predicate); dims are small and rewrite whole. At 100 TB
-the same layout holds with bucketing by ``report_id`` added for fact-fact
-co-location (SURVEY §7.3.6).
+surface's hottest predicate) and a load rewrites only the partitions it
+touches; dims are small and rewrite whole. At 100 TB the same layout holds
+with bucketing by ``report_id`` added for fact-fact co-location
+(SURVEY §7.3.6).
 """
 
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -40,18 +44,9 @@ def _dedup_deterministic(df: DataFrame, key: str) -> DataFrame:
     summaries to the undeduped in-memory frame. Without an order column
     (dims), the lexicographically least full-row struct wins — arbitrary
     but total."""
-    others = [c for c in df.columns if c != key]
-    if "_row_seq" in df.columns:
-        agg = df.groupBy(key).agg(
-            F.max_by(
-                F.struct(*[F.col(c).alias(c) for c in others]), F.col("_row_seq")
-            ).alias("_r")
-        )
-    else:
-        agg = df.groupBy(key).agg(
-            F.min(F.struct(*[F.col(c).alias(c) for c in others])).alias("_r")
-        )
-    return agg.select(key, *[F.col(f"_r.{c}").alias(c) for c in others])
+    row = "struct(" + ", ".join(f"`{c}`" for c in df.columns if c != key) + ")"
+    pick = f"max_by({row}, _row_seq)" if "_row_seq" in df.columns else f"min({row})"
+    return df.groupBy(key).agg(F.expr(f"{pick} AS _r")).select(key, "_r.*")
 
 
 def backfill_from_csvs(
@@ -60,11 +55,18 @@ def backfill_from_csvs(
     out_dir: str,
     company_mapping: dict | None = None,
     report_mapping: dict | None = None,
-) -> dict[str, DataFrame]:
+) -> dict[str, int]:
     """Bulk CSV backfill: scan → bronze → silver tables under ``out_dir``.
 
-    Returns the conformed bundle (incl. quarantines) for inspection; the
-    four tables land as parquet:
+    One scan, one conform, facts replaced per report. The standardized
+    bronze is materialized once (the only CSV scan), the deduplicated
+    companies, reports and facts once; every table write and the reject
+    count read those instead of re-running the scan → conform lineage, and
+    the materialized blocks are released before returning. They are local
+    checkpoints: an executor lost mid-load fails the load, and re-running
+    it converges like any re-run. Returns the
+    quarantine counts, ``{"company_rejects": n, "report_rejects": m}``;
+    the four tables land as parquet:
     ``companies/ financial_items/ financial_reports/ financial_data/``.
 
     Multi-filing collapse: when several filings map to one natural key
@@ -75,30 +77,63 @@ def backfill_from_csvs(
     amendment would order by a filing sequence instead; the testdata
     carries none, so determinism is the contract.
     """
-    raw = read_filing_csvs(spark, csv_glob)
-    std = standardize_raw(raw, filing_id_col="_filing_path")
-    # mappings arrive from the TOML config source (etl/config_toml.py);
-    # both-None delegates straight to conform_all — identical plan
-    bundle = conform_all_with_mappings(std, company_mapping, report_mapping)
+    held: list[DataFrame] = []
 
-    companies = _dedup_deterministic(bundle["companies"], "company_id")
-    items = bundle["items"]
-    reports = _dedup_deterministic(bundle["reports"], "report_id")
-    facts = _dedup_deterministic(bundle["facts"], "data_id")
+    def materialize(df: DataFrame) -> DataFrame:
+        df = df.localCheckpoint(eager=True)
+        held.append(df)
+        return df
 
-    # dims: keyed upserts (A5/A6/A7 semantics — reload-idempotent)
-    sinks.merge_upsert(companies, os.path.join(out_dir, "companies"), ["company_id"])
-    sinks.append_missing(items, os.path.join(out_dir, "financial_items"), "item_id")
-    sinks.merge_upsert(reports, os.path.join(out_dir, "financial_reports"), ["report_id"])
+    try:
+        raw = read_filing_csvs(spark, csv_glob)
+        std = materialize(standardize_raw(raw, filing_id_col="_filing_path"))
+        # mappings arrive from the TOML config source (etl/config_toml.py);
+        # both-None delegates straight to conform_all — identical plan
+        bundle = conform_all_with_mappings(std, company_mapping, report_mapping)
+        rejects = _reject_counts(bundle)
 
-    # facts: per-fiscal-year partition replace (the roadmap's 洗い替え)
-    facts_with_year = facts.join(
-        reports.select("report_id", "fiscal_year"), "report_id"
-    )
-    sinks.replace_partition(
-        facts_with_year, os.path.join(out_dir, "financial_data"), "fiscal_year"
-    )
-    return bundle
+        companies = materialize(
+            _dedup_deterministic(bundle["companies"], "company_id")
+        )
+        reports = materialize(_dedup_deterministic(bundle["reports"], "report_id"))
+        facts = materialize(
+            _dedup_deterministic(bundle["facts"], "data_id").join(
+                reports.select("report_id", "fiscal_year"), "report_id"
+            )
+        )
+
+        # dims: keyed upserts (A5/A6/A7 semantics — reload-idempotent)
+        sinks.merge_upsert(
+            companies, os.path.join(out_dir, "companies"), ["company_id"]
+        )
+        sinks.append_missing(
+            bundle["items"], os.path.join(out_dir, "financial_items"), "item_id"
+        )
+        sinks.merge_upsert(
+            reports, os.path.join(out_dir, "financial_reports"), ["report_id"]
+        )
+        # facts: replaced per report, scoped to the fiscal_year partitions
+        # the batch touches — a later quarter or another company's filing in
+        # the same year leaves the facts already loaded in place
+        sinks.merge_upsert(
+            facts,
+            os.path.join(out_dir, "financial_data"),
+            ["report_id"],
+            partition_col="fiscal_year",
+        )
+        return rejects
+    finally:
+        for df in held:
+            sinks.release_checkpoint(df)
+
+
+def _reject_counts(bundle: dict[str, DataFrame]) -> dict[str, int]:
+    """Both quarantine counts in one action over the materialized bronze
+    (a quarantine holds one row per rejected filing)."""
+    names = ("company_rejects", "report_rejects")
+    tagged = [bundle[n].select(F.lit(n)) for n in names]
+    got = Counter(r[0] for r in tagged[0].union(tagged[1]).collect())
+    return {n: got[n] for n in names}
 
 
 def read_silver(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:

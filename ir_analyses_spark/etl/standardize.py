@@ -44,20 +44,19 @@ def standardize_raw(df: DataFrame, filing_id_col: str | None = None) -> DataFram
     """JP→EN rename + value split. ``df`` holds one or many filings; pass
     ``filing_id_col`` (e.g. derived from ``input_file_name()``) to keep
     per-filing lineage, else a single constant filing is assumed."""
-    present = {jp: en for jp, en in RAW_COLUMN_MAPPING.items() if jp in df.columns}
-    out = df.withColumnsRenamed(present)
-
+    renames = {jp: en for jp, en in RAW_COLUMN_MAPPING.items() if jp in df.columns}
     if filing_id_col is not None:
-        out = out.withColumnRenamed(filing_id_col, FILING_ID)
-    elif FILING_ID not in out.columns:
+        renames[filing_id_col] = FILING_ID
+    out = df.withColumnsRenamed(renames)
+    if FILING_ID not in out.columns:
         out = out.withColumn(FILING_ID, F.lit("_single_"))
 
-    stripped = F.regexp_replace(F.col("original_value"), "－", "")
-    value = F.expr("try_cast(regexp_replace(original_value, '－', '') as double)")
-    return (
-        out.withColumn(ROW_SEQ, F.monotonically_increasing_id())
-        .withColumn("value", value)
-        .withColumn("is_numeric", F.col("value").isNotNull())
-        .withColumn("value_text", F.when(~F.col("is_numeric"), stripped))
-        .drop("original_value")
+    stripped = "regexp_replace(original_value, '－', '')"
+    value = f"try_cast({stripped} AS DOUBLE)"
+    return out.selectExpr(
+        *[f"`{c}`" for c in out.columns if c != "original_value"],
+        f"monotonically_increasing_id() AS {ROW_SEQ}",
+        f"{value} AS value",
+        f"{value} IS NOT NULL AS is_numeric",
+        f"CASE WHEN {value} IS NULL THEN {stripped} END AS value_text",
     )

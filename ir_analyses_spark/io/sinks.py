@@ -94,7 +94,11 @@ def merge_upsert(
     functionally dependent on ``keys`` (a key never moves between
     partition values) — an update that moved a key to a new partition
     would leave the old partition's row in place, because pruning never
-    reads it. Same rule every partition-scoped MERGE engine imposes.
+    reads it. Same rule every partition-scoped MERGE engine imposes. A
+    first write into a missing target lays out the same partitions.
+
+    The target is read with ``updates``' schema, which is the table's own:
+    passing it skips Spark's footer-reading schema-inference job.
     """
     spark = updates.sparkSession
     _recover_swap(target_dir)
@@ -103,32 +107,51 @@ def merge_upsert(
             r[0]
             for r in updates.select(partition_col).distinct().collect()
         ]
-        current = spark.read.parquet(target_dir).filter(
+        current = spark.read.schema(updates.schema).parquet(target_dir).filter(
             F.col(partition_col).isin(touched)
         )
-        kept = current.join(updates.select(*keys).distinct(), keys, "left_anti")
+        # a left anti join ignores duplicate keys on its right side, so the
+        # key list needs no distinct (and no shuffle) of its own
+        kept = current.join(updates.select(*keys), keys, "left_anti")
         # Materialize before the overwrite: the merged plan reads the same
         # path it is about to replace, so cut the lineage to the file scan
         # (and dodge Spark's self-overwrite guard) with an eager checkpoint.
         merged = kept.unionByName(updates).localCheckpoint(eager=True)
-        # per-WRITE dynamic mode — never session-level conf.set, which would
-        # leak into unrelated overwrites and stop them deleting partitions
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(target_dir)
-        )
+        try:
+            # per-WRITE dynamic mode — never session-level conf.set, which
+            # would leak into unrelated overwrites and stop them deleting
+            # partitions
+            (
+                merged.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy(partition_col)
+                .parquet(target_dir)
+            )
+        finally:
+            release_checkpoint(merged)
         return
     if os.path.exists(target_dir):
-        current = spark.read.parquet(target_dir)
-        kept = current.join(updates.select(*keys).distinct(), keys, "left_anti")
+        current = spark.read.schema(updates.schema).parquet(target_dir)
+        kept = current.join(updates.select(*keys), keys, "left_anti")
         merged = kept.unionByName(updates)
     else:
         merged = updates
     staging = target_dir.rstrip("/") + "__staging"
-    merged.write.mode("overwrite").parquet(staging)
+    w = merged.write.mode("overwrite")
+    if partition_col is not None:
+        # a flat first write would mix layouts with the partitioned
+        # merges that follow it
+        w = w.partitionBy(partition_col)
+    w.parquet(staging)
     _swap_in(staging, target_dir)
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of an eager ``localCheckpoint`` now, instead of
+    whenever the JVM garbage-collects its RDD. ``DataFrame.unpersist`` does
+    not reach them: a local checkpoint persists the RDD under the frame's
+    ``LogicalRDD`` leaf, not a cache-manager entry."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def batch_ledger(target_dir: str, batch_id) -> tuple[bool, "Callable[[], None]"]:
@@ -330,11 +353,13 @@ def append_missing(
 
     Insert-only means no existing row changes, so this appends NEW parquet
     files into the live directory instead of rewriting the table: existing
-    files are untouched (O(new rows), not O(table))."""
+    files are untouched (O(new rows), not O(table)). Only the key columns
+    are read, with ``new_rows``' key schema, so no schema-inference job
+    runs."""
     keys = [key] if isinstance(key, str) else list(key)
     spark = new_rows.sparkSession
     if os.path.exists(target_dir):
-        existing = spark.read.parquet(target_dir).select(*keys).distinct()
+        existing = spark.read.schema(new_rows.select(*keys).schema).parquet(target_dir)
         to_add = new_rows.join(existing, keys, "left_anti")
         to_add.write.mode("append").parquet(target_dir)
     else:

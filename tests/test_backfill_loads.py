@@ -1,0 +1,98 @@
+"""Load sequences through ``pipeline.backfill_from_csvs``: each report's facts
+are replaced as a unit, so later loads into the same fiscal year — the next
+quarter, or another company's filing on a daily ingest — keep the facts
+already in silver, and re-running a load changes nothing.
+
+Each filing is a small UTF-8 EDINET CSV export: cover rows plus
+``N_MEASURES`` fact rows.
+"""
+
+from __future__ import annotations
+
+from ir_analyses_spark.etl import pipeline
+from ir_analyses_spark.schemas import RAW_JP_COLUMNS
+
+N_MEASURES = 3
+
+
+def _write_filing(path, edinet_code, quarter):
+    """One quarterly filing of fiscal year 2023 (April to March); without
+    an ``edinet_code`` the filing has no EDINET code row."""
+    start_month = 3 * quarter + 1
+    period = (f"第10期 第{quarter}四半期(自 2023年{start_month}月1日 "
+              f"至 2023年{start_month + 2}月30日)")
+
+    def cover(element, value):
+        return (element, "項目", "FilingDateInstant", "提出日時点", "その他",
+                "時点", "－", "－", value)
+
+    rows = [
+        cover("jpcrp_cor:DocumentTitleCoverPage", "四半期報告書"),
+        cover("jpcrp_cor:QuarterlyAccountingPeriodCoverPage", period),
+        cover("jpcrp_cor:CompanyNameCoverPage", f"会社{edinet_code}"),
+        cover("jpdei_cor:CurrentPeriodEndDateDEI",
+              f"2023/{start_month + 2}/30"),
+    ]
+    if edinet_code:
+        rows.append(cover("jpdei_cor:EDINETCodeDEI", edinet_code))
+    rows += [
+        (f"jppfs_cor:Measure{i}", "項目", "CurrentYTDDuration",
+         "当四半期累計期間", "連結", "期間", "JPY", "円",
+         str(1000 * quarter + i))
+        for i in range(N_MEASURES)
+    ]
+    lines = ["\t".join(RAW_JP_COLUMNS)] + ["\t".join(r) for r in rows]
+    path.parent.mkdir(parents=True, exist_ok=True)
+    path.write_text("\n".join(lines) + "\n", encoding="utf-8")
+
+
+def _load(spark, tmp_path, batch, filings):
+    for edinet_code, quarter in filings:
+        _write_filing(tmp_path / batch / f"{edinet_code}_q{quarter}.csv",
+                      edinet_code, quarter)
+    return pipeline.backfill_from_csvs(
+        spark, str(tmp_path / batch / "*.csv"), str(tmp_path / "silver"))
+
+
+def _counts(spark, tmp_path):
+    silver = pipeline.read_silver(spark, str(tmp_path / "silver"))
+    return {name: df.count() for name, df in silver.items()}
+
+
+def _facts_per_report(spark, tmp_path):
+    t = pipeline.read_silver(spark, str(tmp_path / "silver"))
+    rows = (t["facts"].join(t["reports"], "report_id")
+            .join(t["companies"], "company_id")
+            .groupBy("edinet_code", "quarter_type").count().collect())
+    return {(r["edinet_code"], r["quarter_type"]): r["count"] for r in rows}
+
+
+def test_later_quarter_of_same_year_keeps_earlier_facts(spark, tmp_path):
+    _load(spark, tmp_path, "q1", [("E00001", 1)])
+    _load(spark, tmp_path, "q2", [("E00001", 2)])
+    assert _facts_per_report(spark, tmp_path) == {
+        ("E00001", "Q1"): N_MEASURES, ("E00001", "Q2"): N_MEASURES}
+
+
+def test_per_company_loads_keep_other_companies_facts(spark, tmp_path):
+    """Ingest-style: each run loads one company's filing of the same year."""
+    _load(spark, tmp_path, "day1", [("E00001", 1)])
+    _load(spark, tmp_path, "day2", [("E00002", 1)])
+    assert _facts_per_report(spark, tmp_path) == {
+        ("E00001", "Q1"): N_MEASURES, ("E00002", "Q1"): N_MEASURES}
+
+
+def test_rerun_of_last_load_changes_no_count(spark, tmp_path):
+    """Returns both quarantine counts (a filing without an EDINET code is
+    rejected at both dims), releases what the load materialized, and a
+    re-run of the last load converges."""
+    _load(spark, tmp_path, "q1", [("E00001", 1), ("E00002", 1)])
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    rejects = _load(spark, tmp_path, "q2", [("E00001", 2), (None, 2)])
+    assert rejects == {"company_rejects": 1, "report_rejects": 1}
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    counts = _counts(spark, tmp_path)
+    assert counts == {"companies": 2, "items": N_MEASURES, "reports": 3,
+                      "facts": 3 * N_MEASURES}
+    _load(spark, tmp_path, "q2", [])
+    assert _counts(spark, tmp_path) == counts

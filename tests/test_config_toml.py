@@ -152,3 +152,13 @@ def test_default_mappings_delegate_to_conform_all(spark, monkeypatch):
     override = dict(company_map, company_name="jpdei_cor:FilerNameInJapaneseDEI")
     config_toml.conform_all_with_mappings(std, override, report_map)
     assert calls == [1]  # the override did NOT delegate
+
+
+def test_mappings_sharing_a_key_rejected():
+    """Both dims read one cover frame keyed by the mappings' keys, so a key
+    in both sections would feed one dim the other's element: rejected
+    before any plan is built."""
+    company_map, report_map = xbrl_mappings({})
+    clash = dict(company_map, document_type="jpdei_cor:FilerNameInJapaneseDEI")
+    with pytest.raises(ValueError, match="document_type"):
+        conform.conform_mapped(None, clash, report_map)

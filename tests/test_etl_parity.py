@@ -304,8 +304,7 @@ def test_fact_mapping_duration_and_nulls(spark):
     std = _std(spark, rows)
     companies, _ = conform.conform_companies(std)
     reports, _ = conform.conform_reports(std, companies)
-    items = conform.conform_items(std)
-    facts = conform.conform_facts(std, reports, items)
+    facts = conform.conform_facts(std, reports)
     got = {r["context_id"]: r for r in facts.collect()}
     ns = got["CurrentYTDDuration"]
     assert ns["duration_type"] == "Duration"
@@ -481,8 +480,6 @@ def test_summary_priority_present_null_blocks_fallback(spark):
     assert dto["operation_profit_rate"] is None
 
 
-# slow: multi-quarter backfill lifecycle; per-stage parity is pinned fast in this file
-@pytest.mark.slow
 def test_backfill_integration(spark, tmp_path):
     """Full M3 path on disk: mixed-encoding CSV files → one scan →
     standardize → conform → partitioned silver parquet → summary query —

@@ -18,8 +18,6 @@ import zipfile as _zip
 import ingest
 from ir_analyses_spark.schemas import RAW_JP_COLUMNS
 
-import pytest
-
 
 def _cover(element, value):
     return (element, "項目", "FilingDateInstant", "提出日時点", "その他",
@@ -83,8 +81,6 @@ def _transport(url, params):
     raise AssertionError(f"unexpected url {url}")
 
 
-# slow: CLI e2e; the ingest operators have their own fast pins in this file
-@pytest.mark.slow
 def test_ingest_cli_end_to_end(spark, tmp_path, monkeypatch, capsys):
     """date → list → ZIP fetch → jpcrp extract → silver tables → summary,
     all offline; the annual filing is filtered out like the reference's

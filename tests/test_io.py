@@ -814,6 +814,28 @@ def test_replace_partition(spark, tmp_path):
     assert got == [("2023", 9), ("2024", 3)]
 
 
+def test_partitioned_merge_upsert_into_empty_target(spark, tmp_path):
+    """A partitioned merge into a missing target lays the partitions out on
+    its first write, so the partition-scoped merges that follow find the
+    same layout; the second merge replaces keys in the partitions it
+    touches and leaves the others' rows in place."""
+    import os as _os
+
+    target = str(tmp_path / "facts")
+    schema = "report_id int, fy string, v int"
+    first = spark.createDataFrame([(1, "2023", 10), (2, "2024", 20)], schema)
+    sinks.merge_upsert(first, target, ["report_id"], partition_col="fy")
+    layout = sorted(e for e in _os.listdir(target) if not e.startswith(("_", ".")))
+    assert layout == ["fy=2023", "fy=2024"]
+
+    second = spark.createDataFrame([(1, "2023", 11), (3, "2023", 30)], schema)
+    sinks.merge_upsert(second, target, ["report_id"], partition_col="fy")
+    layout = sorted(e for e in _os.listdir(target) if not e.startswith(("_", ".")))
+    assert layout == ["fy=2023", "fy=2024"]
+    got = sorted(tuple(r) for r in spark.read.parquet(target).collect())
+    assert got == [(1, 11, "2023"), (2, 20, "2024"), (3, 30, "2023")]
+
+
 def test_bucketed_join_skips_shuffle(spark, sf_dir):
     """Bucketed co-located join (SURVEY §7.3.6): joining two tables
     bucketed on the same key must produce a SortMergeJoin with NO shuffle

@@ -58,7 +58,7 @@ def test_all_filings_scan_and_conform(spark, real_bundle):
 @pytest.mark.slow
 def test_real_backfill_roundtrip_idempotent(spark, tmp_path, real_bundle):
     """The backfill DAG over the real filings must land the four silver
-    tables, survive a re-run unchanged (upsert + partition replace), and
+    tables, survive a re-run unchanged (upsert + per-report fact replace), and
     serve the same summary from disk as from memory."""
     from ir_analyses_spark.etl import pipeline
 
