@@ -45,6 +45,13 @@ HEADLINE = [
 
 WARMUP_SF_DIR = os.environ.get("SPARK_GRAFT_WARMUP_SF_DIR", "/root/testdata/sf0.001")
 
+#: timed reps per query (see ``_time_headline``)
+_N_REPS = 3
+#: queries whose provisional median is under this many seconds run
+#: ``_N_EXTRA_PAIRS`` extra interleaved pairs
+_SUBSEC_CUTOFF_S = 0.8
+_N_EXTRA_PAIRS = 4
+
 
 def _sf_of(path: str) -> float | None:
     """Scale factor from a ``.../sf<N>`` directory name, or None — ONE
@@ -214,6 +221,150 @@ def _load_registry_from(root: str) -> dict | None:
         sys.modules.update(saved)
 
 
+def _median(xs: list[float]) -> float:
+    xs = sorted(xs)
+    mid = len(xs) // 2
+    return xs[mid] if len(xs) % 2 else (xs[mid - 1] + xs[mid]) / 2.0
+
+
+def _time_headline(run_current, run_baseline, names: list[str], ab: bool) -> dict:
+    """The timed protocol over the queries ``names``: ``run_current(name)``
+    runs the current tree's query and returns its seconds (raising on an
+    error); ``run_baseline(name)`` runs the baseline tree's twin and
+    returns its seconds, or None when there is none or it failed. ``ab``
+    says whether a baseline interleaves.
+
+    Returns the per-query steady-state medians (``timings``), cold first
+    reps (``first_run``), rep counts (``reps``), baseline medians
+    (``ab_timings``), the timings of queries that errored in a required
+    rep (``partial``, with the message in ``errors``), the messages of
+    queries that failed only in an extra rep (``extra_rep_errors``), and
+    ``n_pair_reps``."""
+    # Timed protocol (r5, per VERDICT r4 item 4): THREE timed repetitions
+    # per query at the target SF, no separate target-SF warmup pass.
+    #   - rep 1 is a cold-at-target-SF run — exactly the r1-r3 methodology
+    #     (it still pays JVM JIT tier-up of the generated code at real row
+    #     volume; measured on pricing_summary at sf0.1: first run
+    #     ~1.9-2.0 s, later runs ~1.25 s — per-plan compilation, not IO).
+    #   - the per-query MEDIAN of the 3 reps is the steady-state headline
+    #     (what r4's extra warmup pass measured), and the median also
+    #     damps the documented ±25% page-cache/co-tenant noise.
+    # One record therefore carries BOTH numbers: "value" (median,
+    # steady state) and "value_first_run" (r3-comparable cold pass), so
+    # cross-round deltas decompose into methodology vs real gains.
+    reps: dict[str, list[float]] = {}
+    ab_reps: dict[str, list[float]] = {}
+    errors: dict[str, str] = {}
+    extra_errors: dict[str, str] = {}
+
+    def _current(name: str, failures: dict) -> None:
+        try:
+            reps.setdefault(name, []).append(run_current(name))
+        except Exception as exc:  # one bad query must not lose the record
+            failures[name] = f"{type(exc).__name__}: {str(exc)[:200]}"
+
+    def _pair(name: str, current_first: bool, failures: dict) -> None:
+        if current_first:
+            _current(name, failures)
+        dt = run_baseline(name) if ab else None
+        if dt is not None:
+            ab_reps.setdefault(name, []).append(dt)
+        if not current_first:
+            _current(name, failures)
+
+    # Rep 0 is CURRENT-ONLY: value_first_run's contract is "the cold
+    # first rep, the r1-r3 methodology", and an interleaved baseline
+    # twin at rep 0 would pre-warm page cache + JIT for half the
+    # queries (a measured ~28% effect), making first_run read a
+    # phantom cross-round speedup (review-caught). The A/B pairs run
+    # as _N_REPS additional interleaved passes, order alternating by
+    # (rep, query) parity — the second run of an identical plan rides
+    # the first's warmth, so a fixed order biases the comparison.
+    # Steady-state medians for BOTH columns come from the interleaved
+    # passes only (identical conditions for the two trees); rep 0
+    # feeds first_run alone.
+    for name in names:
+        _current(name, errors)
+    first_run_raw = {name: ts[0] for name, ts in reps.items()}
+    n_pair_reps = _N_REPS if ab else _N_REPS - 1
+    for rep in range(n_pair_reps):
+        for qi, name in enumerate(names):
+            if name not in errors:
+                _pair(name, (rep + qi) % 2 == 0, errors)
+
+    # r15 (VERDICT r14 item 4/7): the documented small-rep order-parity
+    # noise — sub-second queries' 3-rep medians swing ±35-60% and get
+    # re-adjudicated with manual bisects every round. ADDITIONS-ONLY
+    # protocol extension: queries whose provisional interleaved median
+    # is under the cutoff run extra interleaved pairs (same alternating
+    # (rep, query)-parity, same session, both trees), and the reported
+    # median uses ALL interleaved reps. Output keys are unchanged; the
+    # per-query rep count is recorded under the new "reps" field.
+    subsec = {
+        name
+        for name, ts in reps.items()
+        if name not in errors
+        and len(ts) == 1 + n_pair_reps
+        and _median(ts[1:] if ab else ts) < _SUBSEC_CUTOFF_S
+    }
+    for rep in range(n_pair_reps, n_pair_reps + _N_EXTRA_PAIRS):
+        for qi, name in enumerate(names):
+            if name in subsec and name not in extra_errors:
+                _pair(name, (rep + qi) % 2 == 0, extra_errors)
+    # extra reps only add evidence: a query that fails in one keeps its
+    # provisional median (cold rep 0 + the required pairs) on both sides
+    for name in extra_errors:
+        subsec.discard(name)
+        reps[name] = reps[name][: 1 + n_pair_reps]
+        if name in ab_reps:
+            ab_reps[name] = ab_reps[name][:n_pair_reps]
+    # expected rep counts per query (cold rep 0 + interleaved passes)
+    n_expected = {
+        name: 1
+        + n_pair_reps
+        + (_N_EXTRA_PAIRS if name in subsec else 0)
+        for name in names
+    }
+    n_expected_ab = {
+        name: _N_REPS + (_N_EXTRA_PAIRS if name in subsec else 0)
+        for name in names
+    }
+
+    # ADVICE r5: a query that errored mid-way has fewer timings — that
+    # is NOT a steady-state median, and _best_prior_timings in a later
+    # round would ingest it as one. Full-rep queries only; partials are
+    # recorded under an explicit key the cross-round reader never
+    # consumes. Steady state = median of the reps AFTER the cold rep 0
+    # when a baseline interleaves (all passes see identical
+    # conditions), else of all three reps (the r5-r8 protocol).
+    full = {name: ts for name, ts in reps.items() if len(ts) == n_expected[name]}
+    return {
+        "timings": {
+            name: round(_median(ts[1:] if ab else ts), 3)
+            for name, ts in full.items()
+        },
+        "first_run": {
+            name: round(first_run_raw[name], 3)
+            for name in full
+            if name in first_run_raw
+        },
+        "reps": {name: len(ts) - (1 if ab else 0) for name, ts in full.items()},
+        "ab_timings": {
+            name: round(_median(ts), 3)
+            for name, ts in ab_reps.items()
+            if len(ts) == n_expected_ab[name]
+        },
+        "partial": {
+            name: [round(t, 3) for t in ts]
+            for name, ts in reps.items()
+            if len(ts) < n_expected[name]
+        },
+        "errors": errors,
+        "extra_rep_errors": extra_errors,
+        "n_pair_reps": n_pair_reps,
+    }
+
+
 def main() -> None:
     spark = get_spark(app_name="ir_analyses_spark_bench")
     queries = all_queries()
@@ -247,136 +398,27 @@ def main() -> None:
                 ).save()
             except Exception:
                 pass  # warm-up is best-effort; timed runs surface errors
-    # Timed protocol (r5, per VERDICT r4 item 4): THREE timed repetitions
-    # per query at the target SF, no separate target-SF warmup pass.
-    #   - rep 1 is a cold-at-target-SF run — exactly the r1-r3 methodology
-    #     (it still pays JVM JIT tier-up of the generated code at real row
-    #     volume; measured on pricing_summary at sf0.1: first run
-    #     ~1.9-2.0 s, later runs ~1.25 s — per-plan compilation, not IO).
-    #   - the per-query MEDIAN of the 3 reps is the steady-state headline
-    #     (what r4's extra warmup pass measured), and the median also
-    #     damps the documented ±25% page-cache/co-tenant noise.
-    # One record therefore carries BOTH numbers: "value" (median,
-    # steady state) and "value_first_run" (r3-comparable cold pass), so
-    # cross-round deltas decompose into methodology vs real gains.
-    _N_REPS = 3
-    reps: dict[str, list[float]] = {}
-    ab_reps: dict[str, list[float]] = {}
-    errors: dict[str, str] = {}
-    def _run_current(name: str) -> None:
-        fn = queries[name]
+    # timed protocol: see _time_headline
+    def _run_current(name: str) -> float:
         t0 = time.perf_counter()
-        try:
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            reps.setdefault(name, []).append(time.perf_counter() - t0)
-        except Exception as exc:  # one bad query must not lose the record
-            errors[name] = f"{type(exc).__name__}: {str(exc)[:200]}"
+        queries[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
 
-    def _run_baseline(name: str) -> None:
+    def _run_baseline(name: str) -> float | None:
         if not (ab_queries and name in ab_queries):
-            return
+            return None
         t0 = time.perf_counter()
         try:
             ab_queries[name](spark, SF_DIR).write.format("noop").mode(
                 "overwrite"
             ).save()
-            ab_reps.setdefault(name, []).append(time.perf_counter() - t0)
         except Exception:
-            pass  # baseline is advisory; never fails the bench
+            return None  # baseline is advisory; never fails the bench
+        return time.perf_counter() - t0
 
-    # Rep 0 is CURRENT-ONLY: value_first_run's contract is "the cold
-    # first rep, the r1-r3 methodology", and an interleaved baseline
-    # twin at rep 0 would pre-warm page cache + JIT for half the
-    # queries (a measured ~28% effect), making first_run read a
-    # phantom cross-round speedup (review-caught). The A/B pairs run
-    # as _N_REPS additional interleaved passes, order alternating by
-    # (rep, query) parity — the second run of an identical plan rides
-    # the first's warmth, so a fixed order biases the comparison.
-    # Steady-state medians for BOTH columns come from the interleaved
-    # passes only (identical conditions for the two trees); rep 0
-    # feeds first_run alone.
-    for name in HEADLINE:
-        _run_current(name)
-    first_run_raw = {name: ts[0] for name, ts in reps.items()}
-    n_pair_reps = _N_REPS if ab_queries else _N_REPS - 1
-    for rep in range(n_pair_reps):
-        for qi, name in enumerate(HEADLINE):
-            if name in errors:
-                continue
-            if (rep + qi) % 2 == 0:
-                _run_current(name)
-                _run_baseline(name)
-            else:
-                _run_baseline(name)
-                _run_current(name)
-
-    def _median(xs: list[float]) -> float:
-        xs = sorted(xs)
-        mid = len(xs) // 2
-        return xs[mid] if len(xs) % 2 else (xs[mid - 1] + xs[mid]) / 2.0
-
-    # r15 (VERDICT r14 item 4/7): the documented small-rep order-parity
-    # noise — sub-second queries' 3-rep medians swing ±35-60% and get
-    # re-adjudicated with manual bisects every round. ADDITIONS-ONLY
-    # protocol extension: queries whose provisional interleaved median
-    # is under the cutoff run extra interleaved pairs (same alternating
-    # (rep, query)-parity, same session, both trees), and the reported
-    # median uses ALL interleaved reps. Output keys are unchanged; the
-    # per-query rep count is recorded under the new "reps" field.
-    _SUBSEC_CUTOFF_S = 0.8
-    _N_EXTRA_PAIRS = 4
-    subsec = {
-        name
-        for name, ts in reps.items()
-        if name not in errors
-        and len(ts) == 1 + n_pair_reps
-        and _median(ts[1:] if ab_queries else ts) < _SUBSEC_CUTOFF_S
-    }
-    for rep in range(n_pair_reps, n_pair_reps + _N_EXTRA_PAIRS):
-        for qi, name in enumerate(HEADLINE):
-            if name not in subsec or name in errors:
-                continue
-            if (rep + qi) % 2 == 0:
-                _run_current(name)
-                _run_baseline(name)
-            else:
-                _run_baseline(name)
-                _run_current(name)
-    # expected rep counts per query (cold rep 0 + interleaved passes)
-    n_expected = {
-        name: 1
-        + n_pair_reps
-        + (_N_EXTRA_PAIRS if name in subsec else 0)
-        for name in HEADLINE
-    }
-    n_expected_ab = {
-        name: _N_REPS + (_N_EXTRA_PAIRS if name in subsec else 0)
-        for name in HEADLINE
-    }
-
-    # ADVICE r5: a query that errored mid-way has fewer timings — that
-    # is NOT a steady-state median, and _best_prior_timings in a later
-    # round would ingest it as one. Full-rep queries only; partials are
-    # recorded under an explicit key the cross-round reader never
-    # consumes. Steady state = median of the reps AFTER the cold rep 0
-    # when a baseline interleaves (all passes see identical
-    # conditions), else of all three reps (the r5-r8 protocol).
-    timings = {
-        name: round(_median(ts[1:] if ab_queries else ts), 3)
-        for name, ts in reps.items()
-        if len(ts) == n_expected[name]
-    }
-    first_run = {
-        name: round(first_run_raw[name], 3)
-        for name in reps
-        if len(reps[name]) == n_expected[name] and name in first_run_raw
-    }
-    partial = {
-        name: [round(t, 3) for t in ts]
-        for name, ts in reps.items()
-        if len(ts) < n_expected[name]
-    }
-
+    t = _time_headline(_run_current, _run_baseline, HEADLINE, bool(ab_queries))
+    timings, first_run, errors = t["timings"], t["first_run"], t["errors"]
+    n_pair_reps = t["n_pair_reps"]
     record = {
         "metric": "headline_queries_total_wall",
         "value": round(sum(timings.values()), 3),
@@ -422,18 +464,9 @@ def main() -> None:
     }
     # per-query interleaved rep counts actually used for the medians
     # (additions-only: 3 everywhere pre-r15; sub-second queries now 7)
-    record_reps = {
-        name: len(ts) - (1 if ab_queries else 0)
-        for name, ts in reps.items()
-        if len(ts) == n_expected[name]
-    }
-    record["reps"] = record_reps
+    record["reps"] = t["reps"]
     if ab_queries:
-        ab_timings = {
-            name: round(_median(ts), 3)
-            for name, ts in ab_reps.items()
-            if len(ts) == n_expected_ab[name]
-        }
+        ab_timings = t["ab_timings"]
         ab_total = round(sum(ab_timings.values()), 3)
         record["ab_baseline"] = {
             "ref": ab_ref,
@@ -452,8 +485,11 @@ def main() -> None:
             )
     elif ab_ref:
         record["ab_baseline"] = {"ref": ab_ref, "error": "load failed"}
-    if partial:
-        record["partial"] = partial
+    if t["partial"]:
+        record["partial"] = t["partial"]
+    if t["extra_rep_errors"]:
+        # the provisional median stands; the failure stays visible
+        record["extra_rep_errors"] = t["extra_rep_errors"]
     if errors:
         # a partial sum reads as a faster-looking total to any tool that
         # compares "value" across rounds — null it so an errored run can

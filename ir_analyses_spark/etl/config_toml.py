@@ -130,6 +130,7 @@ def conform_all_with_mappings(
     std,
     company_mapping: dict | None = None,
     report_mapping: dict | None = None,
+    persist=None,
 ) -> dict:
     """``conform.conform_all`` with the TOML-loaded mappings injected.
 
@@ -137,17 +138,19 @@ def conform_all_with_mappings(
     DELEGATES to ``conform_all`` — the CLIs always pass materialized
     dicts from ``xbrl_mappings`` (the defaults when no file overrides
     them), so delegation must key on VALUE, not None-ness.
-    A genuine override takes ``conform_mapped``, the same composition
-    with the override's mappings, same bundle shape."""
-    if company_mapping in (None, XBRL_COMPANY_MAPPING) and report_mapping in (
-        None,
-        XBRL_REPORT_MAPPING,
-    ):
+    A genuine override, or a ``persist`` for the cover frame (see
+    ``conform_mapped``), takes ``conform_mapped``, the same composition
+    with the given mappings, same bundle shape."""
+    defaults = company_mapping in (None, XBRL_COMPANY_MAPPING) and (
+        report_mapping in (None, XBRL_REPORT_MAPPING)
+    )
+    if defaults and persist is None:
         return conform.conform_all(std)
     return conform.conform_mapped(
         std,
         company_mapping or XBRL_COMPANY_MAPPING,
         report_mapping or XBRL_REPORT_MAPPING,
+        persist,
     )
 
 

@@ -287,10 +287,11 @@ def conform_facts(std: DataFrame, reports: DataFrame) -> DataFrame:
     keeps facts in insertion order and its summary data_map is a dict built
     over that order (LAST row per element wins,
     reference utils/service/financial_service.py:127); queries reproduce
-    that rule deterministically from this column."""
+    that rule deterministically from this column. ``fiscal_year`` is the
+    report's, the column silver partitions facts by."""
     return (
         std.filter(_IS_FINANCIAL)
-        .join(reports.select(FILING_ID, "report_id"), FILING_ID)
+        .join(reports.select(FILING_ID, "report_id", "fiscal_year"), FILING_ID)
         .selectExpr(
             "xxhash64(report_id, xxhash64(element_id), context_id, period_type,"
             " consolidated_type) AS data_id",
@@ -306,6 +307,7 @@ def conform_facts(std: DataFrame, reports: DataFrame) -> DataFrame:
             "is_numeric",
             f"{ROW_SEQ} AS _row_seq",
             "current_timestamp() AS created_at",
+            "fiscal_year",
         )
     )
 
@@ -319,18 +321,26 @@ def conform_all(std: DataFrame) -> dict[str, DataFrame]:
 
 
 def conform_mapped(
-    std: DataFrame, company_mapping: dict[str, str], report_mapping: dict[str, str]
+    std: DataFrame,
+    company_mapping: dict[str, str],
+    report_mapping: dict[str, str],
+    persist=None,
 ) -> dict[str, DataFrame]:
     """``conform_all`` with explicit XBRL mappings. One cover aggregate
     feeds both dims, and each filing's report takes its ``company_id``
     from the same row: no join between the two. A key names one silver
-    column, so the two mappings may not share one."""
+    column, so the two mappings may not share one. ``persist``, when
+    given, is applied to that per-filing cover frame before the dims,
+    quarantines and facts read it (a load passes its materialization, so
+    the aggregate runs once)."""
     shared = set(company_mapping) & set(report_mapping)
     if shared:
         raise ValueError(f"company and report mappings share keys {sorted(shared)}")
     cov = _with_company_id(
         extract_cover_values(std, {**company_mapping, **report_mapping})
     )
+    if persist is not None:
+        cov = persist(cov)
     companies, company_rejects = _companies_from_cover(cov)
     reports, report_rejects = _reports_from_cover(cov)
     return {

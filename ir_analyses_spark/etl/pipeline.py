@@ -1,6 +1,6 @@
 """End-to-end backfill orchestration (SURVEY §3.2/§3.3 re-shaped): the
 reference's per-file ingest loop as one scan, one conform, facts replaced
-per report.
+per report, and the dashboard summary maintained by the load.
 
 Reference flow (scripts/bypass_import_csv.py:42-78): glob → per file:
 chardet → read_csv → standardize → map → per-row ORM inserts in a fresh
@@ -10,6 +10,12 @@ frames instead of re-running the scan. Per-filing sequencing disappears
 because surrogate keys are deterministic hashes (no flush-to-get-an-id),
 and re-running the backfill converges to the same tables (upsert on
 natural keys; each report's facts replaced as a unit).
+
+The load also keeps the gold the dashboard reads
+(``queries/summary.py``): each report row carries its four resolved
+summary measures, and each company the batch touches gets a ``summary``
+struct built from its latest committed report. Serving a summary is then
+a filter on the company dim instead of a plan over the facts.
 
 Scale posture: facts partition by ``fiscal_year`` on disk (the query
 surface's hottest predicate) and a load rewrites only the partitions it
@@ -27,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..io import sinks
 from ..io.sources import read_filing_csvs
+from ..queries.summary import company_summary, report_measures
 from .config_toml import conform_all_with_mappings
 from .standardize import standardize_raw
 
@@ -59,15 +66,22 @@ def backfill_from_csvs(
     """Bulk CSV backfill: scan → bronze → silver tables under ``out_dir``.
 
     One scan, one conform, facts replaced per report. The standardized
-    bronze is materialized once (the only CSV scan), the deduplicated
-    companies, reports and facts once; every table write and the reject
+    bronze, the per-filing cover values and the deduplicated facts, reports
+    and companies are materialized once; every table write and the reject
     count read those instead of re-running the scan → conform lineage, and
     the materialized blocks are released before returning. They are local
     checkpoints: an executor lost mid-load fails the load, and re-running
-    it converges like any re-run. Returns the
-    quarantine counts, ``{"company_rejects": n, "report_rejects": m}``;
-    the four tables land as parquet:
-    ``companies/ financial_items/ financial_reports/ financial_data/``.
+    it converges like any re-run. Returns the quarantine counts,
+    ``{"company_rejects": n, "report_rejects": m}``; the four tables land
+    as parquet: ``companies/ financial_items/ financial_reports/
+    financial_data/``.
+
+    Commit order: items, reports (with their ``report_measures``), facts,
+    then companies, each with the ``company_summary`` of its latest
+    committed report — a reader never sees a company summary ahead of the
+    reports it names. Only the batch's companies are rewritten: conform
+    rejects a report whose company it rejected, so a batch changes no
+    other company's reports.
 
     Multi-filing collapse: when several filings map to one natural key
     (re-filed cover pages → same company_id; an original + amendment →
@@ -76,50 +90,73 @@ def backfill_from_csvs(
     backfills converge bit-identically. A policy that prefers the
     amendment would order by a filing sequence instead; the testdata
     carries none, so determinism is the contract.
+
+    Batch-keyed frames (a batch's reports, companies and measures) are
+    joined by broadcast: their size estimates, products of the joins that
+    built them, run to terabytes and would plan shuffles.
     """
     held: list[DataFrame] = []
 
-    def materialize(df: DataFrame) -> DataFrame:
-        df = df.localCheckpoint(eager=True)
+    def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
+        df = df.localCheckpoint(eager=eager)
         held.append(df)
         return df
+
+    def table(name: str) -> str:
+        return os.path.join(out_dir, name)
 
     try:
         raw = read_filing_csvs(spark, csv_glob)
         std = materialize(standardize_raw(raw, filing_id_col="_filing_path"))
-        # mappings arrive from the TOML config source (etl/config_toml.py);
-        # both-None delegates straight to conform_all — identical plan
-        bundle = conform_all_with_mappings(std, company_mapping, report_mapping)
+        # mappings arrive from the TOML config source (etl/config_toml.py).
+        # The per-filing cover frame feeds both dims, both quarantines and
+        # the facts; it is kept by the first job that computes it (the
+        # reject count), so the cover aggregate runs once
+        bundle = conform_all_with_mappings(
+            std, company_mapping, report_mapping,
+            lambda cover: materialize(cover, eager=False),
+        )
         rejects = _reject_counts(bundle)
 
-        companies = materialize(
-            _dedup_deterministic(bundle["companies"], "company_id")
-        )
-        reports = materialize(_dedup_deterministic(bundle["reports"], "report_id"))
-        facts = materialize(
-            _dedup_deterministic(bundle["facts"], "data_id").join(
-                reports.select("report_id", "fiscal_year"), "report_id"
+        facts = materialize(_dedup_deterministic(bundle["facts"], "data_id"))
+        # each report row carries its resolved summary measures
+        reports = materialize(
+            _dedup_deterministic(bundle["reports"], "report_id").join(
+                F.broadcast(report_measures(facts)), "report_id", "left"
             )
         )
 
-        # dims: keyed upserts (A5/A6/A7 semantics — reload-idempotent)
+        sinks.append_missing(bundle["items"], table("financial_items"), "item_id")
         sinks.merge_upsert(
-            companies, os.path.join(out_dir, "companies"), ["company_id"]
-        )
-        sinks.append_missing(
-            bundle["items"], os.path.join(out_dir, "financial_items"), "item_id"
-        )
-        sinks.merge_upsert(
-            reports, os.path.join(out_dir, "financial_reports"), ["report_id"]
+            reports, table("financial_reports"), ["report_id"],
+            replace=F.broadcast(reports),
         )
         # facts: replaced per report, scoped to the fiscal_year partitions
         # the batch touches — a later quarter or another company's filing in
-        # the same year leaves the facts already loaded in place
+        # the same year leaves the facts already loaded in place, and a
+        # reloaded report keeps none of its old facts
         sinks.merge_upsert(
             facts,
-            os.path.join(out_dir, "financial_data"),
+            table("financial_data"),
             ["report_id"],
             partition_col="fiscal_year",
+            replace=F.broadcast(reports.select("report_id", "fiscal_year")),
+        )
+        # companies last, each with the summary of its latest committed
+        # report (commit order: see above)
+        companies = materialize(
+            _dedup_deterministic(bundle["companies"], "company_id")
+        )
+        committed = (
+            spark.read.schema(reports.schema)
+            .parquet(table("financial_reports"))
+            .join(companies.select("company_id"), "company_id", "left_semi")
+        )
+        sinks.merge_upsert(
+            companies.join(company_summary(committed), "company_id", "left"),
+            table("companies"),
+            ["company_id"],
+            replace=F.broadcast(companies),
         )
         return rejects
     finally:
@@ -128,8 +165,8 @@ def backfill_from_csvs(
 
 
 def _reject_counts(bundle: dict[str, DataFrame]) -> dict[str, int]:
-    """Both quarantine counts in one action over the materialized bronze
-    (a quarantine holds one row per rejected filing)."""
+    """Both quarantine counts in one action over the materialized cover
+    frame (a quarantine holds one row per rejected filing)."""
     names = ("company_rejects", "report_rejects")
     tagged = [bundle[n].select(F.lit(n)) for n in names]
     got = Counter(r[0] for r in tagged[0].union(tagged[1]).collect())

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -74,6 +75,7 @@ def merge_upsert(
     target_dir: str,
     keys: list[str],
     partition_col: str | None = None,
+    replace: DataFrame | None = None,
 ) -> None:
     """Keyed upsert into a parquet directory (MERGE emulation, §2A A5/A7).
 
@@ -81,16 +83,23 @@ def merge_upsert(
     collapse a batch to latest-per-key first (A4) if the feed can repeat
     keys; with duplicates, all duplicate rows land in the target.
 
-    Unpartitioned: current ⟕anti updates-by-key, union updates, stage, swap
+    ``replace`` (default ``updates``) holds the keys being replaced: every
+    target row whose keys match one of its rows goes, and ``updates``
+    lands. A load that replaces a parent's child rows as a unit passes the
+    parent keys, so a parent reloaded with fewer children, or none, keeps
+    none of its old ones.
+
+    Unpartitioned: current ⟕anti replace-by-key, union updates, stage, swap
     (the swap promotes a fully-written directory, see ``_swap_in``). On
     Delta this is exactly ``MERGE INTO t USING u ON keys``.
 
     With ``partition_col`` (the 100 TB path): the rewrite is scoped to the
-    partitions that actually appear in ``updates`` — current is PRUNED to
-    those partitions (partition filter, no full-table scan), merged, and
-    written back with dynamic partition overwrite. Untouched partitions'
-    files are never read or rewritten, so an upsert costs O(touched
-    partitions), not O(table). Precondition: ``partition_col`` must be
+    partitions that appear in ``replace`` (which carries that column) —
+    current is PRUNED to those partitions (partition filter, no full-table
+    scan), merged, and written back with dynamic partition overwrite; a
+    touched partition left with no row is rewritten empty. Untouched
+    partitions' files are never read or rewritten, so an upsert costs
+    O(touched partitions), not O(table). Precondition: ``partition_col`` must be
     functionally dependent on ``keys`` (a key never moves between
     partition values) — an update that moved a key to a new partition
     would leave the old partition's row in place, because pruning never
@@ -101,23 +110,25 @@ def merge_upsert(
     passing it skips Spark's footer-reading schema-inference job.
     """
     spark = updates.sparkSession
+    replace = updates if replace is None else replace
     _recover_swap(target_dir)
     if partition_col is not None and os.path.exists(target_dir):
         touched = [
             r[0]
-            for r in updates.select(partition_col).distinct().collect()
+            for r in replace.select(partition_col).distinct().collect()
         ]
         current = spark.read.schema(updates.schema).parquet(target_dir).filter(
             F.col(partition_col).isin(touched)
         )
         # a left anti join ignores duplicate keys on its right side, so the
         # key list needs no distinct (and no shuffle) of its own
-        kept = current.join(updates.select(*keys), keys, "left_anti")
+        kept = current.join(replace.select(*keys), keys, "left_anti")
         # Materialize before the overwrite: the merged plan reads the same
         # path it is about to replace, so cut the lineage to the file scan
         # (and dodge Spark's self-overwrite guard) with an eager checkpoint.
         merged = kept.unionByName(updates).localCheckpoint(eager=True)
         try:
+            before = _partition_listings(target_dir, partition_col, touched)
             # per-WRITE dynamic mode — never session-level conf.set, which
             # would leak into unrelated overwrites and stop them deleting
             # partitions
@@ -129,10 +140,19 @@ def merge_upsert(
             )
         finally:
             release_checkpoint(merged)
+        # dynamic overwrite replaces only the partitions it writes rows
+        # into, under new file names; one it left as it was has no row
+        # left. Rewrite it empty: a file with the schema keeps the table
+        # readable even when no row remains at all.
+        emptied = [p for p, files in before.items() if sorted(os.listdir(p)) == files]
+        if emptied:
+            empty = spark.createDataFrame([], updates.drop(partition_col).schema)
+            for part in emptied:
+                empty.write.mode("overwrite").parquet(part)
         return
     if os.path.exists(target_dir):
         current = spark.read.schema(updates.schema).parquet(target_dir)
-        kept = current.join(updates.select(*keys), keys, "left_anti")
+        kept = current.join(replace.select(*keys), keys, "left_anti")
         merged = kept.unionByName(updates)
     else:
         merged = updates
@@ -144,6 +164,22 @@ def merge_upsert(
         w = w.partitionBy(partition_col)
     w.parquet(staging)
     _swap_in(staging, target_dir)
+
+
+def _partition_listings(
+    target_dir: str, partition_col: str, values: list
+) -> dict[str, list[str]]:
+    """{directory: sorted file names} of the partitions of ``values`` that
+    exist under ``target_dir`` (Spark escapes partition values in directory
+    names as ``%XX``)."""
+    prefix = partition_col + "="
+    wanted = {str(v) for v in values}
+    out = {}
+    for name in os.listdir(target_dir):
+        if name.startswith(prefix) and unquote(name[len(prefix):]) in wanted:
+            part = os.path.join(target_dir, name)
+            out[part] = sorted(os.listdir(part))
+    return out
 
 
 def release_checkpoint(df: DataFrame) -> None:

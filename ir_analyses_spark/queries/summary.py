@@ -1,13 +1,17 @@
-"""Serving queries (SURVEY §3.1, M4): the reference's full FinancialService
-read surface as single declarative DataFrame plans.
+"""Serving queries (SURVEY §3.1, M4): the reference's FinancialService
+read surface.
 
 The reference answers "show me company X's latest margins" with five
 sequential ORM round-trips plus Python-side math (reference
-utils/service/financial_service.py:90-165). Here it is ONE plan —
-``companies ⋈ latest_report(window) ⋈ fact.filter(isin) ⋈ broadcast(items)
-→ pivot → coalesce-priority → margins`` — which Catalyst collapses into a
-broadcast-joined scan; computing the summary for *every* company costs the
-same shape as for one (the point of being set-oriented at 100 TB).
+utils/service/financial_service.py:90-165). Here the load maintains the
+answer (``etl/pipeline.backfill_from_csvs``): every report row carries its
+four resolved measures (``report_measures``), and every company row carries
+its latest report's summary as one struct column, ``summary``
+(``company_summary``). Serving a summary is then a filter on the company
+dim, one row per company, instead of a per-request plan over the facts.
+Frames without that gold (in-memory conform bundles) get the same columns
+from the same two helpers, so synonym and latest-report resolution have one
+rule. The per-item time series stays a query (``item_time_series``).
 
 Null/zero semantics preserved from the reference (SURVEY §7.3.3):
 - a margin exists only when both income and sales are non-NULL *and*
@@ -20,7 +24,7 @@ Null/zero semantics preserved from the reference (SURVEY §7.3.3):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 #: measure → ordered element_id synonym list
 #: (reference utils/service/financial_service.py:54-75)
@@ -46,27 +50,95 @@ SUMMARY_ITEMS: dict[str, list[str]] = {
     ],
 }
 
+#: summary margin → the income measure it divides by net sales
+_RATES = {
+    "operation_profit_rate": "operating_income",
+    "ordinary_profit_rate": "ordinary_income",
+    "net_profit_rate": "net_income",
+}
 
-def latest_report_per_company(reports: DataFrame) -> DataFrame:
-    """Latest-per-group (SURVEY §2A A4) as a window, with the total-order
-    tiebreakers the reference lacks (SURVEY §7.3.4): fiscal_year is the
-    varchar the reference sorts lexically — safe for 4-digit years — then
-    fiscal_year_end and report_id make the pick deterministic."""
-    w = Window.partitionBy("company_id").orderBy(
-        F.col("fiscal_year").desc(),
-        F.col("fiscal_year_end").desc(),
-        F.col("report_id").desc(),
-    )
+
+def _item_id(element_id: str) -> str:
+    """SQL of the item id the item master mints for ``element_id``."""
+    return f"xxhash64('{element_id}')"
+
+
+def report_measures(facts: DataFrame) -> DataFrame:
+    """``report_id`` plus one DOUBLE column per summary measure: one
+    ``groupBy(report_id)`` over the facts of the 11 summary elements.
+
+    Per element the LAST source row wins — the reference's ``data_map``
+    dict comprehension over insertion-ordered facts (reference
+    utils/service/financial_service.py:127), made partition-order invariant
+    by ``max_by`` on the carried ``(_row_seq, value)`` (SURVEY §7.3.4: never
+    first() after a shuffle). Each element resolves to a PRESENCE struct,
+    NULL when the report lacks the element: the reference picks a synonym
+    on key presence (reference utils/service/financial_service.py:77-88), so
+    ``coalesce`` over the structs in declared synonym order lets a
+    higher-priority element present with a NULL value win (and yield NULL)
+    instead of falling through to a lower-priority synonym. A report with
+    none of the elements has no row here."""
+    def element(e: str) -> str:
+        return (
+            f"max_by(struct(v), CASE WHEN item_id = {_item_id(e)}"
+            " THEN struct(_row_seq, v) END)"
+        )
+
+    ids = ", ".join(_item_id(e) for cands in SUMMARY_ITEMS.values() for e in cands)
     return (
-        reports.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+        facts.selectExpr(
+            "report_id", "item_id", "_row_seq", "CAST(value AS DOUBLE) AS v"
+        )
+        .filter(f"item_id IN ({ids})")
+        .groupBy("report_id")
+        .agg(
+            *[
+                F.expr(f"coalesce({', '.join(map(element, cands))}).v AS {m}")
+                for m, cands in SUMMARY_ITEMS.items()
+            ]
+        )
     )
 
 
-def _truthy(c: F.Column) -> F.Column:
-    """Python-truthiness as a predicate: non-NULL and non-zero."""
-    return c.isNotNull() & (c != 0)
+def company_summary(reports: DataFrame) -> DataFrame:
+    """``company_id`` plus ``summary``, the FinancialSummaryDTO columns of
+    the company's latest report as one struct
+    (reference utils/service/financial_service.py:33-50,90-165).
+    ``reports`` carries the ``report_measures`` columns.
+
+    Latest-per-group (SURVEY §2A A4) with the total-order tiebreakers the
+    reference lacks (SURVEY §7.3.4): ``max_by`` on (fiscal_year,
+    fiscal_year_end, report_id). fiscal_year is the varchar the reference
+    sorts lexically — safe for 4-digit years."""
+    picked = ", ".join(["fiscal_year", "quarter_type", *SUMMARY_ITEMS])
+
+    def truthy(c: str) -> str:
+        # Python truthiness as a predicate: non-NULL and non-zero
+        return f"({c} IS NOT NULL AND {c} != 0)"
+
+    fields = [
+        "'period_name', concat_ws(' ', r.fiscal_year, r.quarter_type)",
+        "'fiscal_year', CAST(r.fiscal_year AS INT)",
+        "'quarter_type', r.quarter_type",
+        *[
+            f"'{rate}', CASE WHEN {truthy('r.' + m)} AND {truthy('r.net_sales')}"
+            f" THEN r.{m} / r.net_sales * 100D END"
+            for rate, m in _RATES.items()
+        ],
+        # million-yen display scale, NULL-propagating (divergence: the
+        # reference crashes on NULL here)
+        *[f"'{m}', r.{m} / 1000000D" for m in SUMMARY_ITEMS],
+    ]
+    return (
+        reports.groupBy("company_id")
+        .agg(
+            F.expr(
+                f"max_by(struct({picked}),"
+                " struct(fiscal_year, fiscal_year_end, report_id)) AS r"
+            )
+        )
+        .selectExpr("company_id", f"named_struct({', '.join(fields)}) AS summary")
+    )
 
 
 def financial_summary(
@@ -78,109 +150,24 @@ def financial_summary(
 ) -> DataFrame:
     """One summary row per company for its latest report: the
     FinancialSummaryDTO as a DataFrame
-    (reference utils/service/financial_service.py:33-50,90-165)."""
-    all_element_ids = [e for lst in SUMMARY_ITEMS.values() for e in lst]
+    (reference utils/service/financial_service.py:33-50,90-165).
 
-    comp = companies
-    if edinet_code is not None:
-        comp = comp.filter(F.col("edinet_code") == edinet_code)
-
-    latest = latest_report_per_company(reports).select(
-        "report_id", "company_id", "fiscal_year", "quarter_type"
-    )
-
-    # fact ⋈ broadcast(item master) restricted to the 11 summary elements:
-    # the IN-filter pushes to the parquet scan of the (small) item dim and
-    # the fact side prunes by item_id after the broadcast join (J1+F10).
-    summary_items = items.filter(F.col("element_id").isin(all_element_ids)).select(
-        "item_id", "element_id"
-    )
-    # schema migration shim: a facts table written by a pre-_row_seq
-    # backfill must still serve instead of failing on a missing column.
-    # Source order is unrecoverable for such tables, so the per-element
-    # resolution below falls back to its value tiebreaker — deterministic,
-    # though not the reference's "last source row" (which no longer exists)
-    if "_row_seq" not in facts.columns:
-        facts = facts.withColumn("_row_seq", F.lit(0).cast("long"))
-    measures = facts.join(F.broadcast(summary_items), "item_id").select(
-        "report_id",
-        "element_id",
-        F.col("value").cast("double").alias("value"),
-        "_row_seq",
-    )
-    # prune BEFORE the aggregate/pivot: only latest reports are consumed,
-    # and the left join below cannot push through two groupBys — without
-    # this semi-join the pivot cost grows with history length, not
-    # company count
-    measures = measures.join(
-        latest.select("report_id"), "report_id", "left_semi"
-    )
-
-    # bounded pivot: exactly the 11 declared element ids, never the full
-    # element domain (SURVEY §7.3.6). Each cell is a PRESENCE struct, not a
-    # bare value: the reference resolves synonyms on key presence in
-    # data_map (reference utils/service/financial_service.py:77-88), so a
-    # higher-priority element present with a NULL value must WIN (and
-    # yield NULL) rather than fall through to a lower-priority synonym —
-    # a bare-value pivot + coalesce would skip it.
-    # Deterministic per-element resolution (SURVEY §7.3.4: never first()
-    # after a shuffle): LAST source row per element wins — exactly the
-    # reference's ``data_map`` dict comprehension over insertion-ordered
-    # facts (reference utils/service/financial_service.py:127), made
-    # partition-order invariant by resolving on the carried ``_row_seq``.
-    # ordering key is (seq, value): with a real _row_seq the seq is unique
-    # and value never decides; under the constant-seq migration shim above,
-    # ties resolve on value — still deterministic across partition orders
-    per_element = measures.groupBy("report_id", "element_id").agg(
-        F.max_by("value", F.struct("_row_seq", "value")).alias("v")
-    )
-    pivoted = (
-        per_element.groupBy("report_id")
-        .pivot("element_id", all_element_ids)
-        .agg(F.first(F.struct(F.lit(True).alias("present"), F.col("v").alias("v"))))
-    )
-
-    joined = (
-        comp.select("company_id", "company_name", "edinet_code")
-        .join(latest, "company_id")
-        .join(pivoted, "report_id", "left")
-    )
-
-    # candidate-priority resolution: first PRESENT candidate in declared
-    # synonym order, keeping its value even when NULL
-    # (J5, reference utils/service/financial_service.py:54-88)
-    for measure, candidates in SUMMARY_ITEMS.items():
-        resolved = None
-        for c in candidates:
-            cond = F.col(f"`{c}`.present")
-            val = F.col(f"`{c}`.v")
-            resolved = F.when(cond, val) if resolved is None else resolved.when(cond, val)
-        joined = joined.withColumn(measure, resolved)
-
-    sales = F.col("net_sales")
-
-    def rate(income_col: str) -> F.Column:
-        inc = F.col(income_col)
-        return F.when(
-            _truthy(inc) & _truthy(sales), inc / sales * F.lit(100.0)
+    Silver companies carry the gold ``summary`` the load maintains, and the
+    answer is a filter on them. Otherwise the same column comes from
+    ``report_measures`` and ``company_summary`` over ``reports`` and
+    ``facts`` (measures the reports already carry are recomputed). ``items``
+    is not read — item ids are ``xxhash64(element_id)`` — and stays for the
+    callers that pass it positionally."""
+    if "summary" in companies.columns:
+        gold = companies.filter("summary IS NOT NULL")
+    else:
+        measured = reports.drop(*SUMMARY_ITEMS).join(
+            report_measures(facts), "report_id", "left"
         )
-
-    return joined.select(
-        "company_name",
-        F.concat_ws(" ", "fiscal_year", "quarter_type").alias("period_name"),
-        F.col("fiscal_year").cast("int").alias("fiscal_year"),
-        "quarter_type",
-        rate("operating_income").alias("operation_profit_rate"),
-        rate("ordinary_income").alias("ordinary_profit_rate"),
-        rate("net_income").alias("net_profit_rate"),
-        # million-yen display scale, NULL-propagating (divergence: the
-        # reference crashes on NULL here)
-        *[
-            (F.col(m) / F.lit(1_000_000.0)).alias(m)
-            for m in SUMMARY_ITEMS
-        ],
-        "edinet_code",
-    )
+        gold = companies.join(company_summary(measured), "company_id")
+    if edinet_code is not None:
+        gold = gold.filter(F.col("edinet_code") == edinet_code)
+    return gold.select("company_name", "summary.*", "edinet_code")
 
 
 #: the chart's measures in the UI's dict-insertion order

@@ -1,7 +1,8 @@
 """Load sequences through ``pipeline.backfill_from_csvs``: each report's facts
 are replaced as a unit, so later loads into the same fiscal year — the next
 quarter, or another company's filing on a daily ingest — keep the facts
-already in silver, and re-running a load changes nothing.
+already in silver, a reloaded report keeps none of its old facts, and
+re-running a load changes nothing.
 
 Each filing is a small UTF-8 EDINET CSV export: cover rows plus
 ``N_MEASURES`` fact rows.
@@ -15,9 +16,10 @@ from ir_analyses_spark.schemas import RAW_JP_COLUMNS
 N_MEASURES = 3
 
 
-def _write_filing(path, edinet_code, quarter):
-    """One quarterly filing of fiscal year 2023 (April to March); without
-    an ``edinet_code`` the filing has no EDINET code row."""
+def _write_filing(path, edinet_code, quarter, n_measures=N_MEASURES):
+    """One quarterly filing of fiscal year 2023 (April to March) with
+    ``n_measures`` fact rows; without an ``edinet_code`` the filing has no
+    EDINET code row."""
     start_month = 3 * quarter + 1
     period = (f"第10期 第{quarter}四半期(自 2023年{start_month}月1日 "
               f"至 2023年{start_month + 2}月30日)")
@@ -39,7 +41,7 @@ def _write_filing(path, edinet_code, quarter):
         (f"jppfs_cor:Measure{i}", "項目", "CurrentYTDDuration",
          "当四半期累計期間", "連結", "期間", "JPY", "円",
          str(1000 * quarter + i))
-        for i in range(N_MEASURES)
+        for i in range(n_measures)
     ]
     lines = ["\t".join(RAW_JP_COLUMNS)] + ["\t".join(r) for r in rows]
     path.parent.mkdir(parents=True, exist_ok=True)
@@ -47,9 +49,10 @@ def _write_filing(path, edinet_code, quarter):
 
 
 def _load(spark, tmp_path, batch, filings):
-    for edinet_code, quarter in filings:
+    """Load ``(edinet_code, quarter[, n_measures])`` filings as one batch."""
+    for edinet_code, quarter, *n in filings:
         _write_filing(tmp_path / batch / f"{edinet_code}_q{quarter}.csv",
-                      edinet_code, quarter)
+                      edinet_code, quarter, *n)
     return pipeline.backfill_from_csvs(
         spark, str(tmp_path / batch / "*.csv"), str(tmp_path / "silver"))
 
@@ -96,3 +99,16 @@ def test_rerun_of_last_load_changes_no_count(spark, tmp_path):
                       "facts": 3 * N_MEASURES}
     _load(spark, tmp_path, "q2", [])
     assert _counts(spark, tmp_path) == counts
+
+
+def test_reloaded_report_keeps_none_of_its_old_facts(spark, tmp_path):
+    """A report reloaded from a filing with fewer financial rows, or none,
+    loses the rows it no longer has, also when that leaves its fiscal_year
+    partition, or the whole table, without a row."""
+    _load(spark, tmp_path, "q1q2", [("E00001", 1), ("E00001", 2)])
+    _load(spark, tmp_path, "amend_q1", [("E00001", 1, 1)])
+    assert _facts_per_report(spark, tmp_path) == {
+        ("E00001", "Q1"): 1, ("E00001", "Q2"): N_MEASURES}
+    _load(spark, tmp_path, "empty_q1_q2", [("E00001", 1, 0), ("E00001", 2, 0)])
+    assert _facts_per_report(spark, tmp_path) == {}
+    assert _counts(spark, tmp_path)["reports"] == 2

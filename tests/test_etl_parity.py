@@ -401,23 +401,6 @@ def test_financial_summary_end_to_end(spark):
     assert dto["net_profit_rate"] == pytest.approx(6.0)
 
 
-def test_summary_serves_pre_row_seq_facts(spark):
-    """Migration shim: a facts table written by a pre-_row_seq backfill
-    (schema without the ordering column) must still serve — constant seq is
-    synthesized and the per-element tiebreak falls back to value."""
-    f1 = raw_df(spark, _filing("2", "第10期 第２四半期(自 2023年4月1日 至 2023年6月30日)",
-                               "500000000", "50000000", "40000000", "30000000",
-                               "jppfs_cor:OperatingRevenue1"), filing="F1")
-    std = standardize.standardize_raw(f1, filing_id_col="filing_id")
-    bundle = conform.conform_all(std)
-    legacy_facts = bundle["facts"].drop("_row_seq")
-    dto = summary_q.financial_summary(
-        bundle["companies"], bundle["reports"], legacy_facts, bundle["items"]
-    ).first()
-    assert dto["net_sales"] == 500.0
-    assert dto["operation_profit_rate"] == pytest.approx(10.0)
-
-
 def test_summary_chart_frame_golden(spark):
     """The UI chart frame (reference app/app.py:158-169): 2 columns
     (項目, 金額) + carried insertion order, values in million yen,

@@ -1,0 +1,143 @@
+"""The dashboard summary the load maintains (``companies.summary``) against
+the summary computed from the same silver's reports and facts.
+
+After every step of a load sequence — a cold load, a later quarter of the
+same fiscal year, an older quarter loaded after a newer one, per-company
+daily loads, an amendment and a re-run — serving from the gold must equal
+the compute path (``financial_summary`` over ``companies`` without the
+``summary`` column), and must name each company's latest report.
+
+Each filing is a small UTF-8 EDINET CSV export: cover rows plus the four
+summary measures, with the sales figure booked under a per-company synonym.
+"""
+
+from __future__ import annotations
+
+import pytest
+
+from ir_analyses_spark.etl import pipeline
+from ir_analyses_spark.queries import summary as summary_q
+from ir_analyses_spark.schemas import RAW_JP_COLUMNS
+
+#: EDINET code → the element its sales are booked under
+SALES_ELEMENT = {
+    "E00001": "jppfs_cor:NetSales",
+    "E00002": "jppfs_cor:OperatingRevenue1",
+    "E00003": "jpigp_cor:RevenueIFRS",
+}
+
+
+def _write_filing(path, edinet_code, fiscal_year, quarter, sales):
+    """One quarterly filing; operating income is zero in Q2 (its margin is
+    NULL), and the ordinary income is a non-numeric ``－`` in Q3 (present
+    with a NULL value)."""
+    start = 3 * quarter + 1
+    period = (f"第10期 第{quarter}四半期(自 {fiscal_year}年{start}月1日 "
+              f"至 {fiscal_year}年{start + 2}月30日)")
+
+    def cover(element, value):
+        return (element, "項目", "FilingDateInstant", "提出日時点", "その他",
+                "時点", "－", "－", value)
+
+    def measure(element, value):
+        return (element, "項目", "CurrentYTDDuration", "当四半期累計期間",
+                "連結", "期間", "JPY", "円", value)
+
+    rows = [
+        cover("jpcrp_cor:DocumentTitleCoverPage", "四半期報告書"),
+        cover("jpcrp_cor:QuarterlyAccountingPeriodCoverPage", period),
+        cover("jpcrp_cor:CompanyNameCoverPage", f"会社{edinet_code}"),
+        cover("jpdei_cor:CurrentPeriodEndDateDEI",
+              f"{fiscal_year}/{start + 2}/30"),
+        cover("jpdei_cor:EDINETCodeDEI", edinet_code),
+        measure(SALES_ELEMENT[edinet_code], str(sales)),
+        measure("jppfs_cor:OperatingIncome",
+                "0" if quarter == 2 else str(sales // 10)),
+        measure("jppfs_cor:OrdinaryIncome",
+                "－" if quarter == 3 else str(sales // 8)),
+        measure("jppfs_cor:ProfitLoss", str(sales // 20)),
+    ]
+    lines = ["\t".join(RAW_JP_COLUMNS)] + ["\t".join(r) for r in rows]
+    path.parent.mkdir(parents=True, exist_ok=True)
+    path.write_text("\n".join(lines) + "\n", encoding="utf-8")
+
+
+def _load(spark, tmp_path, batch, filings):
+    """Load ``(edinet_code, fiscal_year, quarter, sales)`` filings as one
+    batch."""
+    for code, fy, q, sales in filings:
+        _write_filing(tmp_path / batch / f"{code}_{fy}q{q}.csv", code, fy, q, sales)
+    pipeline.backfill_from_csvs(
+        spark, str(tmp_path / batch / "*.csv"), str(tmp_path / "silver"))
+
+
+def _served(spark, tmp_path):
+    """(gold answer, compute-path answer), each as {edinet_code: row}."""
+    t = pipeline.read_silver(spark, str(tmp_path / "silver"))
+    gold = summary_q.financial_summary(**t)
+    computed = summary_q.financial_summary(
+        t["companies"].drop("summary"), t["reports"], t["facts"], t["items"])
+    assert gold.columns == computed.columns
+    return ({r["edinet_code"]: r.asDict() for r in gold.collect()},
+            {r["edinet_code"]: r.asDict() for r in computed.collect()})
+
+
+def _check(spark, tmp_path, latest):
+    """Gold equals compute path; ``latest`` maps each company to the
+    period and million-yen sales it must show."""
+    gold, computed = _served(spark, tmp_path)
+    assert gold == computed
+    assert {code: (r["period_name"], r["net_sales"]) for code, r in gold.items()} == latest
+    return gold
+
+
+def test_gold_matches_compute_path_over_a_load_sequence(spark, tmp_path):
+    # cold load: two companies, two quarters
+    _load(spark, tmp_path, "cold", [
+        ("E00001", 2023, 1, 100_000_000), ("E00001", 2023, 2, 200_000_000),
+        ("E00002", 2023, 1, 300_000_000), ("E00002", 2023, 2, 400_000_000),
+    ])
+    gold = _check(spark, tmp_path, {"E00001": ("2023 Q2", 200.0),
+                                    "E00002": ("2023 Q2", 400.0)})
+    # Q2: zero operating income gives a NULL margin
+    assert gold["E00001"]["operation_profit_rate"] is None
+    assert gold["E00001"]["net_profit_rate"] == pytest.approx(5.0)
+
+    # a later quarter of the same fiscal year
+    _load(spark, tmp_path, "q3", [("E00001", 2023, 3, 500_000_000)])
+    gold = _check(spark, tmp_path, {"E00001": ("2023 Q3", 500.0),
+                                    "E00002": ("2023 Q2", 400.0)})
+    # Q3: the present-but-NULL ordinary income stays NULL
+    assert gold["E00001"]["ordinary_income"] is None
+    assert gold["E00001"]["ordinary_profit_rate"] is None
+
+    # an older quarter after a newer one: the latest does not move back
+    _load(spark, tmp_path, "older", [("E00001", 2022, 3, 50_000_000)])
+    _check(spark, tmp_path, {"E00001": ("2023 Q3", 500.0),
+                             "E00002": ("2023 Q2", 400.0)})
+
+    # per-company daily loads: a new company, then another's next quarter
+    _load(spark, tmp_path, "day1", [("E00003", 2023, 1, 700_000_000)])
+    _load(spark, tmp_path, "day2", [("E00002", 2023, 3, 800_000_000)])
+    latest = {"E00001": ("2023 Q3", 500.0), "E00002": ("2023 Q3", 800.0),
+              "E00003": ("2023 Q1", 700.0)}
+    _check(spark, tmp_path, latest)
+
+    # an amendment: the latest report re-filed with new figures
+    _load(spark, tmp_path, "amend", [("E00001", 2023, 3, 600_000_000)])
+    latest["E00001"] = ("2023 Q3", 600.0)
+    _check(spark, tmp_path, latest)
+
+    # a re-run of the last load changes nothing
+    _load(spark, tmp_path, "amend", [])
+    _check(spark, tmp_path, latest)
+
+
+def test_gold_serves_one_company(spark, tmp_path):
+    _load(spark, tmp_path, "cold", [
+        ("E00001", 2023, 1, 100_000_000), ("E00002", 2023, 1, 300_000_000),
+    ])
+    t = pipeline.read_silver(spark, str(tmp_path / "silver"))
+    rows = summary_q.financial_summary(**t, edinet_code="E00002").collect()
+    assert [(r["edinet_code"], r["period_name"], r["net_sales"]) for r in rows] == [
+        ("E00002", "2023 Q1", 300.0)]
