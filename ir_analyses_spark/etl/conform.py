@@ -287,11 +287,24 @@ def conform_facts(std: DataFrame, reports: DataFrame) -> DataFrame:
     keeps facts in insertion order and its summary data_map is a dict built
     over that order (LAST row per element wins,
     reference utils/service/financial_service.py:127); queries reproduce
-    that rule deterministically from this column. ``fiscal_year`` is the
-    report's, the column silver partitions facts by."""
+    that rule deterministically from this column.
+
+    Each fact also carries three columns of its report, all functionally
+    dependent on ``report_id`` and copied by the join that already supplies
+    it: ``fiscal_year``, the column silver partitions facts by, and
+    ``company_id`` and ``fiscal_year_end``, so the item time series is a
+    filter on the facts with no reports join (``queries/summary.py``). A
+    load that collapses several filings of one report onto one survivor
+    re-copies ``company_id`` and ``fiscal_year_end`` from the report row it
+    commits (``etl/pipeline.backfill_from_csvs``)."""
     return (
         std.filter(_IS_FINANCIAL)
-        .join(reports.select(FILING_ID, "report_id", "fiscal_year"), FILING_ID)
+        .join(
+            reports.select(
+                FILING_ID, "report_id", "company_id", "fiscal_year", "fiscal_year_end"
+            ),
+            FILING_ID,
+        )
         .selectExpr(
             "xxhash64(report_id, xxhash64(element_id), context_id, period_type,"
             " consolidated_type) AS data_id",
@@ -307,6 +320,8 @@ def conform_facts(std: DataFrame, reports: DataFrame) -> DataFrame:
             "is_numeric",
             f"{ROW_SEQ} AS _row_seq",
             "current_timestamp() AS created_at",
+            "company_id",
+            "fiscal_year_end",
             "fiscal_year",
         )
     )

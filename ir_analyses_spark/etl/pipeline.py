@@ -15,7 +15,9 @@ The load also keeps the gold the dashboard reads
 (``queries/summary.py``): each report row carries its four resolved
 summary measures, and each company the batch touches gets a ``summary``
 struct built from its latest committed report. Serving a summary is then
-a filter on the company dim instead of a plan over the facts.
+a filter on the company dim instead of a plan over the facts. Each fact
+carries its committed report's ``company_id`` and ``fiscal_year_end``, so
+serving an item time series is a filter on the facts with no reports join.
 
 Scale posture: facts partition by ``fiscal_year`` on disk (the query
 surface's hottest predicate) and a load rewrites only the partitions it
@@ -36,6 +38,10 @@ from ..io.sources import read_filing_csvs
 from ..queries.summary import company_summary, report_measures
 from .config_toml import conform_all_with_mappings
 from .standardize import standardize_raw
+
+
+#: the report columns each fact carries besides ``fiscal_year``
+_REPORT_COPIES = ("company_id", "fiscal_year_end")
 
 
 def _dedup_deterministic(df: DataFrame, key: str) -> DataFrame:
@@ -86,14 +92,20 @@ def backfill_from_csvs(
     Multi-filing collapse: when several filings map to one natural key
     (re-filed cover pages → same company_id; an original + amendment →
     same report_id and therefore same data_id per item), each table keeps
-    ONE deterministic survivor — min-struct per key — so repeated
+    ONE deterministic survivor (``_dedup_deterministic``) so repeated
     backfills converge bit-identically. A policy that prefers the
     amendment would order by a filing sequence instead; the testdata
-    carries none, so determinism is the contract.
+    carries none, so determinism is the contract. A report's surviving row
+    and its surviving facts may come from different filings, so the facts
+    take ``company_id`` and ``fiscal_year_end`` from the report row the
+    load commits, not from their own filing.
 
-    Batch-keyed frames (a batch's reports, companies and measures) are
-    joined by broadcast: their size estimates, products of the joins that
-    built them, run to terabytes and would plan shuffles.
+    Batch-keyed frames (a batch's reports and companies) are joined by
+    broadcast: their size estimates, products of the joins that built
+    them, run to terabytes and would plan shuffles. The measures join the
+    reports in a shuffled hash join instead: both sides are aggregates on
+    ``report_id``, so the join reuses their exchanges and runs no job of
+    its own.
     """
     held: list[DataFrame] = []
 
@@ -118,11 +130,15 @@ def backfill_from_csvs(
         )
         rejects = _reject_counts(bundle)
 
-        facts = materialize(_dedup_deterministic(bundle["facts"], "data_id"))
+        # the report columns facts carry are re-copied from the committed
+        # report row below: several filings of one report may disagree
+        facts = materialize(
+            _dedup_deterministic(bundle["facts"].drop(*_REPORT_COPIES), "data_id")
+        )
         # each report row carries its resolved summary measures
         reports = materialize(
             _dedup_deterministic(bundle["reports"], "report_id").join(
-                F.broadcast(report_measures(facts)), "report_id", "left"
+                report_measures(facts).hint("shuffle_hash"), "report_id", "left"
             )
         )
 
@@ -136,7 +152,9 @@ def backfill_from_csvs(
         # the same year leaves the facts already loaded in place, and a
         # reloaded report keeps none of its old facts
         sinks.merge_upsert(
-            facts,
+            facts.join(
+                F.broadcast(reports.select("report_id", *_REPORT_COPIES)), "report_id"
+            ),
             table("financial_data"),
             ["report_id"],
             partition_col="fiscal_year",

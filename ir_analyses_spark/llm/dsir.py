@@ -40,20 +40,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..io.sources import load_table
-from ..ops.helpers import spread_narrow
+from ..ops.helpers import spread_narrow, table_bytes
 from .bloomdecon import _md5_long
 
-
-def _table_bytes(sf_dir: str, table: str) -> int | None:
-    """On-disk size of a testdata table — the zero-cost evidence for
-    spread_narrow's split-count gate (None when unreadable: the gate
-    then simply stays off rather than paying an RDD re-plan)."""
-    import os
-
-    try:
-        return os.path.getsize(os.path.join(sf_dir, f"{table}.parquet"))
-    except OSError:
-        return None
 
 #: hashed feature buckets (paper uses 10^4-10^5; sized down to 64 so the
 #: defining behavior of HASHED features — distinct words sharing a bucket —
@@ -177,7 +166,7 @@ def dsir_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents table, target = English."""
     return dsir_weights(
         load_table(spark, "documents", sf_dir),
-        approx_input_bytes=_table_bytes(sf_dir, "documents"),
+        approx_input_bytes=table_bytes(sf_dir, "documents"),
     )
 
 
@@ -313,7 +302,7 @@ def dsir_gate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dsir_gate(
         docs,
         docs.filter(F.col("lang") == "en").select("text"),
-        approx_input_bytes=_table_bytes(sf_dir, "documents"),
+        approx_input_bytes=table_bytes(sf_dir, "documents"),
     )
 
 

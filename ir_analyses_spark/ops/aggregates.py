@@ -13,22 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from ..io.sources import load_table
-from .helpers import davg, dsum, spread_narrow, sql_davg, sql_dsum
-
-
-def _table_bytes(sf_dir: str | None, name: str) -> int | None:
-    """On-disk size of one testdata table — the ~0-cost input to
-    spread_narrow's split-count gate. None (→ RDD-based gate) when the
-    path is not a plain local file (e.g. a remote URI deployment)."""
-    import os
-
-    from ..io.sources import DEFAULT_SF_DIR
-
-    path = f"{sf_dir or DEFAULT_SF_DIR}/{name}.parquet"
-    try:
-        return os.path.getsize(path)
-    except OSError:
-        return None
+from .helpers import davg, dsum, spread_narrow, sql_davg, sql_dsum, table_bytes
 
 
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -56,7 +41,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_discount", "l_tax",
     )
     return (
-        spread_narrow(rows, approx_input_bytes=_table_bytes(sf_dir, "lineitem"))
+        spread_narrow(rows, approx_input_bytes=table_bytes(sf_dir, "lineitem"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             dsum("l_quantity").alias("sum_qty"),

@@ -14,7 +14,11 @@ double columns.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, functions as F
+
+from ..io.sources import DEFAULT_SF_DIR
 
 
 def local_df(spark, rows, schema) -> DataFrame:
@@ -103,6 +107,32 @@ def spread_narrow(df: DataFrame, approx_input_bytes: int | None = None) -> DataF
     if narrow is None:
         narrow = df.rdd.getNumPartitions() < par
     return df.hint("REBALANCE") if narrow else df
+
+
+def table_bytes(sf_dir: str | None, name: str) -> int | None:
+    """On-disk size of the testdata table ``name`` (``<sf_dir>/<name>.parquet``,
+    ``sf_dir`` defaulting like ``io.sources.load_table``) — the ~0-cost
+    ``approx_input_bytes`` of :func:`spread_narrow`. A single-file table is
+    its file's size; a directory-layout table sums its data files, skipping
+    the ``_``- and ``.``-prefixed files and directories Spark's reader skips
+    (``_SUCCESS``, checksums, staging). None when the path is neither a
+    readable file nor a directory (e.g. a remote URI); each caller picks its
+    own fallback gate."""
+    path = os.path.join(sf_dir or DEFAULT_SF_DIR, f"{name}.parquet")
+    try:
+        if not os.path.isdir(path):
+            return os.path.getsize(path)
+        total = 0
+        for d, dirs, files in os.walk(path):
+            dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+            total += sum(
+                os.path.getsize(os.path.join(d, f))
+                for f in files
+                if not f.startswith(("_", "."))
+            )
+        return total
+    except OSError:
+        return None
 
 
 _BYTE_SUFFIX = {

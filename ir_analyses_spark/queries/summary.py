@@ -11,7 +11,14 @@ its latest report's summary as one struct column, ``summary``
 dim, one row per company, instead of a per-request plan over the facts.
 Frames without that gold (in-memory conform bundles) get the same columns
 from the same two helpers, so synonym and latest-report resolution have one
-rule. The per-item time series stays a query (``item_time_series``).
+rule.
+
+The per-item time series (``item_time_series``) is a filter on the facts
+alone: each fact carries its report's ``company_id`` and
+``fiscal_year_end`` (``etl/conform.conform_facts``; a load copies them
+from the report row it commits), so no request joins or broadcasts the
+reports, and its few rows are sorted in one partition. Facts written
+before those columns existed lack them; re-run the loads to rebuild them.
 
 Null/zero semantics preserved from the reference (SURVEY §7.3.3):
 - a margin exists only when both income and sales are non-NULL *and*
@@ -216,11 +223,18 @@ def item_time_series(
     item_id: int,
 ) -> DataFrame:
     """Per-company single-item time series ordered by period end (J2/O2,
-    reference utils/repositories/financial_data_repository.py:37-49)."""
+    reference utils/repositories/financial_data_repository.py:37-49).
+
+    Each fact carries its report's ``company_id`` and ``fiscal_year_end``
+    (``etl/conform.conform_facts``), so the series is one filter on the
+    facts, with no reports join. The few matching rows are sorted in one
+    partition: a global ``orderBy`` would plan a range exchange, and a
+    range exchange samples its input in a Spark job of its own. The scan
+    itself stays parallel across the facts files. ``reports`` is not read
+    and stays for the callers that pass it positionally."""
     return (
-        facts.filter(F.col("item_id") == item_id)
-        .join(reports.select("report_id", "company_id", "fiscal_year_end"), "report_id")
-        .filter(F.col("company_id") == company_id)
-        .orderBy("fiscal_year_end")
+        facts.filter(f"company_id = {int(company_id)} AND item_id = {int(item_id)}")
+        .repartition(1)
+        .sortWithinPartitions("fiscal_year_end")
         .select("fiscal_year_end", "value", "value_text", "is_numeric")
     )

@@ -1,11 +1,13 @@
-"""Declared StructType schemas for every table the engine touches.
+"""Declared StructType schemas for the tables the engine reads.
 
 The reference declares its warehouse schema twice (SQLAlchemy ORM,
 reference utils/db_models.py:24-122; DDL, reference sql/ddl.sql:107-256) and
-infers its ingest schema per-file with pandas. The engine declares everything
-once, here, and never infers: explicit schemas are what let the parquet
-scanner prune columns and let the CSV reader run PERMISSIVE without a
-sampling pass over 100 TB of input.
+infers its ingest schema per-file with pandas. The engine declares its
+inputs once, here, and never infers: explicit schemas are what let the
+parquet scanner prune columns and let the CSV reader run PERMISSIVE without
+a sampling pass over 100 TB of input. The silver warehouse tables take their
+schemas from the conform projections that build them (``etl/conform.py``),
+and a load reads its own tables back with the schema of the frame it writes.
 
 Type mapping rationale (SURVEY §1.2):
 - surrogate keys are deterministic ``xxhash64`` LongType values, not DB
@@ -57,66 +59,6 @@ RAW_FILING_SCHEMA = T.StructType(
 
 #: Post-rename schema (all-string; standardize.py derives typed columns).
 STANDARDIZED_INPUT_COLUMNS = list(RAW_COLUMN_MAPPING.values())
-
-# ---------------------------------------------------------------------------
-# Silver warehouse tables (reference utils/db_models.py:24-122)
-# ---------------------------------------------------------------------------
-
-COMPANIES_SCHEMA = T.StructType(
-    [
-        T.StructField("company_id", T.LongType(), False),
-        T.StructField("edinet_code", T.StringType(), False),
-        T.StructField("security_code", T.StringType(), True),
-        T.StructField("industry_code", T.StringType(), True),
-        T.StructField("company_name", T.StringType(), False),
-        T.StructField("created_at", T.TimestampType(), True),
-        T.StructField("updated_at", T.TimestampType(), True),
-    ]
-)
-
-FINANCIAL_ITEMS_SCHEMA = T.StructType(
-    [
-        T.StructField("item_id", T.LongType(), False),
-        T.StructField("element_id", T.StringType(), False),
-        T.StructField("item_name", T.StringType(), False),
-        T.StructField("category", T.StringType(), True),
-        T.StructField("unit_type", T.StringType(), True),
-        T.StructField("created_at", T.TimestampType(), True),
-        T.StructField("updated_at", T.TimestampType(), True),
-    ]
-)
-
-FINANCIAL_REPORTS_SCHEMA = T.StructType(
-    [
-        T.StructField("report_id", T.LongType(), False),
-        T.StructField("company_id", T.LongType(), False),
-        T.StructField("document_type", T.StringType(), True),
-        # string(4) in the reference (utils/db_models.py:77); kept as string at
-        # the API surface, with an int fiscal_year_num alongside for ordering.
-        T.StructField("fiscal_year", T.StringType(), True),
-        T.StructField("quarter_type", T.StringType(), True),
-        T.StructField("fiscal_year_end", T.DateType(), False),
-        T.StructField("filing_date", T.DateType(), True),
-        T.StructField("created_at", T.TimestampType(), True),
-        T.StructField("updated_at", T.TimestampType(), True),
-    ]
-)
-
-FINANCIAL_DATA_SCHEMA = T.StructType(
-    [
-        T.StructField("data_id", T.LongType(), False),
-        T.StructField("report_id", T.LongType(), False),
-        T.StructField("item_id", T.LongType(), False),
-        T.StructField("context_id", T.StringType(), True),
-        T.StructField("period_type", T.StringType(), True),
-        T.StructField("consolidated_type", T.StringType(), True),
-        T.StructField("duration_type", T.StringType(), True),
-        T.StructField("value", T.DecimalType(20, 0), True),
-        T.StructField("value_text", T.StringType(), True),
-        T.StructField("is_numeric", T.BooleanType(), True),
-        T.StructField("created_at", T.TimestampType(), True),
-    ]
-)
 
 # ---------------------------------------------------------------------------
 # Driver synthetic tables (TESTDATA.md / FIXTURES.md §4) — declared so scans

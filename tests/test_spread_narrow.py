@@ -1,13 +1,16 @@
 """Focused tests for helpers.spread_narrow (r14 optimization): the
 scale-adaptive parallelism guard must fire on narrow inputs, stay a no-op
-on wide ones, and never change results."""
+on wide ones, and never change results; and for helpers.table_bytes, the
+on-disk size its callers pass as the gate's input."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from ir_analyses_spark.ops.helpers import _parse_bytes, spread_narrow
+from ir_analyses_spark.ops.helpers import _parse_bytes, spread_narrow, table_bytes
 from ir_analyses_spark.registry import all_queries
 
 
@@ -77,3 +80,30 @@ def test_pricing_summary_result_unchanged_by_guard(spark, sf_dir):
         .collect()
     )
     assert [tuple(r) for r in got] == [tuple(r) for r in plain]
+
+
+def test_table_bytes_sums_a_directory_layout_table(spark, tmp_path):
+    """A table Spark wrote (a directory, here with partition
+    subdirectories) is the sum of its data files — not the size of the
+    directory entry — and Spark's ``_SUCCESS`` and ``.crc`` files do not
+    count."""
+    path = tmp_path / "documents.parquet"
+    (
+        spark.range(20_000)
+        .selectExpr("id AS doc_id", "sha2(CAST(id AS STRING), 256) AS text",
+                    "id % 2 AS part")
+        .repartition(3)
+        .write.partitionBy("part")
+        .parquet(str(path))
+    )
+    data = [f for f in path.rglob("*.parquet") if not f.name.startswith(".")]
+    assert len(data) >= 2 and (path / "_SUCCESS").exists()
+    want = sum(f.stat().st_size for f in data)
+    assert want > os.path.getsize(path)
+    assert table_bytes(str(tmp_path), "documents") == want
+
+
+def test_table_bytes_single_file_and_missing(sf_dir, tmp_path):
+    assert table_bytes(sf_dir, "lineitem") == os.path.getsize(
+        os.path.join(sf_dir, "lineitem.parquet"))
+    assert table_bytes(str(tmp_path), "lineitem") is None

@@ -1,17 +1,25 @@
-"""The dashboard summary the load maintains (``companies.summary``) against
-the summary computed from the same silver's reports and facts.
+"""The dashboard answers the load maintains against the same answers
+computed from the silver's reports and facts.
 
 After every step of a load sequence — a cold load, a later quarter of the
 same fiscal year, an older quarter loaded after a newer one, per-company
-daily loads, an amendment and a re-run — serving from the gold must equal
-the compute path (``financial_summary`` over ``companies`` without the
-``summary`` column), and must name each company's latest report.
+daily loads, an amendment, a re-run, and an amendment whose period end
+differs in the same batch as its original:
+
+- serving the summary from the gold (``companies.summary``) must equal the
+  compute path (``financial_summary`` over ``companies`` without the
+  ``summary`` column), and must name each company's latest report;
+- every fact must carry its report row's ``company_id`` and
+  ``fiscal_year_end``, and ``item_time_series`` (a filter on the facts)
+  must equal the facts ⋈ reports join it replaced.
 
 Each filing is a small UTF-8 EDINET CSV export: cover rows plus the four
 summary measures, with the sales figure booked under a per-company synonym.
 """
 
 from __future__ import annotations
+
+import uuid
 
 import pytest
 
@@ -27,10 +35,11 @@ SALES_ELEMENT = {
 }
 
 
-def _write_filing(path, edinet_code, fiscal_year, quarter, sales):
+def _write_filing(path, edinet_code, fiscal_year, quarter, sales, end_day=30):
     """One quarterly filing; operating income is zero in Q2 (its margin is
     NULL), and the ordinary income is a non-numeric ``－`` in Q3 (present
-    with a NULL value)."""
+    with a NULL value). The period ends on ``end_day`` of the quarter's
+    last month."""
     start = 3 * quarter + 1
     period = (f"第10期 第{quarter}四半期(自 {fiscal_year}年{start}月1日 "
               f"至 {fiscal_year}年{start + 2}月30日)")
@@ -48,7 +57,7 @@ def _write_filing(path, edinet_code, fiscal_year, quarter, sales):
         cover("jpcrp_cor:QuarterlyAccountingPeriodCoverPage", period),
         cover("jpcrp_cor:CompanyNameCoverPage", f"会社{edinet_code}"),
         cover("jpdei_cor:CurrentPeriodEndDateDEI",
-              f"{fiscal_year}/{start + 2}/30"),
+              f"{fiscal_year}/{start + 2}/{end_day}"),
         cover("jpdei_cor:EDINETCodeDEI", edinet_code),
         measure(SALES_ELEMENT[edinet_code], str(sales)),
         measure("jppfs_cor:OperatingIncome",
@@ -63,10 +72,11 @@ def _write_filing(path, edinet_code, fiscal_year, quarter, sales):
 
 
 def _load(spark, tmp_path, batch, filings):
-    """Load ``(edinet_code, fiscal_year, quarter, sales)`` filings as one
-    batch."""
-    for code, fy, q, sales in filings:
-        _write_filing(tmp_path / batch / f"{code}_{fy}q{q}.csv", code, fy, q, sales)
+    """Load ``(edinet_code, fiscal_year, quarter, sales[, end_day])``
+    filings as one batch."""
+    for code, fy, q, sales, *end_day in filings:
+        name = "_".join(map(str, [code, f"{fy}q{q}", *end_day]))
+        _write_filing(tmp_path / batch / f"{name}.csv", code, fy, q, sales, *end_day)
     pipeline.backfill_from_csvs(
         spark, str(tmp_path / batch / "*.csv"), str(tmp_path / "silver"))
 
@@ -82,12 +92,43 @@ def _served(spark, tmp_path):
             {r["edinet_code"]: r.asDict() for r in computed.collect()})
 
 
+_SERIES_COLUMNS = ["fiscal_year_end", "value", "value_text", "is_numeric"]
+
+
+def _check_series(spark, tmp_path):
+    """Every fact carries its report row's company and period end, and each
+    company's sales and profit series equals the facts ⋈ reports join."""
+    t = pipeline.read_silver(spark, str(tmp_path / "silver"))
+    own = ["report_id", "company_id", "fiscal_year_end"]
+    reports = t["reports"].select(own)
+    facts = t["facts"]
+    assert facts.count() > 0
+    assert facts.select(own).subtract(reports).count() == 0
+    item_id = {r["element_id"]: r["item_id"] for r in t["items"].collect()}
+    joined = facts.drop("company_id", "fiscal_year_end").join(reports, "report_id")
+    for r in t["companies"].collect():
+        for element in (SALES_ELEMENT[r["edinet_code"]], "jppfs_cor:ProfitLoss"):
+            i = item_id[element]
+            want = (
+                joined.filter(f"company_id = {r['company_id']} AND item_id = {i}")
+                .orderBy("fiscal_year_end")
+                .select(_SERIES_COLUMNS)
+                .collect()
+            )
+            got = summary_q.item_time_series(
+                t["facts"], t["reports"], r["company_id"], i
+            ).collect()
+            assert want and got == want, (r["edinet_code"], element)
+
+
 def _check(spark, tmp_path, latest):
-    """Gold equals compute path; ``latest`` maps each company to the
-    period and million-yen sales it must show."""
+    """Gold equals compute path and the time series equals the join;
+    ``latest`` maps each company to the period and million-yen sales it
+    must show."""
     gold, computed = _served(spark, tmp_path)
     assert gold == computed
     assert {code: (r["period_name"], r["net_sales"]) for code, r in gold.items()} == latest
+    _check_series(spark, tmp_path)
     return gold
 
 
@@ -132,6 +173,17 @@ def test_gold_matches_compute_path_over_a_load_sequence(spark, tmp_path):
     _load(spark, tmp_path, "amend", [])
     _check(spark, tmp_path, latest)
 
+    # an original and its amendment in one batch, whose period ends differ:
+    # the facts carry the period end of the report row the load commits,
+    # and a re-run keeps the same survivor
+    _load(spark, tmp_path, "amend_end", [
+        ("E00002", 2023, 3, 900_000_000, 29), ("E00002", 2023, 3, 900_000_000, 30),
+    ])
+    latest["E00002"] = ("2023 Q3", 900.0)
+    _check(spark, tmp_path, latest)
+    _load(spark, tmp_path, "amend_end", [])
+    _check(spark, tmp_path, latest)
+
 
 def test_gold_serves_one_company(spark, tmp_path):
     _load(spark, tmp_path, "cold", [
@@ -141,3 +193,34 @@ def test_gold_serves_one_company(spark, tmp_path):
     rows = summary_q.financial_summary(**t, edinet_code="E00002").collect()
     assert [(r["edinet_code"], r["period_name"], r["net_sales"]) for r in rows] == [
         ("E00002", "2023 Q1", 300.0)]
+
+
+def test_time_series_is_one_filtered_scan(spark, tmp_path):
+    """``item_time_series`` plans no broadcast and no range exchange, and
+    its collect runs at most two Spark jobs (the scan's shuffle map stage
+    and the one-partition sort)."""
+    _load(spark, tmp_path, "cold", [
+        ("E00001", 2022, 3, 50_000_000), ("E00001", 2023, 1, 100_000_000),
+        ("E00002", 2023, 1, 300_000_000),
+    ])
+    t = pipeline.read_silver(spark, str(tmp_path / "silver"))
+    company_id = (
+        t["companies"].filter("edinet_code = 'E00001'").first()["company_id"]
+    )
+    item_id = (
+        t["items"].filter("element_id = 'jppfs_cor:NetSales'").first()["item_id"]
+    )
+    df = summary_q.item_time_series(t["facts"], t["reports"], company_id, item_id)
+    sc = spark.sparkContext
+    group = f"item-time-series-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "item_time_series")
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [float(r["value"]) for r in rows] == [50_000_000.0, 100_000_000.0]
+    plan = df._jdf.queryExecution().executedPlan().toString().lower()
+    assert "broadcastexchange" not in plan
+    assert "rangepartitioning" not in plan
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
