@@ -27,9 +27,7 @@ Design differences from the reference, on purpose:
   unnoticed.
 - **Driver-side orchestration, Spark-side scan.** Listing + download are
   metadata-sized (one JSON + one ZIP per filing) and run on the driver;
-  the heavy CSV parse is the distributed scan. For fleet-scale list
-  ingest, ``edinet_datasource.py`` turns each date into a DataSource
-  input partition instead.
+  the heavy CSV parse is the distributed scan.
 """
 
 from __future__ import annotations

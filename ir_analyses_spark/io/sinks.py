@@ -1,12 +1,15 @@
-"""Sinks (SURVEY §2A S6/S7, A5–A7): batch table writes and MERGE emulation
-on bare parquet.
+"""Sinks (SURVEY §2A S6/S7, A5–A7): the silver load's table writes on
+bare parquet directories.
 
 The reference upserts row-at-a-time through an ORM session (reference
 utils/repositories/base_repository.py:54-58); the engine's write unit is a
-whole DataFrame. With Delta/Iceberg available these helpers become
-``MERGE INTO`` / ``replaceWhere`` one-liners; on bare parquet the same
-semantics are anti-join + union + staged atomic swap. All upserts key on
-*natural* keys (SURVEY §7.3.2) so reloads are idempotent.
+whole DataFrame. ``etl/pipeline.py`` commits the four silver tables here:
+``merge_upsert`` (anti-join + union + staged swap, or a partition-scoped
+dynamic overwrite) and ``append_missing`` (insert-only append). All
+upserts key on *natural* keys (SURVEY §7.3.2) so reloads are idempotent.
+``write_table`` and ``replace_partition`` are the plain overwrite and
+partition-replace writes. Streaming sinks and table maintenance commit
+through the transaction-log format in ``io/txn.py`` instead.
 """
 
 from __future__ import annotations
@@ -190,196 +193,6 @@ def release_checkpoint(df: DataFrame) -> None:
     df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
-def batch_ledger(target_dir: str, batch_id) -> tuple[bool, "Callable[[], None]"]:
-    """Applied-batch ledger for non-idempotent (additive / versioning)
-    foreachBatch sinks: returns (already_applied, mark_applied).
-
-    The ledger lives INSIDE the table directory (``<target>/_applied/<id>``
-    — underscore-prefixed, so parquet scans never see it). That placement
-    is the point: a sink that commits through a staged swap writes the
-    marker into the STAGING directory before the swap, so marker and data
-    are promoted by the SAME rename — there is no between-merge-and-mark
-    crash window (the poor-man's manifest commit; Delta's txn version does
-    this inside its log). ``scd2_merge(batch_id=...)`` and
-    ``additive_merge_committed`` both commit that way; ``mark_applied``
-    (tmp+rename, so a torn marker can never silently skip an unapplied
-    batch) remains for callers without a staged swap, which do retain the
-    classic two-phase gap."""
-    import os as _os
-
-    ledger = _os.path.join(target_dir, "_applied")
-    marker = _os.path.join(ledger, str(batch_id))
-    # tables written before the ledger moved inside the table directory
-    # kept markers at the sibling <target>__applied — honor them so an
-    # upgraded deployment doesn't re-apply every historical batch
-    legacy = _os.path.join(
-        target_dir.rstrip("/") + "__applied", str(batch_id)
-    )
-
-    def mark_applied() -> None:
-        _os.makedirs(ledger, exist_ok=True)
-        tmp = marker + ".tmp"
-        with open(tmp, "w"):
-            pass
-        _os.rename(tmp, marker)
-
-    applied = _os.path.exists(marker) or _os.path.exists(legacy)
-    return applied, mark_applied
-
-
-#: retain at most this many applied-batch markers per ledger; Structured
-#: Streaming replays only batches at/after the checkpoint frontier, so
-#: markers far behind it are dead weight (empty files, but at one per
-#: batch per partition they would dominate directory listings eventually)
-_LEDGER_KEEP = 128
-
-
-def _carry_markers(live_dir: str, staging_dir: str, batch_id: int) -> None:
-    """Copy prior batch markers from the live directory into staging and
-    add this batch's marker, so ONE rename commits data + full ledger.
-    Markers are bare files named ``_applied_<id>`` at the directory root
-    (hidden from scans by the underscore prefix)."""
-    prior = []
-    if os.path.isdir(live_dir):
-        prior = [
-            f for f in os.listdir(live_dir) if f.startswith("_applied_")
-        ]
-    keep = sorted(
-        (int(f.rsplit("_", 1)[1]) for f in prior),
-        reverse=True,
-    )[:_LEDGER_KEEP]
-    os.makedirs(staging_dir, exist_ok=True)
-    for bid in keep:
-        with open(os.path.join(staging_dir, f"_applied_{bid}"), "w"):
-            pass
-    with open(os.path.join(staging_dir, f"_applied_{batch_id}"), "w"):
-        pass
-
-
-def additive_merge_committed(
-    delta: DataFrame,
-    target_dir: str,
-    partition_col: str,
-    group_cols: list[str],
-    sum_cols: list[str],
-    batch_id: int,
-) -> None:
-    """ADDITIVE merge with an atomic per-partition commit: existing rows
-    and the delta re-aggregate (counts/sums accumulate, unlike keyed MERGE
-    which replaces rows), and each touched partition directory is swapped
-    in by ONE rename that carries both the merged data and this batch's
-    applied marker — so a replayed batch can never double-count, crash
-    anywhere included.
-
-    Protocol per batch: (1) prune to partitions NOT already carrying this
-    batch's marker; (2) one Spark job writes every such partition's merged
-    result into a staging root; (3) per partition, copy forward prior
-    markers + add this batch's marker into the staging directory, then
-    rename it into place. Crash before a partition's rename leaves that
-    partition untouched and unmarked → replay redoes it; crash after
-    leaves data+marker committed together → replay skips it. The rewrite
-    is O(touched partitions), never O(table), and step 3 is pure
-    filesystem metadata.
-
-    Residual (documented, same as every non-transactional layout): a
-    reader can see partition A new while B is still old, and each swap has
-    the brief no-target blink of ``_swap_in``. Fixing those needs a
-    transactional table format (Delta/Iceberg), where this whole function
-    is ``MERGE`` + txn id.
-
-    Precondition: ``partition_col`` values must be directory-name-safe
-    (the engine's day strings are); ``group_cols`` must contain
-    ``partition_col``.
-    """
-    spark = delta.sparkSession
-    staging_root = target_dir.rstrip("/") + "__staging"
-    if os.path.exists(staging_root):
-        shutil.rmtree(staging_root)
-
-    def _part(root: str, value) -> str:
-        return os.path.join(root, f"{partition_col}={value}")
-
-    def _part_old(value) -> str:
-        # the old copy parks in a SIBLING directory of the table root — a
-        # "day=X__old" dir inside it would be discovered as a phantom
-        # partition value by any concurrent reader (Spark's partition
-        # inference parses every directory component, hidden-prefix or not)
-        return os.path.join(
-            target_dir.rstrip("/") + "__oldparts", f"{partition_col}={value}"
-        )
-
-    def _recover_part(value) -> None:
-        # resolve a partition whose previous swap crashed between renames
-        # (its only copy is the hidden old dir): restore if the live dir
-        # is missing, else the old copy is post-promotion garbage
-        old, live = _part_old(value), _part(target_dir, value)
-        if os.path.exists(old):
-            if os.path.exists(live):
-                shutil.rmtree(old)
-            else:
-                os.rename(old, live)
-
-    marker = f"_applied_{batch_id}"
-    touched = sorted(
-        r[0] for r in delta.select(partition_col).distinct().collect()
-    )  # deterministic commit order: replays resume at the first uncommitted
-    # recovery BEFORE the pruned read below — reading an absent live dir
-    # as "no current rows" would drop prior batches from the merge
-    for v in touched:
-        _recover_part(v)
-    todo = [
-        v
-        for v in touched
-        if not os.path.exists(os.path.join(_part(target_dir, v), marker))
-    ]
-    if not todo:
-        return
-    delta_todo = delta.filter(F.col(partition_col).isin(todo))
-    # "current exists" must mean AT LEAST ONE committed partition
-    # directory, not merely the directory inode: a crash between the
-    # first batch's makedirs and its first partition rename leaves an
-    # EMPTY target, and reading that as parquet throws on every replay —
-    # a permanent wedge the bare-exists check caused.
-    has_current = os.path.isdir(target_dir) and any(
-        e.startswith(f"{partition_col}=") for e in os.listdir(target_dir)
-    )
-    if has_current:
-        # partition-pruned read: only the todo directories are scanned.
-        # NOTE a partially-committed prior attempt is handled by the todo
-        # filter, not here — an already-swapped partition's (corrupt to
-        # re-merge) staging output is simply never promoted again.
-        current = spark.read.parquet(target_dir).filter(
-            F.col(partition_col).isin(todo)
-        )
-        merged = current.unionByName(delta_todo)
-    else:
-        merged = delta_todo
-    merged = merged.groupBy(*group_cols).agg(
-        *[F.sum(c).alias(c) for c in sum_cols]
-    )
-    # one job, all todo partitions; no localCheckpoint needed — staging is
-    # a different path, so the plan never overwrites its own input
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(
-        staging_root
-    )
-    os.makedirs(target_dir, exist_ok=True)
-    for v in todo:
-        live, stage = _part(target_dir, v), _part(staging_root, v)
-        if not os.path.isdir(stage):
-            continue  # empty merged partition: nothing to commit, replay retries
-        _carry_markers(live, stage, batch_id)
-        old = _part_old(v)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.exists(live):
-            os.makedirs(os.path.dirname(old), exist_ok=True)
-            os.rename(live, old)
-        os.rename(stage, live)  # THE commit point for this partition
-        if os.path.exists(old):
-            shutil.rmtree(old)
-    shutil.rmtree(staging_root, ignore_errors=True)
-
-
 def append_missing(
     new_rows: DataFrame, target_dir: str, key: str | list[str]
 ) -> None:
@@ -418,408 +231,3 @@ def replace_partition(
         .parquet(target_dir)
     )
 
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int = 32,
-) -> None:
-    """Bucketed managed table (SURVEY §7.3.6: "+ bucketing by report_id at
-    100 TB"): co-locates rows by key at WRITE time so every later join or
-    aggregation on the bucket key skips its shuffle entirely — the
-    pay-once-shuffle-never-again layout for fact⋈fact joins.
-    """
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
-def scd2_merge(
-    updates: DataFrame,
-    target_dir: str,
-    key: str,
-    change_cols: list[str],
-    effective_col: str = "effective_from",
-    batch_id: int | None = None,
-) -> None:
-    """Slowly-changing-dimension type-2 merge: history-preserving upsert.
-
-    The target keeps one row per (key, version) with ``effective_from`` /
-    ``effective_to`` / ``is_current``; an update whose ``change_cols``
-    differ from the key's current row CLOSES that row (effective_to :=
-    update's effective_from) and appends the new version. Unchanged keys
-    and non-current history rows pass through untouched — at scale,
-    combine with a partition column the way ``merge_upsert`` does.
-
-    The reference keeps only latest state (ORM upsert); SCD2 is what the
-    same write needs once history must be queryable "as of" any date.
-    Like SQL MERGE, one update row per key per batch — collapse a batch
-    to latest-per-key first (A4) if the feed can repeat keys.
-
-    With ``batch_id`` (streaming replay protection), the applied-batch
-    marker is written into the staging directory BEFORE the swap, so the
-    rename that promotes the merged table promotes the marker with it —
-    data and "applied" commit atomically; there is no window where the
-    merge landed but the ledger didn't (see ``batch_ledger``).
-    """
-    spark = updates.sparkSession
-    _recover_swap(target_dir)
-
-    def _commit(df: DataFrame) -> None:
-        staging = target_dir.rstrip("/") + "__staging"
-        df.write.mode("overwrite").parquet(staging)
-        # the swap replaces the whole directory, so the ledger must ride
-        # along: carry prior markers forward even on a non-ledgered call
-        # (mixed ledgered/ad-hoc use must not amnesia the ledger)
-        live_ledger = os.path.join(target_dir, "_applied")
-        stage_ledger = os.path.join(staging, "_applied")
-        if os.path.isdir(live_ledger):
-            os.makedirs(stage_ledger, exist_ok=True)
-            # bounded carry (same _LEDGER_KEEP rationale as the additive
-            # sink): streaming replays only reach back to the checkpoint
-            # frontier, so carrying every historical marker forward would
-            # recreate O(n) files per batch — O(n²) over a stream's life
-            names = os.listdir(live_ledger)
-            numeric = sorted(
-                (int(f) for f in names if f.isdigit()), reverse=True
-            )[:_LEDGER_KEEP]
-            keep = {str(b) for b in numeric} | {
-                f for f in names if not f.isdigit()
-            }
-            for f in keep:
-                with open(os.path.join(stage_ledger, f), "w"):
-                    pass
-        if batch_id is not None:
-            os.makedirs(stage_ledger, exist_ok=True)
-            with open(os.path.join(stage_ledger, str(batch_id)), "w"):
-                pass
-        _swap_in(staging, target_dir)
-
-    merged = scd2_apply(
-        spark.read.parquet(target_dir) if os.path.exists(target_dir) else None,
-        updates,
-        key,
-        change_cols,
-        effective_col,
-    )
-    if os.path.exists(target_dir):
-        # the merged plan reads the path it replaces: cut lineage first
-        merged = merged.localCheckpoint(eager=True)
-    _commit(merged)
-
-
-def scd2_apply(
-    current: DataFrame | None,
-    updates: DataFrame,
-    key: str,
-    change_cols: list[str],
-    effective_col: str = "effective_from",
-) -> DataFrame:
-    """The SCD2 state transition as a pure transform: (current table or
-    None, one-row-per-key updates) → next table. Shared by the staged-swap
-    sink above and the txn-format sink (``txn.scd2_merge_txn``)."""
-    upd = updates.select(
-        F.col(key),
-        *[F.col(c) for c in change_cols],
-        F.col(effective_col).alias("_new_from"),
-    )
-    if current is None:
-        return upd.select(
-            key,
-            *change_cols,
-            F.col("_new_from").alias("effective_from"),
-            F.lit(None).cast("date").alias("effective_to"),
-            F.lit(True).alias("is_current"),
-        )
-    # null-safe change test: plain struct != returns NULL when a member is
-    # NULL, which would silently skip NULL→value (and value→NULL) changes
-    changed = ~(
-        F.struct(*[f"cur.{c}" for c in change_cols]).eqNullSafe(
-            F.struct(*[f"u.{c}" for c in change_cols])
-        )
-    )
-    cur = current.alias("cur")
-    u = upd.alias("u")
-    joined = cur.join(u, F.col(f"cur.{key}") == F.col(f"u.{key}"), "left")
-    # current rows: close if a differing update arrived, else keep as-is
-    kept_or_closed = joined.select(
-        F.col(f"cur.{key}").alias(key),
-        *[F.col(f"cur.{c}").alias(c) for c in change_cols],
-        F.col("cur.effective_from").alias("effective_from"),
-        F.when(
-            F.col("cur.is_current") & F.col("u._new_from").isNotNull() & changed,
-            F.col("u._new_from"),
-        )
-        .otherwise(F.col("cur.effective_to"))
-        .alias("effective_to"),
-        F.when(
-            F.col("cur.is_current") & F.col("u._new_from").isNotNull() & changed,
-            F.lit(False),
-        )
-        .otherwise(F.col("cur.is_current"))
-        .alias("is_current"),
-    )
-    # new versions: updates that differ from the key's current row, plus
-    # brand-new keys
-    cur_now = current.filter("is_current").alias("cur")
-    new_rows = (
-        u.join(cur_now, F.col(f"u.{key}") == F.col(f"cur.{key}"), "left")
-        .filter(F.col(f"cur.{key}").isNull() | changed)
-        .select(
-            F.col(f"u.{key}").alias(key),
-            *[F.col(f"u.{c}").alias(c) for c in change_cols],
-            F.col("u._new_from").alias("effective_from"),
-            F.lit(None).cast("date").alias("effective_to"),
-            F.lit(True).alias("is_current"),
-        )
-    )
-    return kept_or_closed.unionByName(new_rows)
-
-
-def scd2_point_in_time_join(
-    facts: DataFrame,
-    dim: DataFrame,
-    key: str,
-    date_col: str,
-) -> DataFrame:
-    """Point-in-time join against an SCD2 dimension: each fact row picks
-    the version whose [effective_from, effective_to) interval contains the
-    fact date — the query the versioned history exists for. A half-open
-    interval join; the optimizer runs it as an equi-join on the key with
-    the interval as residual predicate, so it costs one shuffle per side
-    (or none, if both are bucketed by the key)."""
-    d = dim.alias("d")
-    f = facts.alias("f")
-    return f.join(
-        d,
-        (F.col(f"f.{key}") == F.col(f"d.{key}"))
-        & (F.col("d.effective_from") <= F.col(f"f.{date_col}"))
-        & (
-            F.col("d.effective_to").isNull()
-            | (F.col("d.effective_to") > F.col(f"f.{date_col}"))
-        ),
-        "left",
-    ).drop(F.col(f"d.{key}"))
-
-
-def compact_small_files(
-    spark,
-    target_dir: str,
-    partition_col: str | None = None,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> dict:
-    """Small-file compaction (table maintenance, the OPTIMIZE of
-    Delta/Iceberg on bare parquet): streaming upserts and per-batch appends
-    accrete tiny files until scan planning, footer reads, and task
-    scheduling dominate query time — at 100 TB a table with 10⁶ kilobyte
-    files is unreadable regardless of its byte size.
-
-    Rewrites the table (or, with ``partition_col``, each partition) into
-    ``ceil(bytes / target_file_bytes)`` files via a staged atomic swap.
-    Data is unchanged — only the file layout. Returns {files_before,
-    files_after}. At scale you run this per-partition on the partitions a
-    merge touched (the same pruning discipline as ``merge_upsert``).
-    """
-    import math
-
-    def _data_files(d: str) -> list[str]:
-        # prune _/.-prefixed dirs (mirrors llm/substring_dedup.
-        # _committed_files): a write killed mid-job leaves _temporary
-        # task-attempt dirs holding uncommitted parquet, and counting
-        # that debris would inflate files_before/total — compaction
-        # would size its output off bytes the table never committed
-        # (r11 VERDICT item 2)
-        out = []
-        for root, dirs, files in os.walk(d):
-            dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
-            out += [
-                os.path.join(root, f)
-                for f in files
-                if f.endswith(".parquet") and not f.startswith(("_", "."))
-            ]
-        return out
-
-    def _carry_ledgers(staging: str) -> None:
-        """The applied-batch ledgers live INSIDE the table directory (see
-        ``batch_ledger``), so a whole-directory swap that doesn't copy
-        them would amnesia every applied batch and re-enable replay
-        double-application — compaction must carry both ledger kinds."""
-        live_ledger = os.path.join(target_dir, "_applied")
-        if os.path.isdir(live_ledger):
-            stage_ledger = os.path.join(staging, "_applied")
-            os.makedirs(stage_ledger, exist_ok=True)
-            for f in os.listdir(live_ledger):
-                with open(os.path.join(stage_ledger, f), "w"):
-                    pass
-        if partition_col:
-            for e in os.listdir(target_dir):
-                if not e.startswith(f"{partition_col}="):
-                    continue
-                part_dir = os.path.join(target_dir, e)
-                if not os.path.isdir(part_dir):
-                    continue
-                for f in os.listdir(part_dir):
-                    if f.startswith("_applied_"):
-                        dst = os.path.join(staging, e)
-                        os.makedirs(dst, exist_ok=True)
-                        with open(os.path.join(dst, f), "w"):
-                            pass
-
-    _recover_swap(target_dir)
-    before = _data_files(target_dir)
-    total = sum(os.path.getsize(f) for f in before)
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(target_dir)
-    staging = target_dir.rstrip("/") + "__staging"
-    if partition_col is not None:
-        # Repartition by (partition value, row salt): keying by the value
-        # alone would bound each directory to ONE task — and therefore one
-        # file — so a hot partition could never split to the byte target.
-        # The salt spreads each value over ceil(n_files / n_dirs) tasks;
-        # the dynamic writer still emits one file per (task, value).
-        n_dirs = max(
-            1, len({os.path.dirname(f) for f in before})
-        )
-        spread = max(1, -(-n_files // n_dirs))
-        salt = F.pmod(
-            F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(spread)
-        )
-        (
-            df.repartition(max(n_files, n_dirs), F.col(partition_col), salt)
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(staging)
-        )
-    else:
-        df.repartition(n_files).write.mode("overwrite").parquet(staging)
-    _carry_ledgers(staging)
-    _swap_in(staging, target_dir)
-    return {"files_before": len(before), "files_after": len(_data_files(target_dir))}
-
-
-def write_sorted_shards(
-    df: DataFrame, path: str, sort_col: str, n_shards: int
-) -> None:
-    """Range-sharded sorted output: ``repartitionByRange`` samples the sort
-    key to build balanced, NON-OVERLAPPING shard boundaries, then each
-    shard sorts locally — a full distributed sort without any single
-    machine seeing all data. This is both the training-shard layout
-    (readers stream shard k independently, globally ordered across shards)
-    and the precondition for min/max file skipping: disjoint per-file key
-    ranges make a point query touch exactly one file."""
-    (
-        df.repartitionByRange(n_shards, F.col(sort_col))
-        .sortWithinPartitions(sort_col)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def zorder_value(col_a, col_b, bits: int = 16) -> "pyspark.sql.Column":  # noqa: F821
-    """Morton (Z-order) interleave of two pre-scaled integer columns
-    (each in [0, 2^bits)): bit i of ``col_a`` lands at position 2i+1, of
-    ``col_b`` at 2i. Pure shift/and/or expressions — whole-stage codegen,
-    no UDF. Locality property: keys close in EITHER dimension are close
-    in z-value, so range-sharding by z bounds BOTH columns' per-file
-    ranges (1-D sorting bounds only its own column)."""
-    terms = []
-    for i in range(bits):
-        terms.append(
-            F.shiftleft(F.shiftright(col_a, i).bitwiseAND(F.lit(1)), 2 * i + 1)
-        )
-        terms.append(
-            F.shiftleft(F.shiftright(col_b, i).bitwiseAND(F.lit(1)), 2 * i)
-        )
-    z = terms[0]
-    for t in terms[1:]:
-        z = z.bitwiseOR(t)
-    return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    n_shards: int,
-    bits: int = 16,
-) -> None:
-    """Z-ordered two-dimensional layout (Delta's ``OPTIMIZE ZORDER BY``):
-    scale both columns to ``bits``-bit ranks (min/max from one scalar
-    aggregate, broadcast), interleave into a Morton key, range-shard and
-    locally sort by it. Result: every file covers a small rectangle of
-    (col_a, col_b) space, so min/max file skipping — parquet footers, or
-    ``txn`` manifest stats — prunes selective predicates on EITHER
-    column; a 1-D sorted layout can only ever prune its sort column.
-
-    Production note: linear min/max scaling is rank-faithful enough for
-    uniform-ish keys; heavily skewed keys want histogram/range-bin ranks
-    (same z-interleave on top). Scaling constants come from the data in
-    ONE extra scalar aggregate — no shuffle added beyond the range
-    exchange every sorted layout needs.
-    """
-    (
-        zorder_layout(df, col_a, col_b, n_shards, bits)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def zorder_layout(
-    df: DataFrame, col_a: str, col_b: str, n_shards: int, bits: int = 16
-) -> DataFrame:
-    """The reusable z-layout pipeline (shared by ``write_zordered`` and
-    ``txn.compact(zorder_by=…)``): scale both columns to ``bits``-bit
-    ranks, Morton-interleave, range-shard and locally sort. An EMPTY frame
-    returns unchanged (no min/max to scale by); non-numeric or all-NULL
-    z-columns raise a clear error instead of a deep TypeError or a
-    silent not-actually-zordered commit."""
-    lo_a, hi_a, lo_b, hi_b, n_rows = df.select(
-        F.min(col_a), F.max(col_a), F.min(col_b), F.max(col_b),
-        F.count(F.lit(1)),
-    ).first()
-    if n_rows == 0:
-        return df  # empty input: nothing to lay out
-    if lo_a is None or lo_b is None:
-        # rows exist but a z-column is ALL NULL — silently skipping the
-        # layout would commit a 'zorder'-labeled version that is neither
-        # z-ordered nor resharded
-        raise ValueError(
-            f"z-order column {col_a if lo_a is None else col_b!r} is "
-            "entirely NULL"
-        )
-    try:
-        lo_af, span_af = float(lo_a), float(hi_a - lo_a) or 1.0
-        lo_bf, span_bf = float(lo_b), float(hi_b - lo_b) or 1.0
-    except (TypeError, ValueError) as exc:
-        raise ValueError(
-            f"z-order requires numeric columns, got {col_a!r}/{col_b!r}"
-        ) from exc
-    top = (1 << bits) - 1
-
-    def scaled(c, lo, span):
-        return F.floor(
-            (F.col(c).cast("double") - F.lit(lo)) / F.lit(span) * top
-        ).cast("long")
-
-    z = zorder_value(
-        scaled(col_a, lo_af, span_af), scaled(col_b, lo_bf, span_bf), bits
-    )
-    return (
-        df.withColumn("_z", z)
-        .repartitionByRange(n_shards, F.col("_z"))
-        .sortWithinPartitions("_z")
-        .drop("_z")
-    )
-
-
-def surrogate_key(*cols) -> "pyspark.sql.Column":  # noqa: F821
-    """Deterministic 64-bit surrogate key (SURVEY §7.3.1): xxhash64 of the
-    natural key — stable across runs/executors, unlike
-    monotonically_increasing_id, and needs no sequence/flush dance."""
-    return F.xxhash64(*cols)

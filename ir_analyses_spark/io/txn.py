@@ -1,10 +1,10 @@
 """Transaction-log table format: snapshot-isolated parquet tables.
 
-Closes the gap the bare-directory sinks in ``io/sinks.py`` document as
-their residual (VERDICT r3 "what's missing" item 1): a staged-swap layout
-has a brief no-target blink between renames, a concurrent reader can see
-partition A new while B is still old, and the applied-batch marker of a
-multi-partition additive merge commits per partition, not per batch. The
+The one table format the streaming sinks (``streaming/pipeline.py``)
+commit through. It closes what a bare-directory staged swap cannot: such
+a layout has a brief no-target blink between renames, a concurrent reader
+can see partition A new while B is still old, and an applied-batch marker
+kept beside the data commits per partition, not per batch. The
 reference never faces any of this because PostgreSQL gives it MVCC
 transactions (reference utils/service/unitofwork.py:120-143); this module
 is the storage-level equivalent for a Spark engine on plain parquet — the
@@ -36,13 +36,12 @@ same design Delta Lake / Iceberg use, cut down to what the engine needs:
 Scale note (100 TB): each manifest is a FULL file listing, so resolving a
 snapshot costs one small-file read — no log replay. At very large file
 counts you would shard the listing and checkpoint like Delta does; at
-this engine's file sizes (compaction keeps files near 128 MB,
-``compact_small_files``) a manifest stays in the low MBs up to ~10⁵ files
-per table. Partition pruning happens at the MANIFEST level: a pruned read
-hands Spark only the matching files, so there is no directory listing at
-all — cheaper than Hive-style discovery, and the reason
-``txn_merge_upsert`` costs O(touched partitions) in both I/O and
-metadata.
+this engine's file sizes (``compact`` keeps files near 128 MB) a
+manifest stays in the low MBs up to ~10⁵ files per table. Partition
+pruning happens at the MANIFEST level: a pruned read hands Spark only the
+matching files, so there is no directory listing at all — cheaper than
+Hive-style discovery, and the reason ``merge_upsert`` costs O(touched
+partitions) in both I/O and metadata.
 """
 
 from __future__ import annotations
@@ -62,7 +61,7 @@ _LOG_DIR = "_txnlog"
 _DATA_DIR = "data"
 #: applied-batch ids retained in the manifest ledger; Structured Streaming
 #: replays only batches at/after the checkpoint frontier, so a bounded
-#: recent window is sufficient (same rationale as sinks._LEDGER_KEEP)
+#: recent window is sufficient
 _LEDGER_KEEP = 128
 
 
@@ -600,8 +599,9 @@ def overwrite(
 ) -> Snapshot:
     """Full replace: new manifest names only this commit's files.
     ``stats_cols`` records per-file min/max for manifest-level skipping
-    (pair with a range-sharded layout — ``sinks.write_sorted_shards`` —
-    for disjoint per-file ranges, where a point read prunes to ONE file)."""
+    (pair with a range-sharded layout — ``repartitionByRange`` plus
+    ``sortWithinPartitions`` on the key — for disjoint per-file ranges,
+    where a point read prunes to ONE file)."""
     entries, _ = _write_data(df, table, partition_by, stats_cols)
     schema = df.schema.json()
 
@@ -768,8 +768,9 @@ def additive_merge(
     batch_id: int,
 ) -> Snapshot:
     """Additive (re-aggregating) merge with exactly-once batch semantics:
-    the successor of ``sinks.additive_merge_committed`` without its
-    residuals. ``batch_id`` membership in the manifest ledger IS the
+    existing rows and the delta re-aggregate (counts/sums accumulate,
+    unlike keyed MERGE which replaces rows), pruned to the partitions the
+    delta touches. ``batch_id`` membership in the manifest ledger IS the
     applied test, and the ledger travels in the same manifest link as the
     data — so across ALL touched partitions, "merged" and "marked" are
     one atomic operation. A replayed batch short-circuits to a no-op; a
@@ -883,6 +884,78 @@ def transform_commit(
     return _commit(table, build)
 
 
+def scd2_apply(
+    current: DataFrame | None,
+    updates: DataFrame,
+    key: str,
+    change_cols: list[str],
+    effective_col: str = "effective_from",
+) -> DataFrame:
+    """The SCD2 state transition as a pure transform: (current table or
+    None, one-row-per-key updates) → next table. The table keeps one row
+    per (key, version) with ``effective_from`` / ``effective_to`` /
+    ``is_current``; an update whose ``change_cols`` differ from the key's
+    current row CLOSES that row (effective_to := the update's
+    effective_from) and appends the new version. Unchanged keys and
+    non-current history rows pass through untouched."""
+    upd = updates.select(
+        F.col(key),
+        *[F.col(c) for c in change_cols],
+        F.col(effective_col).alias("_new_from"),
+    )
+    if current is None:
+        return upd.select(
+            key,
+            *change_cols,
+            F.col("_new_from").alias("effective_from"),
+            F.lit(None).cast("date").alias("effective_to"),
+            F.lit(True).alias("is_current"),
+        )
+    # null-safe change test: plain struct != returns NULL when a member is
+    # NULL, which would silently skip NULL→value (and value→NULL) changes
+    changed = ~(
+        F.struct(*[f"cur.{c}" for c in change_cols]).eqNullSafe(
+            F.struct(*[f"u.{c}" for c in change_cols])
+        )
+    )
+    cur = current.alias("cur")
+    u = upd.alias("u")
+    joined = cur.join(u, F.col(f"cur.{key}") == F.col(f"u.{key}"), "left")
+    # current rows: close if a differing update arrived, else keep as-is
+    kept_or_closed = joined.select(
+        F.col(f"cur.{key}").alias(key),
+        *[F.col(f"cur.{c}").alias(c) for c in change_cols],
+        F.col("cur.effective_from").alias("effective_from"),
+        F.when(
+            F.col("cur.is_current") & F.col("u._new_from").isNotNull() & changed,
+            F.col("u._new_from"),
+        )
+        .otherwise(F.col("cur.effective_to"))
+        .alias("effective_to"),
+        F.when(
+            F.col("cur.is_current") & F.col("u._new_from").isNotNull() & changed,
+            F.lit(False),
+        )
+        .otherwise(F.col("cur.is_current"))
+        .alias("is_current"),
+    )
+    # new versions: updates that differ from the key's current row, plus
+    # brand-new keys
+    cur_now = current.filter("is_current").alias("cur")
+    new_rows = (
+        u.join(cur_now, F.col(f"u.{key}") == F.col(f"cur.{key}"), "left")
+        .filter(F.col(f"cur.{key}").isNull() | changed)
+        .select(
+            F.col(f"u.{key}").alias(key),
+            *[F.col(f"u.{c}").alias(c) for c in change_cols],
+            F.col("u._new_from").alias("effective_from"),
+            F.lit(None).cast("date").alias("effective_to"),
+            F.lit(True).alias("is_current"),
+        )
+    )
+    return kept_or_closed.unionByName(new_rows)
+
+
 def scd2_merge_txn(
     updates: DataFrame,
     table: str,
@@ -891,12 +964,15 @@ def scd2_merge_txn(
     effective_col: str = "effective_from",
     batch_id: int | None = None,
 ) -> Snapshot:
-    """``sinks.scd2_merge`` on the txn format: same close-and-version
-    transform (shared ``sinks.scd2_apply``), but the versioned history
-    commits as one manifest — readers never see a half-swapped dimension,
-    and a replayed ``batch_id`` is a no-op at the same table version."""
-    from .sinks import scd2_apply
+    """Slowly-changing-dimension type-2 merge: a history-preserving
+    upsert (``scd2_apply``) committed as one manifest — readers never see
+    a half-written dimension, and a replayed ``batch_id`` is a no-op at
+    the same table version.
 
+    The reference keeps only latest state (ORM upsert); SCD2 is what the
+    same write needs once history must be queryable "as of" any date.
+    Like SQL MERGE, one update row per key per batch — collapse a batch
+    to latest-per-key first if the feed can repeat keys."""
     return transform_commit(
         updates.sparkSession,
         table,
@@ -940,6 +1016,79 @@ def restore(table: str, to_version: int) -> Snapshot:
     return _commit(table, build)
 
 
+def zorder_value(col_a, col_b, bits: int = 16) -> "pyspark.sql.Column":  # noqa: F821
+    """Morton (Z-order) interleave of two pre-scaled integer columns
+    (each in [0, 2^bits)): bit i of ``col_a`` lands at position 2i+1, of
+    ``col_b`` at 2i. Pure shift/and/or expressions — whole-stage codegen,
+    no UDF. Locality property: keys close in EITHER dimension are close
+    in z-value, so range-sharding by z bounds BOTH columns' per-file
+    ranges (1-D sorting bounds only its own column)."""
+    terms = []
+    for i in range(bits):
+        terms.append(
+            F.shiftleft(F.shiftright(col_a, i).bitwiseAND(F.lit(1)), 2 * i + 1)
+        )
+        terms.append(
+            F.shiftleft(F.shiftright(col_b, i).bitwiseAND(F.lit(1)), 2 * i)
+        )
+    z = terms[0]
+    for t in terms[1:]:
+        z = z.bitwiseOR(t)
+    return z
+
+
+def zorder_layout(
+    df: DataFrame, col_a: str, col_b: str, n_shards: int, bits: int = 16
+) -> DataFrame:
+    """The z-layout pipeline of ``compact(zorder_by=…)`` (Delta's
+    ``OPTIMIZE ZORDER BY``): scale both columns to ``bits``-bit ranks
+    (min/max from one scalar aggregate), Morton-interleave, range-shard
+    and locally sort. Every output file then covers a small rectangle of
+    (col_a, col_b) space, so min/max skipping prunes selective predicates
+    on EITHER column. Linear min/max scaling is rank-faithful enough for
+    uniform-ish keys; skewed keys want histogram ranks under the same
+    interleave. An EMPTY frame returns unchanged (no min/max to scale by);
+    non-numeric or all-NULL z-columns raise a clear error instead of a
+    deep TypeError or a silent not-actually-zordered commit."""
+    lo_a, hi_a, lo_b, hi_b, n_rows = df.select(
+        F.min(col_a), F.max(col_a), F.min(col_b), F.max(col_b),
+        F.count(F.lit(1)),
+    ).first()
+    if n_rows == 0:
+        return df  # empty input: nothing to lay out
+    if lo_a is None or lo_b is None:
+        # rows exist but a z-column is ALL NULL — silently skipping the
+        # layout would commit a 'zorder'-labeled version that is neither
+        # z-ordered nor resharded
+        raise ValueError(
+            f"z-order column {col_a if lo_a is None else col_b!r} is "
+            "entirely NULL"
+        )
+    try:
+        lo_af, span_af = float(lo_a), float(hi_a - lo_a) or 1.0
+        lo_bf, span_bf = float(lo_b), float(hi_b - lo_b) or 1.0
+    except (TypeError, ValueError) as exc:
+        raise ValueError(
+            f"z-order requires numeric columns, got {col_a!r}/{col_b!r}"
+        ) from exc
+    top = (1 << bits) - 1
+
+    def scaled(c, lo, span):
+        return F.floor(
+            (F.col(c).cast("double") - F.lit(lo)) / F.lit(span) * top
+        ).cast("long")
+
+    z = zorder_value(
+        scaled(col_a, lo_af, span_af), scaled(col_b, lo_bf, span_bf), bits
+    )
+    return (
+        df.withColumn("_z", z)
+        .repartitionByRange(n_shards, F.col("_z"))
+        .sortWithinPartitions("_z")
+        .drop("_z")
+    )
+
+
 def compact(
     spark: SparkSession,
     table: str,
@@ -950,15 +1099,16 @@ def compact(
     """OPTIMIZE: rewrite the current snapshot into ~target-sized files and
     commit the new layout as one version. Readers of the old snapshot are
     untouched (old files persist until vacuum) — compaction never blocks
-    or breaks a concurrent query, unlike ``sinks.compact_small_files``'s
-    whole-directory swap. Pass ``stats_cols`` to re-harvest min/max
-    skipping stats for the rewritten files (a compaction without it
-    drops them — skipping then degrades to scan-everything, safe but
+    or breaks a concurrent query. A partitioned table keeps its layout and
+    per-file partition metadata, and a partition larger than the byte
+    target splits into several files. Pass ``stats_cols`` to re-harvest
+    min/max skipping stats for the rewritten files (a compaction without
+    it drops them — skipping then degrades to scan-everything, safe but
     slower).
 
     ``zorder_by=(col_a, col_b)`` is Delta's ``OPTIMIZE ZORDER BY``: the
     rewrite range-shards and locally sorts by the Morton interleave of
-    the two columns (``sinks.zorder_value`` — pure codegen), so every
+    the two columns (``zorder_value`` — pure codegen), so every
     rewritten file covers a small RECTANGLE of (a, b) space and the
     manifest's min/max stats (pass both columns in ``stats_cols``) prune
     selective predicates on EITHER column. Unpartitioned tables only —
@@ -981,16 +1131,22 @@ def compact(
                 "z-shards would span partition values"
             )
         col_a, col_b = zorder_by
-        from .sinks import zorder_layout
-
-        # shared layout pipeline (empty-safe, clear error on non-numeric)
         df = zorder_layout(df, col_a, col_b, n_files)
     elif snap.partition_by:
         # partition layout (and per-file partition metadata — the basis of
-        # merge pruning) must survive compaction: group each partition
-        # value into one task so the dynamic writer emits one file per
-        # value, the best layout small partitions can get
-        df = df.repartition(n_files, F.col(snap.partition_by))
+        # merge pruning) must survive compaction, so rows repartition by
+        # (partition value, row salt). Keying by the value alone would
+        # bound each value to ONE task, hence one file, so a hot partition
+        # could never split to the byte target. The salt spreads each
+        # value over ceil(n_files / n_values) tasks; with fewer files than
+        # values it is constant and each value stays one file.
+        part = snap.partition_by
+        n_values = max(
+            1, len({_pstr((f["partition"] or {}).get(part)) for f in snap.files})
+        )
+        spread = -(-n_files // n_values)
+        salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(spread))
+        df = df.repartition(max(n_files, n_values), F.col(part), salt)
     else:
         df = df.repartition(n_files)
     entries, _ = _write_data(df, table, snap.partition_by, stats_cols)

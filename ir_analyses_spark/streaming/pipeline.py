@@ -8,12 +8,12 @@ Design notes for scale:
 - the same transformation functions run in batch mode (DataFrames are
   source-agnostic) — the registry exposes batch twins of each windowed agg,
   which is also how the DuckDB oracle can check streaming semantics;
-- sinks go through ``foreachBatch`` + idempotent MERGE so replays after
-  failure don't duplicate (exactly-once at the table level for keyed
-  MERGE; the ADDITIVE rollup and SCD2 sinks commit each batch's applied
-  marker in the same rename as its data — ``io.sinks.batch_ledger`` /
-  ``additive_merge_committed`` — so replays skip with no
-  merge-vs-marker crash window).
+- sinks go through ``foreachBatch`` and commit each micro-batch through
+  the transaction-log table format (``io/txn.py``), so replays after
+  failure don't duplicate: keyed MERGE is idempotent by itself, and the
+  ADDITIVE rollup and SCD2 sinks record the batch id in the same manifest
+  as the batch's data, so a replayed batch is a no-op with no
+  merge-vs-marker crash window. Read their tables with ``txn.read``.
 """
 
 from __future__ import annotations
@@ -24,6 +24,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..io import txn
 from ..io.sources import events_ts_unit, load_table, narrow_ns_to_ts
 from ..schemas import EVENTS_TS_NANOS_SCHEMA, TESTDATA_SCHEMAS
 
@@ -175,7 +176,7 @@ def run_stream_to_memory(
 def _start_foreach_batch(df: DataFrame, target: str, apply_fn):
     """Shared starter for the foreachBatch sinks: checkpoint beside the
     target, availableNow trigger. One definition so trigger/checkpoint
-    policy can't drift between the four sink wrappers."""
+    policy can't drift between the three sink wrappers."""
     return (
         df.writeStream.foreachBatch(apply_fn)
         .option("checkpointLocation", f"{target}__checkpoint")
@@ -186,55 +187,48 @@ def _start_foreach_batch(df: DataFrame, target: str, apply_fn):
 
 def foreach_batch_upsert(
     df: DataFrame,
-    target_dir: str,
+    table: str,
     keys: list[str],
     partition_col: str | None = None,
 ):
-    """Idempotent streaming sink: every micro-batch MERGEs into a parquet
-    target by natural key (the bare-parquet MERGE emulation from io.sinks;
-    with Delta this would be ``MERGE INTO``). Replayed batches upsert the
-    same keys → exactly-once at the table level. Pass ``partition_col`` so
-    each micro-batch rewrites ONLY the partitions it touches — without it
-    the merge is O(table) per batch, the scale-killer in a streaming write
-    path. Each batch is collapsed to one row per key first (MERGE's
+    """Idempotent streaming sink: every micro-batch MERGEs into a txn
+    table by natural key (``txn.merge_upsert``; with Delta this would be
+    ``MERGE INTO``). Replayed batches upsert the same keys → exactly-once
+    at the table level. Pass ``partition_col`` so each micro-batch
+    rewrites ONLY the partitions it touches — without it the merge is
+    O(table) per batch, the scale-killer in a streaming write path. Each
+    batch is collapsed to one row per key first (MERGE's
     one-update-per-key contract; dropDuplicates keeps an arbitrary
     duplicate — feeds that care which row survives must collapse upstream
     with an explicit ordering, as foreach_batch_scd2 does)."""
-    from ..io.sinks import merge_upsert
-
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        merge_upsert(
-            batch_df.dropDuplicates(keys), target_dir, keys,
+        txn.merge_upsert(
+            batch_df.dropDuplicates(keys), table, keys,
             partition_col=partition_col,
         )
 
-    return _start_foreach_batch(df, target_dir, _apply)
+    return _start_foreach_batch(df, table, _apply)
 
 
 def foreach_batch_scd2(
     df: DataFrame,
-    target_dir: str,
+    table: str,
     key: str,
     change_cols: list[str],
     effective_col: str = "effective_from",
 ):
     """Streaming CDC → SCD2: every micro-batch of change events versions
-    the dimension table (close-and-append via ``io.sinks.scd2_merge``).
+    the dimension table (close-and-append via ``txn.scd2_merge_txn``).
     The batch is first collapsed to its latest row per key (SCD2's
     one-update-per-key contract; intermediate same-batch flips are
-    sub-batch-granularity history by definition). Replay needs the same
-    batch-id ledger as the rollup sink: re-merging only the LAST batch is
-    a no-op (values already current), but a replay from batch 0 would see
-    older values as "changes" against the final state and append stale
-    versions — time only moves forward through the ledger. The marker
-    commits INSIDE scd2_merge's staged swap (same rename as the data), so
-    a crash can never leave a merged-but-unmarked batch to re-apply."""
-    from ..io.sinks import batch_ledger, scd2_merge
-
+    sub-batch-granularity history by definition). Replay needs the
+    batch-id ledger: re-merging only the LAST batch is a no-op (values
+    already current), but a replay from batch 0 would see older values as
+    "changes" against the final state and append stale versions. The
+    batch id commits in the same manifest as the merged dimension, so a
+    replayed batch is skipped at the same table version and a crash can
+    never leave a merged-but-unmarked batch to re-apply."""
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        applied, _ = batch_ledger(target_dir, batch_id)
-        if applied:
-            return
         # total order: effective date desc, then the change columns desc —
         # two same-key rows with equal effective_from (common at date
         # granularity) must pick the SAME survivor on every replay, or the
@@ -248,12 +242,12 @@ def foreach_batch_scd2(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        scd2_merge(
-            latest, target_dir, key, change_cols, effective_col,
+        txn.scd2_merge_txn(
+            latest, table, key, change_cols, effective_col,
             batch_id=batch_id,
         )
 
-    return _start_foreach_batch(df, target_dir, _apply)
+    return _start_foreach_batch(df, table, _apply)
 
 
 # ---------------------------------------------------------------------------
@@ -279,45 +273,19 @@ def rollup_delta(events: DataFrame) -> DataFrame:
     )
 
 
-def foreach_batch_rollup(df: DataFrame, target_dir: str):
+def foreach_batch_rollup(df: DataFrame, table: str):
     """Streaming sink that keeps the rollup current: every micro-batch
     folds its partial aggregate into the rollup table. State lives in the
     table itself — no streaming-state store — so the rollup survives
     restarts and is queryable mid-stream at scan speed.
 
     Addition is NOT naturally idempotent (a replayed batch would
-    double-count), so each touched day directory commits its merged data
-    and an applied-batch marker in ONE rename
-    (``io.sinks.additive_merge_committed``): a replayed batch skips every
-    day it already committed, crash-anywhere included — the transactionless
-    equivalent of Delta recording the txn id inside the commit. The
-    rewrite stays pruned to the days the batch touches, never O(table)."""
-    from ..io.sinks import additive_merge_committed
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        additive_merge_committed(
-            rollup_delta(batch_df),
-            target_dir,
-            partition_col="day",
-            group_cols=["day", "event_type"],
-            sum_cols=["n_events", "value_micros"],
-            batch_id=batch_id,
-        )
-
-    return _start_foreach_batch(df, target_dir, _apply)
-
-
-def foreach_batch_rollup_txn(df: DataFrame, table: str):
-    """``foreach_batch_rollup`` on the transaction-log table format
-    (``io/txn.py``): same incremental rollup, but the batch commits as ONE
-    manifest publication with the batch id in the manifest's ledger — so
-    beyond the directory layout's guarantees, concurrent readers get
-    snapshot isolation (never half a batch, never a no-target blink) and
-    replay protection is atomic across ALL touched days, not per-day.
-    This is the Delta-txn-id pattern the bare-directory sink documents as
-    its remaining residual; read the table with ``txn.read``."""
-    from ..io import txn
-
+    double-count), so each batch commits through ``txn.additive_merge``:
+    the merged days and the batch id land in ONE manifest publication.
+    A replayed batch is a no-op across all days it touched, crash-anywhere
+    included, and a concurrent reader sees the whole batch or none of it
+    — the Delta txn-id pattern. The rewrite stays pruned to the days the
+    batch touches, never O(table)."""
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         txn.additive_merge(
             rollup_delta(batch_df),
@@ -588,7 +556,12 @@ def _run_to_table(
     the stream and restored after (partition count is locked into the
     fresh checkpoint at batch 0, so the restore cannot race later
     batches). Output values are partitioning-independent; the memory
-    sink's row order is not part of any oracle compare."""
+    sink's row order is not part of any oracle compare.
+
+    The partition count is a SESSION-wide conf, so certificate streams
+    must run one at a time on a session: a query planned on another
+    thread while this one runs would pick up the stream's count, and two
+    overlapping streams could restore each other's value out of order."""
     import shutil
 
     name = "strq_" + uuid.uuid4().hex[:10]
@@ -763,7 +736,7 @@ def stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Executes the incremental-rollup sink over a REAL multi-batch stream:
     the events table is staged as three files (maxFilesPerTrigger=1 → three
     micro-batches), each batch's delta additively merges into the
-    partitioned rollup table, and the final table is returned. The oracle
+    day-partitioned txn rollup table, and its final snapshot is returned. The oracle
     is the one-shot batch aggregate — additivity means N incremental merges
     must equal the single full aggregation exactly (integer micros, no
     float drift)."""
@@ -785,7 +758,7 @@ def stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise RuntimeError(
                 f"rollup stream did not finish in {_STREAM_TIMEOUT_S}s"
             )
-        out = spark.read.parquet(target).select(
+        out = txn.read(spark, target).select(
             "day", "event_type", "n_events", "value_micros"
         )
         # materialize before the temp dirs vanish

@@ -1,5 +1,6 @@
-"""IO layer tests: encoding-sniffed filing scans (SURVEY §2A S1–S3) and
-parquet sink MERGE semantics (S6/S7, A5–A7).
+"""IO layer tests: encoding-sniffed filing scans (SURVEY §2A S1–S3),
+parquet sink MERGE semantics (S6/S7, A5–A7), and the txn format's SCD2
+merge, compaction and z-order layout.
 
 Mirrors the reference's ingest edge cases: per-file charset detection
 (reference utils/api.py:129-137 uses chardet), BOM'd UTF-8 fixtures
@@ -16,7 +17,7 @@ import codecs
 import pytest
 from pyspark.sql import functions as F
 
-from ir_analyses_spark.io import sinks, sources
+from ir_analyses_spark.io import sinks, sources, txn
 from ir_analyses_spark.schemas import RAW_JP_COLUMNS
 
 HEADER = "\t".join(RAW_JP_COLUMNS)
@@ -95,45 +96,6 @@ def test_read_zip_members(spark, tmp_path):
     assert bytes(rows[0]["content"]).decode("cp932") == CONTENT
 
 
-def test_edinet_python_datasource(spark, tmp_path):
-    """S4 scale path: date-partitioned document lists via a Spark 4 Python
-    DataSource — one input partition per date, substring filter applied
-    relationally (reference utils/api.py:45-93 fetches per-date on the
-    driver and filters in pandas)."""
-    import json
-
-    from ir_analyses_spark.io.edinet_datasource import EdinetFixtureDataSource
-
-    d = tmp_path / "lists"
-    d.mkdir()
-    for date, descs in [
-        ("2024-02-09", ["四半期報告書－第121期第３四半期", "有価証券届出書"]),
-        ("2024-02-13", ["四半期報告書－第10期第２四半期"]),
-    ]:
-        payload = {
-            "results": [
-                {
-                    "docID": f"S{abs(hash((date, i))) % 10**6:06d}",
-                    "edinetCode": "E03562",
-                    "filerName": "株式会社山梨中央銀行",
-                    "docDescription": desc,
-                    "submitDateTime": f"{date} 15:00",
-                }
-                for i, desc in enumerate(descs)
-            ]
-        }
-        (d / f"{date}.json").write_text(json.dumps(payload), encoding="utf-8")
-
-    spark.dataSource.register(EdinetFixtureDataSource)
-    df = spark.read.format("edinet_fixture").option("path", str(d)).load()
-    assert df.count() == 3
-    assert df.rdd.getNumPartitions() == 2  # one partition per date
-    # F4: quarterly-report substring filter
-    quarterly = df.filter(F.col("docDescription").contains("四半期報告書"))
-    assert quarterly.count() == 2
-    assert {r["date"] for r in quarterly.collect()} == {"2024-02-09", "2024-02-13"}
-
-
 def test_read_filing_csvs_empty_glob(spark, tmp_path):
     df = sources.read_filing_csvs(spark, str(tmp_path / "nothing" / "*.csv"))
     assert df.count() == 0
@@ -191,123 +153,6 @@ def test_swap_in_crash_window_leaves_valid_copy(spark, tmp_path, monkeypatch):
     assert spark.read.parquet(target).first()["company_name"] == "new"
     assert not _os.path.exists(target + "__old")
     assert not _os.path.exists(staging)
-
-
-def test_additive_merge_crash_mid_commit_no_double_count(
-    spark, tmp_path, monkeypatch
-):
-    """VERDICT r3 item 4: the additive sink's merge and applied-marker
-    commit in the SAME rename per partition, so a crash anywhere —
-    including between two partitions' commits — can never double-count a
-    replayed batch. Kill batch 1 after its first partition committed,
-    replay it, and require exact totals."""
-    import os as _os
-
-    import pytest as _pytest
-
-    target = str(tmp_path / "rollup")
-    schema = "day string, event_type string, n_events long, value_micros long"
-    d0 = spark.createDataFrame(
-        [("2024-01-01", "a", 1, 10), ("2024-01-02", "a", 2, 20)], schema
-    )
-    sinks.additive_merge_committed(
-        d0, target, "day", ["day", "event_type"],
-        ["n_events", "value_micros"], batch_id=0,
-    )
-
-    d1 = spark.createDataFrame(
-        [("2024-01-01", "a", 5, 50), ("2024-01-02", "a", 7, 70)], schema
-    )
-    real_rename = _os.rename
-
-    def crashy(src, dst):
-        # commit order is sorted, so day=01 promotes first; crash on the
-        # promotion of day=02 (staging → live)
-        if dst.endswith("day=2024-01-02") and "__staging" in src:
-            raise OSError("simulated crash mid-commit")
-        real_rename(src, dst)
-
-    monkeypatch.setattr(sinks.os, "rename", crashy)
-    with _pytest.raises(OSError, match="mid-commit"):
-        sinks.additive_merge_committed(
-            d1, target, "day", ["day", "event_type"],
-            ["n_events", "value_micros"], batch_id=1,
-        )
-    monkeypatch.setattr(sinks.os, "rename", real_rename)
-
-    # intermediate state: day=01 committed WITH its marker in one rename;
-    # day=02's crash hit between its two renames, so its (unmarked) batch-0
-    # data survives at __old awaiting recovery — never half-applied
-    assert _os.path.exists(
-        _os.path.join(target, "day=2024-01-01", "_applied_1")
-    )
-    day2_old = _os.path.join(target + "__oldparts", "day=2024-01-02")
-    assert _os.path.exists(day2_old)
-    assert not _os.path.exists(_os.path.join(day2_old, "_applied_1"))
-    mid = {
-        (r["day"], r["event_type"]): (r["n_events"], r["value_micros"])
-        for r in spark.read.parquet(target).collect()
-    }
-    assert mid[("2024-01-01", "a")] == (6, 60)
-
-    # replay of batch 1: day=01 skipped (marker), day=02 applied once
-    for _ in range(2):  # second replay must be a full no-op
-        sinks.additive_merge_committed(
-            d1, target, "day", ["day", "event_type"],
-            ["n_events", "value_micros"], batch_id=1,
-        )
-        got = {
-            (r["day"], r["event_type"]): (r["n_events"], r["value_micros"])
-            for r in spark.read.parquet(target).collect()
-        }
-        assert got[("2024-01-01", "a")] == (6, 60)
-        assert got[("2024-01-02", "a")] == (9, 90)
-
-
-def test_scd2_batch_marker_commits_with_swap(spark, tmp_path, monkeypatch):
-    """The SCD2 sink's applied marker rides the staged swap: a crash
-    before the swap leaves the batch unmarked (replay applies it exactly
-    once); after the swap, data and marker are both present (replay
-    skips). No state exists where the merge landed but the ledger didn't."""
-    import datetime as _dt
-
-    import pytest as _pytest
-
-    target = str(tmp_path / "dim")
-    schema = "code string, city string, effective_from date"
-    b0 = spark.createDataFrame(
-        [("K1", "A", _dt.date(2023, 1, 1))], schema
-    )
-    sinks.scd2_merge(b0, target, key="code", change_cols=["city"], batch_id=0)
-    assert sinks.batch_ledger(target, 0)[0]
-
-    b1 = spark.createDataFrame(
-        [("K1", "B", _dt.date(2023, 2, 1))], schema
-    )
-
-    def boom(staging, target_dir):
-        raise OSError("simulated crash before swap")
-
-    monkeypatch.setattr(sinks, "_swap_in", boom)
-    with _pytest.raises(OSError, match="before swap"):
-        sinks.scd2_merge(
-            b1, target, key="code", change_cols=["city"], batch_id=1
-        )
-    monkeypatch.undo()  # restore the real _swap_in for the replay below
-
-    # nothing applied, nothing marked: the ledger and table agree
-    assert not sinks.batch_ledger(target, 1)[0]
-    assert spark.read.parquet(target).count() == 1
-
-    # replay applies exactly once; marker 0 carried forward
-    sinks.scd2_merge(b1, target, key="code", change_cols=["city"], batch_id=1)
-    assert sinks.batch_ledger(target, 0)[0]
-    assert sinks.batch_ledger(target, 1)[0]
-    rows = {
-        (r["city"], r["is_current"])
-        for r in spark.read.parquet(target).collect()
-    }
-    assert rows == {("A", False), ("B", True)}
 
 
 def test_append_missing_is_insert_only(spark, tmp_path):
@@ -381,424 +226,6 @@ def test_append_missing_keeps_existing_files(spark, tmp_path):
     assert got == {"E1": "A", "E2": "B"}
 
 
-def test_scd2_merge_versions_history(spark, tmp_path):
-    """Type-2 merge: changed keys close the old version and append a new
-    current one; unchanged keys and prior history stay untouched."""
-    import datetime as dt
-
-    target = str(tmp_path / "dim")
-
-    def day(s):
-        return dt.date.fromisoformat(s)
-
-    b1 = spark.createDataFrame(
-        [("E1", "Tokyo", day("2023-01-01")), ("E2", "Osaka", day("2023-01-01"))],
-        "code string, city string, effective_from date",
-    )
-    sinks.scd2_merge(b1, target, key="code", change_cols=["city"])
-    # E1 moves, E2 unchanged, E3 appears
-    b2 = spark.createDataFrame(
-        [
-            ("E1", "Kyoto", day("2023-06-01")),
-            ("E2", "Osaka", day("2023-06-01")),
-            ("E3", "Nagoya", day("2023-06-01")),
-        ],
-        "code string, city string, effective_from date",
-    )
-    sinks.scd2_merge(b2, target, key="code", change_cols=["city"])
-    rows = sorted(
-        (
-            r["code"],
-            r["city"],
-            str(r["effective_from"]),
-            str(r["effective_to"]),
-            r["is_current"],
-        )
-        for r in spark.read.parquet(target).collect()
-    )
-    assert rows == [
-        ("E1", "Kyoto", "2023-06-01", "None", True),
-        ("E1", "Tokyo", "2023-01-01", "2023-06-01", False),
-        ("E2", "Osaka", "2023-01-01", "None", True),
-        ("E3", "Nagoya", "2023-06-01", "None", True),
-    ]
-    # a third change for E1 must close the 2023-06 version, keep 2023-01 history
-    b3 = spark.createDataFrame(
-        [("E1", "Sendai", day("2024-01-01"))],
-        "code string, city string, effective_from date",
-    )
-    sinks.scd2_merge(b3, target, key="code", change_cols=["city"])
-    e1 = sorted(
-        (r["city"], str(r["effective_to"]), r["is_current"])
-        for r in spark.read.parquet(target).filter(F.col("code") == "E1").collect()
-    )
-    assert e1 == [
-        ("Kyoto", "2024-01-01", False),
-        ("Sendai", "None", True),
-        ("Tokyo", "2023-06-01", False),
-    ]
-
-
-def test_scd2_point_in_time_join(spark, tmp_path):
-    """Facts must resolve the dimension version valid AT their date:
-    before the first version → null, between changes → the closed row,
-    after the last change → the current row."""
-    import datetime as dt
-
-    target = str(tmp_path / "dim_pit")
-
-    def day(s):
-        return dt.date.fromisoformat(s)
-
-    sinks.scd2_merge(
-        spark.createDataFrame(
-            [("E1", "Tokyo", day("2023-01-01"))],
-            "code string, city string, effective_from date",
-        ),
-        target, key="code", change_cols=["city"],
-    )
-    sinks.scd2_merge(
-        spark.createDataFrame(
-            [("E1", "Kyoto", day("2023-06-01"))],
-            "code string, city string, effective_from date",
-        ),
-        target, key="code", change_cols=["city"],
-    )
-    facts = spark.createDataFrame(
-        [
-            (1, "E1", day("2022-12-31")),  # before any version
-            (2, "E1", day("2023-01-01")),  # first day of Tokyo
-            (3, "E1", day("2023-05-31")),  # last day of Tokyo
-            (4, "E1", day("2023-06-01")),  # first day of Kyoto
-            (5, "E1", day("2024-01-01")),  # current
-        ],
-        "fact_id long, code string, fact_date date",
-    )
-    dim = spark.read.parquet(target)
-    got = {
-        r["fact_id"]: r["city"]
-        for r in sinks.scd2_point_in_time_join(
-            facts, dim, key="code", date_col="fact_date"
-        ).collect()
-    }
-    assert got == {1: None, 2: "Tokyo", 3: "Tokyo", 4: "Kyoto", 5: "Kyoto"}
-
-
-def test_scd2_merge_null_transitions(spark, tmp_path):
-    """NULL→value and value→NULL must count as changes (null-safe struct
-    compare); NULL→NULL must not."""
-    import datetime as dt
-
-    target = str(tmp_path / "dimnull")
-    d1, d2 = dt.date(2023, 1, 1), dt.date(2023, 6, 1)
-    b1 = spark.createDataFrame(
-        [("E1", None, d1), ("E2", None, d1), ("E3", "A", d1)],
-        "code string, city string, effective_from date",
-    )
-    sinks.scd2_merge(b1, target, key="code", change_cols=["city"])
-    b2 = spark.createDataFrame(
-        [("E1", "X", d2), ("E2", None, d2), ("E3", None, d2)],
-        "code string, city string, effective_from date",
-    )
-    sinks.scd2_merge(b2, target, key="code", change_cols=["city"])
-    versions = {
-        r["code"]: n
-        for r in spark.read.parquet(target)
-        .groupBy("code")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-        for n in [r["n"]]
-    }
-    assert versions == {"E1": 2, "E2": 1, "E3": 2}
-    cur = {
-        r["code"]: r["city"]
-        for r in spark.read.parquet(target).filter("is_current").collect()
-    }
-    assert cur == {"E1": "X", "E2": None, "E3": None}
-
-
-def test_compact_splits_hot_partition(spark, tmp_path):
-    """A single partition larger than the byte target must split across
-    multiple files — the salt keeps compaction from collapsing a hot
-    partition into one unsplittable file."""
-    import glob
-    import os
-
-    target = str(tmp_path / "hot")
-    df = spark.range(200_000).selectExpr(
-        "'0' AS fy", "repeat(uuid(), 4) AS payload"
-    )
-    df.write.partitionBy("fy").parquet(target)
-    stats = sinks.compact_small_files(
-        spark, target, partition_col="fy", target_file_bytes=2 * 1024 * 1024
-    )
-    files = glob.glob(os.path.join(target, "fy=0", "*.parquet"))
-    assert len(files) > 1, "hot partition stayed one file"
-    assert stats["files_after"] == len(files)
-    assert spark.read.parquet(target).count() == 200_000
-
-
-def test_scd2_merge_random_batches_match_model(spark, tmp_path):
-    """Randomized differential: a fixed-seed sequence of update batches
-    through scd2_merge must equal an independent sequential Python model
-    (the same N-cases-one-job pattern as the parser property tests)."""
-    import datetime as dt
-    import random
-
-    rng = random.Random(7)
-    keys = [f"K{i}" for i in range(6)]
-    cities = ["A", "B", "C"]
-    target = str(tmp_path / "dim_rand")
-
-    # model: key -> list of [city, from, to, current]
-    model: dict[str, list[list]] = {}
-
-    def model_apply(batch, day):
-        for k, city in batch:
-            versions = model.setdefault(k, [])
-            cur = next((v for v in versions if v[3]), None)
-            if cur is None:
-                versions.append([city, day, None, True])
-            elif cur[0] != city:
-                cur[2], cur[3] = day, False
-                versions.append([city, day, None, True])
-
-    for step in range(5):
-        day = dt.date(2023, 1 + step, 1)
-        batch = [(k, rng.choice(cities)) for k in rng.sample(keys, rng.randint(1, 5))]
-        df = spark.createDataFrame(
-            [(k, c, day) for k, c in batch],
-            "code string, city string, effective_from date",
-        )
-        sinks.scd2_merge(df, target, key="code", change_cols=["city"])
-        model_apply(batch, day)
-
-    got = sorted(
-        (r["code"], r["city"], str(r["effective_from"]), str(r["effective_to"]), r["is_current"])
-        for r in spark.read.parquet(target).collect()
-    )
-    want = sorted(
-        (k, v[0], str(v[1]), str(v[2]), v[3])
-        for k, versions in model.items()
-        for v in versions
-    )
-    assert got == want
-
-
-def test_compact_small_files(spark, tmp_path):
-    """Compaction must shrink the file count to the byte-target bound and
-    leave the data (values AND schema) untouched."""
-    target = str(tmp_path / "shards")
-    # 40 tiny files via 40-way repartition of a small frame
-    spark.range(1000).selectExpr("id", "id * 2 AS v").repartition(40).write.parquet(
-        target
-    )
-    stats = sinks.compact_small_files(spark, target)
-    assert stats["files_before"] == 40
-    assert stats["files_after"] == 1  # total bytes << one target file
-    df = spark.read.parquet(target)
-    assert df.count() == 1000
-    assert sorted(r["v"] for r in df.collect()) == sorted(2 * i for i in range(1000))
-
-
-def test_compact_ignores_uncommitted_temporary_debris(spark, tmp_path):
-    """A write killed mid-job leaves a ``_temporary`` task-attempt tree
-    holding uncommitted parquet. Compaction must neither count that
-    debris (files_before/total-bytes would lie) nor resurrect it into
-    the compacted table — the same bug class the fingerprint store's
-    ``_committed_files`` fixed (r11 VERDICT item 2)."""
-    import os
-
-    target = str(tmp_path / "killed")
-    spark.range(100).selectExpr("id", "id * 2 AS v").repartition(4).write.parquet(
-        target
-    )
-    # simulate the kill: a task-attempt dir with a large orphan file
-    debris = os.path.join(
-        target, "_temporary", "0", "_temporary", "attempt_0_0_m_0_0"
-    )
-    os.makedirs(debris)
-    spark.range(10_000).selectExpr("id", "id AS v").coalesce(1).write.parquet(
-        os.path.join(debris, "orphan")
-    )
-    # nested parquet files now exist under _temporary; also one directly
-    with open(os.path.join(debris, "part-zzz.parquet"), "wb") as fh:
-        fh.write(b"\x00" * (1 << 20))
-    stats = sinks.compact_small_files(spark, target)
-    assert stats["files_before"] == 4  # debris not counted
-    assert stats["files_after"] == 1
-    got = spark.read.parquet(target)
-    assert got.count() == 100  # debris rows not resurrected
-    # the swap replaced the directory wholesale — no _temporary left
-    assert not os.path.exists(os.path.join(target, "_temporary"))
-
-
-def test_compact_small_files_partitioned(spark, tmp_path):
-    """Partitioned compaction keeps the directory layout (partition pruning
-    still works afterwards) while collapsing per-directory shards."""
-    import glob
-    import os
-
-    target = str(tmp_path / "pfacts")
-    base = spark.range(400).selectExpr(
-        "CAST(id % 2 AS STRING) AS fy", "id AS v"
-    ).repartition(20)
-    base.write.partitionBy("fy").parquet(target)
-    assert len(glob.glob(os.path.join(target, "fy=0", "*.parquet"))) > 1
-    sinks.compact_small_files(spark, target, partition_col="fy")
-    for part in ("0", "1"):
-        assert len(glob.glob(os.path.join(target, f"fy={part}", "*.parquet"))) == 1
-    got = spark.read.parquet(target)
-    assert got.count() == 400
-    assert got.filter(F.col("fy") == "0").count() == 200
-
-
-def test_compact_carries_applied_ledgers_through_swap(spark, tmp_path):
-    """The applied-batch ledgers live INSIDE the table directory, so
-    compaction's whole-directory swap must carry them — otherwise a
-    replayed batch after maintenance double-counts (found by review)."""
-    target = str(tmp_path / "rollup")
-    schema = "day string, event_type string, n_events long, value_micros long"
-    d0 = spark.createDataFrame([("2024-01-01", "a", 1, 10)], schema)
-    d1 = spark.createDataFrame([("2024-01-01", "a", 5, 50)], schema)
-    args = (target, "day", ["day", "event_type"], ["n_events", "value_micros"])
-    sinks.additive_merge_committed(d0, *args, batch_id=0)
-    sinks.additive_merge_committed(d1, *args, batch_id=1)
-    sinks.compact_small_files(spark, target, partition_col="day")
-    # replay both batches after compaction: markers must have survived
-    sinks.additive_merge_committed(d0, *args, batch_id=0)
-    sinks.additive_merge_committed(d1, *args, batch_id=1)
-    rows = spark.read.parquet(target).collect()
-    assert [(r.n_events, r.value_micros) for r in rows] == [(6, 60)]
-    # scd2-style directory ledger survives the unpartitioned swap too
-    dim = str(tmp_path / "dim")
-    import datetime as _dt
-
-    upd = spark.createDataFrame(
-        [(1, "a", _dt.date(2024, 1, 1))], ["user_id", "state", "effective_from"]
-    )
-    sinks.scd2_merge(upd, dim, key="user_id", change_cols=["state"], batch_id=7)
-    sinks.compact_small_files(spark, dim)
-    applied, _mark = sinks.batch_ledger(dim, 7)
-    assert applied
-
-
-def test_additive_merge_replay_survives_empty_target_dir(spark, tmp_path):
-    """A crash between the first batch's makedirs and its first partition
-    rename leaves an EMPTY target directory; the replay must treat that
-    as 'no current rows' instead of wedging on a parquet read of an empty
-    dir (found by review)."""
-    import os as _os
-
-    target = str(tmp_path / "rollup")
-    _os.makedirs(target)  # the post-crash remnant
-    schema = "day string, event_type string, n_events long, value_micros long"
-    d0 = spark.createDataFrame([("2024-01-01", "a", 1, 10)], schema)
-    sinks.additive_merge_committed(
-        d0, target, "day", ["day", "event_type"],
-        ["n_events", "value_micros"], batch_id=0,
-    )
-    rows = spark.read.parquet(target).collect()
-    assert [(r.n_events, r.value_micros) for r in rows] == [(1, 10)]
-
-
-def test_batch_ledger_honors_legacy_sibling_markers(tmp_path):
-    """Tables written before the ledger moved inside the table directory
-    keep markers at <target>__applied; they must still count as applied
-    after an upgrade (found by review)."""
-    import os as _os
-
-    target = str(tmp_path / "t")
-    _os.makedirs(target)
-    legacy = target + "__applied"
-    _os.makedirs(legacy)
-    with open(_os.path.join(legacy, "42"), "w"):
-        pass
-    applied, _mark = sinks.batch_ledger(target, 42)
-    assert applied
-    applied, _mark = sinks.batch_ledger(target, 43)
-    assert not applied
-
-
-def test_zorder_layout_bounds_both_columns_per_file(spark, tmp_path):
-    """Z-ordered files must cover small rectangles of (a, b) space: the
-    per-file span of BOTH columns stays well below the domain, where a
-    1-D sort by `a` leaves `b` spanning ~the whole domain in every file.
-    That bounded span is exactly what min/max skipping prunes on."""
-    import glob
-    import os
-
-    from ir_analyses_spark.io.txn import _footer_stats
-
-    n = 20_000
-    # two independent-ish dimensions over [0, 4096)
-    df = spark.range(n).selectExpr(
-        "CAST((id * 2654435761) % 4096 AS LONG) AS a",
-        "CAST((id * 40503) % 4096 AS LONG) AS b",
-    )
-    zpath = str(tmp_path / "z")
-    spath = str(tmp_path / "s")
-    sinks.write_zordered(df, zpath, "a", "b", n_shards=16)
-    sinks.write_sorted_shards(df, spath, "a", n_shards=16)
-
-    def spans(path):
-        out = []
-        for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
-            st = _footer_stats(f, ["a", "b"])
-            out.append(
-                (
-                    (st["a"][1] - st["a"][0]) / 4096.0,
-                    (st["b"][1] - st["b"][0]) / 4096.0,
-                )
-            )
-        return out
-
-    z = spans(zpath)
-    s = spans(spath)
-    # 1-D layout: b is unconstrained (each file spans ~all of b)
-    assert sum(b for _a, b in s) / len(s) > 0.9
-    # z-order: BOTH dimensions bounded on average — files are rectangles
-    avg_a = sum(a for a, _b in z) / len(z)
-    avg_b = sum(b for _a, b in z) / len(z)
-    assert avg_a < 0.6 and avg_b < 0.6, (avg_a, avg_b)
-    # and a selective predicate on EITHER column skips files
-    for col in ("a", "b"):
-        hit = [
-            f
-            for f in sorted(glob.glob(os.path.join(zpath, "*.parquet")))
-            if (st := _footer_stats(f, [col]))
-            and not (st[col][0] > 300 or st[col][1] < 200)
-        ]
-        assert len(hit) < 16, col
-    # rows survive the layout exactly
-    assert spark.read.parquet(zpath).count() == n
-
-
-def test_write_sorted_shards_disjoint_and_sorted(spark, tmp_path):
-    """Shard files must hold disjoint key ranges (global order across
-    shards) and be internally sorted — the property that makes point
-    queries touch one file and shard readers independent."""
-    import glob
-    import os
-
-    path = str(tmp_path / "shards")
-    df = spark.range(10_000).selectExpr("(id * 2654435761) % 9973 AS k", "id AS v")
-    sinks.write_sorted_shards(df, path, "k", n_shards=8)
-    ranges = []
-    for f in glob.glob(os.path.join(path, "*.parquet")):
-        ks = [r["k"] for r in spark.read.parquet(f"file://{f}").collect()]
-        if not ks:
-            continue
-        assert ks == sorted(ks), "shard not internally sorted"
-        ranges.append((min(ks), max(ks)))
-    ranges.sort()
-    assert len(ranges) >= 4  # range partitioner actually spread the data
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2, "shard key ranges overlap"
-    total = spark.read.parquet(path).count()
-    assert total == 10_000
-
-
 def test_replace_partition(spark, tmp_path):
     target = str(tmp_path / "facts")
     base = spark.createDataFrame(
@@ -836,42 +263,214 @@ def test_partitioned_merge_upsert_into_empty_target(spark, tmp_path):
     assert got == [(1, 11, "2023"), (2, 20, "2024"), (3, 30, "2023")]
 
 
-def test_bucketed_join_skips_shuffle(spark, sf_dir):
-    """Bucketed co-located join (SURVEY §7.3.6): joining two tables
-    bucketed on the same key must produce a SortMergeJoin with NO shuffle
-    exchange — the layout that makes fact⋈fact joins affordable at 100 TB."""
-    from ir_analyses_spark.io.sources import load_table
+# ---------------------------------------------------------------------------
+# txn: SCD2 merge, compaction, z-order layout
+# ---------------------------------------------------------------------------
 
-    li = load_table(spark, "lineitem", sf_dir).select(
-        "l_orderkey", "l_quantity"
+def test_scd2_merge_versions_history(spark, tmp_path):
+    """Type-2 merge: changed keys close the old version and append a new
+    current one; unchanged keys and prior history stay untouched."""
+    import datetime as dt
+
+    target = str(tmp_path / "dim")
+
+    def day(s):
+        return dt.date.fromisoformat(s)
+
+    b1 = spark.createDataFrame(
+        [("E1", "Tokyo", day("2023-01-01")), ("E2", "Osaka", day("2023-01-01"))],
+        "code string, city string, effective_from date",
     )
-    o = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_totalprice")
-    sinks.write_bucketed(li, "b_lineitem", ["l_orderkey"], n_buckets=8)
-    sinks.write_bucketed(
-        o.withColumnRenamed("o_orderkey", "l_orderkey"),
-        "b_orders", ["l_orderkey"], n_buckets=8,
+    txn.scd2_merge_txn(b1, target, key="code", change_cols=["city"])
+    # E1 moves, E2 unchanged, E3 appears
+    b2 = spark.createDataFrame(
+        [
+            ("E1", "Kyoto", day("2023-06-01")),
+            ("E2", "Osaka", day("2023-06-01")),
+            ("E3", "Nagoya", day("2023-06-01")),
+        ],
+        "code string, city string, effective_from date",
     )
-    try:
-        # force SMJ (at test scale the dim would broadcast and bypass
-        # bucketing; at fact⋈fact scale SMJ is what the planner picks)
-        joined = (
-            spark.table("b_lineitem")
-            .hint("merge")
-            .join(spark.table("b_orders"), "l_orderkey")
+    txn.scd2_merge_txn(b2, target, key="code", change_cols=["city"])
+    rows = sorted(
+        (
+            r["code"],
+            r["city"],
+            str(r["effective_from"]),
+            str(r["effective_to"]),
+            r["is_current"],
         )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange hashpartitioning" not in plan, plan  # no shuffle
-        assert joined.count() > 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-        spark.sql("DROP TABLE IF EXISTS b_orders")
+        for r in txn.read(spark, target).collect()
+    )
+    assert rows == [
+        ("E1", "Kyoto", "2023-06-01", "None", True),
+        ("E1", "Tokyo", "2023-01-01", "2023-06-01", False),
+        ("E2", "Osaka", "2023-01-01", "None", True),
+        ("E3", "Nagoya", "2023-06-01", "None", True),
+    ]
+    # a third change for E1 must close the 2023-06 version, keep 2023-01 history
+    b3 = spark.createDataFrame(
+        [("E1", "Sendai", day("2024-01-01"))],
+        "code string, city string, effective_from date",
+    )
+    txn.scd2_merge_txn(b3, target, key="code", change_cols=["city"])
+    e1 = sorted(
+        (r["city"], str(r["effective_to"]), r["is_current"])
+        for r in txn.read(spark, target).filter(F.col("code") == "E1").collect()
+    )
+    assert e1 == [
+        ("Kyoto", "2024-01-01", False),
+        ("Sendai", "None", True),
+        ("Tokyo", "2023-06-01", False),
+    ]
 
 
-def test_surrogate_key_deterministic(spark):
-    df = spark.createDataFrame([("E1",), ("E1",), ("E2",)], "k string")
-    keys = [r["sk"] for r in df.select(sinks.surrogate_key("k").alias("sk")).collect()]
-    assert keys[0] == keys[1] != keys[2]
+def test_scd2_merge_null_transitions(spark, tmp_path):
+    """NULL→value and value→NULL must count as changes (null-safe struct
+    compare); NULL→NULL must not."""
+    import datetime as dt
+
+    target = str(tmp_path / "dimnull")
+    d1, d2 = dt.date(2023, 1, 1), dt.date(2023, 6, 1)
+    b1 = spark.createDataFrame(
+        [("E1", None, d1), ("E2", None, d1), ("E3", "A", d1)],
+        "code string, city string, effective_from date",
+    )
+    txn.scd2_merge_txn(b1, target, key="code", change_cols=["city"])
+    b2 = spark.createDataFrame(
+        [("E1", "X", d2), ("E2", None, d2), ("E3", None, d2)],
+        "code string, city string, effective_from date",
+    )
+    txn.scd2_merge_txn(b2, target, key="code", change_cols=["city"])
+    versions = {
+        r["code"]: n
+        for r in txn.read(spark, target)
+        .groupBy("code")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+        for n in [r["n"]]
+    }
+    assert versions == {"E1": 2, "E2": 1, "E3": 2}
+    cur = {
+        r["code"]: r["city"]
+        for r in txn.read(spark, target).filter("is_current").collect()
+    }
+    assert cur == {"E1": "X", "E2": None, "E3": None}
+
+
+def test_compact_splits_hot_partition(spark, tmp_path):
+    """A single partition larger than the byte target must split across
+    multiple files, each still recording its partition value — the salt
+    keeps compaction from collapsing a hot partition into one
+    unsplittable file."""
+    target = str(tmp_path / "hot")
+    df = spark.range(200_000).selectExpr(
+        "'0' AS fy", "repeat(uuid(), 4) AS payload"
+    )
+    txn.overwrite(df, target, partition_by="fy")
+    snap = txn.compact(spark, target, target_file_bytes=2 * 1024 * 1024)
+    assert len(snap.files) > 1, "hot partition stayed one file"
+    assert all(f["partition"] == {"fy": "0"} for f in snap.files)
+    assert txn.read(spark, target, partition_values={"fy": ["0"]}).count() == 200_000
+
+
+def test_scd2_merge_random_batches_match_model(spark, tmp_path):
+    """Randomized differential: a fixed-seed sequence of update batches
+    through scd2_merge_txn must equal an independent sequential Python model
+    (the same N-cases-one-job pattern as the parser property tests)."""
+    import datetime as dt
+    import random
+
+    rng = random.Random(7)
+    keys = [f"K{i}" for i in range(6)]
+    cities = ["A", "B", "C"]
+    target = str(tmp_path / "dim_rand")
+
+    # model: key -> list of [city, from, to, current]
+    model: dict[str, list[list]] = {}
+
+    def model_apply(batch, day):
+        for k, city in batch:
+            versions = model.setdefault(k, [])
+            cur = next((v for v in versions if v[3]), None)
+            if cur is None:
+                versions.append([city, day, None, True])
+            elif cur[0] != city:
+                cur[2], cur[3] = day, False
+                versions.append([city, day, None, True])
+
+    for step in range(5):
+        day = dt.date(2023, 1 + step, 1)
+        batch = [(k, rng.choice(cities)) for k in rng.sample(keys, rng.randint(1, 5))]
+        df = spark.createDataFrame(
+            [(k, c, day) for k, c in batch],
+            "code string, city string, effective_from date",
+        )
+        txn.scd2_merge_txn(df, target, key="code", change_cols=["city"])
+        model_apply(batch, day)
+
+    got = sorted(
+        (r["code"], r["city"], str(r["effective_from"]), str(r["effective_to"]), r["is_current"])
+        for r in txn.read(spark, target).collect()
+    )
+    want = sorted(
+        (k, v[0], str(v[1]), str(v[2]), v[3])
+        for k, versions in model.items()
+        for v in versions
+    )
+    assert got == want
+
+
+def test_zorder_layout_bounds_both_columns_per_file(spark, tmp_path):
+    """Z-ordered files must cover small rectangles of (a, b) space: the
+    per-file span of BOTH columns stays well below the domain, where a
+    1-D sort by `a` leaves `b` spanning ~the whole domain in every file.
+    That bounded span is exactly what min/max skipping prunes on."""
+    import glob
+    import os
+
+    n = 20_000
+    # two independent-ish dimensions over [0, 4096)
+    df = spark.range(n).selectExpr(
+        "CAST((id * 2654435761) % 4096 AS LONG) AS a",
+        "CAST((id * 40503) % 4096 AS LONG) AS b",
+    )
+    zpath = str(tmp_path / "z")
+    spath = str(tmp_path / "s")
+    txn.zorder_layout(df, "a", "b", n_shards=16).write.parquet(zpath)
+    df.repartitionByRange(16, "a").sortWithinPartitions("a").write.parquet(spath)
+
+    def spans(path):
+        out = []
+        for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
+            st = txn._footer_stats(f, ["a", "b"])
+            out.append(
+                (
+                    (st["a"][1] - st["a"][0]) / 4096.0,
+                    (st["b"][1] - st["b"][0]) / 4096.0,
+                )
+            )
+        return out
+
+    z = spans(zpath)
+    s = spans(spath)
+    # 1-D layout: b is unconstrained (each file spans ~all of b)
+    assert sum(b for _a, b in s) / len(s) > 0.9
+    # z-order: BOTH dimensions bounded on average — files are rectangles
+    avg_a = sum(a for a, _b in z) / len(z)
+    avg_b = sum(b for _a, b in z) / len(z)
+    assert avg_a < 0.6 and avg_b < 0.6, (avg_a, avg_b)
+    # and a selective predicate on EITHER column skips files
+    for col in ("a", "b"):
+        hit = [
+            f
+            for f in sorted(glob.glob(os.path.join(zpath, "*.parquet")))
+            if (st := txn._footer_stats(f, [col]))
+            and not (st[col][0] > 300 or st[col][1] < 200)
+        ]
+        assert len(hit) < 16, col
+    # rows survive the layout exactly
+    assert spark.read.parquet(zpath).count() == n
 
 
 # ---------------------------------------------------------------------------
@@ -1084,67 +683,3 @@ def test_sniff_encoding_truncated_multibyte_sample(tmp_path):
     assert assert_raises, "fixture must cut a multibyte sequence"
     p.write_bytes(data)
     assert sources.sniff_encoding(str(p)) == "UTF-8"
-
-
-def test_edinet_stream_reader_incremental(spark, tmp_path):
-    """Streaming S4: the date-offset stream reader ingests each date
-    exactly once across restarts — run to availableNow, add a date, rerun
-    on the SAME checkpoint, and only the new date arrives; the WAL replay
-    path (readBetweenOffsets) re-lists deterministically."""
-    import json
-
-    from ir_analyses_spark.io.edinet_datasource import (
-        EdinetFixtureDataSource,
-        EdinetFixtureStreamReader,
-    )
-
-    d = tmp_path / "lists"
-    d.mkdir()
-
-    def put(date, n):
-        payload = {
-            "results": [
-                {
-                    "docID": f"S{date}-{i}",
-                    "edinetCode": "E1",
-                    "filerName": "f",
-                    "docDescription": "desc",
-                    "submitDateTime": f"{date} 15:00",
-                }
-                for i in range(n)
-            ]
-        }
-        (d / f"{date}.json").write_text(json.dumps(payload), encoding="utf-8")
-
-    put("2024-02-09", 2)
-    put("2024-02-13", 1)
-    spark.dataSource.register(EdinetFixtureDataSource)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-
-    def run_once():
-        q = (
-            spark.readStream.format("edinet_fixture")
-            .option("path", str(d))
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_once()
-    assert spark.read.parquet(out).count() == 3
-
-    put("2024-02-20", 4)  # a new date appears; old dates unchanged
-    run_once()
-    got = spark.read.parquet(out)
-    assert got.count() == 7  # 3 + the new 4, nothing re-ingested
-    assert got.filter("date = '2024-02-20'").count() == 4
-
-    # WAL replay: same offset pair → identical rows, any number of times
-    r = EdinetFixtureStreamReader({"path": str(d)})
-    a = list(r.readBetweenOffsets({"last_date": "2024-02-09"}, {"last_date": "2024-02-20"}))
-    b = list(r.readBetweenOffsets({"last_date": "2024-02-09"}, {"last_date": "2024-02-20"}))
-    assert a == b and len(a) == 5  # the 02-13 row + the four 02-20 rows

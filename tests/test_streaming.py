@@ -170,8 +170,10 @@ def test_tws_plan_constructs_without_protobuf(spark, events_dir):
 def test_foreach_batch_scd2_versions_dimension(spark, events_dir, tmp_path):
     """A change stream must version the dimension: per-user latest
     event_type becomes the current row, superseded values close with the
-    change date, and replaying the stream is a no-op (batch-id ledger —
-    a from-scratch replay would otherwise append stale versions)."""
+    change date, and replaying the stream is a no-op (batch-id ledger in
+    the manifest — a from-scratch replay would otherwise append stale
+    versions)."""
+    from ir_analyses_spark.io import txn
     from ir_analyses_spark.streaming.pipeline import foreach_batch_scd2
 
     target = str(tmp_path / "user_dim")
@@ -184,7 +186,7 @@ def test_foreach_batch_scd2_versions_dimension(spark, events_dir, tmp_path):
         changes, target, key="user_id", change_cols=["state"]
     )
     _run(q)
-    dim = spark.read.parquet(target)
+    dim = txn.read(spark, target)
     n_versions = dim.count()
     # exactly one current row per user
     users = load_table(spark, "events", SF).select("user_id").distinct().count()
@@ -200,98 +202,59 @@ def test_foreach_batch_scd2_versions_dimension(spark, events_dir, tmp_path):
         "left_anti",
     )
     assert chain.count() == 0
-    # replay with a fresh checkpoint: identical table (idempotent merge)
+    # replay with a fresh checkpoint: every batch short-circuits on the
+    # ledger, so not even one commit lands
     import shutil
 
+    v = txn.snapshot(target).version
     shutil.rmtree(f"{target}__checkpoint")
     q2 = foreach_batch_scd2(
         changes, target, key="user_id", change_cols=["state"]
     )
     _run(q2)
-    assert spark.read.parquet(target).count() == n_versions
+    assert txn.snapshot(target).version == v
+    assert txn.read(spark, target).count() == n_versions
 
 
 def test_incremental_rollup_additive_and_replay_safe(spark, events_dir, tmp_path):
     """Three micro-batch merges must equal the one-shot batch aggregate
-    exactly (integer micros), and replaying the stream from a fresh
-    checkpoint must not double-count (batch-id ledger)."""
+    exactly (integer micros). Replaying the stream from a fresh checkpoint
+    must not double-count: every batch short-circuits on the manifest
+    ledger, so the table VERSION proves no partial re-application either,
+    and a reader pinned before the replay stays consistent."""
+    from ir_analyses_spark.io import txn
     from ir_analyses_spark.streaming.pipeline import (
         foreach_batch_rollup,
         rollup_delta,
     )
 
-    target = str(tmp_path / "rollup")
-    q = foreach_batch_rollup(stream_events(spark, events_dir), target)
-    _run(q)
-    got = _rows(
-        spark.read.parquet(target).select(
-            "day", "event_type", "n_events", "value_micros"
-        )
-    )
-    events = load_table(spark, "events", SF)
-    want = _rows(
-        rollup_delta(events).select("day", "event_type", "n_events", "value_micros")
-    )
-    assert got == want
-    # same checkpoint restart: no-op; fresh checkpoint replay: ledger skips
-    import shutil
-
-    shutil.rmtree(f"{target}__checkpoint")
-    q2 = foreach_batch_rollup(stream_events(spark, events_dir), target)
-    _run(q2)
-    assert (
-        _rows(
-            spark.read.parquet(target).select(
-                "day", "event_type", "n_events", "value_micros"
-            )
-        )
-        == want
-    )
-
-
-# slow: txn-variant rollup lifecycle; the bare-dir replay-safety twin stays fast in-suite
-@pytest.mark.slow
-def test_incremental_rollup_txn_snapshot_and_replay_safe(
-    spark, events_dir, tmp_path
-):
-    """The txn-format twin of the rollup sink: identical totals to the
-    one-shot aggregate, fresh-checkpoint replay is a no-op (ledger in the
-    manifest — and being atomic per batch, the table VERSION proves no
-    partial re-application either), and a reader pinned before the replay
-    stays consistent."""
-    from ir_analyses_spark.io import txn
-    from ir_analyses_spark.streaming.pipeline import (
-        foreach_batch_rollup_txn,
-        rollup_delta,
-    )
-
-    table = str(tmp_path / "rollup_txn")
-    _run(foreach_batch_rollup_txn(stream_events(spark, events_dir), table))
+    table = str(tmp_path / "rollup")
+    _run(foreach_batch_rollup(stream_events(spark, events_dir), table))
     cols = ["day", "event_type", "n_events", "value_micros"]
     events = load_table(spark, "events", SF)
     want = _rows(rollup_delta(events).select(*cols))
     assert _rows(txn.read(spark, table).select(*cols)) == want
     v = txn.snapshot(table).version
     pinned = txn.read(spark, table, at_version=v)
-    # fresh checkpoint replay: every batch short-circuits on the ledger
     import shutil
 
     shutil.rmtree(f"{table}__checkpoint")
-    _run(foreach_batch_rollup_txn(stream_events(spark, events_dir), table))
+    _run(foreach_batch_rollup(stream_events(spark, events_dir), table))
     assert txn.snapshot(table).version == v  # not one partial commit
     assert _rows(txn.read(spark, table).select(*cols)) == want
     assert _rows(pinned.select(*cols)) == want
 
 
 def test_foreach_batch_upsert_idempotent(spark, events_dir, tmp_path):
+    from ir_analyses_spark.io import txn
+
     target = str(tmp_path / "upsert_target")
     stream = stream_events(spark, events_dir).select(
         "event_id", "user_id", "event_type", "value"
     )
     q = foreach_batch_upsert(stream, target, keys=["event_id"])
     _run(q)
-    first = spark.read.parquet(target)
-    n = first.count()
+    n = txn.read(spark, target).count()
     assert n == load_table(spark, "events", SF).count()
     # replay with a fresh checkpoint: same keys upsert, row count unchanged
     import shutil
@@ -299,7 +262,7 @@ def test_foreach_batch_upsert_idempotent(spark, events_dir, tmp_path):
     shutil.rmtree(f"{target}__checkpoint")
     q2 = foreach_batch_upsert(stream, target, keys=["event_id"])
     _run(q2)
-    assert spark.read.parquet(target).count() == n
+    assert txn.read(spark, target).count() == n
 
 
 def test_stream_state_partitions_gate(spark, sf_dir, tmp_path):

@@ -1,6 +1,6 @@
-"""SCD2 on the transaction-log format: the same close-and-version
-semantics as the staged-swap sink (shared ``scd2_apply`` transform), plus
-the txn guarantees — atomic history commits and exactly-once batches."""
+"""SCD2 on the transaction-log format: the close-and-version transform
+(``txn.scd2_apply``) plus the txn guarantees — atomic history commits and
+exactly-once batches."""
 
 from __future__ import annotations
 
