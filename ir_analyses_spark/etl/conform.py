@@ -28,7 +28,7 @@ frames on the driver between its Spark jobs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from .standardize import FILING_ID, ROW_SEQ
 
@@ -108,28 +108,6 @@ def extract_cover_values(std: DataFrame, mapping: dict[str, str]) -> DataFrame:
     )
     return first.selectExpr(
         FILING_ID, *[f"{_scalar_string(_quoted(k))} AS {_quoted(k)}" for k in mapping]
-    )
-
-
-def get_value(
-    std: DataFrame, element_id: str, context_id: str | None = None
-) -> DataFrame:
-    """Single-element extraction with the reference's cardinality rule
-    (reference utils/data_mapper.py:55-101): if an element matches more than
-    one row *and* a context is given, prefer rows with that context; the
-    first matching row (by source order) wins; no rows → no output row
-    (the reference's None)."""
-    matches = std.filter(F.col("element_id") == element_id)
-    w = Window.partitionBy(FILING_ID)
-    matches = matches.withColumn("_n", F.count(F.lit(1)).over(w))
-    if context_id is not None:
-        matches = matches.filter(
-            (F.col("_n") <= 1) | (F.col("context_id") == context_id)
-        )
-    return (
-        matches.groupBy(FILING_ID)
-        .agg(F.expr(f"min_by(struct(is_numeric, value, value_text), {ROW_SEQ}) AS r"))
-        .selectExpr(FILING_ID, f"{_scalar_string('r')} AS value")
     )
 
 

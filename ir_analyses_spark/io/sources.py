@@ -1,4 +1,4 @@
-"""Sources: parquet table loaders, encoding-sniffed CSV/TSV scans (S1–S5).
+"""Sources: parquet table loaders, encoding-sniffed CSV/TSV scans (S1–S3).
 
 The reference reads one filing at a time with chardet + ``pd.read_csv``
 (reference utils/api.py:96-139) and bulk-backfills with a per-file python
@@ -118,19 +118,6 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     if name == "events":
         return read_events(spark, f"{sf_dir}/{name}.parquet")
     return spark.read.schema(TESTDATA_SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_tables(
-    spark: SparkSession, names: list[str] | None = None, sf_dir: str | None = None
-) -> dict[str, DataFrame]:
-    names = names or list(TESTDATA_SCHEMAS)
-    return {n: load_table(spark, n, sf_dir) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register every synthetic table as a temp view for spark.sql queries."""
-    for name, df in load_tables(spark, sf_dir=sf_dir).items():
-        df.createOrReplaceTempView(name)
 
 
 # ---------------------------------------------------------------------------
@@ -290,67 +277,3 @@ def read_filing_csvs(
     for s in scans[1:]:
         out = out.unionByName(s)
     return out
-
-
-#: EDINET bundle member selector (reference utils/api.py:113-118)
-FILING_MEMBER_PATTERN = r"XBRL_TO_CSV/jpcrp.*\.csv$"
-
-
-def read_zip_members(
-    spark: SparkSession,
-    zip_glob: str,
-    member_pattern: str = FILING_MEMBER_PATTERN,
-) -> DataFrame:
-    """ZIP-archive member fan-out (S5): ``binaryFile`` scan → per-partition
-    unzip via ``mapInPandas``, yielding (zip_path, member, content).
-
-    The reference downloads one ZIP at a time and extracts members matching
-    ``XBRL_TO_CSV/jpcrp*.csv`` on the driver (reference utils/api.py:96-118);
-    here thousands of archives unzip in parallel across executors, and only
-    the matching members' bytes ever leave the scan stage. Decompression is
-    per-file Python, but it is IO-bound work on opaque bytes — exactly the
-    mapInPandas niche (SURVEY §2A S5).
-    """
-    import re as _re
-
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField("zip_path", T.StringType(), False),
-            T.StructField("member", T.StringType(), False),
-            T.StructField("content", T.BinaryType(), True),
-        ]
-    )
-    pat = _re.compile(member_pattern)
-
-    def _extract(batches):
-        import io as _io
-        import zipfile
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                with zipfile.ZipFile(_io.BytesIO(blob)) as zf:
-                    for info in zf.infolist():
-                        if pat.search(info.filename):
-                            rows.append((path, info.filename, zf.read(info)))
-            yield pd.DataFrame(rows, columns=["zip_path", "member", "content"])
-
-    bins = spark.read.format("binaryFile").load(zip_glob).select("path", "content")
-    return bins.mapInPandas(_extract, schema=out_schema)
-
-
-def dataframe_from_records(
-    spark: SparkSession, records: list[dict], schema
-) -> DataFrame:
-    """REST/JSON source edge (S4): driver-fetched JSON rows → DataFrame.
-
-    The HTTP fetch itself stays outside the engine (reference
-    utils/api.py:45-93 does a driver-side GET); at scale the fetch would be a
-    Spark 4 Python DataSource partitioned by date — the shape downstream code
-    sees is identical.
-    """
-    return spark.createDataFrame(records, schema)

@@ -849,7 +849,7 @@ def transform_commit(
     returns the table's full next state, committed with snapshot isolation
     and (with ``batch_id``) exactly-once replay protection via the
     manifest ledger. On a lost commit race ``compute`` re-runs against the
-    winning snapshot — the general OCC building block the SCD2 sink uses.
+    winning snapshot — the general OCC building block.
     Because the commit replaces EVERY file, the manifest takes compute's
     output schema verbatim — a transform that adds a column evolves the
     table (pinning the old schema would silently hide the new column on
@@ -882,103 +882,6 @@ def transform_commit(
         }
 
     return _commit(table, build)
-
-
-def scd2_apply(
-    current: DataFrame | None,
-    updates: DataFrame,
-    key: str,
-    change_cols: list[str],
-    effective_col: str = "effective_from",
-) -> DataFrame:
-    """The SCD2 state transition as a pure transform: (current table or
-    None, one-row-per-key updates) → next table. The table keeps one row
-    per (key, version) with ``effective_from`` / ``effective_to`` /
-    ``is_current``; an update whose ``change_cols`` differ from the key's
-    current row CLOSES that row (effective_to := the update's
-    effective_from) and appends the new version. Unchanged keys and
-    non-current history rows pass through untouched."""
-    upd = updates.select(
-        F.col(key),
-        *[F.col(c) for c in change_cols],
-        F.col(effective_col).alias("_new_from"),
-    )
-    if current is None:
-        return upd.select(
-            key,
-            *change_cols,
-            F.col("_new_from").alias("effective_from"),
-            F.lit(None).cast("date").alias("effective_to"),
-            F.lit(True).alias("is_current"),
-        )
-    # null-safe change test: plain struct != returns NULL when a member is
-    # NULL, which would silently skip NULL→value (and value→NULL) changes
-    changed = ~(
-        F.struct(*[f"cur.{c}" for c in change_cols]).eqNullSafe(
-            F.struct(*[f"u.{c}" for c in change_cols])
-        )
-    )
-    cur = current.alias("cur")
-    u = upd.alias("u")
-    joined = cur.join(u, F.col(f"cur.{key}") == F.col(f"u.{key}"), "left")
-    # current rows: close if a differing update arrived, else keep as-is
-    kept_or_closed = joined.select(
-        F.col(f"cur.{key}").alias(key),
-        *[F.col(f"cur.{c}").alias(c) for c in change_cols],
-        F.col("cur.effective_from").alias("effective_from"),
-        F.when(
-            F.col("cur.is_current") & F.col("u._new_from").isNotNull() & changed,
-            F.col("u._new_from"),
-        )
-        .otherwise(F.col("cur.effective_to"))
-        .alias("effective_to"),
-        F.when(
-            F.col("cur.is_current") & F.col("u._new_from").isNotNull() & changed,
-            F.lit(False),
-        )
-        .otherwise(F.col("cur.is_current"))
-        .alias("is_current"),
-    )
-    # new versions: updates that differ from the key's current row, plus
-    # brand-new keys
-    cur_now = current.filter("is_current").alias("cur")
-    new_rows = (
-        u.join(cur_now, F.col(f"u.{key}") == F.col(f"cur.{key}"), "left")
-        .filter(F.col(f"cur.{key}").isNull() | changed)
-        .select(
-            F.col(f"u.{key}").alias(key),
-            *[F.col(f"u.{c}").alias(c) for c in change_cols],
-            F.col("u._new_from").alias("effective_from"),
-            F.lit(None).cast("date").alias("effective_to"),
-            F.lit(True).alias("is_current"),
-        )
-    )
-    return kept_or_closed.unionByName(new_rows)
-
-
-def scd2_merge_txn(
-    updates: DataFrame,
-    table: str,
-    key: str,
-    change_cols: list[str],
-    effective_col: str = "effective_from",
-    batch_id: int | None = None,
-) -> Snapshot:
-    """Slowly-changing-dimension type-2 merge: a history-preserving
-    upsert (``scd2_apply``) committed as one manifest — readers never see
-    a half-written dimension, and a replayed ``batch_id`` is a no-op at
-    the same table version.
-
-    The reference keeps only latest state (ORM upsert); SCD2 is what the
-    same write needs once history must be queryable "as of" any date.
-    Like SQL MERGE, one update row per key per batch — collapse a batch
-    to latest-per-key first if the feed can repeat keys."""
-    return transform_commit(
-        updates.sparkSession,
-        table,
-        lambda cur: scd2_apply(cur, updates, key, change_cols, effective_col),
-        batch_id=batch_id,
-    )
 
 
 def restore(table: str, to_version: int) -> Snapshot:

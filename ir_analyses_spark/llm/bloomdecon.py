@@ -344,9 +344,8 @@ def bloom_decontaminate_filter_packed(
     ONE per-row predicate: gram array → md5 probe pair → packed-word
     bit tests. Zero joins, zero shuffles, zero state on the corpus side
     (plan-pinned), which makes the stage STREAMING-legal by
-    construction — the `streaming/curate_stream.py` stateless-
-    projection argument. Identical keep set to the default form
-    (tested).
+    construction: a stateless projection needs no state store.
+    Identical keep set to the default form (tested).
 
     Honest measurement (1M pages, local[32], SCALE.md): SLOWER than the
     default single-node — the higher-order-function lambdas are

@@ -468,8 +468,7 @@ def curation_stages(
             quality_model, gate_in, min_prob=min_quality_prob
         )
         gate_in = clf_filtered
-    # keep= passthrough: the gate is a projection+filter, no join —
-    # same pattern as streaming/curate_stream.py
+    # keep= passthrough: the gate is a projection+filter, no join
     final = (
         gopher_flags_df(
             gate_in, quality_thresholds, keep=("url", "title", "text")
@@ -517,11 +516,6 @@ def curation_stages(
         "final": final,
     }
     return out
-
-
-def curate_crawl(spark: SparkSession, warc_path: str, **kwargs) -> DataFrame:
-    """The curated corpus: (doc_id, url, title, text)."""
-    return curation_stages(spark, warc_path, **kwargs)["final"]
 
 
 def funnel_counts(stages: dict[str, DataFrame]) -> dict[str, int]:

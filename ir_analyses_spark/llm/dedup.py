@@ -357,14 +357,6 @@ def _minhash_wide(docs: DataFrame, n_hashes: int = _N_HASHES) -> DataFrame:
     return base.groupBy("doc_id").agg(*mins)
 
 
-def minhash_signatures(docs: DataFrame, n_hashes: int = _N_HASHES) -> DataFrame:
-    """(doc_id, signature array<long>) — array-shaped view of
-    :func:`_minhash_wide` for consumers that want one signature column."""
-    agg = _minhash_wide(docs, n_hashes)
-    cols = ", ".join(f"h{s}" for s in range(n_hashes))
-    return agg.selectExpr("doc_id", f"array({cols}) AS sig")
-
-
 def minhash_lsh_nearup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs, exact-verified (§2B minhash→band→bucket).
 

@@ -1,7 +1,7 @@
 """Training-set export for curated corpora (SURVEY §2B LLM ext — the
 last mile: a curated (doc_id, text) corpus → deterministic train/val/
-test splits, hashed shards, per-shard packing offsets, and a
-split/shard-partitioned parquet layout a trainer streams directly).
+test splits, hashed shards and per-shard packing offsets, as the
+(split, shard) columns a trainer's partitioned layout is keyed by).
 
 Generalizes the registry's `llm/training.dataset_split` (multiplicative
 -hash split) and `llm/sampling.sequence_packing` (per-shard prefix
@@ -12,18 +12,18 @@ Scale posture (inherited from the two registry operators it
 generalizes): split and shard assignment are pure projections
 (recomputable anywhere, no persisted split column); packing offsets
 are a running sum windowed per (split, shard) — embarrassingly
-parallel, never a global prefix sum; the write is one pass partitioned
-by (split, shard) so a trainer reads its shard files with partition
-pruning. Determinism: every assignment derives from doc_id alone, so
+parallel, never a global prefix sum; a write partitioned by (split,
+shard) lets a trainer read its shard files with partition pruning.
+Determinism: every assignment derives from doc_id alone, so
 re-exports of the same corpus are byte-stable modulo parquet encoding.
 
 New module per the evidence-ledger rule; verified by
-`tests/test_export.py` (crawl→export e2e + invariants).
+`tests/test_export.py` (layout invariants).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 #: Knuth's multiplicative constant — same family as the registry's
 #: deterministic split (`llm/training.py`).
@@ -104,30 +104,4 @@ def training_layout(
             "first_bin"
         ),
         F.floor((F.col("tok_end") - 1) / seq_len).alias("last_bin"),
-    )
-
-
-def export_training_shards(
-    corpus: DataFrame,
-    out_dir: str,
-    n_shards: int = 16,
-    seq_len: int = 2048,
-    split_percents: tuple[int, int] = (90, 95),
-    text_col: str = "text",
-) -> DataFrame:
-    """Write the layout partitioned by (split, shard); return the
-    manifest (split, shard, n_docs, n_tokens) read back from the
-    written files — counts come from what actually landed on disk, not
-    from the plan that was supposed to land it."""
-    laid = training_layout(corpus, n_shards, seq_len, split_percents, text_col)
-    laid.write.mode("overwrite").partitionBy("split", "shard").parquet(out_dir)
-    spark = corpus.sparkSession
-    return (
-        spark.read.parquet(out_dir)
-        .groupBy("split", "shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("n_tokens"),
-        )
-        .orderBy("split", "shard")
     )

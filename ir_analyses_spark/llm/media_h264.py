@@ -20,7 +20,7 @@ and routes MP4 binary columns here via ``mp4_h264_headers``.
 
 Scale shape: header parse is a per-file map (Arrow-batched
 ``mapInPandas`` over the binary column, same plumbing as
-`llm/media_mp4.media_sampled_features`) — KB-sized headers, no
+`llm/multimodal.extract_media_features`) — KB-sized headers, no
 shuffle, no Python row path.
 
 New module per the evidence-ledger rule (multimodal.py's certified

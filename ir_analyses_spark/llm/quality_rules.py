@@ -6,17 +6,12 @@ Implements the public heuristic rule families from Gopher (Rae et al.
 arXiv:2306.01116): per-document scalar signals (word counts, mean word
 length, symbol/word ratio, bullet/ellipsis line ratios, alphabetic-word
 fraction, stopword presence) and repetition signals (duplicate
-line/paragraph fractions by count and by character mass, top-n-gram
-character fraction, duplicated-n-gram character fraction).
+line/paragraph fractions by count and by character mass).
 
-Scale posture: the scalar suite is ONE projection over the corpus —
-every signal is a native column expression (split / filter / aggregate
+Scale posture: the suite is ONE projection over the corpus — every
+signal is a native column expression (split / filter / aggregate
 higher-order functions, all JVM-side), no shuffle, no UDF, no collect.
-The n-gram signals explode word n-grams and aggregate per (doc_id,
-gram): one hash-partial + final aggregation keyed by doc_id — fully
-parallel, never all-pairs, and the gram strings that shuffle are
-bounded by the document length. At 100 TB both paths remain a linear
-scan plus (for n-grams) a doc-local aggregation.
+At 100 TB it remains a linear scan.
 
 Exactness: every fraction is an exact-integer numerator and denominator
 divided once as DOUBLE, so the DuckDB twins (*_SQL below) reproduce the
@@ -25,8 +20,7 @@ values bit-for-bit — the same cross-engine-exactness discipline as
 
 New module per the evidence-ledger rule (new operators never land in
 certified modules). Not in the driver registry (growth frozen at 150
-this round); verified by `tests/test_quality_rules.py` DuckDB parity +
-an independent-Python n-gram oracle.
+this round); verified by `tests/test_quality_rules.py` DuckDB parity.
 """
 
 from __future__ import annotations
@@ -266,98 +260,6 @@ def gopher_flags(
 ) -> DataFrame:
     """Gopher rule flags over the `documents` table."""
     return gopher_flags_df(load_table(spark, "documents", sf_dir), thresholds)
-
-
-def top_ngram_char_fraction(docs: DataFrame, n: int = 2) -> DataFrame:
-    """Per-document fraction of non-space characters claimed by the
-    highest-mass word n-gram (Gopher §A1.1's top-n-gram family, n∈{2,3,4}).
-
-    mass(gram) = occurrences × non-space chars of the gram; the reported
-    fraction is max(mass) / total non-space chars, clamped at 1.0
-    (overlapping occurrences each count in full) — deterministic under
-    count ties because the tie-break IS the mass.
-
-    Plan: per-row gram construction (transform over an index sequence +
-    slice — no explode until the grams exist), then posexplode and ONE
-    aggregation keyed by (doc_id, gram) with a map-side partial, then a
-    doc_id-level max. Nothing quadratic; shuffle volume is O(total grams).
-    """
-    if n < 1:
-        raise ValueError("n must be >= 1")
-    words = _nonempty(F.split("text", r"\s+"))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(words) - F.lit(n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(words, i, n)),
-    )
-    base = docs.select(
-        "doc_id",
-        F.length(F.regexp_replace("text", r"\s", "")).alias("nonspace_chars"),
-        F.when(F.size(words) >= n, grams).otherwise(F.array()).alias("grams"),
-    )
-    exploded = base.select(
-        "doc_id", "nonspace_chars", F.explode_outer("grams").alias("gram")
-    )
-    counted = exploded.groupBy("doc_id", "nonspace_chars", "gram").agg(
-        F.count("gram").alias("cnt")
-    )
-    mass = F.col("cnt") * F.length(F.regexp_replace("gram", " ", ""))
-    return (
-        counted.groupBy("doc_id", "nonspace_chars")
-        .agg(F.max(F.coalesce(mass, F.lit(0))).alias("top_mass"))
-        .select(
-            "doc_id",
-            _frac(
-                F.least(F.col("top_mass"), F.col("nonspace_chars")),
-                F.col("nonspace_chars"),
-            ).alias(f"top_{n}gram_char_frac"),
-        )
-    )
-
-
-def duplicated_ngram_char_fraction(docs: DataFrame, n: int = 5) -> DataFrame:
-    """Per-document fraction of non-space characters inside word n-grams
-    that occur more than once (Gopher's duplicated-n-gram family,
-    n∈{5..10}).
-
-    Documented simplification vs the paper: overlapping occurrences each
-    contribute their full character mass (the paper de-overlaps), and the
-    result is clamped at 1.0; this upper-bounds the paper's value and
-    preserves its filtering ordering. Same explode + (doc_id, gram)
-    aggregation shape as :func:`top_ngram_char_fraction`.
-    """
-    if n < 1:
-        raise ValueError("n must be >= 1")
-    words = _nonempty(F.split("text", r"\s+"))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(words) - F.lit(n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(words, i, n)),
-    )
-    base = docs.select(
-        "doc_id",
-        F.length(F.regexp_replace("text", r"\s", "")).alias("nonspace_chars"),
-        F.when(F.size(words) >= n, grams).otherwise(F.array()).alias("grams"),
-    )
-    exploded = base.select(
-        "doc_id", "nonspace_chars", F.explode_outer("grams").alias("gram")
-    )
-    counted = exploded.groupBy("doc_id", "nonspace_chars", "gram").agg(
-        F.count("gram").alias("cnt")
-    )
-    dup_mass = F.when(
-        F.col("cnt") >= 2,
-        F.col("cnt") * F.length(F.regexp_replace("gram", " ", "")),
-    ).otherwise(F.lit(0))
-    return (
-        counted.groupBy("doc_id", "nonspace_chars")
-        .agg(F.sum(F.coalesce(dup_mass, F.lit(0))).alias("dup_mass"))
-        .select(
-            "doc_id",
-            _frac(
-                F.least(F.col("dup_mass"), F.col("nonspace_chars")),
-                F.col("nonspace_chars"),
-            ).alias(f"dup_{n}gram_char_frac"),
-        )
-    )
 
 
 def _stopword_sql_terms() -> str:

@@ -1,6 +1,7 @@
 """Structured Streaming operators over the event stream (SURVEY §2B
 Streaming; M6): file source → watermark → tumbling/sliding/session windows,
-stateful dedup, custom per-key state, foreachBatch upsert sink.
+stateful dedup, custom per-key state (``applyInPandasWithState``),
+foreachBatch rollup sink.
 
 Design notes for scale:
 - every aggregation is bounded by a watermark, so state is O(open windows ×
@@ -8,12 +9,11 @@ Design notes for scale:
 - the same transformation functions run in batch mode (DataFrames are
   source-agnostic) — the registry exposes batch twins of each windowed agg,
   which is also how the DuckDB oracle can check streaming semantics;
-- sinks go through ``foreachBatch`` and commit each micro-batch through
-  the transaction-log table format (``io/txn.py``), so replays after
-  failure don't duplicate: keyed MERGE is idempotent by itself, and the
-  ADDITIVE rollup and SCD2 sinks record the batch id in the same manifest
-  as the batch's data, so a replayed batch is a no-op with no
-  merge-vs-marker crash window. Read their tables with ``txn.read``.
+- the rollup sink goes through ``foreachBatch`` and commits each
+  micro-batch through the transaction-log table format (``io/txn.py``):
+  the batch id lands in the same manifest as the batch's data, so a
+  replayed batch is a no-op with no merge-vs-marker crash window. Read
+  its table with ``txn.read``.
 """
 
 from __future__ import annotations
@@ -28,27 +28,6 @@ from ..io import txn
 from ..io.sources import events_ts_unit, load_table, narrow_ns_to_ts
 from ..schemas import EVENTS_TS_NANOS_SCHEMA, TESTDATA_SCHEMAS
 
-
-def has_tws_support(spark: SparkSession | None = None) -> bool:
-    """Explicit capability probe for ``transformWithStateInPandas``: the
-    Spark 4 worker protocol for that API serializes state over protobuf,
-    so ``google.protobuf`` must be importable where the state protocol
-    runs. The probe is a DRIVER-side import: empirically (this container)
-    an executor-side import probe can succeed while the real
-    transformWithState helper process still dies — importability in an
-    RDD worker does not model the TWS runtime's own environment — so the
-    driver import is the best cheap signal, correct wherever driver and
-    workers share one Python environment (local mode, uniform clusters).
-    On split-environment deployments, validate the API with a smoke
-    stream at deploy time rather than trusting any import probe. Where
-    the probe is false, the ``applyInPandasWithState`` twin provides
-    identical semantics."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 WATERMARK = "10 minutes"
 TUMBLE = "15 minutes"
@@ -157,100 +136,6 @@ def dedup_within_watermark(events: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Sinks
-# ---------------------------------------------------------------------------
-
-def run_stream_to_memory(
-    df: DataFrame, name: str, mode: str = "append"
-) -> "pyspark.sql.streaming.StreamingQuery":  # noqa: F821
-    """Start the stream into an in-memory table (tests/dev)."""
-    return (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def _start_foreach_batch(df: DataFrame, target: str, apply_fn):
-    """Shared starter for the foreachBatch sinks: checkpoint beside the
-    target, availableNow trigger. One definition so trigger/checkpoint
-    policy can't drift between the three sink wrappers."""
-    return (
-        df.writeStream.foreachBatch(apply_fn)
-        .option("checkpointLocation", f"{target}__checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def foreach_batch_upsert(
-    df: DataFrame,
-    table: str,
-    keys: list[str],
-    partition_col: str | None = None,
-):
-    """Idempotent streaming sink: every micro-batch MERGEs into a txn
-    table by natural key (``txn.merge_upsert``; with Delta this would be
-    ``MERGE INTO``). Replayed batches upsert the same keys → exactly-once
-    at the table level. Pass ``partition_col`` so each micro-batch
-    rewrites ONLY the partitions it touches — without it the merge is
-    O(table) per batch, the scale-killer in a streaming write path. Each
-    batch is collapsed to one row per key first (MERGE's
-    one-update-per-key contract; dropDuplicates keeps an arbitrary
-    duplicate — feeds that care which row survives must collapse upstream
-    with an explicit ordering, as foreach_batch_scd2 does)."""
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        txn.merge_upsert(
-            batch_df.dropDuplicates(keys), table, keys,
-            partition_col=partition_col,
-        )
-
-    return _start_foreach_batch(df, table, _apply)
-
-
-def foreach_batch_scd2(
-    df: DataFrame,
-    table: str,
-    key: str,
-    change_cols: list[str],
-    effective_col: str = "effective_from",
-):
-    """Streaming CDC → SCD2: every micro-batch of change events versions
-    the dimension table (close-and-append via ``txn.scd2_merge_txn``).
-    The batch is first collapsed to its latest row per key (SCD2's
-    one-update-per-key contract; intermediate same-batch flips are
-    sub-batch-granularity history by definition). Replay needs the
-    batch-id ledger: re-merging only the LAST batch is a no-op (values
-    already current), but a replay from batch 0 would see older values as
-    "changes" against the final state and append stale versions. The
-    batch id commits in the same manifest as the merged dimension, so a
-    replayed batch is skipped at the same table version and a crash can
-    never leave a merged-but-unmarked batch to re-apply."""
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        # total order: effective date desc, then the change columns desc —
-        # two same-key rows with equal effective_from (common at date
-        # granularity) must pick the SAME survivor on every replay, or the
-        # dimension's history differs between runs
-        w = Window.partitionBy(key).orderBy(
-            F.col(effective_col).desc(),
-            *[F.col(c).desc() for c in change_cols],
-        )
-        latest = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        txn.scd2_merge_txn(
-            latest, table, key, change_cols, effective_col,
-            batch_id=batch_id,
-        )
-
-    return _start_foreach_batch(df, table, _apply)
-
-
-# ---------------------------------------------------------------------------
 # Incremental rollup: a continuously-maintained pre-aggregate (the
 # hypertable continuous-aggregate / materialized-rollup pattern)
 # ---------------------------------------------------------------------------
@@ -296,158 +181,37 @@ def foreach_batch_rollup(df: DataFrame, table: str):
             batch_id=batch_id,
         )
 
-    return _start_foreach_batch(df, table, _apply)
+    return (
+        df.writeStream.foreachBatch(_apply)
+        .option("checkpointLocation", f"{table}__checkpoint")
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 # ---------------------------------------------------------------------------
 # Custom stateful operator: per-user running totals via applyInPandasWithState
 # ---------------------------------------------------------------------------
 
-def stateful_running_totals(events: DataFrame) -> DataFrame:
-    """Custom keyed state (§2B custom stateful): running event count + value
-    sum per user, emitted once per micro-batch. GroupState holds two numbers
-    per user — fixed-size state, the pattern for billions of keys."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = "user_id bigint, n_events bigint, total_value double"
-    state_schema = "n bigint, total double"
-
-    def update(key, pdf_iter, state: GroupState):
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdf_iter:
-            n += len(pdf)
-            total += float(pdf["value"].fillna(0.0).sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stateful_totals_tws(events: DataFrame) -> DataFrame:
-    """Same running totals on the Spark 4 ``transformWithStateInPandas``
-    API (§2B custom stateful, current-generation form): typed ValueState
-    handles, explicit init/close lifecycle, TTL-capable — the successor of
-    applyInPandasWithState and where new stateful operators should land.
-
-    Environment note: the worker protocol of this API requires
-    ``google.protobuf`` at runtime (and the RocksDB state store, enabled in
-    session.py); where protobuf is absent the applyInPandasWithState twin
-    above provides the same semantics."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    state_schema = StructType(
-        [StructField("n", LongType()), StructField("total", DoubleType())]
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues) -> "pd.DataFrame":
-            n, total = self._state.get() if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].fillna(0.0).sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        RunningTotals(),
-        outputStructType="user_id bigint, n_events bigint, total_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def stateful_totals_micros(events: DataFrame) -> DataFrame:
-    """Cross-engine-checkable variant of :func:`stateful_running_totals`:
-    the per-user value sum accumulates in integer MICROS
-    (``floor(value*1e6 + 0.5)``) so the total is order-independent and
-    exactly reproducible by a SQL oracle — float accumulation order differs
-    between engines and would drift the hash compare. Prefers the
-    ``transformWithStateInPandas`` form when the worker protocol is
-    available (see :func:`has_tws_support`), else the
-    ``applyInPandasWithState`` twin — identical semantics either way."""
+    """Custom keyed state (§2B custom stateful) on
+    ``applyInPandasWithState``: a running event count and value sum per
+    user, emitted once per micro-batch. GroupState holds two numbers per
+    user — fixed-size state, the pattern for billions of keys. The value
+    sum accumulates in integer MICROS (``floor(value*1e6 + 0.5)``) so the
+    total is order-independent and exactly reproducible by a SQL oracle —
+    float accumulation order differs between engines and would drift the
+    hash compare."""
     import numpy as np
     import pandas as pd
-
-    out_schema = "user_id bigint, n_events bigint, total_micros bigint"
-
-    def fold(pdf_iter, n: int, micros: int):
-        for pdf in pdf_iter:
-            n += len(pdf)
-            vals = pdf["value"].fillna(0.0).to_numpy(dtype="float64")
-            micros += int(np.floor(vals * 1_000_000.0 + 0.5).astype("int64").sum())
-        return n, micros
-
-    if has_tws_support(events.sparkSession):
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-            StatefulProcessorHandle,
-        )
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        state_schema = StructType(
-            [StructField("n", LongType()), StructField("micros", LongType())]
-        )
-
-        class MicroTotals(StatefulProcessor):
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                self._state = handle.getValueState("micros", state_schema)
-
-            def handleInputRows(self, key, rows, timerValues):
-                n, micros = (
-                    self._state.get() if self._state.exists() else (0, 0)
-                )
-                n, micros = fold(rows, n, micros)
-                self._state.update((n, micros))
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]],
-                        "n_events": [n],
-                        "total_micros": [micros],
-                    }
-                )
-
-            def close(self) -> None:
-                pass
-
-        return events.groupBy("user_id").transformWithStateInPandas(
-            MicroTotals(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def update(key, pdf_iter, state: GroupState):
         n, micros = state.get if state.exists else (0, 0)
-        n, micros = fold(pdf_iter, n, micros)
+        for pdf in pdf_iter:
+            n += len(pdf)
+            vals = pdf["value"].fillna(0.0).to_numpy(dtype="float64")
+            micros += int(np.floor(vals * 1_000_000.0 + 0.5).astype("int64").sum())
         state.update((n, micros))
         yield pd.DataFrame(
             {"user_id": [key[0]], "n_events": [n], "total_micros": [micros]}
@@ -455,7 +219,7 @@ def stateful_totals_micros(events: DataFrame) -> DataFrame:
 
     return events.groupBy("user_id").applyInPandasWithState(
         update,
-        outputStructType=out_schema,
+        outputStructType="user_id bigint, n_events bigint, total_micros bigint",
         stateStructType="n bigint, micros bigint",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,

@@ -10,14 +10,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ir_analyses_spark.session import get_spark  # noqa: E402
-from ir_analyses_spark.streaming.pbvendor import ensure_protobuf_driver  # noqa: E402
 
-# Before ANY SparkSession (and its JVM) exists: transformWithState's
-# pre-init driver worker inherits PYTHONPATH from the JVM environment,
-# so the vendored protobuf shim must be exported here, at conftest
-# import time, for the tws protocol tests to execute (no-op when the
-# real protobuf is installed).
-ensure_protobuf_driver()
 
 def pytest_collection_modifyitems(config, items):
     """r15 (VERDICT r14 item 1): the suite outgrew the driver's pytest

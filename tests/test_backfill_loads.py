@@ -10,7 +10,11 @@ Each filing is a small UTF-8 EDINET CSV export: cover rows plus
 
 from __future__ import annotations
 
+import pytest
+from py4j.protocol import Py4JJavaError
+
 from ir_analyses_spark.etl import pipeline
+from ir_analyses_spark.queries.summary import financial_summary
 from ir_analyses_spark.schemas import RAW_JP_COLUMNS
 
 N_MEASURES = 3
@@ -112,3 +116,24 @@ def test_reloaded_report_keeps_none_of_its_old_facts(spark, tmp_path):
     _load(spark, tmp_path, "empty_q1_q2", [("E00001", 1, 0), ("E00001", 2, 0)])
     assert _facts_per_report(spark, tmp_path) == {}
     assert _counts(spark, tmp_path)["reports"] == 2
+
+
+@pytest.mark.xfail(
+    strict=True,
+    raises=Py4JJavaError,
+    reason="FAILED_READ_FILE.FILE_NOT_EXIST: the load's staged swap deletes "
+    "the files a frame read before it had listed; ROADMAP Direction 1 "
+    "(silver as txn tables under one silver version) fixes this and "
+    "removes this marker",
+)
+def test_summary_frame_read_before_a_load_still_serves_after_it(spark, tmp_path):
+    """A serving process reads silver once and answers from those frames;
+    a load that commits in between must not break them."""
+    _load(spark, tmp_path, "q1", [("E00001", 1)])
+    t = pipeline.read_silver(spark, str(tmp_path / "silver"))
+    _load(spark, tmp_path, "q2", [("E00001", 2)])
+    rows = financial_summary(
+        t["companies"], t["reports"], t["facts"], t["items"],
+        edinet_code="E00001",
+    ).collect()
+    assert len(rows) == 1

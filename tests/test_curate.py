@@ -147,7 +147,6 @@ def test_domain_cap_stage(spark, tmp_path_factory):
 # slow: optional-stage wiring; the operators have their own fast tests (test_robots, test_lm_score)
 @pytest.mark.slow
 def test_optional_robots_and_perplexity_stages(spark, tmp_path_factory):
-    from ir_analyses_spark.llm.curate import curate_crawl
     from ir_analyses_spark.llm.lm_score import train_char_lm
 
     d = tmp_path_factory.mktemp("crawl_opt")
@@ -189,11 +188,11 @@ def test_optional_robots_and_perplexity_stages(spark, tmp_path_factory):
     nn = funnel_counts(lenient)
     assert nn["ppl_filtered"] == nn["line_deduped"]  # bucket ≤ 3 keeps all
     assert nn["final"] == 3
-    strictest = curate_crawl(
+    strictest = curation_stages(
         spark, str(d), blocked_domains=["spam.example"],
         quality_thresholds={"min_words": 10},
         perplexity_lm=lm, max_ppl_bucket=1,
-    )
+    )["final"]
     assert strictest.count() < 3  # tercile 1 only: somebody gets cut
 
 

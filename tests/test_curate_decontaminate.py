@@ -127,8 +127,7 @@ def test_default_gate_shuffles_are_fixed_width(spark):
 def test_packed_gate_is_zero_shuffle_projection(spark):
     """Packed-form contract: one per-row predicate — the corpus-side
     plan has NO exchange, join, aggregate, or generator, which is the
-    streaming-legality argument (stateless projection, the
-    `streaming/curate_stream.py` pattern)."""
+    streaming-legality argument (a stateless projection)."""
     from ir_analyses_spark.llm.bloomdecon import (
         bloom_decontaminate_filter_packed,
     )

@@ -317,23 +317,6 @@ def test_fact_mapping_duration_and_nulls(spark):
     assert a["is_numeric"] is False
 
 
-def test_get_value_context_disambiguation(spark):
-    rows = [
-        row("jppfs_cor:X", context="Prior1YTDDuration", value="1"),
-        row("jppfs_cor:X", context="CurrentYTDDuration", value="2"),
-        row("jppfs_cor:OnlyOne", context="SomeOther", value="7"),
-    ]
-    std = _std(spark, rows)
-    # >1 match + context given → context row wins
-    assert conform.get_value(std, "jppfs_cor:X", "CurrentYTDDuration").first()["value"] == "2"
-    # >1 match, no context → first row by source order
-    assert conform.get_value(std, "jppfs_cor:X").first()["value"] == "1"
-    # single match + non-matching context → still returned (cardinality rule)
-    assert conform.get_value(std, "jppfs_cor:OnlyOne", "CurrentYTDDuration").first()["value"] == "7"
-    # no match → empty (the reference's None)
-    assert conform.get_value(std, "jppfs_cor:Missing").count() == 0
-
-
 # ---------------------------------------------------------------------------
 # end-to-end: two filings → 4 tables → financial summary
 # (reference utils/service/financial_service.py:90-165)

@@ -1,19 +1,14 @@
-"""Training-set export (llm/export.py): crawl→curate→export e2e plus
-layout invariants against an independent Python model."""
+"""Training-set export (llm/export.py): layout invariants against an
+independent Python model."""
 
 from __future__ import annotations
 
-import gzip
 import random
 
 import pytest
 from pyspark.sql import functions as F
 
-from ir_analyses_spark.llm.export import (
-    _KNUTH,
-    export_training_shards,
-    training_layout,
-)
+from ir_analyses_spark.llm.export import _KNUTH, training_layout
 
 SEQ_LEN = 64
 N_SHARDS = 4
@@ -101,33 +96,6 @@ def test_invalid_args(corpus):
         training_layout(corpus, 4, 0)
     with pytest.raises(ValueError, match="split_percents"):
         training_layout(corpus, 4, 64, (95, 90))
-
-
-# slow: crawl-to-shards e2e; each stage has fast unit pins
-@pytest.mark.slow
-def test_crawl_to_training_shards_e2e(spark, tmp_path_factory):
-    """The whole pipeline: WARC → curation funnel → sharded training
-    export, manifest counted from the files on disk."""
-    from ir_analyses_spark.llm.curate import curation_stages
-    from tests.test_curate import CRAWL
-
-    d = tmp_path_factory.mktemp("crawl_exp")
-    (d / "c.warc.gz").write_bytes(b"".join(gzip.compress(r) for r in CRAWL))
-    final = curation_stages(
-        spark, str(d), blocked_domains=["spam.example"],
-        quality_thresholds={"min_words": 10},
-    )["final"]
-    out = str(tmp_path_factory.mktemp("shards"))
-    manifest = export_training_shards(
-        final, out, n_shards=2, seq_len=8
-    ).collect()
-    assert sum(r["n_docs"] for r in manifest) == 3
-    back = spark.read.parquet(out)
-    assert back.count() == 3
-    assert {r["title"] for r in back.collect()} == {"Page A", "Page B", "Page C"}
-    # partition pruning works on the written layout
-    one = back.filter((F.col("split") == manifest[0]["split"]) & (F.col("shard") == manifest[0]["shard"]))
-    assert one.count() == manifest[0]["n_docs"]
 
 
 def test_split_cell_exact_across_engines_for_fullrange_ids(spark):

@@ -1,6 +1,6 @@
 """IO layer tests: encoding-sniffed filing scans (SURVEY §2A S1–S3),
-parquet sink MERGE semantics (S6/S7, A5–A7), and the txn format's SCD2
-merge, compaction and z-order layout.
+parquet sink MERGE semantics (S6/S7, A5–A7), and the txn format's
+compaction and z-order layout.
 
 Mirrors the reference's ingest edge cases: per-file charset detection
 (reference utils/api.py:129-137 uses chardet), BOM'd UTF-8 fixtures
@@ -75,25 +75,6 @@ def test_read_filing_csvs_mixed_encodings(spark, tmp_path):
     assert names == {"テスト株式会社"}
     # lineage: 3 distinct source files
     assert df.select("_filing_path").distinct().count() == 3
-
-
-def test_read_zip_members(spark, tmp_path):
-    """S5: ZIP fan-out extracts only the jpcrp CSV members, in parallel
-    (reference utils/api.py:113-118 does this per-ZIP on the driver)."""
-    import zipfile
-
-    for i in range(2):
-        with zipfile.ZipFile(tmp_path / f"S10000{i}.zip", "w") as zf:
-            zf.writestr(f"XBRL_TO_CSV/jpcrp_filing_{i}.csv", CONTENT.encode("cp932"))
-            zf.writestr("XBRL_TO_CSV/jpaud_auditor.csv", b"ignored")
-            zf.writestr("manifest.xml", b"<xml/>")
-
-    members = sources.read_zip_members(spark, str(tmp_path / "*.zip"))
-    rows = members.collect()
-    assert len(rows) == 2
-    assert all("jpcrp" in r["member"] for r in rows)
-    # bytes round-trip: CP932 member decodes to the original filing text
-    assert bytes(rows[0]["content"]).decode("cp932") == CONTENT
 
 
 def test_read_filing_csvs_empty_glob(spark, tmp_path):
@@ -264,99 +245,8 @@ def test_partitioned_merge_upsert_into_empty_target(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# txn: SCD2 merge, compaction, z-order layout
+# txn: compaction, z-order layout
 # ---------------------------------------------------------------------------
-
-def test_scd2_merge_versions_history(spark, tmp_path):
-    """Type-2 merge: changed keys close the old version and append a new
-    current one; unchanged keys and prior history stay untouched."""
-    import datetime as dt
-
-    target = str(tmp_path / "dim")
-
-    def day(s):
-        return dt.date.fromisoformat(s)
-
-    b1 = spark.createDataFrame(
-        [("E1", "Tokyo", day("2023-01-01")), ("E2", "Osaka", day("2023-01-01"))],
-        "code string, city string, effective_from date",
-    )
-    txn.scd2_merge_txn(b1, target, key="code", change_cols=["city"])
-    # E1 moves, E2 unchanged, E3 appears
-    b2 = spark.createDataFrame(
-        [
-            ("E1", "Kyoto", day("2023-06-01")),
-            ("E2", "Osaka", day("2023-06-01")),
-            ("E3", "Nagoya", day("2023-06-01")),
-        ],
-        "code string, city string, effective_from date",
-    )
-    txn.scd2_merge_txn(b2, target, key="code", change_cols=["city"])
-    rows = sorted(
-        (
-            r["code"],
-            r["city"],
-            str(r["effective_from"]),
-            str(r["effective_to"]),
-            r["is_current"],
-        )
-        for r in txn.read(spark, target).collect()
-    )
-    assert rows == [
-        ("E1", "Kyoto", "2023-06-01", "None", True),
-        ("E1", "Tokyo", "2023-01-01", "2023-06-01", False),
-        ("E2", "Osaka", "2023-01-01", "None", True),
-        ("E3", "Nagoya", "2023-06-01", "None", True),
-    ]
-    # a third change for E1 must close the 2023-06 version, keep 2023-01 history
-    b3 = spark.createDataFrame(
-        [("E1", "Sendai", day("2024-01-01"))],
-        "code string, city string, effective_from date",
-    )
-    txn.scd2_merge_txn(b3, target, key="code", change_cols=["city"])
-    e1 = sorted(
-        (r["city"], str(r["effective_to"]), r["is_current"])
-        for r in txn.read(spark, target).filter(F.col("code") == "E1").collect()
-    )
-    assert e1 == [
-        ("Kyoto", "2024-01-01", False),
-        ("Sendai", "None", True),
-        ("Tokyo", "2023-06-01", False),
-    ]
-
-
-def test_scd2_merge_null_transitions(spark, tmp_path):
-    """NULL→value and value→NULL must count as changes (null-safe struct
-    compare); NULL→NULL must not."""
-    import datetime as dt
-
-    target = str(tmp_path / "dimnull")
-    d1, d2 = dt.date(2023, 1, 1), dt.date(2023, 6, 1)
-    b1 = spark.createDataFrame(
-        [("E1", None, d1), ("E2", None, d1), ("E3", "A", d1)],
-        "code string, city string, effective_from date",
-    )
-    txn.scd2_merge_txn(b1, target, key="code", change_cols=["city"])
-    b2 = spark.createDataFrame(
-        [("E1", "X", d2), ("E2", None, d2), ("E3", None, d2)],
-        "code string, city string, effective_from date",
-    )
-    txn.scd2_merge_txn(b2, target, key="code", change_cols=["city"])
-    versions = {
-        r["code"]: n
-        for r in txn.read(spark, target)
-        .groupBy("code")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-        for n in [r["n"]]
-    }
-    assert versions == {"E1": 2, "E2": 1, "E3": 2}
-    cur = {
-        r["code"]: r["city"]
-        for r in txn.read(spark, target).filter("is_current").collect()
-    }
-    assert cur == {"E1": "X", "E2": None, "E3": None}
-
 
 def test_compact_splits_hot_partition(spark, tmp_path):
     """A single partition larger than the byte target must split across
@@ -372,53 +262,6 @@ def test_compact_splits_hot_partition(spark, tmp_path):
     assert len(snap.files) > 1, "hot partition stayed one file"
     assert all(f["partition"] == {"fy": "0"} for f in snap.files)
     assert txn.read(spark, target, partition_values={"fy": ["0"]}).count() == 200_000
-
-
-def test_scd2_merge_random_batches_match_model(spark, tmp_path):
-    """Randomized differential: a fixed-seed sequence of update batches
-    through scd2_merge_txn must equal an independent sequential Python model
-    (the same N-cases-one-job pattern as the parser property tests)."""
-    import datetime as dt
-    import random
-
-    rng = random.Random(7)
-    keys = [f"K{i}" for i in range(6)]
-    cities = ["A", "B", "C"]
-    target = str(tmp_path / "dim_rand")
-
-    # model: key -> list of [city, from, to, current]
-    model: dict[str, list[list]] = {}
-
-    def model_apply(batch, day):
-        for k, city in batch:
-            versions = model.setdefault(k, [])
-            cur = next((v for v in versions if v[3]), None)
-            if cur is None:
-                versions.append([city, day, None, True])
-            elif cur[0] != city:
-                cur[2], cur[3] = day, False
-                versions.append([city, day, None, True])
-
-    for step in range(5):
-        day = dt.date(2023, 1 + step, 1)
-        batch = [(k, rng.choice(cities)) for k in rng.sample(keys, rng.randint(1, 5))]
-        df = spark.createDataFrame(
-            [(k, c, day) for k, c in batch],
-            "code string, city string, effective_from date",
-        )
-        txn.scd2_merge_txn(df, target, key="code", change_cols=["city"])
-        model_apply(batch, day)
-
-    got = sorted(
-        (r["code"], r["city"], str(r["effective_from"]), str(r["effective_to"]), r["is_current"])
-        for r in txn.read(spark, target).collect()
-    )
-    want = sorted(
-        (k, v[0], str(v[1]), str(v[2]), v[3])
-        for k, versions in model.items()
-        for v in versions
-    )
-    assert got == want
 
 
 def test_zorder_layout_bounds_both_columns_per_file(spark, tmp_path):

@@ -1,23 +1,17 @@
 """Gopher quality-rule suite (llm/quality_rules.py): DuckDB parity on
-the real corpus AND a crafted corpus that actually exercises every rule,
-plus an independent-Python oracle for the n-gram signals."""
+the real corpus AND a crafted corpus that actually exercises every rule."""
 
 from __future__ import annotations
-
-import re
-from collections import Counter
 
 import pandas as pd
 import pytest
 
 from ir_analyses_spark.llm.quality_rules import (
     GOPHER_STOPWORDS,
-    duplicated_ngram_char_fraction,
     gopher_flags_df,
     quality_signals,
     quality_signals_df,
     quality_signals_sql,
-    top_ngram_char_fraction,
 )
 from tests.compare import assert_matches_oracle, duckdb_conn
 
@@ -125,64 +119,3 @@ def test_threshold_override_and_unknown_key(crafted_spark):
     assert rows[3]["ok_words"] is True  # 3-word doc passes the lowered bar
     with pytest.raises(ValueError, match="unknown quality thresholds"):
         gopher_flags_df(crafted_spark, thresholds={"min_wordz": 1})
-
-
-def _py_words(text: str) -> list[str]:
-    return [w for w in re.split(r"\s+", text) if w]
-
-
-def _py_ngram_fracs(text: str | None, n: int) -> tuple[float | None, float | None]:
-    """Independent reference: (top-mass fraction, duplicated-mass fraction)."""
-    if text is None:
-        return None, None
-    words = _py_words(text)
-    nonspace = len(re.sub(r"\s", "", text))
-    grams = (
-        [" ".join(words[i : i + n]) for i in range(len(words) - n + 1)]
-        if len(words) >= n
-        else []
-    )
-    counts = Counter(grams)
-    top = max(
-        (c * len(g.replace(" ", "")) for g, c in counts.items()), default=0
-    )
-    dup = sum(c * len(g.replace(" ", "")) for g, c in counts.items() if c >= 2)
-    if nonspace == 0:
-        return None, None
-    return min(top, nonspace) / nonspace, min(dup, nonspace) / nonspace
-
-
-@pytest.mark.parametrize("n", [1, 2, 3, 5])
-def test_ngram_fractions_match_python_reference(crafted_spark, n):
-    top = {
-        r["doc_id"]: r[f"top_{n}gram_char_frac"]
-        for r in top_ngram_char_fraction(crafted_spark, n).collect()
-    }
-    dup = {
-        r["doc_id"]: r[f"dup_{n}gram_char_frac"]
-        for r in duplicated_ngram_char_fraction(crafted_spark, n).collect()
-    }
-    assert set(top) == {d for d, _ in CRAFTED}
-    assert set(dup) == set(top)
-    for doc_id, text in CRAFTED:
-        want_top, want_dup = _py_ngram_fracs(text, n)
-        assert top[doc_id] == want_top, (doc_id, n, top[doc_id], want_top)
-        assert dup[doc_id] == want_dup, (doc_id, n, dup[doc_id], want_dup)
-
-
-def test_ngram_repetition_discriminates(crafted_spark):
-    """The heavy-repetition doc must score ~1.0 duplicated mass while the
-    clean doc scores low — the signal actually separates the corpus."""
-    dup = {
-        r["doc_id"]: r["dup_2gram_char_frac"]
-        for r in duplicated_ngram_char_fraction(crafted_spark, 2).collect()
-    }
-    assert dup[10] == 1.0
-    assert dup[0] < 0.3
-
-
-def test_invalid_n_rejected(crafted_spark):
-    with pytest.raises(ValueError):
-        top_ngram_char_fraction(crafted_spark, 0)
-    with pytest.raises(ValueError):
-        duplicated_ngram_char_fraction(crafted_spark, -1)

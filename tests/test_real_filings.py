@@ -11,7 +11,6 @@ summary, with values pinned against the filings' published figures.
 from __future__ import annotations
 
 import glob
-import os
 
 import pytest
 
@@ -83,25 +82,6 @@ def test_real_backfill_roundtrip_idempotent(spark, tmp_path, real_bundle):
     for code, row in in_memory.items():
         assert from_disk[code]["net_sales"] == row["net_sales"], code
         assert from_disk[code]["net_income"] == row["net_income"], code
-
-
-def test_real_zip_fanout_extracts_filing_members(spark, tmp_path):
-    """The reference's production flow is ZIP-per-filing → extract
-    XBRL_TO_CSV members: re-pack the real CSVs into real archives and run
-    the distributed fan-out; every member must come back byte-identical."""
-    import zipfile
-
-    srcs = sorted(glob.glob(DOWNLOAD_GLOB, recursive=True))[:3]
-    for i, src in enumerate(srcs):
-        with zipfile.ZipFile(tmp_path / f"S{i}.zip", "w") as z:
-            arc = f"XBRL_TO_CSV/{os.path.basename(src)}"
-            z.write(src, arcname=arc)
-            z.writestr("XBRL_TO_CSV/manifest.xml", "<m/>")  # non-matching member
-    members = sources.read_zip_members(spark, str(tmp_path / "*.zip")).collect()
-    assert len(members) == 3  # the manifest never leaves the executors
-    by_name = {os.path.basename(m["member"]): bytes(m["content"]) for m in members}
-    for src in srcs:
-        assert by_name[os.path.basename(src)] == open(src, "rb").read()
 
 
 def test_real_summary_values(real_bundle):

@@ -4,19 +4,12 @@ file sources, results checked against the identical batch transformation
 
 from __future__ import annotations
 
-import time
-
 import pytest
-from pyspark.sql import functions as F
 
 from ir_analyses_spark.io.sources import load_table
 from ir_analyses_spark.streaming.pipeline import (
     dedup_within_watermark,
-    foreach_batch_upsert,
-    run_stream_to_memory,
     session_windows,
-    stateful_running_totals,
-    stateful_totals_tws,
     stream_events,
     tumbling_counts,
 )
@@ -42,6 +35,17 @@ def _rows(df):
 
 def _run(q, timeout=120):
     assert q.awaitTermination(timeout), "stream did not finish in time"
+
+
+def run_stream_to_memory(df, name, mode="append"):
+    """Start the stream into an in-memory table named ``name``."""
+    return (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def test_tumbling_stream_matches_batch(spark, events_dir):
@@ -96,126 +100,6 @@ def test_dedup_within_watermark(spark, events_dir, tmp_path):
     assert got.distinct().count() == n_distinct
 
 
-def _has_protobuf() -> bool:
-    # real package, or the repo's vendored pure-Python shim
-    # (ir_analyses_spark/streaming/pbvendor.py — r7 VERDICT item 6:
-    # the tws worker protocol now EXECUTES here instead of skipping)
-    from ir_analyses_spark.streaming.pbvendor import ensure_protobuf_driver
-
-    return ensure_protobuf_driver()
-
-
-@pytest.mark.parametrize(
-    "totals_fn,sink",
-    [
-        pytest.param(stateful_running_totals, "t_state", id="applyInPandasWithState"),
-        pytest.param(
-            stateful_totals_tws,
-            "t_tws",
-            id="transformWithStateInPandas",
-            marks=pytest.mark.skipif(
-                not _has_protobuf(),
-                reason="transformWithState's worker protocol needs "
-                "google.protobuf, not installed in this environment "
-                "(construction is still pinned without protobuf below)",
-            ),
-        ),
-    ],
-)
-# slow: real multi-epoch stateful streams (both APIs); semantics oracle-checked via stateful_user_totals
-@pytest.mark.slow
-def test_stateful_running_totals_twins(spark, events_dir, totals_fn, sink):
-    """One harness, both custom-state APIs (VERDICT r6 item 7): the
-    applyInPandasWithState operator and its transformWithStateInPandas
-    twin must produce the same per-user totals — the moment protobuf
-    appears in an environment, the tws path executes under the exact
-    assertions the legacy API already passes."""
-    from ir_analyses_spark.streaming.pbvendor import ensure_protobuf
-
-    assert ensure_protobuf(spark)  # ships the shim to workers if needed
-    stream = totals_fn(stream_events(spark, events_dir))
-    q = run_stream_to_memory(stream, sink, mode="update")
-    _run(q)
-    # final state per user (last update wins) == batch aggregate
-    final = (
-        spark.table(sink)
-        .groupBy("user_id")
-        .agg(F.max("n_events").alias("n_events"))
-    )
-    want = (
-        load_table(spark, "events", SF)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    assert _rows(final) == _rows(want)
-
-
-def test_tws_plan_constructs_without_protobuf(spark, events_dir):
-    """The protobuf dependency is an EXECUTION-time worker-protocol
-    requirement, not a plan-time one: stateful_totals_tws must construct
-    its unresolved plan — grouping key, StatefulProcessor wiring, declared
-    output schema — in a bare environment, and the schema must match the
-    applyInPandasWithState twin's column-for-column (the twin contract
-    the parametrized test above asserts on values). Runs everywhere,
-    protobuf or not, so the tws code path is never zero-covered."""
-    tws = stateful_totals_tws(stream_events(spark, events_dir))
-    legacy = stateful_running_totals(stream_events(spark, events_dir))
-    assert tws.isStreaming and legacy.isStreaming
-    assert tws.schema == legacy.schema
-    assert tws.schema.simpleString() == (
-        "struct<user_id:bigint,n_events:bigint,total_value:double>"
-    )
-
-
-def test_foreach_batch_scd2_versions_dimension(spark, events_dir, tmp_path):
-    """A change stream must version the dimension: per-user latest
-    event_type becomes the current row, superseded values close with the
-    change date, and replaying the stream is a no-op (batch-id ledger in
-    the manifest — a from-scratch replay would otherwise append stale
-    versions)."""
-    from ir_analyses_spark.io import txn
-    from ir_analyses_spark.streaming.pipeline import foreach_batch_scd2
-
-    target = str(tmp_path / "user_dim")
-    changes = stream_events(spark, events_dir).select(
-        "user_id",
-        F.col("event_type").alias("state"),
-        F.to_date("ts").alias("effective_from"),
-    )
-    q = foreach_batch_scd2(
-        changes, target, key="user_id", change_cols=["state"]
-    )
-    _run(q)
-    dim = txn.read(spark, target)
-    n_versions = dim.count()
-    # exactly one current row per user
-    users = load_table(spark, "events", SF).select("user_id").distinct().count()
-    assert dim.filter("is_current").count() == users
-    # closed rows chain: every non-current row's effective_to is some later
-    # version's effective_from for the same user
-    closed = dim.filter(~F.col("is_current"))
-    assert closed.count() == n_versions - users
-    chain = closed.alias("c").join(
-        dim.alias("n"),
-        (F.col("c.user_id") == F.col("n.user_id"))
-        & (F.col("c.effective_to") == F.col("n.effective_from")),
-        "left_anti",
-    )
-    assert chain.count() == 0
-    # replay with a fresh checkpoint: every batch short-circuits on the
-    # ledger, so not even one commit lands
-    import shutil
-
-    v = txn.snapshot(target).version
-    shutil.rmtree(f"{target}__checkpoint")
-    q2 = foreach_batch_scd2(
-        changes, target, key="user_id", change_cols=["state"]
-    )
-    _run(q2)
-    assert txn.snapshot(target).version == v
-    assert txn.read(spark, target).count() == n_versions
-
-
 def test_incremental_rollup_additive_and_replay_safe(spark, events_dir, tmp_path):
     """Three micro-batch merges must equal the one-shot batch aggregate
     exactly (integer micros). Replaying the stream from a fresh checkpoint
@@ -243,26 +127,6 @@ def test_incremental_rollup_additive_and_replay_safe(spark, events_dir, tmp_path
     assert txn.snapshot(table).version == v  # not one partial commit
     assert _rows(txn.read(spark, table).select(*cols)) == want
     assert _rows(pinned.select(*cols)) == want
-
-
-def test_foreach_batch_upsert_idempotent(spark, events_dir, tmp_path):
-    from ir_analyses_spark.io import txn
-
-    target = str(tmp_path / "upsert_target")
-    stream = stream_events(spark, events_dir).select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    q = foreach_batch_upsert(stream, target, keys=["event_id"])
-    _run(q)
-    n = txn.read(spark, target).count()
-    assert n == load_table(spark, "events", SF).count()
-    # replay with a fresh checkpoint: same keys upsert, row count unchanged
-    import shutil
-
-    shutil.rmtree(f"{target}__checkpoint")
-    q2 = foreach_batch_upsert(stream, target, keys=["event_id"])
-    _run(q2)
-    assert txn.read(spark, target).count() == n
 
 
 def test_stream_state_partitions_gate(spark, sf_dir, tmp_path):
