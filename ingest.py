@@ -32,7 +32,6 @@ a transient API failure from a permanent typo (review-caught).
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
 import tempfile

@@ -192,9 +192,23 @@ def _reject_counts(bundle: dict[str, DataFrame]) -> dict[str, int]:
 
 
 def read_silver(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:
-    """Load the four conformed tables back for the query layer."""
+    """Load the four conformed tables back for the query layer.
+
+    ``companies`` is a snapshot: the dim, gold ``summary`` included, is
+    collected once inside the JVM (one small job; the dim is bounded by the
+    company count, ≤4,000 rows) and served as a driver-local relation. A
+    summary request over it plans as a ``LocalTableScan``, runs no Spark job
+    and reads no file, so a later load, which rewrites the companies
+    directory, cannot break it. The rows never pass through Python, so
+    every type, structs and timestamps included, comes back exactly.
+
+    The frames of one call answer summaries as of that call; a serving
+    process refreshes them by calling ``read_silver`` again. ``items``,
+    ``reports`` and ``facts`` stay lazy parquet scans."""
+    jdf = spark.read.parquet(os.path.join(out_dir, "companies"))._jdf
+    jsnapshot = spark._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema())
     return {
-        "companies": spark.read.parquet(os.path.join(out_dir, "companies")),
+        "companies": DataFrame(jsnapshot, spark),
         "items": spark.read.parquet(os.path.join(out_dir, "financial_items")),
         "reports": spark.read.parquet(os.path.join(out_dir, "financial_reports")),
         "facts": spark.read.parquet(os.path.join(out_dir, "financial_data")),

@@ -18,7 +18,7 @@ which is the discipline any production pandas UDF at 100 TB needs anyway
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import pandas_udf, udtf
 
 from ..io.sources import load_table

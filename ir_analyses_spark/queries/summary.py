@@ -13,6 +13,13 @@ Frames without that gold (in-memory conform bundles) get the same columns
 from the same two helpers, so synonym and latest-report resolution have one
 rule.
 
+``etl/pipeline.read_silver`` returns that dim as a driver-local snapshot
+(bounded by the company count, ≤4,000 rows), so a summary request plans
+as a ``LocalTableScan``: no Spark job, no file read, and a load that
+commits meanwhile cannot break it. The snapshot answers as of its
+``read_silver`` call; calling ``read_silver`` again is how a serving
+process sees a later load.
+
 The per-item time series (``item_time_series``) is a filter on the facts
 alone: each fact carries its report's ``company_id`` and
 ``fiscal_year_end`` (``etl/conform.conform_facts``; a load copies them
@@ -32,6 +39,8 @@ Null/zero semantics preserved from the reference (SURVEY §7.3.3):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..etl.conform import _sql_string
 
 #: measure → ordered element_id synonym list
 #: (reference utils/service/financial_service.py:54-75)
@@ -160,21 +169,25 @@ def financial_summary(
     (reference utils/service/financial_service.py:33-50,90-165).
 
     Silver companies carry the gold ``summary`` the load maintains, and the
-    answer is a filter on them. Otherwise the same column comes from
-    ``report_measures`` and ``company_summary`` over ``reports`` and
+    answer is one SQL-string filter and projection on them. Over the
+    ``read_silver`` snapshot that plans as a ``LocalTableScan`` and runs no
+    Spark job; it answers as of that ``read_silver`` call, and a fresh
+    ``read_silver`` serves a later load. Otherwise the same column comes
+    from ``report_measures`` and ``company_summary`` over ``reports`` and
     ``facts`` (measures the reports already carry are recomputed). ``items``
     is not read — item ids are ``xxhash64(element_id)`` — and stays for the
     callers that pass it positionally."""
-    if "summary" in companies.columns:
-        gold = companies.filter("summary IS NOT NULL")
-    else:
+    where = "summary IS NOT NULL"
+    if edinet_code is not None:
+        where += f" AND edinet_code = {_sql_string(edinet_code)}"
+    if "summary" not in companies.columns:
         measured = reports.drop(*SUMMARY_ITEMS).join(
             report_measures(facts), "report_id", "left"
         )
-        gold = companies.join(company_summary(measured), "company_id")
-    if edinet_code is not None:
-        gold = gold.filter(F.col("edinet_code") == edinet_code)
-    return gold.select("company_name", "summary.*", "edinet_code")
+        companies = companies.join(company_summary(measured), "company_id")
+    return companies.filter(where).selectExpr(
+        "company_name", "summary.*", "edinet_code"
+    )
 
 
 #: the chart's measures in the UI's dict-insertion order

@@ -2,7 +2,8 @@
 are replaced as a unit, so later loads into the same fiscal year — the next
 quarter, or another company's filing on a daily ingest — keep the facts
 already in silver, a reloaded report keeps none of its old facts, and
-re-running a load changes nothing.
+re-running a load changes nothing. Frames ``read_silver`` returned before a
+load must keep serving after it.
 
 Each filing is a small UTF-8 EDINET CSV export: cover rows plus
 ``N_MEASURES`` fact rows.
@@ -14,7 +15,7 @@ import pytest
 from py4j.protocol import Py4JJavaError
 
 from ir_analyses_spark.etl import pipeline
-from ir_analyses_spark.queries.summary import financial_summary
+from ir_analyses_spark.queries.summary import financial_summary, item_time_series
 from ir_analyses_spark.schemas import RAW_JP_COLUMNS
 
 N_MEASURES = 3
@@ -118,22 +119,39 @@ def test_reloaded_report_keeps_none_of_its_old_facts(spark, tmp_path):
     assert _counts(spark, tmp_path)["reports"] == 2
 
 
-@pytest.mark.xfail(
-    strict=True,
-    raises=Py4JJavaError,
-    reason="FAILED_READ_FILE.FILE_NOT_EXIST: the load's staged swap deletes "
-    "the files a frame read before it had listed; ROADMAP Direction 1 "
-    "(silver as txn tables under one silver version) fixes this and "
-    "removes this marker",
-)
 def test_summary_frame_read_before_a_load_still_serves_after_it(spark, tmp_path):
     """A serving process reads silver once and answers from those frames;
-    a load that commits in between must not break them."""
+    a load that commits in between must not break them. The frames answer
+    as of their ``read_silver`` call, and a new call answers the load."""
+    silver = str(tmp_path / "silver")
     _load(spark, tmp_path, "q1", [("E00001", 1)])
-    t = pipeline.read_silver(spark, str(tmp_path / "silver"))
+    t = pipeline.read_silver(spark, silver)
     _load(spark, tmp_path, "q2", [("E00001", 2)])
     rows = financial_summary(
         t["companies"], t["reports"], t["facts"], t["items"],
         edinet_code="E00001",
     ).collect()
+    assert [r["quarter_type"] for r in rows] == ["Q1"]
+    rows = financial_summary(
+        **pipeline.read_silver(spark, silver), edinet_code="E00001").collect()
+    assert [r["quarter_type"] for r in rows] == ["Q2"]
+
+
+@pytest.mark.xfail(
+    strict=True,
+    raises=Py4JJavaError,
+    reason="FAILED_READ_FILE.FILE_NOT_EXIST: the load's dynamic overwrite "
+    "rewrites the fiscal_year partition a facts frame read before it had "
+    "listed; ROADMAP Direction 1 (silver as txn tables under one silver "
+    "version) fixes this and removes this marker",
+)
+def test_series_frame_read_before_a_load_still_serves_after_it(spark, tmp_path):
+    """The time-series half: a facts frame read before a load of the next
+    quarter of the same fiscal year must still serve after it."""
+    _load(spark, tmp_path, "q1", [("E00001", 1)])
+    t = pipeline.read_silver(spark, str(tmp_path / "silver"))
+    company_id = t["companies"].first()["company_id"]
+    item_id = t["items"].first()["item_id"]
+    _load(spark, tmp_path, "q2", [("E00001", 2)])
+    rows = item_time_series(t["facts"], t["reports"], company_id, item_id).collect()
     assert len(rows) == 1

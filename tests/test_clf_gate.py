@@ -4,8 +4,6 @@ artifact sanity (the trained weights separate the two vocabularies)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from ir_analyses_spark.llm.clf_gate import (
     _INTERCEPT_MILLIONTHS,
     _WEIGHTS_MILLIONTHS,

@@ -9,8 +9,6 @@ pattern)."""
 
 from __future__ import annotations
 
-import pytest
-
 from ir_analyses_spark.llm import curation_queries as CQ
 
 SF = "/root/testdata/sf0.001"

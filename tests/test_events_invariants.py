@@ -4,7 +4,6 @@ containment dedup — properties the oracle equality alone doesn't spell out."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from ir_analyses_spark.ops.events import funnel_conversion, cohort_retention
 from ir_analyses_spark.llm.dedup import containment_nearup, ngram_jaccard_nearup

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from ir_analyses_spark.io import txn
 from ir_analyses_spark.llm.curate import curation_stages
 from ir_analyses_spark.llm.export import training_layout
-from tests.test_curate import GOOD_A, GOOD_B, GOOD_C, _page, _record
+from tests.test_curate import GOOD_A, GOOD_B, GOOD_C, _record
 
 
 def _shard(dirpath, name, records):

@@ -11,7 +11,6 @@ import pandas as pd
 import pytest
 
 from ir_analyses_spark.llm.lm_score import (
-    CharLM,
     perplexity_buckets,
     score_with_lm,
     train_char_lm,

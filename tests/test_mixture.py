@@ -13,9 +13,7 @@ from ir_analyses_spark.io.sources import load_table
 from ir_analyses_spark.llm.mixture import (
     _KNUTH,
     _M,
-    temperature_mixture_sample,
     temperature_sample_df,
-    token_budget_subset,
     token_budget_subset_df,
 )
 

@@ -7,7 +7,6 @@ import pandas as pd
 import pytest
 
 from ir_analyses_spark.llm.quality_rules import (
-    GOPHER_STOPWORDS,
     gopher_flags_df,
     quality_signals,
     quality_signals_df,

@@ -10,7 +10,6 @@ import hashlib
 import io
 import random
 
-import pytest
 from pyspark.sql import functions as F
 
 from ir_analyses_spark.io.warc_datasource import (

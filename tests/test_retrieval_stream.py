@@ -7,7 +7,6 @@ cleanly, and nothing can double-apply."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest

@@ -16,7 +16,6 @@ import math
 import random
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from ir_analyses_spark.etl import standardize
 from ir_analyses_spark.schemas import RAW_FILING_SCHEMA

@@ -13,6 +13,9 @@ differs in the same batch as its original:
   ``fiscal_year_end``, and ``item_time_series`` (a filter on the facts)
   must equal the facts ⋈ reports join it replaced.
 
+``read_silver``'s companies snapshot must equal the companies table, and a
+one-company summary over it must run no Spark job.
+
 Each filing is a small UTF-8 EDINET CSV export: cover rows plus the four
 summary measures, with the sales figure booked under a per-company synonym.
 """
@@ -132,6 +135,19 @@ def _check(spark, tmp_path, latest):
     return gold
 
 
+def _jobs_of(spark, df):
+    """(rows, Spark jobs) of ``df.collect()``."""
+    sc = spark.sparkContext
+    group = f"collect-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "collect")
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_gold_matches_compute_path_over_a_load_sequence(spark, tmp_path):
     # cold load: two companies, two quarters
     _load(spark, tmp_path, "cold", [
@@ -186,13 +202,23 @@ def test_gold_matches_compute_path_over_a_load_sequence(spark, tmp_path):
 
 
 def test_gold_serves_one_company(spark, tmp_path):
+    """``read_silver`` pins the companies dim as a driver-local snapshot, so
+    a one-company summary plans as a ``LocalTableScan`` over it: no Spark
+    job and no file scan. A quote in ``edinet_code`` stays inside the
+    string literal."""
     _load(spark, tmp_path, "cold", [
         ("E00001", 2023, 1, 100_000_000), ("E00002", 2023, 1, 300_000_000),
     ])
     t = pipeline.read_silver(spark, str(tmp_path / "silver"))
-    rows = summary_q.financial_summary(**t, edinet_code="E00002").collect()
+    df = summary_q.financial_summary(**t, edinet_code="E00002")
+    rows, jobs = _jobs_of(spark, df)
     assert [(r["edinet_code"], r["period_name"], r["net_sales"]) for r in rows] == [
         ("E00002", "2023 Q1", 300.0)]
+    assert jobs == 0
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "FileScan" not in plan
+    assert summary_q.financial_summary(**t, edinet_code="E0' OR '1'='1").collect() == []
 
 
 def test_time_series_is_one_filtered_scan(spark, tmp_path):
@@ -211,16 +237,24 @@ def test_time_series_is_one_filtered_scan(spark, tmp_path):
         t["items"].filter("element_id = 'jppfs_cor:NetSales'").first()["item_id"]
     )
     df = summary_q.item_time_series(t["facts"], t["reports"], company_id, item_id)
-    sc = spark.sparkContext
-    group = f"item-time-series-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "item_time_series")
-    try:
-        rows = df.collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    rows, jobs = _jobs_of(spark, df)
     assert [float(r["value"]) for r in rows] == [50_000_000.0, 100_000_000.0]
     plan = df._jdf.queryExecution().executedPlan().toString().lower()
     assert "broadcastexchange" not in plan
     assert "rangepartitioning" not in plan
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert jobs <= 2
+
+
+def test_companies_snapshot_equals_the_companies_table(spark, tmp_path):
+    """The snapshot keeps every type exactly, the ``summary`` struct and
+    the timestamps included, and every row."""
+    _load(spark, tmp_path, "cold", [
+        ("E00001", 2023, 1, 100_000_000), ("E00002", 2023, 2, 300_000_000),
+        ("E00003", 2022, 3, 700_000_000),
+    ])
+    silver = str(tmp_path / "silver")
+    got = pipeline.read_silver(spark, silver)["companies"]
+    want = spark.read.parquet(f"{silver}/companies")
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+
