@@ -843,7 +843,6 @@ def transform_commit(
     table: str,
     compute,
     batch_id: int | None = None,
-    partition_by: str | None = None,
 ) -> Snapshot:
     """Read-modify-write as one transaction: ``compute(current_df_or_None)``
     returns the table's full next state, committed with snapshot isolation
@@ -853,20 +852,19 @@ def transform_commit(
     Because the commit replaces EVERY file, the manifest takes compute's
     output schema verbatim — a transform that adds a column evolves the
     table (pinning the old schema would silently hide the new column on
-    read)."""
+    read). The next state keeps the table's partition layout; a first
+    commit writes it unpartitioned."""
 
     def build(snap: Snapshot) -> dict | None:
         if batch_id is not None and batch_id in snap.applied_batches:
             return None
-        _require_layout(snap, partition_by, "transform_commit")
         cur = (
             read(spark, table, at_version=snap.version)
             if snap.schema_json is not None
             else None
         )
         out = compute(cur)
-        part = partition_by if snap.schema_json is None else snap.partition_by
-        entries, _ = _write_data(out, table, part)
+        entries, _ = _write_data(out, table, snap.partition_by)
         ledger = snap.applied_batches
         if batch_id is not None:
             ledger = sorted(set(ledger) | {batch_id}, reverse=True)[
@@ -875,7 +873,7 @@ def transform_commit(
         return {
             "version": snap.version + 1,
             "schema": out.schema.json(),
-            "partition_by": part,
+            "partition_by": snap.partition_by,
             "files": entries,
             "applied_batches": ledger,
             "operation": "transform",

@@ -325,23 +325,23 @@ _N_HASHES = 64
 _BAND_SIZE = 3
 
 
-def _minhash_wide(docs: DataFrame, n_hashes: int = _N_HASHES) -> DataFrame:
-    """(doc_id, h0..h{n-1}) — n_hashes min-hashes as SEPARATE long columns
-    from an affine family h_i(g) = h1(g) + i·h2(g) over two base xxhash64
-    draws (wrapping 64-bit arithmetic).
+def _minhash_wide(docs: DataFrame) -> DataFrame:
+    """(doc_id, h0..h{_N_HASHES - 1}) — ``_N_HASHES`` min-hashes as SEPARATE
+    long columns from an affine family h_i(g) = h1(g) + i·h2(g) over two
+    base xxhash64 draws (wrapping 64-bit arithmetic).
 
-    Hashing the shingle string n_hashes times would dominate the whole LSH
-    pipeline (n_hashes string hashes per shingle); the affine family costs
-    two string hashes + n multiply-adds — the standard pick for MinHash at
-    scale, and fully deterministic. Wide columns (not an array) keep every
+    Hashing the shingle string _N_HASHES times would dominate the whole LSH
+    pipeline (_N_HASHES string hashes per shingle); the affine family costs
+    two string hashes + _N_HASHES multiply-adds — the standard pick for
+    MinHash at scale, and fully deterministic. Wide columns (not an array) keep every
     downstream consumer — banding, signature-estimate — inside whole-stage
     codegen; array HOFs (slice/aggregate/zip_with) are interpreted per row
     and measurably dominate at volume.
 
     Construction note (r14 optimization, guide §1.2 "per-task work" applied
-    to the DRIVER): the n_hashes aggregate expressions are built as one
+    to the DRIVER): the _N_HASHES aggregate expressions are built as one
     parsed SQL string per column, not as Python Column operator chains — a
-    Column operator is a py4j round trip, and the 4·n_hashes round trips
+    Column operator is a py4j round trip, and the 4·_N_HASHES round trips
     measured ~1.0 s of the bench query's wall time (plan construction, paid
     per invocation). One ``F.expr`` per column is a single round trip with
     identical resolved expressions (integer literals parse to the same
@@ -353,7 +353,7 @@ def _minhash_wide(docs: DataFrame, n_hashes: int = _N_HASHES) -> DataFrame:
         F.xxhash64("g").alias("h1"),
         F.xxhash64("g", F.lit(1)).alias("h2"),
     )
-    mins = [F.expr(f"min(h1 + {s} * h2) AS h{s}") for s in range(n_hashes)]
+    mins = [F.expr(f"min(h1 + {s} * h2) AS h{s}") for s in range(_N_HASHES)]
     return base.groupBy("doc_id").agg(*mins)
 
 

@@ -20,6 +20,16 @@ commits meanwhile cannot break it. The snapshot answers as of its
 ``read_silver`` call; calling ``read_silver`` again is how a serving
 process sees a later load.
 
+``financial_summary`` plans that filter once per (snapshot, ``edinet_code``)
+and returns the same frame for the same pair, so a repeat request only
+collects a finished plan: no analysis, no optimisation, no Spark job. The
+store keeps only codes the snapshot holds, plus ``None`` (every company):
+at most the company count + 1 frames per live snapshot, released when the
+snapshot frame is garbage-collected. The compute path (joins and
+aggregates) is never kept: a finished plan with an exchange re-serves its
+shuffle output when collected again, even after the files under it
+changed.
+
 The per-item time series (``item_time_series``) is a filter on the facts
 alone: each fact carries its report's ``company_id`` and
 ``fiscal_year_end`` (``etl/conform.conform_facts``; a load copies them
@@ -37,6 +47,9 @@ Null/zero semantics preserved from the reference (SURVEY §7.3.3):
 """
 
 from __future__ import annotations
+
+import threading
+import weakref
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -157,6 +170,13 @@ def company_summary(reports: DataFrame) -> DataFrame:
     )
 
 
+#: companies frame → {edinet_code: its planned gold-path frame, or None
+#: until first requested}; the keys are the frame's codes plus ``None``
+#: (every company), learned once per frame. An entry goes with its frame.
+_planned: weakref.WeakKeyDictionary[DataFrame, dict] = weakref.WeakKeyDictionary()
+_planned_lock = threading.Lock()
+
+
 def financial_summary(
     companies: DataFrame,
     reports: DataFrame,
@@ -172,22 +192,52 @@ def financial_summary(
     answer is one SQL-string filter and projection on them. Over the
     ``read_silver`` snapshot that plans as a ``LocalTableScan`` and runs no
     Spark job; it answers as of that ``read_silver`` call, and a fresh
-    ``read_silver`` serves a later load. Otherwise the same column comes
-    from ``report_measures`` and ``company_summary`` over ``reports`` and
-    ``facts`` (measures the reports already carry are recomputed). ``items``
-    is not read — item ids are ``xxhash64(element_id)`` — and stays for the
-    callers that pass it positionally."""
+    ``read_silver`` serves a later load.
+
+    Such a frame is planned once per (``companies`` frame, ``edinet_code``)
+    and returned again for the same pair, so a repeat request only collects
+    a finished plan. Only codes the companies frame holds, and ``None``, are
+    kept: at most the company count + 1 frames per ``companies`` frame
+    (its codes are read once, with no Spark job over the snapshot), and
+    they go when that frame is garbage-collected. Any other code is
+    planned per request and not kept, so caller input cannot grow the
+    store.
+
+    Otherwise the same column comes from ``report_measures`` and
+    ``company_summary`` over ``reports`` and ``facts`` (measures the
+    reports already carry are recomputed). That frame is planned per
+    request and never kept: it joins and aggregates, and a finished plan
+    with an exchange re-serves its shuffle output when collected again,
+    even after the files under it changed. ``items`` is not read — item
+    ids are ``xxhash64(element_id)`` — and stays for the callers that pass
+    it positionally."""
+    with _planned_lock:
+        frames = _planned.get(companies)
+        kept = None if frames is None else frames.get(edinet_code)
+    if kept is not None:
+        return kept
     where = "summary IS NOT NULL"
     if edinet_code is not None:
         where += f" AND edinet_code = {_sql_string(edinet_code)}"
+    gold = companies
     if "summary" not in companies.columns:
         measured = reports.drop(*SUMMARY_ITEMS).join(
             report_measures(facts), "report_id", "left"
         )
-        companies = companies.join(company_summary(measured), "company_id")
-    return companies.filter(where).selectExpr(
-        "company_name", "summary.*", "edinet_code"
-    )
+        gold = companies.join(company_summary(measured), "company_id")
+    df = gold.filter(where).selectExpr("company_name", "summary.*", "edinet_code")
+    if gold is not companies:
+        return df
+    if frames is None:
+        codes = [r[0] for r in companies.select("edinet_code").collect()]
+        with _planned_lock:
+            frames = _planned.setdefault(companies, dict.fromkeys([None, *codes]))
+    with _planned_lock:
+        if edinet_code not in frames:
+            return df
+        if frames[edinet_code] is None:
+            frames[edinet_code] = df
+        return frames[edinet_code]
 
 
 #: the chart's measures in the UI's dict-insertion order
@@ -244,7 +294,11 @@ def item_time_series(
     partition: a global ``orderBy`` would plan a range exchange, and a
     range exchange samples its input in a Spark job of its own. The scan
     itself stays parallel across the facts files. ``reports`` is not read
-    and stays for the callers that pass it positionally."""
+    and stays for the callers that pass it positionally.
+
+    Build one frame per request and do not keep it: the one-partition sort
+    is an exchange, so a frame collected again after a load re-serves the
+    rows of its first collect, with no error."""
     return (
         facts.filter(f"company_id = {int(company_id)} AND item_id = {int(item_id)}")
         .repartition(1)

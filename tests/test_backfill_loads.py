@@ -122,19 +122,29 @@ def test_reloaded_report_keeps_none_of_its_old_facts(spark, tmp_path):
 def test_summary_frame_read_before_a_load_still_serves_after_it(spark, tmp_path):
     """A serving process reads silver once and answers from those frames;
     a load that commits in between must not break them. The frames answer
-    as of their ``read_silver`` call, and a new call answers the load."""
+    as of their ``read_silver`` call, through the same planned frame before
+    and after the load, and a new call answers the load through a frame of
+    its own."""
     silver = str(tmp_path / "silver")
     _load(spark, tmp_path, "q1", [("E00001", 1)])
     t = pipeline.read_silver(spark, silver)
+
+    def served(tables):
+        df = financial_summary(
+            tables["companies"], tables["reports"], tables["facts"],
+            tables["items"], edinet_code="E00001",
+        )
+        return df, [r["quarter_type"] for r in df.collect()]
+
+    before, quarters = served(t)
+    assert quarters == ["Q1"]
     _load(spark, tmp_path, "q2", [("E00001", 2)])
-    rows = financial_summary(
-        t["companies"], t["reports"], t["facts"], t["items"],
-        edinet_code="E00001",
-    ).collect()
-    assert [r["quarter_type"] for r in rows] == ["Q1"]
-    rows = financial_summary(
-        **pipeline.read_silver(spark, silver), edinet_code="E00001").collect()
-    assert [r["quarter_type"] for r in rows] == ["Q2"]
+    after, quarters = served(t)
+    assert quarters == ["Q1"]
+    assert after is before
+    fresh, quarters = served(pipeline.read_silver(spark, silver))
+    assert quarters == ["Q2"]
+    assert fresh is not before
 
 
 @pytest.mark.xfail(

@@ -14,7 +14,10 @@ differs in the same batch as its original:
   must equal the facts ⋈ reports join it replaced.
 
 ``read_silver``'s companies snapshot must equal the companies table, and a
-one-company summary over it must run no Spark job.
+one-company summary over it must run no Spark job. A repeat request for the
+same snapshot and code must return the frame planned the first time, also
+under concurrent requests; the store keeps nothing for codes the snapshot
+lacks, nothing for the compute path, and nothing once the snapshot is gone.
 
 Each filing is a small UTF-8 EDINET CSV export: cover rows plus the four
 summary measures, with the sales figure booked under a per-company synonym.
@@ -22,7 +25,12 @@ summary measures, with the sales figure booked under a per-company synonym.
 
 from __future__ import annotations
 
+import gc
+import sys
+import threading
 import uuid
+import weakref
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
@@ -204,8 +212,11 @@ def test_gold_matches_compute_path_over_a_load_sequence(spark, tmp_path):
 def test_gold_serves_one_company(spark, tmp_path):
     """``read_silver`` pins the companies dim as a driver-local snapshot, so
     a one-company summary plans as a ``LocalTableScan`` over it: no Spark
-    job and no file scan. A quote in ``edinet_code`` stays inside the
-    string literal."""
+    job and no file scan. A repeat request returns the same planned frame.
+    A quote in ``edinet_code`` stays inside the string literal, and such a
+    code, which the snapshot lacks, leaves no entry in the store. The
+    compute path is planned per request. The store lets go of a snapshot
+    once the caller does."""
     _load(spark, tmp_path, "cold", [
         ("E00001", 2023, 1, 100_000_000), ("E00002", 2023, 1, 300_000_000),
     ])
@@ -218,7 +229,69 @@ def test_gold_serves_one_company(spark, tmp_path):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan
     assert "FileScan" not in plan
-    assert summary_q.financial_summary(**t, edinet_code="E0' OR '1'='1").collect() == []
+
+    again = summary_q.financial_summary(**t, edinet_code="E00002")
+    assert again is df
+    assert _jobs_of(spark, again) == (rows, 0)
+
+    injected = "E0' OR '1'='1"
+    assert summary_q.financial_summary(**t, edinet_code=injected).collect() == []
+    assert injected not in summary_q._planned[t["companies"]]
+
+    plain = t["companies"].drop("summary")
+    args = (plain, t["reports"], t["facts"], t["items"], "E00002")
+    assert summary_q.financial_summary(*args) is not summary_q.financial_summary(*args)
+    assert plain not in summary_q._planned
+
+    snapshot = weakref.ref(t["companies"])
+    del t, plain, args
+    gc.collect()
+    assert snapshot() is None
+
+
+def test_concurrent_requests_share_one_plan(spark, tmp_path):
+    """4 threads of 25 requests each, over one fresh snapshot and across
+    every code and every company at once, answer as one thread does, and
+    end with one planned frame per code: two threads that plan the same
+    code at once must still hand every caller the one frame kept."""
+    codes = ["E00001", "E00002", "E00003", None]
+    _load(spark, tmp_path, "cold", [
+        ("E00001", 2023, 1, 100_000_000), ("E00002", 2023, 2, 300_000_000),
+        ("E00003", 2022, 3, 700_000_000),
+    ])
+    silver = str(tmp_path / "silver")
+    single = pipeline.read_silver(spark, silver)
+    want = {c: sorted(summary_q.financial_summary(**single, edinet_code=c).collect())
+            for c in codes}
+    assert all(want.values())
+    t = pipeline.read_silver(spark, silver)
+    start = threading.Barrier(4)
+
+    def client(n):
+        # every client asks for the same codes in the same order, so the
+        # first request for each code races
+        start.wait(timeout=60)
+        answers = []
+        for i in range(25):
+            code = codes[i % len(codes)]
+            df = summary_q.financial_summary(**t, edinet_code=code)
+            answers.append((code, df, sorted(df.collect())))
+        return answers
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            answers = [a for client_answers in pool.map(client, range(4), timeout=300)
+                       for a in client_answers]
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(answers) == 100
+    for code, _, rows in answers:
+        assert rows == want[code], code
+    frames = summary_q._planned[t["companies"]]
+    for code, df, _ in answers:
+        assert df is frames[code], code
 
 
 def test_time_series_is_one_filtered_scan(spark, tmp_path):
