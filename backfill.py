@@ -33,7 +33,7 @@ def main(argv: list[str] | None = None) -> int:
         help="recursive glob of filing CSVs, e.g. 'download/**/*.csv'",
     )
     ap.add_argument(
-        "--out-dir", required=True, help="silver table root (parquet)"
+        "--out-dir", required=True, help="silver root (txn tables under one silver version)"
     )
     ap.add_argument(
         "--summary",

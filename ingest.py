@@ -50,7 +50,7 @@ def main(argv: list[str] | None = None, transport=None) -> int:
         help="submission date(s) to ingest (the reference takes one)",
     )
     ap.add_argument(
-        "--out-dir", required=True, help="silver table root (parquet)"
+        "--out-dir", required=True, help="silver root (txn tables under one silver version)"
     )
     ap.add_argument(
         "--download-dir",

@@ -19,21 +19,31 @@ a filter on the company dim instead of a plan over the facts. Each fact
 carries its committed report's ``company_id`` and ``fiscal_year_end``, so
 serving an item time series is a filter on the facts with no reports join.
 
-Scale posture: facts partition by ``fiscal_year`` on disk (the query
-surface's hottest predicate) and a load rewrites only the partitions it
-touches; dims are small and rewrite whole. At 100 TB the same layout holds
-with bucketing by ``report_id`` added for fact-fact co-location
+Silver is four transaction-log tables (``io/txn.py``) under one silver
+version: a load commits its four table versions, then publishes
+``_silver/<n>.json`` naming them, and ``read_silver`` reads each table at
+the version the latest record names. A reader sees one silver version in
+full, the one before a load or the one after it, and a load that fails
+before its record leaves the previous version served; re-running it
+converges. Silver written in the older bare-directory layout must be
+reloaded.
+
+Scale posture: facts partition by ``fiscal_year`` (the query surface's
+hottest predicate) and a load rewrites only the partitions it touches;
+dims are small and rewrite whole. At 100 TB the same layout holds with
+bucketing by ``report_id`` added for fact-fact co-location
 (SURVEY §7.3.6).
 """
 
 from __future__ import annotations
 
+import json
 import os
 from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..io import sinks
+from ..io import sinks, txn
 from ..io.sources import read_filing_csvs
 from ..queries.summary import company_summary, report_measures
 from .config_toml import conform_all_with_mappings
@@ -42,6 +52,11 @@ from .standardize import standardize_raw
 
 #: the report columns each fact carries besides ``fiscal_year``
 _REPORT_COPIES = ("company_id", "fiscal_year_end")
+#: ``read_silver``'s frame name → silver table directory
+_TABLES = {"companies": "companies", "items": "financial_items",
+           "reports": "financial_reports", "facts": "financial_data"}
+#: the silver version records under the silver root
+_SILVER_LOG = "_silver"
 
 
 def _dedup_deterministic(df: DataFrame, key: str) -> DataFrame:
@@ -78,16 +93,20 @@ def backfill_from_csvs(
     the materialized blocks are released before returning. They are local
     checkpoints: an executor lost mid-load fails the load, and re-running
     it converges like any re-run. Returns the quarantine counts,
-    ``{"company_rejects": n, "report_rejects": m}``; the four tables land
-    as parquet: ``companies/ financial_items/ financial_reports/
+    ``{"company_rejects": n, "report_rejects": m}``; the four tables are
+    txn tables: ``companies/ financial_items/ financial_reports/
     financial_data/``.
 
     Commit order: items, reports (with their ``report_measures``), facts,
     then companies, each with the ``company_summary`` of its latest
-    committed report — a reader never sees a company summary ahead of the
-    reports it names. Only the batch's companies are rewritten: conform
-    rejects a report whose company it rejected, so a batch changes no
-    other company's reports.
+    committed report, then the silver version record naming the four
+    table versions. Readers see none of it until that record lands. Each
+    table commit builds on its table's latest version, so the commits of
+    a load that failed before its record are redone, idempotently, by the
+    re-run, or carried by the next load's record. Only the batch's
+    companies are rewritten: conform rejects a report whose company it
+    rejected, so a batch changes no other company's reports. Loads into
+    one silver run one at a time.
 
     Multi-filing collapse: when several filings map to one natural key
     (re-filed cover pages → same company_id; an original + amendment →
@@ -107,6 +126,7 @@ def backfill_from_csvs(
     ``report_id``, so the join reuses their exchanges and runs no job of
     its own.
     """
+    _require_txn_silver(out_dir)
     held: list[DataFrame] = []
 
     def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -115,7 +135,7 @@ def backfill_from_csvs(
         return df
 
     def table(name: str) -> str:
-        return os.path.join(out_dir, name)
+        return os.path.join(out_dir, _TABLES[name])
 
     try:
         raw = read_filing_csvs(spark, csv_glob)
@@ -142,44 +162,87 @@ def backfill_from_csvs(
             )
         )
 
-        sinks.append_missing(bundle["items"], table("financial_items"), "item_id")
-        sinks.merge_upsert(
-            reports, table("financial_reports"), ["report_id"],
-            replace=F.broadcast(reports),
-        )
-        # facts: replaced per report, scoped to the fiscal_year partitions
-        # the batch touches — a later quarter or another company's filing in
-        # the same year leaves the facts already loaded in place, and a
-        # reloaded report keeps none of its old facts
-        sinks.merge_upsert(
-            facts.join(
-                F.broadcast(reports.select("report_id", *_REPORT_COPIES)), "report_id"
-            ),
-            table("financial_data"),
-            ["report_id"],
-            partition_col="fiscal_year",
-            replace=F.broadcast(reports.select("report_id", "fiscal_year")),
-        )
+        versions = {
+            "items": sinks.append_missing(
+                bundle["items"], table("items"), "item_id").version,
+            "reports": sinks.merge_upsert(
+                reports, table("reports"), ["report_id"],
+                replace=F.broadcast(reports)).version,
+            # facts: replaced per report, scoped to the fiscal_year
+            # partitions the batch touches — a later quarter or another
+            # company's filing in the same year leaves the facts already
+            # loaded in place, and a reloaded report keeps none of its old
+            # facts
+            "facts": sinks.merge_upsert(
+                facts.join(
+                    F.broadcast(reports.select("report_id", *_REPORT_COPIES)),
+                    "report_id",
+                ),
+                table("facts"),
+                ["report_id"],
+                partition_col="fiscal_year",
+                replace=F.broadcast(reports.select("report_id", "fiscal_year")),
+            ).version,
+        }
         # companies last, each with the summary of its latest committed
         # report (commit order: see above)
         companies = materialize(
             _dedup_deterministic(bundle["companies"], "company_id")
         )
-        committed = (
-            spark.read.schema(reports.schema)
-            .parquet(table("financial_reports"))
-            .join(companies.select("company_id"), "company_id", "left_semi")
-        )
-        sinks.merge_upsert(
+        committed = txn.read(
+            spark, table("reports"), at_version=versions["reports"]
+        ).join(companies.select("company_id"), "company_id", "left_semi")
+        versions["companies"] = sinks.merge_upsert(
             companies.join(company_summary(committed), "company_id", "left"),
             table("companies"),
             ["company_id"],
             replace=F.broadcast(companies),
-        )
+        ).version
+        _publish_silver(out_dir, versions)
         return rejects
     finally:
         for df in held:
             sinks.release_checkpoint(df)
+
+
+def _require_txn_silver(out_dir: str) -> None:
+    """Refuse silver in the bare-directory layout: its table directories
+    hold parquet files, where a txn table holds only its data and log
+    directories. The two layouts never mix."""
+    bare = [
+        name for name in _TABLES.values()
+        if os.path.isdir(os.path.join(out_dir, name))
+        and set(os.listdir(os.path.join(out_dir, name))) - {txn._DATA_DIR, txn._LOG_DIR}
+    ]
+    if bare:
+        raise ValueError(
+            f"{out_dir} holds silver in the bare-directory layout "
+            f"({', '.join(bare)}); silver is now committed as txn tables "
+            "under one silver version: reload it into an empty directory"
+        )
+
+
+def _publish_silver(out_dir: str, versions: dict[str, int]) -> None:
+    """Publish the next silver version record, naming each table's
+    version, with txn's exclusive publish. Loads into one silver run one
+    at a time; a load that finds its record number taken fails, and
+    re-running it converges."""
+    n = (txn._list_versions(out_dir, _SILVER_LOG) or [0])[-1] + 1
+    if not txn._publish(out_dir, {"version": n, "tables": versions}, _SILVER_LOG):
+        raise txn.ConcurrentWriteRetryExceeded(
+            f"silver version {n} of {out_dir} was published by another load"
+        )
+
+
+def _pinned(out_dir: str) -> dict:
+    """The latest silver version record:
+    ``{"version": n, "tables": {frame name: table version}}``."""
+    versions = txn._list_versions(out_dir, _SILVER_LOG)
+    if not versions:
+        _require_txn_silver(out_dir)
+        raise FileNotFoundError(f"no silver version at {out_dir}")
+    with open(txn._log_path(out_dir, versions[-1], _SILVER_LOG)) as fh:
+        return json.load(fh)
 
 
 def _reject_counts(bundle: dict[str, DataFrame]) -> dict[str, int]:
@@ -192,24 +255,25 @@ def _reject_counts(bundle: dict[str, DataFrame]) -> dict[str, int]:
 
 
 def read_silver(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:
-    """Load the four conformed tables back for the query layer.
+    """Load the four conformed tables back for the query layer, pinned to
+    the latest silver version: each table is read at the version that
+    record names, so the frames answer as of this call, before and after
+    any later load, until a ``VACUUM`` retires those versions. A serving
+    process sees a later load by calling ``read_silver`` again.
 
     ``companies`` is a snapshot: the dim, gold ``summary`` included, is
     collected once inside the JVM (one small job; the dim is bounded by the
     company count, ≤4,000 rows) and served as a driver-local relation. A
     summary request over it plans as a ``LocalTableScan``, runs no Spark job
-    and reads no file, so a later load, which rewrites the companies
-    directory, cannot break it. The rows never pass through Python, so
-    every type, structs and timestamps included, comes back exactly.
-
-    The frames of one call answer summaries as of that call; a serving
-    process refreshes them by calling ``read_silver`` again. ``items``,
-    ``reports`` and ``facts`` stay lazy parquet scans."""
-    jdf = spark.read.parquet(os.path.join(out_dir, "companies"))._jdf
-    jsnapshot = spark._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema())
-    return {
-        "companies": DataFrame(jsnapshot, spark),
-        "items": spark.read.parquet(os.path.join(out_dir, "financial_items")),
-        "reports": spark.read.parquet(os.path.join(out_dir, "financial_reports")),
-        "facts": spark.read.parquet(os.path.join(out_dir, "financial_data")),
+    and reads no file. The rows never pass through Python, so every type,
+    structs and timestamps included, comes back exactly. ``items``,
+    ``reports`` and ``facts`` are lazy scans of their versions' files."""
+    pinned = _pinned(out_dir)["tables"]
+    t = {
+        name: txn.read(spark, os.path.join(out_dir, d), at_version=pinned[name])
+        for name, d in _TABLES.items()
     }
+    jdf = t["companies"]._jdf
+    jsnapshot = spark._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema())
+    t["companies"] = DataFrame(jsnapshot, spark)
+    return t

@@ -1,8 +1,9 @@
 """Transaction-log table format: snapshot-isolated parquet tables.
 
-The one table format the streaming sinks (``streaming/pipeline.py``)
-commit through. It closes what a bare-directory staged swap cannot: such
-a layout has a brief no-target blink between renames, a concurrent reader
+The one table format the silver load (``etl/pipeline.py``) and the
+streaming sinks (``streaming/pipeline.py``) commit through. It closes
+what a bare-directory staged swap cannot: such a layout has a brief
+no-target blink between renames, a concurrent reader
 can see partition A new while B is still old, and an applied-batch marker
 kept beside the data commits per partition, not per batch. The
 reference never faces any of this because PostgreSQL gives it MVCC
@@ -11,7 +12,10 @@ is the storage-level equivalent for a Spark engine on plain parquet — the
 same design Delta Lake / Iceberg use, cut down to what the engine needs:
 
 - A table is a directory. Data files live under ``data/<commit-uuid>/``
-  and are IMMUTABLE once written; readers never list directories.
+  (a partitioned table's under ``data/<commit-uuid>/by_<col>=<value>/``)
+  and are IMMUTABLE once written; readers never list directories. Every
+  file holds whole rows, the partition column included, so any set of
+  files reads as ONE scan under the table schema.
 - The only source of truth is ``_txnlog/<version>.json`` — a manifest
   naming every live data file (with its partition value, for pruning),
   the table schema, and the applied-batch ledger. Readers resolve the
@@ -59,6 +63,8 @@ from pyspark.sql.types import StructField, StructType
 
 _LOG_DIR = "_txnlog"
 _DATA_DIR = "data"
+#: a partitioned commit's files sit under ``<prefix><col>=<value>/``
+_PART_PREFIX = "by_"
 #: applied-batch ids retained in the manifest ledger; Structured Streaming
 #: replays only batches at/after the checkpoint frontier, so a bounded
 #: recent window is sufficient
@@ -105,9 +111,8 @@ def _require_layout(snap: "Snapshot", partition_arg: str | None, op: str) -> Non
     Silently accepting a different column would record files whose
     partition metadata later reads and merges misinterpret (pruning by a
     key the file never recorded). A partitioned write into a table whose
-    manifest is unpartitioned is equally refused: the files would drop
-    the column from their data pages while the manifest schema still
-    expects it there."""
+    manifest is unpartitioned is equally refused: its files would record
+    partition values that the table's layout does not have."""
     if snap.schema_json is None or partition_arg is None:
         return
     if snap.partition_by != partition_arg:
@@ -117,16 +122,16 @@ def _require_layout(snap: "Snapshot", partition_arg: str | None, op: str) -> Non
         )
 
 
-def _log_path(table: str, version: int) -> str:
-    return os.path.join(table, _LOG_DIR, f"{version:020d}.json")
+def _log_path(table: str, version: int, log: str = _LOG_DIR) -> str:
+    return os.path.join(table, log, f"{version:020d}.json")
 
 
-def _list_versions(table: str) -> list[int]:
-    log = os.path.join(table, _LOG_DIR)
-    if not os.path.isdir(log):
+def _list_versions(table: str, log: str = _LOG_DIR) -> list[int]:
+    log_dir = os.path.join(table, log)
+    if not os.path.isdir(log_dir):
         return []
     out = []
-    for name in os.listdir(log):
+    for name in os.listdir(log_dir):
         stem, ext = os.path.splitext(name)
         if ext == ".json" and stem.isdigit():
             out.append(int(stem))
@@ -232,26 +237,29 @@ def history(table: str) -> list[dict]:
     return out
 
 
-def _publish(table: str, manifest: dict) -> bool:
-    """Atomically publish a manifest for ``manifest['version']``. Returns
-    False if that version was taken by a concurrent writer (the caller
-    re-resolves and retries). ``os.link`` is the commit point: atomic on
-    POSIX and it FAILS on an existing target, unlike ``os.rename`` which
-    would silently clobber the winner's commit."""
-    log = os.path.join(table, _LOG_DIR)
-    os.makedirs(log, exist_ok=True)
-    tmp = os.path.join(log, f".tmp-{uuid.uuid4().hex}.json")
+def _publish(table: str, manifest: dict, log: str = _LOG_DIR) -> bool:
+    """Atomically publish a manifest for ``manifest['version']`` in the
+    ``log`` directory under ``table`` (the table's own log unless a caller
+    versions something else the same way). Returns False if that version
+    was taken by a concurrent writer (the caller re-resolves and retries).
+    ``os.link`` is the commit point: atomic on POSIX and it FAILS on an
+    existing target, unlike ``os.rename`` which would silently clobber the
+    winner's commit."""
+    target = _log_path(table, manifest["version"], log)
+    log_dir = os.path.dirname(target)
+    os.makedirs(log_dir, exist_ok=True)
+    tmp = os.path.join(log_dir, f".tmp-{uuid.uuid4().hex}.json")
     with open(tmp, "w") as fh:
         json.dump(manifest, fh)
         fh.flush()
         os.fsync(fh.fileno())
     try:
-        os.link(tmp, _log_path(table, manifest["version"]))
+        os.link(tmp, target)
         # durability-after-ack: the link is only crash-proof once the
         # DIRECTORY entry is flushed — without this, an acknowledged
         # commit (e.g. a streaming batch whose checkpoint then advances)
         # could vanish on power loss and never be replayed
-        dfd = os.open(log, os.O_RDONLY)
+        dfd = os.open(log_dir, os.O_RDONLY)
         try:
             os.fsync(dfd)
         finally:
@@ -316,10 +324,13 @@ def _write_data(
     commit_id = uuid.uuid4().hex
     rel_dir = os.path.join(_DATA_DIR, commit_id)
     out_dir = os.path.join(table, rel_dir)
-    w = df.write.mode("errorifexists")
+    w = df.write
     if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(out_dir)
+        # partition by a copy of the column, so every file keeps the real
+        # one: any file subset then reads as one scan under the table schema
+        copy = _PART_PREFIX + partition_by
+        w = df.withColumn(copy, F.col(partition_by)).write.partitionBy(copy)
+    w.mode("errorifexists").parquet(out_dir)
     import pyarrow.parquet as pq
 
     entries: list[dict] = []
@@ -328,18 +339,17 @@ def _write_data(
             if not name.endswith(".parquet") or name.startswith(("_", ".")):
                 continue
             full = os.path.join(root, name)
-            # manifest paths are ALWAYS posix-form: read() groups by
-            # splitting on "/" regardless of host os.sep
+            # manifest paths are ALWAYS posix-form, whatever the host os.sep
             rel = os.path.relpath(full, table).replace(os.sep, "/")
             part = None
             if partition_by:
                 # spark encodes the value into the dir name (url-escaped;
                 # NULL becomes the hive default marker — canonicalize it
-                # back to null so membership tests can't miss it)
+                # back to null so membership tests can't miss it); the
+                # manifest keeps it for pruning
                 seg = os.path.relpath(root, out_dir).split(os.sep)[0]
-                col, _, enc = seg.partition("=")
-                val = urllib.parse.unquote(enc)
-                part = {col: None if val == "__HIVE_DEFAULT_PARTITION__" else val}
+                val = urllib.parse.unquote(seg.partition("=")[2])
+                part = {partition_by: None if val == "__HIVE_DEFAULT_PARTITION__" else val}
             entry = {"path": rel, "partition": part}
             try:
                 # footer-only row count → manifests can answer DESCRIBE
@@ -353,17 +363,6 @@ def _write_data(
                     entry["stats"] = stats
             entries.append(entry)
     return entries, rel_dir
-
-
-def _phys_schema(schema: StructType, partition_by: str | None) -> StructType:
-    """Read-time schema: the partition column (absent from partitioned
-    data files, recovered from the path) must come last for Spark's
-    partition-value recovery; ``read`` selects the declared order back."""
-    if not partition_by:
-        return schema
-    cols = [f for f in schema.fields if f.name != partition_by]
-    part = [f for f in schema.fields if f.name == partition_by]
-    return StructType(cols + part)
 
 
 def _commit(table: str, build, max_retries: int = 20) -> Snapshot:
@@ -457,42 +456,27 @@ def read(
         files = [f for f in files if partition_matches(f, allowed)]
     if range_filter:
         files = [f for f in files if stats_may_hit(f, range_filter)]
-    return _read_files(spark, table, files, schema, snap.partition_by)
+    return _read_files(spark, table, files, schema)
 
 
 def _read_files(
-    spark: SparkSession,
-    table: str,
-    files: list[dict],
-    schema: StructType,
-    partition_by: str | None,
+    spark: SparkSession, table: str, files: list[dict], schema: StructType
 ) -> DataFrame:
-    """Read a manifest file subset under an explicit schema."""
+    """Read a manifest file subset as one scan under an explicit schema.
+    Every file holds whole rows, so the files' directories carry nothing
+    the read needs; the schema pins each column's type, and parquet
+    resolves columns by name, null-filling one a file predates."""
     if not files:
-        return spark.createDataFrame([], schema)
-    # group by commit directory: files in one commit share a basePath, so
-    # Spark's partition-value recovery (day=X path segments) applies per
-    # group; the explicit schema pins partition-column TYPES (inference
-    # would e.g. read a day string as date). Files written without
-    # partitionBy carry every column physically — parquet resolves the
-    # same schema by NAME, so both kinds read uniformly.
-    by_commit: dict[str, list[str]] = {}
-    for f in files:
-        parts = f["path"].split("/")
-        by_commit.setdefault("/".join(parts[:2]), []).append(
-            os.path.join(table, f["path"])
+        # an empty LOCAL relation, which the optimizer folds away;
+        # ``createDataFrame([], schema)`` would plan Python worker tasks
+        jss = spark._jsparkSession
+        empty = jss.createDataFrame(
+            spark._jvm.java.util.ArrayList(), jss.parseDataType(schema.json())
         )
-    phys = _phys_schema(schema, partition_by)
-    pieces = []
-    for commit_dir, paths in sorted(by_commit.items()):
-        rdr = spark.read.schema(phys).option(
-            "basePath", os.path.join(table, commit_dir)
-        )
-        pieces.append(rdr.parquet(*paths))
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    return out.select(*[f.name for f in schema.fields])
+        return DataFrame(empty, spark)
+    return spark.read.schema(schema).parquet(
+        *[os.path.join(table, f["path"]) for f in files]
+    )
 
 
 def read_changes(
@@ -543,12 +527,12 @@ def read_changes(
     pre = _read_files(
         spark, table,
         [f for f in snap_a.files if f["path"] not in paths_b],
-        schema, snap_b.partition_by,
+        schema,
     )
     post = _read_files(
         spark, table,
         [f for f in snap_b.files if f["path"] not in paths_a],
-        schema, snap_b.partition_by,
+        schema,
     )
     cols = [f.name for f in schema.fields]
     non_keys = [c for c in cols if c not in keys]
@@ -689,17 +673,30 @@ def merge_upsert(
     table: str,
     keys: list[str],
     partition_col: str | None = None,
+    replace: DataFrame | None = None,
 ) -> Snapshot:
-    """Keyed MERGE (same semantics as ``sinks.merge_upsert``: at most one
-    update row per key) with snapshot isolation. With ``partition_col``
-    the rewrite is scoped to the partitions present in ``updates``:
-    untouched partitions' FILES carry over into the new manifest verbatim
-    — zero read, zero write, zero metadata churn for them. Precondition
-    (as in every partition-scoped MERGE): ``partition_col`` functionally
-    depends on ``keys``. On a lost commit race the merge job re-runs
-    against the winning snapshot, so concurrent merges serialize
+    """Keyed MERGE with snapshot isolation: at most one update row per key
+    (collapse a batch to latest-per-key first if the feed can repeat
+    keys; with duplicates, all duplicate rows land).
+
+    ``replace`` (default ``updates``) holds the keys being replaced: every
+    row whose keys match one of its rows goes, and ``updates`` lands. A
+    load that replaces a parent's child rows as a unit passes the parent
+    keys, so a parent reloaded with fewer children, or none, keeps none of
+    its old ones; a partition or the whole table left without a row simply
+    has no file in the new manifest.
+
+    With ``partition_col`` the rewrite is scoped to the partitions present
+    in ``replace`` (which carries that column): untouched partitions'
+    FILES carry over into the new manifest verbatim — zero read, zero
+    write, zero metadata churn for them. Precondition (as in every
+    partition-scoped MERGE): ``partition_col`` functionally depends on
+    ``keys``. The merge writes new files beside the live ones and never
+    rewrites a file a reader may hold. On a lost commit race the merge job
+    re-runs against the winning snapshot, so concurrent merges serialize
     correctly instead of silently dropping each other's rows."""
     spark = updates.sparkSession
+    replace = updates if replace is None else replace
 
     def build(snap: Snapshot) -> dict:
         _require_layout(snap, partition_col, "merge_upsert")
@@ -728,7 +725,7 @@ def merge_upsert(
         if partition_col is not None and not unknown:
             touched = {
                 _pstr(r[0])
-                for r in updates.select(partition_col).distinct().collect()
+                for r in replace.select(partition_col).distinct().collect()
             }
             kept_entries = [
                 f
@@ -744,7 +741,9 @@ def merge_upsert(
         else:
             kept_entries = []
             current = read(spark, table, at_version=snap.version)
-        kept = current.join(updates.select(*keys).distinct(), keys, "left_anti")
+        # a left anti join ignores duplicate keys on its right side, so the
+        # key list needs no distinct (and no shuffle) of its own
+        kept = current.join(replace.select(*keys), keys, "left_anti")
         merged = kept.unionByName(updates.select(*current.columns))
         entries, _ = _write_data(merged, table, partition_col)
         return {

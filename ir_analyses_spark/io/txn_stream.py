@@ -21,10 +21,6 @@ the offsets, the table changed by rewrite (merge/compact/overwrite) and
 tailing it as an append stream would double-read rewritten rows — the
 reader refuses loudly and points at the batch change-feed API
 (``txn.read_changes``) instead of silently corrupting the stream.
-
-Partitioned tables are refused for now: their files drop the partition
-column from the data pages (hive dir encoding), and re-injecting a typed
-constant per file is not yet wired through the arrow batches.
 """
 
 from __future__ import annotations
@@ -48,45 +44,36 @@ from . import txn
 
 
 class _FilePartition(InputPartition):
-    def __init__(self, path: str, partition: dict | None = None):
+    def __init__(self, path: str):
         self.path = path
-        self.partition = partition
 
 
-def _read_file_batches(path: str, schema: StructType, partition: dict | None):
+def _read_file_batches(path: str, schema: StructType):
     """Executor-side file → arrow batches, shared by the batch and stream
     readers: ONE footer open (column projection reuses the same handle),
-    pre-evolution files read by column INTERSECTION with declared-type
-    null-fill, and hive-partition values re-injected as typed constants.
+    and pre-evolution files read by column INTERSECTION with declared-type
+    null-fill. Every txn file holds whole rows, partition column included.
     Mirrors ``txn._read_files``'s explicit-schema semantics."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_type
 
     names = [f.name for f in schema.fields]
-    part = partition or {}
     with pq.ParquetFile(path) as pf:
         in_file = set(pf.schema_arrow.names)
-        file_cols = [n for n in names if n not in part and n in in_file]
+        file_cols = [n for n in names if n in in_file]
         table = pf.read(columns=file_cols)
-    synth = {n for n in names if n not in file_cols}
-    if not synth:
+    if len(file_cols) == len(names):
         yield from table.to_batches()
         return
     types = {f.name: to_arrow_type(f.dataType) for f in schema.fields}
     for batch in table.to_batches():
-        cols = []
-        for n in names:
-            if n in part:
-                cols.append(
-                    pa.array([part[n]] * batch.num_rows, type=pa.string()).cast(
-                        types[n]
-                    )
-                )
-            elif n in synth:  # evolved column absent from this file
-                cols.append(pa.nulls(batch.num_rows, type=types[n]))
-            else:
-                cols.append(batch.column(n))
+        cols = [
+            batch.column(n) if n in in_file
+            # evolved column absent from this file
+            else pa.nulls(batch.num_rows, type=types[n])
+            for n in names
+        ]
         yield pa.RecordBatch.from_arrays(cols, names=names)
 
 
@@ -98,12 +85,6 @@ class TxnTableStreamReader(DataSourceStreamReader):
         snap = txn.snapshot(self.table)
         if snap.schema_json is None:
             raise FileNotFoundError(f"no committed version at {self.table}")
-        if snap.partition_by is not None:
-            raise ValueError(
-                "streaming reads of partitioned txn tables are not "
-                "supported yet — stream an unpartitioned table or use "
-                "txn.read_changes for batch CDF"
-            )
         self._schema = StructType.fromJson(json.loads(snap.schema_json))
 
     # -- offset protocol -------------------------------------------------
@@ -145,7 +126,7 @@ class TxnTableStreamReader(DataSourceStreamReader):
         # arrow batches stream straight into Spark's arrow pipe — no
         # per-row Python; shared helper handles pre-evolution files by
         # column intersection + null-fill (same as the batch reader)
-        yield from _read_file_batches(partition.path, self._schema, None)
+        yield from _read_file_batches(partition.path, self._schema)
 
 
 
@@ -222,8 +203,8 @@ class TxnTableArrowWriter(DataSourceArrowWriter):
     every txn writer uses; ``abort()`` deletes the job's files. Schema
     enforcement mirrors ``txn.append``: an append must match the table
     schema EXACTLY (a silently evolving writer would brick later scans),
-    and partitioned tables are refused (hive layout re-encoding is not
-    wired through arrow batches — same gate as the stream reader)."""
+    and partitioned tables are refused (a task's file can hold several
+    partition values, so it has no one value to record)."""
 
     def __init__(self, options: dict, schema: StructType, overwrite: bool):
         self.table = options.get("path")
@@ -278,14 +259,9 @@ class TxnTableBatchReader(DataSourceReader):
     plans one input partition per data file; executors stream the files
     as arrow batches (same column-pruned read the stream reader uses).
 
-    Partitioned tables work too: hive-layout files drop the partition
-    column from their pages, so each planned partition carries the
-    manifest's {col: value} and ``read`` re-injects it as a constant
-    arrow column CAST to the declared type (manifest values are the
-    string directory-encoding; the schema is the source of truth for the
-    type, exactly like ``txn._read_files``'s explicit-schema read). A
-    file committed WITHOUT partition metadata into a partitioned table
-    carries every column physically and reads as-is."""
+    Partitioned tables read the same way: every file holds whole rows,
+    the partition column included, and the manifest's partition values
+    only prune files (``pushFilters``)."""
 
     def __init__(
         self, options: dict, schema: StructType, snap: "txn.Snapshot | None" = None
@@ -312,15 +288,10 @@ class TxnTableBatchReader(DataSourceReader):
             files = [f for f in files if txn.partition_matches(f, self._allowed)]
         if self._ranges:
             files = [f for f in files if txn.stats_may_hit(f, self._ranges)]
-        return [
-            _FilePartition(os.path.join(self.table, f["path"]), f.get("partition"))
-            for f in files
-        ]
+        return [_FilePartition(os.path.join(self.table, f["path"])) for f in files]
 
     def read(self, partition: _FilePartition) -> Iterator:
-        yield from _read_file_batches(
-            partition.path, self._schema, partition.partition
-        )
+        yield from _read_file_batches(partition.path, self._schema)
 
 
 class TxnTablePushdownReader(TxnTableBatchReader):

@@ -1062,8 +1062,8 @@ def append_retrieval_index(
     seg_width/format come from the store meta, never from the caller.
 
     Crash safety: the merged index is staged COMPLETE (postings +
-    doclens + meta) at ``<path>__staging`` and promoted with the same
-    staged swap the batch sinks use (`io/sinks._swap_in`): a crash at
+    doclens + meta) at ``<path>__staging`` and promoted with the
+    staged swap in `io/sinks._swap_in`: a crash at
     any step leaves a complete old or complete new index on disk —
     readers resolve a between-renames remnant via
     :func:`_index_data_root`; the next append repairs it. Re-running a

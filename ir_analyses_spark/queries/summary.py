@@ -296,9 +296,10 @@ def item_time_series(
     itself stays parallel across the facts files. ``reports`` is not read
     and stays for the callers that pass it positionally.
 
-    Build one frame per request and do not keep it: the one-partition sort
-    is an exchange, so a frame collected again after a load re-serves the
-    rows of its first collect, with no error."""
+    Over ``read_silver``'s facts, which read one pinned silver version, the
+    frame answers as of that ``read_silver`` call, so a frame kept across
+    a load serves the same rows before and after it; a fresh
+    ``read_silver`` answers the load."""
     return (
         facts.filter(f"company_id = {int(company_id)} AND item_id = {int(item_id)}")
         .repartition(1)

@@ -3,7 +3,8 @@ are replaced as a unit, so later loads into the same fiscal year — the next
 quarter, or another company's filing on a daily ingest — keep the facts
 already in silver, a reloaded report keeps none of its old facts, and
 re-running a load changes nothing. Frames ``read_silver`` returned before a
-load must keep serving after it.
+load keep serving after it, a reader during a load sees one silver version
+in full, and a load that fails at any commit leaves the previous version.
 
 Each filing is a small UTF-8 EDINET CSV export: cover rows plus
 ``N_MEASURES`` fact rows.
@@ -11,10 +12,13 @@ Each filing is a small UTF-8 EDINET CSV export: cover rows plus
 
 from __future__ import annotations
 
+import os
+import threading
+
 import pytest
-from py4j.protocol import Py4JJavaError
 
 from ir_analyses_spark.etl import pipeline
+from ir_analyses_spark.io import txn
 from ir_analyses_spark.queries.summary import financial_summary, item_time_series
 from ir_analyses_spark.schemas import RAW_JP_COLUMNS
 
@@ -147,21 +151,129 @@ def test_summary_frame_read_before_a_load_still_serves_after_it(spark, tmp_path)
     assert fresh is not before
 
 
-@pytest.mark.xfail(
-    strict=True,
-    raises=Py4JJavaError,
-    reason="FAILED_READ_FILE.FILE_NOT_EXIST: the load's dynamic overwrite "
-    "rewrites the fiscal_year partition a facts frame read before it had "
-    "listed; ROADMAP Direction 1 (silver as txn tables under one silver "
-    "version) fixes this and removes this marker",
-)
 def test_series_frame_read_before_a_load_still_serves_after_it(spark, tmp_path):
     """The time-series half: a facts frame read before a load of the next
-    quarter of the same fiscal year must still serve after it."""
+    quarter of the same fiscal year still serves after it, as of its
+    ``read_silver`` call — a series frame kept across the load too — and a
+    new call answers the load."""
+    silver = str(tmp_path / "silver")
     _load(spark, tmp_path, "q1", [("E00001", 1)])
-    t = pipeline.read_silver(spark, str(tmp_path / "silver"))
+    t = pipeline.read_silver(spark, silver)
     company_id = t["companies"].first()["company_id"]
     item_id = t["items"].first()["item_id"]
+
+    def ends(tables):
+        return _series_ends(item_time_series(
+            tables["facts"], tables["reports"], company_id, item_id))
+
+    kept = item_time_series(t["facts"], t["reports"], company_id, item_id)
+    assert _series_ends(kept) == [6]
     _load(spark, tmp_path, "q2", [("E00001", 2)])
-    rows = item_time_series(t["facts"], t["reports"], company_id, item_id).collect()
-    assert len(rows) == 1
+    assert _series_ends(kept) == [6]
+    assert ends(t) == [6]
+    assert ends(pipeline.read_silver(spark, silver)) == [6, 9]
+
+
+def _series_ends(df):
+    """The period-end months of a collected series."""
+    return [r["fiscal_year_end"].month for r in df.collect()]
+
+
+def _answer(spark, silver):
+    """One serving round on a fresh ``read_silver``: every table's rows,
+    E00001's summary and its first item's series."""
+    t = pipeline.read_silver(spark, silver)
+    company_id = t["companies"].filter("edinet_code = 'E00001'").first()["company_id"]
+    item_id = t["items"].orderBy("element_id").first()["item_id"]
+    summary = financial_summary(
+        t["companies"], t["reports"], t["facts"], t["items"], edinet_code="E00001")
+    return {
+        **{name: sorted(map(repr, df.collect())) for name, df in t.items()},
+        "summary": sorted(map(repr, summary.collect())),
+        "series": _series_ends(
+            item_time_series(t["facts"], t["reports"], company_id, item_id)),
+    }
+
+
+def test_reader_across_a_load_sees_one_silver_version_in_full(spark, tmp_path):
+    """A reader thread serving while a load commits never errors, and each
+    of its answers is the silver before the load or the silver after it,
+    in full."""
+    silver = str(tmp_path / "silver")
+    _load(spark, tmp_path, "q1", [("E00001", 1)])
+    old = _answer(spark, silver)
+    answers, errors, done = [], [], threading.Event()
+
+    def reader():
+        while not done.is_set():
+            try:
+                answers.append(_answer(spark, silver))
+            except Exception as exc:  # any error fails the test below
+                errors.append(exc)
+                return
+
+    thread = threading.Thread(target=reader)
+    thread.start()
+    try:
+        _load(spark, tmp_path, "q2", [("E00001", 2)])
+    finally:
+        done.set()
+        thread.join(timeout=300)
+    assert not thread.is_alive()
+    new = _answer(spark, silver)
+    assert not errors, errors
+    assert old["series"] == [6] and new["series"] == [6, 9]
+    assert answers and all(a == old or a == new for a in answers)
+
+
+def test_a_load_failing_at_any_publish_leaves_the_previous_silver(
+    spark, tmp_path, monkeypatch
+):
+    """Make each publish of a load fail in turn: the four table commits,
+    then the silver version record. After each failure ``read_silver``
+    returns the previous silver version in full, and re-running the load
+    converges. Each load reloads the Q2 report with one more fact row."""
+    silver = str(tmp_path / "silver")
+    order = [os.path.join(silver, name) for name in
+             ("financial_items", "financial_reports", "financial_data", "companies")]
+    order.append(silver)
+    _load(spark, tmp_path, "q1", [("E00001", 1)])
+    real_publish = txn._publish
+    for failing in range(5):
+        n_measures = failing + 1
+        batch = [("E00001", 2, n_measures)]
+        calls = []
+
+        def crash_publish(*args, **kwargs):
+            calls.append(args[0])
+            if len(calls) == failing + 1:
+                raise OSError("simulated crash at publish")
+            return real_publish(*args, **kwargs)
+
+        previous = _answer(spark, silver)
+        monkeypatch.setattr(txn, "_publish", crash_publish)
+        with pytest.raises(OSError, match="simulated crash"):
+            _load(spark, tmp_path, f"fail{failing}", batch)
+        monkeypatch.setattr(txn, "_publish", real_publish)
+        assert calls == order[: failing + 1]
+        assert _answer(spark, silver) == previous, failing
+
+        _load(spark, tmp_path, f"rerun{failing}", batch)
+        assert _facts_per_report(spark, tmp_path) == {
+            ("E00001", "Q1"): N_MEASURES, ("E00001", "Q2"): n_measures}
+        assert _counts(spark, tmp_path) == {
+            "companies": 1, "items": max(N_MEASURES, n_measures),
+            "reports": 2, "facts": N_MEASURES + n_measures}
+        quarters = [r["quarter_type"] for r in financial_summary(
+            **pipeline.read_silver(spark, silver), edinet_code="E00001").collect()]
+        assert quarters == ["Q2"]
+
+
+def test_bare_directory_silver_must_be_reloaded(spark, tmp_path):
+    """Silver in the old bare-directory layout neither loads nor reads:
+    both say to reload it."""
+    spark.range(1).write.parquet(str(tmp_path / "silver" / "companies"))
+    with pytest.raises(ValueError, match="reload"):
+        pipeline.read_silver(spark, str(tmp_path / "silver"))
+    with pytest.raises(ValueError, match="reload"):
+        _load(spark, tmp_path, "q1", [("E00001", 1)])

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ir_analyses_spark.etl import conform, standardize
 from ir_analyses_spark.etl.parsers import extract_fiscal_year, extract_quarter_type
+from ir_analyses_spark.io import txn
 from ir_analyses_spark.queries import summary as summary_q
 from ir_analyses_spark.schemas import RAW_FILING_SCHEMA, RAW_JP_COLUMNS
 
@@ -448,7 +449,7 @@ def test_summary_priority_present_null_blocks_fallback(spark):
 
 def test_backfill_integration(spark, tmp_path):
     """Full M3 path on disk: mixed-encoding CSV files → one scan →
-    standardize → conform → partitioned silver parquet → summary query —
+    standardize → conform → partitioned silver txn tables → summary query —
     the set-oriented twin of the reference's bypass_import_csv.py loop,
     plus idempotency: a second identical backfill converges to the same
     tables (the reference's duplicate-load hazard, solved by keys)."""
@@ -484,10 +485,10 @@ def test_backfill_integration(spark, tmp_path):
     assert t["companies"].count() == 1
     assert t["reports"].count() == 2
     assert t["facts"].count() == 8  # 4 measures × 2 filings, no dup rows
-    # facts partitioned by fiscal_year on disk
-    import os
-    assert any(d.startswith("fiscal_year=") for d in os.listdir(
-        str(tmp_path / "silver" / "financial_data")))
+    # facts partitioned by fiscal_year: each file records its year
+    facts = txn.snapshot(str(tmp_path / "silver" / "financial_data"))
+    assert facts.partition_by == "fiscal_year"
+    assert {f["partition"]["fiscal_year"] for f in facts.files} == {"2023"}
 
     dto = summary_q.financial_summary(
         t["companies"], t["reports"], t["facts"], t["items"]

@@ -1,6 +1,6 @@
 """IO layer tests: encoding-sniffed filing scans (SURVEY §2A S1–S3),
-parquet sink MERGE semantics (S6/S7, A5–A7), and the txn format's
-compaction and z-order layout.
+silver sink MERGE semantics as txn commits (S6/S7, A5–A7), and the txn
+format's compaction and z-order layout.
 
 Mirrors the reference's ingest edge cases: per-file charset detection
 (reference utils/api.py:129-137 uses chardet), BOM'd UTF-8 fixtures
@@ -84,11 +84,16 @@ def test_read_filing_csvs_empty_glob(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# sinks: merge_upsert / append_missing / replace_partition
+# sinks: silver's txn commits (merge_upsert / append_missing), and the
+# staged swap the corpus stores use
 # ---------------------------------------------------------------------------
 
 def _df(spark, rows):
     return spark.createDataFrame(rows, "edinet_code string, company_name string")
+
+
+def _by_code(spark, target):
+    return {r["edinet_code"]: r["company_name"] for r in txn.read(spark, target).collect()}
 
 
 def test_merge_upsert_insert_then_update(spark, tmp_path):
@@ -96,8 +101,7 @@ def test_merge_upsert_insert_then_update(spark, tmp_path):
     sinks.merge_upsert(_df(spark, [("E1", "A"), ("E2", "B")]), target, ["edinet_code"])
     # update E2, insert E3 — the reference's find-or-create + merge
     sinks.merge_upsert(_df(spark, [("E2", "B2"), ("E3", "C")]), target, ["edinet_code"])
-    got = {r["edinet_code"]: r["company_name"] for r in spark.read.parquet(target).collect()}
-    assert got == {"E1": "A", "E2": "B2", "E3": "C"}
+    assert _by_code(spark, target) == {"E1": "A", "E2": "B2", "E3": "C"}
 
 
 def test_swap_in_crash_window_leaves_valid_copy(spark, tmp_path, monkeypatch):
@@ -136,90 +140,51 @@ def test_swap_in_crash_window_leaves_valid_copy(spark, tmp_path, monkeypatch):
     assert not _os.path.exists(staging)
 
 
-def test_append_missing_is_insert_only(spark, tmp_path):
-    target = str(tmp_path / "items")
-    sinks.append_missing(_df(spark, [("E1", "A"), ("E2", "B")]), target, "edinet_code")
-    # E2 exists → its new value must NOT overwrite (existence-check insert)
-    sinks.append_missing(_df(spark, [("E2", "CHANGED"), ("E3", "C")]), target, "edinet_code")
-    got = {r["edinet_code"]: r["company_name"] for r in spark.read.parquet(target).collect()}
-    assert got == {"E1": "A", "E2": "B", "E3": "C"}
-
-
-def test_merge_upsert_partition_scoped(spark, tmp_path):
-    """Partition-scoped MERGE must leave untouched partitions' files
-    byte-identical — the O(touched-partitions) write path for 100 TB."""
-    import glob
+def test_append_missing_keeps_existing_files(spark, tmp_path):
+    """Insert-only append: a key already present keeps its row, and the
+    commit carries every existing file over, unchanged on disk."""
     import hashlib
     import os
 
+    target = str(tmp_path / "items")
+
+    def digest(f):
+        with open(os.path.join(target, f["path"]), "rb") as fh:
+            return hashlib.sha256(fh.read()).hexdigest()
+
+    first = sinks.append_missing(
+        _df(spark, [("E1", "A"), ("E2", "B")]), target, "edinet_code")
+    before = {f["path"]: digest(f) for f in first.files}
+    # E2 exists → its new value must NOT overwrite (existence-check insert)
+    second = sinks.append_missing(
+        _df(spark, [("E2", "CHANGED"), ("E3", "C")]), target, "edinet_code")
+    assert second.files[: len(first.files)] == first.files
+    assert {f["path"]: digest(f) for f in first.files} == before
+    assert _by_code(spark, target) == {"E1": "A", "E2": "B", "E3": "C"}
+
+
+def test_merge_upsert_partition_scoped(spark, tmp_path):
+    """A partition-scoped MERGE carries the untouched partitions' manifest
+    entries over verbatim and rewrites only the touched ones — the
+    O(touched-partitions) write path for 100 TB."""
     target = str(tmp_path / "facts")
+    schema = "fy string, k string, v int"
     base = spark.createDataFrame(
-        [("2023", "k1", 1), ("2023", "k2", 2), ("2024", "k3", 3)],
-        "fy string, k string, v int",
-    )
-    sinks.write_table(base, target, partition_by=["fy"])
-
-    def _files(part):
-        out = {}
-        for p in sorted(glob.glob(os.path.join(target, f"fy={part}", "*.parquet"))):
-            with open(p, "rb") as fh:
-                out[p] = hashlib.sha256(fh.read()).hexdigest()
-        return out
-
-    before_2024 = _files("2024")
-    upd = spark.createDataFrame(
-        [("2023", "k2", 99), ("2023", "k9", 7)], "fy string, k string, v int"
-    )
-    sinks.merge_upsert(upd, target, ["k"], partition_col="fy")
-    got = sorted(
-        (r["fy"], r["k"], r["v"]) for r in spark.read.parquet(target).collect()
-    )
+        [("2023", "k1", 1), ("2023", "k2", 2), ("2024", "k3", 3)], schema)
+    v1 = sinks.merge_upsert(base, target, ["k"], partition_col="fy")
+    upd = spark.createDataFrame([("2023", "k2", 99), ("2023", "k9", 7)], schema)
+    v2 = sinks.merge_upsert(upd, target, ["k"], partition_col="fy")
+    got = sorted(tuple(r) for r in txn.read(spark, target).collect())
     assert got == [
         ("2023", "k1", 1),
         ("2023", "k2", 99),
         ("2023", "k9", 7),
         ("2024", "k3", 3),
     ]
-    assert _files("2024") == before_2024, "untouched partition was rewritten"
-
-
-def test_append_missing_keeps_existing_files(spark, tmp_path):
-    """Insert-only append must not rewrite existing parquet files."""
-    import glob
-    import hashlib
-    import os
-
-    target = str(tmp_path / "items2")
-    sinks.append_missing(_df(spark, [("E1", "A")]), target, "edinet_code")
-    before = {
-        p: hashlib.sha256(open(p, "rb").read()).hexdigest()
-        for p in glob.glob(os.path.join(target, "*.parquet"))
-    }
-    sinks.append_missing(_df(spark, [("E2", "B")]), target, "edinet_code")
-    after = {
-        p: hashlib.sha256(open(p, "rb").read()).hexdigest()
-        for p in glob.glob(os.path.join(target, "*.parquet"))
-    }
-    assert set(before) <= set(after)
-    for p, h in before.items():
-        assert after[p] == h, f"existing file {p} was rewritten"
-    got = {r["edinet_code"]: r["company_name"] for r in spark.read.parquet(target).collect()}
-    assert got == {"E1": "A", "E2": "B"}
-
-
-def test_replace_partition(spark, tmp_path):
-    target = str(tmp_path / "facts")
-    base = spark.createDataFrame(
-        [("2023", 1), ("2023", 2), ("2024", 3)], "fiscal_year string, v int"
-    )
-    sinks.write_table(base, target, partition_by=["fiscal_year"])
-    # reload only fiscal_year=2023 (the roadmap's delete-then-insert)
-    upd = spark.createDataFrame([("2023", 9)], "fiscal_year string, v int")
-    sinks.replace_partition(upd, target, "fiscal_year")
-    got = sorted(
-        (r["fiscal_year"], r["v"]) for r in spark.read.parquet(target).collect()
-    )
-    assert got == [("2023", 9), ("2024", 3)]
+    untouched = [f for f in v1.files if f["partition"] == {"fy": "2024"}]
+    assert untouched and all(f in v2.files for f in untouched)
+    rewritten = [f for f in v1.files if f["partition"] == {"fy": "2023"}]
+    assert rewritten and not any(f in v2.files for f in rewritten)
 
 
 def test_partitioned_merge_upsert_into_empty_target(spark, tmp_path):
@@ -227,21 +192,21 @@ def test_partitioned_merge_upsert_into_empty_target(spark, tmp_path):
     its first write, so the partition-scoped merges that follow find the
     same layout; the second merge replaces keys in the partitions it
     touches and leaves the others' rows in place."""
-    import os as _os
-
     target = str(tmp_path / "facts")
     schema = "report_id int, fy string, v int"
+
+    def layout(snap):
+        return snap.partition_by, sorted({f["partition"]["fy"] for f in snap.files})
+
     first = spark.createDataFrame([(1, "2023", 10), (2, "2024", 20)], schema)
-    sinks.merge_upsert(first, target, ["report_id"], partition_col="fy")
-    layout = sorted(e for e in _os.listdir(target) if not e.startswith(("_", ".")))
-    assert layout == ["fy=2023", "fy=2024"]
+    snap = sinks.merge_upsert(first, target, ["report_id"], partition_col="fy")
+    assert layout(snap) == ("fy", ["2023", "2024"])
 
     second = spark.createDataFrame([(1, "2023", 11), (3, "2023", 30)], schema)
-    sinks.merge_upsert(second, target, ["report_id"], partition_col="fy")
-    layout = sorted(e for e in _os.listdir(target) if not e.startswith(("_", ".")))
-    assert layout == ["fy=2023", "fy=2024"]
-    got = sorted(tuple(r) for r in spark.read.parquet(target).collect())
-    assert got == [(1, 11, "2023"), (2, 20, "2024"), (3, 30, "2023")]
+    snap = sinks.merge_upsert(second, target, ["report_id"], partition_col="fy")
+    assert layout(snap) == ("fy", ["2023", "2024"])
+    got = sorted(tuple(r) for r in txn.read(spark, target).collect())
+    assert got == [(1, "2023", 11), (2, "2024", 20), (3, "2023", 30)]
 
 
 # ---------------------------------------------------------------------------

@@ -35,6 +35,7 @@ from concurrent.futures import ThreadPoolExecutor
 import pytest
 
 from ir_analyses_spark.etl import pipeline
+from ir_analyses_spark.io import txn
 from ir_analyses_spark.queries import summary as summary_q
 from ir_analyses_spark.schemas import RAW_JP_COLUMNS
 
@@ -327,7 +328,8 @@ def test_companies_snapshot_equals_the_companies_table(spark, tmp_path):
     ])
     silver = str(tmp_path / "silver")
     got = pipeline.read_silver(spark, silver)["companies"]
-    want = spark.read.parquet(f"{silver}/companies")
+    version = pipeline._pinned(silver)["tables"]["companies"]
+    want = txn.read(spark, f"{silver}/companies", at_version=version)
     assert got.schema == want.schema
     assert sorted(got.collect()) == sorted(want.collect())
 

@@ -1,6 +1,6 @@
-"""Transaction-log table format (io/txn.py): the properties the bare
-staged-swap sinks document as their residuals, proven positively here —
-no no-target window, snapshot isolation under concurrent commits, atomic
+"""Transaction-log table format (io/txn.py): the properties a bare
+staged-swap directory lacks, proven positively here — no no-target
+window, snapshot isolation under concurrent commits, atomic
 multi-partition batch application, optimistic concurrency, retention.
 """
 
@@ -104,6 +104,35 @@ def test_merge_upsert_semantics_and_partition_file_pruning(spark, tmp_path):
     # manifest-level pruned read hands Spark only matching files
     only_b = txn.read(spark, t, partition_values={"day": ["b"]})
     assert _rows(only_b) == [(3, "b", 30)]
+
+
+def test_merge_upsert_replace_empties_a_partition_then_the_table(spark, tmp_path):
+    """``replace`` names parent keys whose rows all go before the updates
+    land: a parent reloaded with fewer child rows keeps none of its old
+    ones, a parent reloaded with none empties its partition — which then
+    has no file in the manifest — and emptying every parent leaves a
+    readable empty table."""
+    t = str(tmp_path / "t")
+    cols = ("parent", "day", "child")
+    base = _mk(spark, [(1, "a", 10), (1, "a", 11), (2, "b", 20)], cols)
+    txn.merge_upsert(base, t, keys=["parent"], partition_col="day")
+
+    def reload(rows, parents):
+        return txn.merge_upsert(
+            _mk(spark, rows, cols) if rows else spark.createDataFrame([], base.schema),
+            t, keys=["parent"], partition_col="day",
+            replace=_mk(spark, parents, ("parent", "day")),
+        )
+
+    reload([(1, "a", 12)], [(1, "a")])
+    assert _rows(txn.read(spark, t)) == [(1, "a", 12), (2, "b", 20)]
+    snap = reload([], [(1, "a")])
+    assert {f["partition"]["day"] for f in snap.files} == {"b"}
+    assert _rows(txn.read(spark, t)) == [(2, "b", 20)]
+    snap = reload([], [(2, "b")])
+    assert snap.files == []
+    empty = txn.read(spark, t)
+    assert empty.columns == list(cols) and empty.count() == 0
 
 
 def test_additive_merge_exactly_once_replay_and_atomic_ledger(spark, tmp_path):
@@ -791,12 +820,11 @@ def test_datasource_stream_writer_exactly_once(spark, tmp_path):
     assert txn.snapshot(t).version == snap_before.version
 
 
-def test_datasource_batch_reader_partitioned_reinjection(spark, tmp_path):
+def test_datasource_batch_reader_partitioned_table(spark, tmp_path):
     """Partitioned txn tables through spark.read.format('txn_table'): the
-    hive-layout files drop the partition column, so the reader must
-    re-inject each file's manifest partition value as a constant column
-    CAST to the declared type (bigint here — a string leak would flip the
-    schema), agreeing with txn.read row-for-row."""
+    files keep the partition column, so the reader returns it with its
+    declared type (bigint here — a string from the directory names would
+    flip the schema), agreeing with txn.read row-for-row."""
     from ir_analyses_spark.io.txn_stream import TxnTableStreamDataSource
 
     spark.dataSource.register(TxnTableStreamDataSource)
@@ -970,6 +998,25 @@ def test_stream_reader_null_fills_pre_evolution_files(spark, tmp_path):
         (r["k"], r["w"]) for r in spark.read.parquet(out).collect()
     }
     assert rows == {(1, None), (2, None), (3, 7)}
+
+
+def test_stream_reader_tails_a_partitioned_table(spark, tmp_path):
+    """Partitioned txn files hold whole rows, so the stream reader serves
+    a partitioned table's appends, the partition column (NULL included)
+    read from the files themselves."""
+    from ir_analyses_spark.io.txn_stream import TxnTableStreamReader
+
+    t = str(tmp_path / "t")
+    txn.overwrite(_mk(spark, [(1, "a", 10)]), t, partition_by="day")
+    txn.append(_mk(spark, [(2, "b", 20), (3, None, 30)]), t, partition_by="day")
+    r = TxnTableStreamReader({"path": t})
+    rows = [
+        tuple(row.values())
+        for p in r.partitions({"version": 1}, r.latestOffset())
+        for batch in r.read(p)
+        for row in batch.to_pylist()
+    ]
+    assert sorted(rows, key=str) == [(2, "b", 20), (3, None, 30)]
 
 
 def test_history_distinguishes_vacuum_truncation_from_lost_manifest(

@@ -1,7 +1,8 @@
 """Model-based check of the transaction-log table format: random
-sequences of overwrite / append / merge_upsert commits must keep the
-table's read equal to a trivial in-memory list model after EVERY commit,
-and historical versions must stay re-readable until vacuumed. Catches
+sequences of overwrite / append / merge_upsert (keyed, or replacing by
+parent key) commits must keep the table's read equal to a trivial
+in-memory list model after EVERY commit, and historical versions must
+stay re-readable until vacuumed. Catches
 whole classes of manifest-bookkeeping bugs (dropped carry-over files,
 stale schema, wrong partition pruning in merges) that example tests can
 only sample."""
@@ -34,18 +35,26 @@ _MERGE_ROWS = _ROWS.map(
     ]
 )
 
+# replace-by-parent: k is the parent key, the updates may hold several
+# rows per parent (or none), and every row of a replaced parent goes
+_REPLACE = st.tuples(st.lists(_KEYS, max_size=3), st.lists(_ROW, max_size=6))
+
 _OP = st.one_of(
     st.tuples(st.just("overwrite"), _ROWS),
     st.tuples(st.just("append"), _ROWS),
     st.tuples(st.just("merge"), _MERGE_ROWS),
+    st.tuples(st.just("replace"), _REPLACE),
 )
 
 
-def _apply_model(model: list, op: str, rows: list) -> list:
+def _apply_model(model: list, op: str, rows) -> list:
     if op == "overwrite":
         return list(rows)
     if op == "append":
         return model + list(rows)
+    if op == "replace":
+        parents, rows = rows
+        return [r for r in model if r[0] not in parents] + list(rows)
     upd_keys = {r[0] for r in rows}
     return [r for r in model if r[0] not in upd_keys] + list(rows)
 
@@ -64,7 +73,14 @@ def test_random_commit_sequences_match_list_model(spark, ops, data):
         model: list = []
         histories: list[tuple[int, Counter]] = []
         for op, rows in ops:
-            df = spark.createDataFrame(rows, ["k", "day", "v"])
+            replace = None
+            if op == "replace":
+                parents, upd = rows
+                replace = spark.createDataFrame(
+                    [(k, "abc"[k % 3]) for k in parents], "k long, day string")
+            else:
+                upd = rows
+            df = spark.createDataFrame(upd, "k long, day string, v long")
             # partitioned for merges (their day is key-derived); plain
             # layouts for the rest — exercises the mixed-layout paths
             if op == "overwrite":
@@ -82,6 +98,7 @@ def test_random_commit_sequences_match_list_model(spark, ops, data):
                     partition_col="day"
                     if first or txn.snapshot(table).partition_by
                     else None,
+                    replace=replace,
                 )
             model = _apply_model(model, op, rows)
             got = Counter(tuple(r) for r in txn.read(spark, table).collect())
