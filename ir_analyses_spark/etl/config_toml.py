@@ -1,5 +1,5 @@
-"""TOML config source: the XBRL element↔column mappings as editable
-operational config (S8 closure, r7 — VERDICT r6 item 4).
+"""TOML config source: the XBRL element↔column mappings and the curation
+settings as editable operational config (S8 closure).
 
 The reference keeps its XBRL mapping in ``config/config.toml`` and loads
 it through a path-fallback chain (reference utils/config_loader.py:12-60:
@@ -7,15 +7,11 @@ explicit path → ``<project_root>/config/config.toml`` resolved from the
 loader's own location → ``./config/config.toml``; unreadable candidates
 are logged and skipped; nothing found returns ``{}`` rather than
 raising). This module mirrors that contract on stdlib ``tomllib`` so an
-operator can edit the mapping without touching code, while
-``etl/conform.py``'s in-code dicts remain the defaults — semantics are
-identical when no file is present (the reference's own config.toml:35-49
-carries exactly those values, pinned by tests/test_config_toml.py).
-
-This module is deliberately separate from ``etl/conform.py``: conform's
-queries are driver-certified, and the ledger's staleness rule is
-module-granular (importing FROM a certified module is fine; adding to it
-is not).
+operator can edit the mapping without touching code. It only loads and
+validates: the CLIs hand the mappings to
+``conform.conform_all_with_mappings``, whose in-code defaults are the
+reference's own config.toml:35-49 values (pinned by
+tests/test_config_toml.py), so a missing file changes nothing.
 """
 
 from __future__ import annotations
@@ -24,7 +20,6 @@ import logging
 import os
 import tomllib
 
-from . import conform
 from .conform import XBRL_COMPANY_MAPPING, XBRL_REPORT_MAPPING
 
 logger = logging.getLogger(__name__)
@@ -69,13 +64,13 @@ def load_config(path: str | None = None) -> dict:
 
 
 def xbrl_mappings(config: dict | None = None) -> tuple[dict, dict]:
-    """(company_mapping, report_mapping) for ``conform_companies`` /
-    ``conform_reports``, from a loaded config's ``[xbrl_mapping.company]``
-    and ``[xbrl_mapping.financial_report]`` sections (reference
-    config.toml:35-49). A missing config or section yields the in-code
-    default; a PRESENT section is taken whole — the operator's edit is
-    the point: each key redirects which XBRL element feeds that silver
-    column. The conform functions' output schemas are fixed, so a
+    """(company_mapping, report_mapping) for
+    ``conform.conform_all_with_mappings``, from a loaded config's
+    ``[xbrl_mapping.company]`` and ``[xbrl_mapping.financial_report]``
+    sections (reference config.toml:35-49). A missing config or section
+    yields the in-code default; a PRESENT section is taken whole — the
+    operator's edit is the point: each key redirects which XBRL element
+    feeds that silver column. Conform's output schemas are fixed, so a
     section must keep all of its default's keys (dropping one fails at
     analysis time naming the missing column — the same loud contract as
     tests/test_etl_parity.py's missing-required-column pin). Non-string
@@ -107,11 +102,8 @@ def xbrl_mappings(config: dict | None = None) -> tuple[dict, dict]:
                 f"{type(mapping).__name__}"
             )
         if not mapping:
-            # present-but-empty would silently fall back to defaults
-            # downstream (conform's `mapping or DEFAULT` treats {} as
-            # absent) while dropping just ONE key fails loudly — the two
-            # shapes of the same operator mistake must not get opposite
-            # behavior (review-caught)
+            # present-but-empty is the same operator mistake as dropping
+            # one key, so it fails here as loudly as that one does
             raise ValueError(
                 f"[xbrl_mapping.{key}] is present but empty: delete the "
                 f"section to use the defaults, or list the full mapping"
@@ -124,34 +116,6 @@ def xbrl_mappings(config: dict | None = None) -> tuple[dict, dict]:
             )
         out.append(dict(mapping))
     return out[0], out[1]
-
-
-def conform_all_with_mappings(
-    std,
-    company_mapping: dict | None = None,
-    report_mapping: dict | None = None,
-    persist=None,
-) -> dict:
-    """``conform.conform_all`` with the TOML-loaded mappings injected.
-
-    With the mappings absent OR value-equal to the in-code defaults this
-    DELEGATES to ``conform_all`` — the CLIs always pass materialized
-    dicts from ``xbrl_mappings`` (the defaults when no file overrides
-    them), so delegation must key on VALUE, not None-ness.
-    A genuine override, or a ``persist`` for the cover frame (see
-    ``conform_mapped``), takes ``conform_mapped``, the same composition
-    with the given mappings, same bundle shape."""
-    defaults = company_mapping in (None, XBRL_COMPANY_MAPPING) and (
-        report_mapping in (None, XBRL_REPORT_MAPPING)
-    )
-    if defaults and persist is None:
-        return conform.conform_all(std)
-    return conform.conform_mapped(
-        std,
-        company_mapping or XBRL_COMPANY_MAPPING,
-        report_mapping or XBRL_REPORT_MAPPING,
-        persist,
-    )
 
 
 #: ``[curation]`` keys accepted by :func:`curation_settings`, mapped to

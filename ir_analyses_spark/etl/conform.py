@@ -111,17 +111,6 @@ def extract_cover_values(std: DataFrame, mapping: dict[str, str]) -> DataFrame:
     )
 
 
-def conform_companies(
-    std: DataFrame, mapping: dict[str, str] | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """(companies, rejects): company dim rows keyed by
-    ``xxhash64(edinet_code)``; filings missing required fields are
-    quarantined with the reference's error message shape
-    (reference utils/data_mapper.py:102-151)."""
-    cov = extract_cover_values(std, mapping or XBRL_COMPANY_MAPPING)
-    return _companies_from_cover(_with_company_id(cov))
-
-
 def _with_company_id(cov: DataFrame) -> DataFrame:
     """``cov`` plus ``_missing`` (the required company keys the filing
     lacks, comma-joined) and ``company_id`` (NULL when any is missing)."""
@@ -135,6 +124,10 @@ def _with_company_id(cov: DataFrame) -> DataFrame:
 
 
 def _companies_from_cover(cov: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(companies, rejects): company dim rows keyed by
+    ``xxhash64(edinet_code)``; filings missing required fields are
+    quarantined with the reference's error message shape
+    (reference utils/data_mapper.py:102-151)."""
     rejects = cov.filter("_missing != ''").selectExpr(
         FILING_ID, "concat('required keys missing: ', _missing) AS reason"
     )
@@ -146,30 +139,18 @@ def _companies_from_cover(cov: DataFrame) -> tuple[DataFrame, DataFrame]:
         "company_name",
         "current_timestamp() AS created_at",
         "current_timestamp() AS updated_at",
-        FILING_ID,
     )
     return companies, rejects
 
 
-def conform_reports(
-    std: DataFrame,
-    companies: DataFrame,
-    mapping: dict[str, str] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(reports, rejects): report dim with fiscal year/quarter parsed from
-    the cover-page period string (reference utils/data_mapper.py:213-283).
+def _reports_from_cover(cov: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(reports, rejects) from a cover frame carrying each filing's
+    ``company_id`` (NULL when its company was rejected or is missing):
+    the report dim with fiscal year/quarter parsed from the cover-page
+    period string (reference utils/data_mapper.py:213-283).
     ``report_id = xxhash64(company_id, fiscal_year, quarter_type)`` — the
     natural key the reference's roadmap says upserts *should* use
     (SURVEY §7.3.2)."""
-    cov = extract_cover_values(std, mapping or XBRL_REPORT_MAPPING).join(
-        companies.select(FILING_ID, "company_id"), FILING_ID, "left"
-    )
-    return _reports_from_cover(cov)
-
-
-def _reports_from_cover(cov: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Reports and their rejects from a cover frame carrying each filing's
-    ``company_id`` (NULL when its company was rejected or is missing)."""
     from .parsers import extract_fiscal_year, extract_quarter_type
 
     def to_date(c: str) -> str:
@@ -305,27 +286,29 @@ def conform_facts(std: DataFrame, reports: DataFrame) -> DataFrame:
     )
 
 
-def conform_all(std: DataFrame) -> dict[str, DataFrame]:
-    """Bronze → the full 4-table bundle + quarantines, one DAG — the
-    set-oriented ``map_data_to_models`` (reference
-    utils/data_mapper.py:335-348) generalized to many filings, with the
-    reference config's XBRL mappings."""
-    return conform_mapped(std, XBRL_COMPANY_MAPPING, XBRL_REPORT_MAPPING)
-
-
-def conform_mapped(
+def conform_all_with_mappings(
     std: DataFrame,
-    company_mapping: dict[str, str],
-    report_mapping: dict[str, str],
+    company_mapping: dict[str, str] | None = None,
+    report_mapping: dict[str, str] | None = None,
     persist=None,
 ) -> dict[str, DataFrame]:
-    """``conform_all`` with explicit XBRL mappings. One cover aggregate
-    feeds both dims, and each filing's report takes its ``company_id``
-    from the same row: no join between the two. A key names one silver
-    column, so the two mappings may not share one. ``persist``, when
-    given, is applied to that per-filing cover frame before the dims,
-    quarantines and facts read it (a load passes its materialization, so
-    the aggregate runs once)."""
+    """Bronze → the full 4-table bundle + quarantines, one DAG — the
+    set-oriented ``map_data_to_models`` (reference
+    utils/data_mapper.py:335-348) generalized to many filings.
+
+    The XBRL mappings default to the reference config's
+    (``XBRL_COMPANY_MAPPING`` / ``XBRL_REPORT_MAPPING``); the CLIs pass
+    the ones ``etl/config_toml.py`` loads. One cover aggregate feeds both
+    dims, and each filing's report takes its ``company_id`` from the same
+    row: no join between the two. A key names one silver column, so the
+    two mappings may not share one. ``persist``, when given, is applied to
+    that per-filing cover frame before the dims, quarantines and facts
+    read it (a load passes its materialization, so the aggregate runs
+    once)."""
+    if company_mapping is None:
+        company_mapping = XBRL_COMPANY_MAPPING
+    if report_mapping is None:
+        report_mapping = XBRL_REPORT_MAPPING
     shared = set(company_mapping) & set(report_mapping)
     if shared:
         raise ValueError(f"company and report mappings share keys {sorted(shared)}")
@@ -337,7 +320,7 @@ def conform_mapped(
     companies, company_rejects = _companies_from_cover(cov)
     reports, report_rejects = _reports_from_cover(cov)
     return {
-        "companies": companies.drop(FILING_ID),
+        "companies": companies,
         "reports": reports.drop(FILING_ID),
         "items": conform_items(std),
         "facts": conform_facts(std, reports),

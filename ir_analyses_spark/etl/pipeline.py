@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..io import sinks, txn
 from ..io.sources import read_filing_csvs
 from ..queries.summary import company_summary, report_measures
-from .config_toml import conform_all_with_mappings
+from .conform import conform_all_with_mappings
 from .standardize import standardize_raw
 
 

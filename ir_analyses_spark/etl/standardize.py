@@ -21,13 +21,8 @@ Parity notes:
   "first matching row" rule downstream (conform.extract_cover_values)
   orders by it, making the reference's ``iloc[0]`` deterministic
   (SURVEY §7.3.4). ``monotonically_increasing_id`` is sequential WITHIN a
-  scan split but Spark orders splits by bin-packed size, not source order
-  — so the guarantee holds iff each filing lands in one split. That
-  precondition is enforced at the read edge: ``sources.read_filing_csvs``
-  routes any file that could possibly split — larger than
-  ``min(maxPartitionBytes, openCostInBytes)``, the only size bound that
-  holds regardless of cluster shape (``sources._no_split_limit``) —
-  through a non-splittable ``multiLine`` scan group.
+  scan split, and ``sources.read_filing_csvs`` reads every file whole, as
+  one split, so the order holds for every filing by construction.
 """
 
 from __future__ import annotations

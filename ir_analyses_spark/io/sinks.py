@@ -92,9 +92,9 @@ def append_missing(
 
     Insert-only means no existing row changes, so the commit adds new
     files and carries every existing file over (O(new rows), not
-    O(table)). Only the key columns of the target are read. One load
-    writes a table at a time: two concurrent appends of one new key would
-    both land."""
+    O(table)); a batch with no new key commits nothing. Only the key
+    columns of the target are read. One load writes a table at a time:
+    two concurrent appends of one new key would both land."""
     keys = [key] if isinstance(key, str) else list(key)
     if txn.snapshot(target_dir).schema_json is not None:
         existing = txn.read(new_rows.sparkSession, target_dir).select(*keys)

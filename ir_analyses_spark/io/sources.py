@@ -6,10 +6,10 @@ loop (reference scripts/bypass_import_csv.py:56-72). Here the same inputs are
 scanned by Spark itself; the only driver-side work is the encoding pre-pass,
 because a CSV scan needs its charset up front.
 
-Scale posture: a single ``spark.read.csv`` over a glob fans out across the
-cluster; per-file lineage comes from ``input_file_name()``, not a loop. Files
-whose sniffed encoding differs from the majority are read in per-encoding
-groups (one Spark job per charset, still fully parallel within each).
+Scale posture: one ``spark.read.csv`` per sniffed charset fans out across
+the cluster, one task per file or per pack of small files; per-file lineage
+comes from ``input_file_name()``, not a loop. Every file is read whole, so a
+file is never split across tasks, however large.
 """
 
 from __future__ import annotations
@@ -131,104 +131,54 @@ _BOMS = [
 ]
 
 
-def sniff_encoding(path: str, sample_bytes: int = 64 * 1024) -> str:
-    """Detect a file's charset from its first bytes.
+def sniff_encoding(path: str) -> str:
+    """Detect a file's charset from its first 64 KiB: a BOM names it;
+    otherwise a sample that decodes as UTF-8 is UTF-8, and anything else
+    is ``MS932``.
 
-    BOM first; then chardet when importable; then a UTF-8/CP932 decode probe.
-    Mirrors the reference's chardet sniff (reference utils/api.py:129-133)
-    without requiring chardet to be installed.
-    """
+    ``MS932`` is Microsoft's code page 932 in both Java and Python, the
+    code page the reference's pandas reader decodes Japanese filings with
+    (reference utils/api.py:129-137). Java's ``CP932``/``Shift_JIS`` are
+    other code pages: they read the ``－`` placeholder (0x817C) as U+2212,
+    which the standardize strip then misses, and they lack the NEC/IBM
+    extensions (``髙``, ``①``, ``㈱``)."""
     with open(path, "rb") as f:
-        head = f.read(sample_bytes)
+        head = f.read(64 * 1024)
     for bom, enc in _BOMS:
         if head.startswith(bom):
             return enc
-    try:
-        import chardet  # type: ignore
-
-        guess = chardet.detect(head)
-        if guess and guess.get("encoding"):
-            enc = guess["encoding"].upper()
-            # chardet reports ascii subsets; widen to their supersets
-            if enc in ("ASCII",):
-                return "UTF-8"
-            return enc
-    except ImportError:
-        pass
     # A fixed-size sample can cut a multibyte sequence at its end; a strict
     # decode would then misclassify valid UTF-8 (CJK text hits this with
-    # ~2/3 probability at any cut point) as CP932 and the permissive scan
+    # ~2/3 probability at any cut point) as MS932 and the permissive scan
     # would silently ship mojibake. An incremental decoder treats a
     # trailing partial sequence as "awaiting more bytes", not an error.
     try:
         codecs.getincrementaldecoder("utf-8")().decode(head, final=False)
         return "UTF-8"
     except UnicodeDecodeError:
-        return "CP932"  # Shift-JIS superset used by Japanese filings
-
-
-_SIZE_UNITS = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40,
-               "p": 1 << 50}
-
-
-def _parse_bytes(raw: str) -> int:
-    """Spark byte-string forms ("134217728b", "128m", "128MB") as an int;
-    unparseable degrades to 0 (callers treat 0 as 'assume splittable')."""
-    s = str(raw).strip().lower()
-    num = s.rstrip("kmgtpib")
-    suffix = s[len(num):].lstrip("i")  # "mb"→"m" handled below, "mib"→"m"
-    try:
-        value = int(num)
-    except ValueError:
-        return 0
-    return value * _SIZE_UNITS.get(suffix[:1] or "b", 1)
-
-
-def _no_split_limit(spark: SparkSession) -> int:
-    """The size at or below which a file can NEVER be split by the scan.
-
-    Spark's actual split size is ``maxSplitBytes = min(maxPartitionBytes,
-    max(openCostInBytes, bytesPerCore))`` where ``bytesPerCore`` depends on
-    the TOTAL scan size and parallelism at plan time — so a file well under
-    maxPartitionBytes can still split when the job has many cores and
-    little data (bytesPerCore small → maxSplitBytes collapses to
-    openCostInBytes). The only size-based guarantee that holds regardless
-    of cluster shape is ``size <= min(maxPartitionBytes, openCostInBytes)``
-    — use THAT as the no-split threshold for the within-filing row-order
-    contract, never maxPartitionBytes alone. Unparseable confs degrade to
-    0, routing every file through the order-safe non-splittable path."""
-    mpb = _parse_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-    )
-    open_cost = _parse_bytes(
-        spark.conf.get("spark.sql.files.openCostInBytes", "4194304b")
-    )
-    return min(mpb, open_cost)
+        return "MS932"
 
 
 def read_filing_csvs(
-    spark: SparkSession,
-    paths_or_glob: str | list[str],
-    delimiter: str = "\t",
+    spark: SparkSession, paths_or_glob: str | list[str]
 ) -> DataFrame:
-    """Scan XBRL→CSV filing exports into one raw DataFrame (S1/S2/S3).
+    """Scan XBRL→CSV filing exports (tab-separated) into one raw
+    DataFrame (S1/S2/S3).
 
-    Accepts a glob (``download/**/*.csv``) or explicit paths. Groups files by
-    sniffed encoding and unions one declarative scan per charset; each scan
-    carries ``_filing_path`` lineage via ``input_file_name()`` so downstream
-    conformance can treat "one filing" as a group without a per-file loop.
+    Accepts a glob (``download/**/*.csv``) or explicit paths. Files are
+    grouped by sniffed charset, and each group is one declarative scan
+    that reads every file whole (``multiLine``), as the reference's pandas
+    reader does; the scans are unioned. Each carries ``_filing_path``
+    lineage via ``input_file_name()``, so downstream conformance can treat
+    "one filing" as a group without a per-file loop.
 
-    Ordering contract (feeds ``standardize.ROW_SEQ``): downstream
-    "last/first source row wins" rules need within-filing source order, and
-    ``monotonically_increasing_id`` only preserves it when each file lands
-    in ONE scan split (Spark bin-packs splits by size, not source order).
-    A file can only possibly split when it exceeds
-    ``min(maxPartitionBytes, openCostInBytes)`` (``_no_split_limit`` — the
-    bound that holds on ANY cluster shape; Spark's actual split size also
-    depends on total-bytes-per-core at plan time), so any such file is
-    routed into a separate ``multiLine`` scan group — the multi-line CSV
-    parser reads whole files and is non-splittable, trading split
-    parallelism (only for those files) for an intrinsic order guarantee.
+    Reading whole files means the CSV parser, not a byte-level line split,
+    finds the records: a quoted value may hold a line break, and the
+    parser recognises LF and CRLF line ends in every charset, UTF-16
+    included. It also makes the ordering contract that
+    ``standardize.ROW_SEQ`` relies on hold for every file: a whole-file
+    scan never splits a file, so each filing's rows come out of one task
+    in source order.
     """
     if isinstance(paths_or_glob, str):
         paths = sorted(glob(paths_or_glob, recursive=True))
@@ -239,40 +189,18 @@ def read_filing_csvs(
             "_filing_path", F.lit(None).cast("string")
         )
 
-    # Group by (charset, lineSep, splittable): Spark's CSV reader splits
-    # lines on raw bytes, so multi-byte charsets (the UTF-16 EDINET exports)
-    # need the line separator stated explicitly or every record lands on one
-    # line. Files that could possibly be split (> the conservative no-split
-    # bound, see _no_split_limit) go to a non-splittable multiLine group so
-    # within-file order survives (docstring ordering contract).
-    split_limit = _no_split_limit(spark)
-    by_enc: dict[tuple[str, str | None, bool], list[str]] = defaultdict(list)
+    by_enc: dict[str, list[str]] = defaultdict(list)
     for p in paths:
-        enc = sniff_encoding(p)
-        lsep = None
-        if enc.upper().startswith("UTF-16"):
-            with open(p, "rb") as f:
-                head = f.read(64 * 1024)
-            codec = "utf-16-le" if enc.upper().endswith("LE") else "utf-16-be"
-            text = head.decode(codec, errors="ignore")
-            lsep = "\r\n" if "\r\n" in text else "\n"
-        splittable = os.path.getsize(p) <= split_limit
-        by_enc[(enc, lsep, splittable)].append(p)
+        by_enc[sniff_encoding(p)].append(p)
 
-    scans = []
-    for (enc, lsep, splittable), group in sorted(by_enc.items(), key=str):
-        opts = {"sep": delimiter, "header": True, "encoding": enc,
-                "mode": "PERMISSIVE"}
-        if lsep is not None:
-            opts["lineSep"] = lsep
-        if not splittable:
-            opts["multiLine"] = True
-        scans.append(
-            spark.read.schema(RAW_FILING_SCHEMA)
-            .options(**opts)
-            .csv(group)
-            .withColumn("_filing_path", F.input_file_name())
-        )
+    scans = [
+        spark.read.schema(RAW_FILING_SCHEMA)
+        .options(sep="\t", header=True, encoding=enc, mode="PERMISSIVE",
+                 multiLine=True)
+        .csv(group)
+        .withColumn("_filing_path", F.input_file_name())
+        for enc, group in sorted(by_enc.items())
+    ]
     out = scans[0]
     for s in scans[1:]:
         out = out.unionByName(s)

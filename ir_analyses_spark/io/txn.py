@@ -318,9 +318,12 @@ def _write_data(
 ) -> tuple[list[dict], str]:
     """Write ``df``'s files under a fresh commit directory and return
     their manifest entries. Invisible to every reader until a manifest
-    that names them is published. With ``stats_cols``, each entry carries
-    per-file [min, max] harvested from the parquet footer — the basis of
-    manifest-level file SKIPPING on read (Delta's data-skipping stats)."""
+    that names them is published. A file whose footer counts no row is
+    deleted, not entered: Spark writes one for an empty unpartitioned
+    write, and it would add a file to every later read. With
+    ``stats_cols``, each entry carries per-file [min, max] harvested from
+    the parquet footer — the basis of manifest-level file SKIPPING on
+    read (Delta's data-skipping stats)."""
     commit_id = uuid.uuid4().hex
     rel_dir = os.path.join(_DATA_DIR, commit_id)
     out_dir = os.path.join(table, rel_dir)
@@ -357,6 +360,9 @@ def _write_data(
                 entry["rows"] = pq.ParquetFile(full).metadata.num_rows
             except Exception:
                 pass
+            if entry.get("rows") == 0:
+                os.remove(full)
+                continue
             if stats_cols:
                 stats = _footer_stats(full, stats_cols)
                 if stats:
@@ -611,7 +617,8 @@ def append(
 ) -> Snapshot:
     """Append: next manifest = prior files + this commit's files. The data
     job runs once; only the (cheap) manifest build re-runs on a lost
-    race, so two concurrent appends both land.
+    race, so two concurrent appends both land. An append of no rows to an
+    existing table publishes no version and returns the current snapshot.
 
     ``merge_schema=True`` allows the append to ADD columns (Delta's
     mergeSchema): the manifest schema widens to the union, and readers
@@ -656,6 +663,8 @@ def append(
                     "append schema mismatch (extra or missing columns); "
                     "pass merge_schema=True to add columns"
                 )
+        if not entries and out_schema == snap.schema_json:
+            return None  # nothing to add: the table stays at its version
         return {
             "version": snap.version + 1,
             "schema": out_schema,

@@ -61,7 +61,7 @@ def ir_summary_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     std = standardize.standardize_raw(raw, filing_id_col="filing_id")
-    bundle = conform.conform_all(std)
+    bundle = conform.conform_all_with_mappings(std)
     companies = bundle["companies"].dropDuplicates(["company_id"])
     return summary_q.financial_summary(
         companies, bundle["reports"], bundle["facts"], bundle["items"]

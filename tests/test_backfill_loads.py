@@ -110,6 +110,17 @@ def test_rerun_of_last_load_changes_no_count(spark, tmp_path):
     assert _counts(spark, tmp_path) == counts
 
 
+def test_loads_without_new_items_add_no_item_file_or_version(spark, tmp_path):
+    """An item append with no new key commits nothing: three loads of one
+    filing leave ``financial_items`` with the first load's one file."""
+    for _ in range(3):
+        _load(spark, tmp_path, "q1", [("E00001", 1)])
+    items = txn.snapshot(str(tmp_path / "silver" / "financial_items"))
+    assert (items.version, len(items.files)) == (1, 1)
+    assert [f["rows"] for f in items.files] == [N_MEASURES]
+    assert _counts(spark, tmp_path)["items"] == N_MEASURES
+
+
 def test_reloaded_report_keeps_none_of_its_old_facts(spark, tmp_path):
     """A report reloaded from a filing with fewer financial rows, or none,
     loses the rows it no longer has, also when that leaves its fiscal_year
@@ -232,7 +243,8 @@ def test_a_load_failing_at_any_publish_leaves_the_previous_silver(
     """Make each publish of a load fail in turn: the four table commits,
     then the silver version record. After each failure ``read_silver``
     returns the previous silver version in full, and re-running the load
-    converges. Each load reloads the Q2 report with one more fact row."""
+    converges. Each load reloads the Q2 report with one more fact row, a
+    new item, so that every load publishes all five."""
     silver = str(tmp_path / "silver")
     order = [os.path.join(silver, name) for name in
              ("financial_items", "financial_reports", "financial_data", "companies")]
@@ -240,7 +252,7 @@ def test_a_load_failing_at_any_publish_leaves_the_previous_silver(
     _load(spark, tmp_path, "q1", [("E00001", 1)])
     real_publish = txn._publish
     for failing in range(5):
-        n_measures = failing + 1
+        n_measures = N_MEASURES + failing + 1
         batch = [("E00001", 2, n_measures)]
         calls = []
 
@@ -262,7 +274,7 @@ def test_a_load_failing_at_any_publish_leaves_the_previous_silver(
         assert _facts_per_report(spark, tmp_path) == {
             ("E00001", "Q1"): N_MEASURES, ("E00001", "Q2"): n_measures}
         assert _counts(spark, tmp_path) == {
-            "companies": 1, "items": max(N_MEASURES, n_measures),
+            "companies": 1, "items": n_measures,
             "reports": 2, "facts": N_MEASURES + n_measures}
         quarters = [r["quarter_type"] for r in financial_summary(
             **pipeline.read_silver(spark, silver), edinet_code="E00001").collect()]

@@ -52,8 +52,8 @@ def test_repo_default_config_parity_and_fallback_chain(tmp_path):
 
 
 def test_toml_mapping_drives_identical_conform_output(spark):
-    """End-to-end parity: conform_companies/conform_reports under the
-    reference-TOML-loaded mapping produce bit-identical rows to the
+    """End-to-end parity: conform under the reference-TOML-loaded
+    mappings produces bit-identical company and report rows to the
     default dicts."""
     if not os.path.exists(_REFERENCE_TOML):
         pytest.skip("reference checkout not present")
@@ -70,12 +70,10 @@ def test_toml_mapping_drives_identical_conform_output(spark):
         return sorted(map(tuple, df.drop(*drop).collect()))
 
     company_map, report_map = xbrl_mappings(load_config(_REFERENCE_TOML))
-    companies_toml, _ = conform.conform_companies(std, company_map)
-    companies_dflt, _ = conform.conform_companies(std)
-    assert rows_of(companies_toml) == rows_of(companies_dflt)
-    reports_toml, _ = conform.conform_reports(std, companies_toml, report_map)
-    reports_dflt, _ = conform.conform_reports(std, companies_dflt)
-    assert rows_of(reports_toml) == rows_of(reports_dflt)
+    toml = conform.conform_all_with_mappings(std, company_map, report_map)
+    dflt = conform.conform_all_with_mappings(std)
+    assert rows_of(toml["companies"]) == rows_of(dflt["companies"])
+    assert rows_of(toml["reports"]) == rows_of(dflt["reports"])
 
 
 def test_operator_edit_changes_extraction(spark, tmp_path):
@@ -98,8 +96,8 @@ def test_operator_edit_changes_extraction(spark, tmp_path):
     rows.append(("jpdei_cor:FilerNameInJapaneseDEI", "項目",
                  "FilingDateInstant", "提出日時点", "その他", "時点",
                  "－", "－", "別名株式会社"))
-    companies, _ = conform.conform_companies(_std(spark, rows), company_map)
-    assert companies.first()["company_name"] == "別名株式会社"
+    bundle = conform.conform_all_with_mappings(_std(spark, rows), company_map)
+    assert bundle["companies"].first()["company_name"] == "別名株式会社"
 
     cfg.write_text("[xbrl_mapping.company]\nedinet_code = 7\n")
     with pytest.raises(ValueError, match="element-id strings"):
@@ -119,39 +117,13 @@ def test_malformed_sections_rejected_loudly(tmp_path):
 
 
 def test_empty_present_section_rejected(tmp_path):
-    """Review-caught: conform's `mapping or DEFAULT` treats {} as absent,
-    so a present-but-empty section would silently apply defaults while
-    dropping one key fails loudly — same operator mistake, opposite
-    behavior. Reject the empty section at load."""
+    """A present-but-empty section is the same operator mistake as a
+    section that drops one key, which fails loudly: reject it at load
+    too, rather than let it stand for the defaults."""
     cfg = tmp_path / "config.toml"
     cfg.write_text("[xbrl_mapping.company]\n")
     with pytest.raises(ValueError, match="present but empty"):
         xbrl_mappings(load_config(str(cfg)))
-
-
-def test_default_mappings_delegate_to_conform_all(spark, monkeypatch):
-    """Review-caught: the CLIs always pass materialized dicts, so
-    delegation keys on VALUE — defaults (from any source) must share
-    conform_all's composition; only a genuine override takes the
-    explicit path."""
-    from ir_analyses_spark.etl import config_toml
-
-    calls = []
-    real = conform.conform_all
-    monkeypatch.setattr(
-        conform, "conform_all", lambda std: calls.append(1) or real(std)
-    )
-    std = _std(
-        spark,
-        _filing("2", "第10期 第2四半期(自 2023年4月1日 至 2023年6月30日)",
-                "1", "1", "1", "1", "jppfs_cor:NetSales"),
-    )
-    company_map, report_map = xbrl_mappings({})  # materialized defaults
-    config_toml.conform_all_with_mappings(std, company_map, report_map)
-    assert calls == [1]  # value-equal defaults delegated
-    override = dict(company_map, company_name="jpdei_cor:FilerNameInJapaneseDEI")
-    config_toml.conform_all_with_mappings(std, override, report_map)
-    assert calls == [1]  # the override did NOT delegate
 
 
 def test_mappings_sharing_a_key_rejected():
@@ -161,4 +133,4 @@ def test_mappings_sharing_a_key_rejected():
     company_map, report_map = xbrl_mappings({})
     clash = dict(company_map, document_type="jpdei_cor:FilerNameInJapaneseDEI")
     with pytest.raises(ValueError, match="document_type"):
-        conform.conform_mapped(None, clash, report_map)
+        conform.conform_all_with_mappings(None, clash, report_map)

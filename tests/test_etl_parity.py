@@ -163,9 +163,9 @@ def _std(spark, rows, filing="F1"):
 
 def test_company_mapping_golden(spark):
     std = _std(spark, COVER_ROWS)
-    companies, rejects = conform.conform_companies(std)
-    assert rejects.count() == 0
-    c = companies.first()
+    bundle = conform.conform_all_with_mappings(std)
+    assert bundle["company_rejects"].count() == 0
+    c = bundle["companies"].first()
     assert c["edinet_code"] == "E03562"
     assert c["company_name"] == "株式会社　山梨中央銀行"
     assert c["security_code"] == "83600"   # numeric → str(int(v))
@@ -175,9 +175,9 @@ def test_company_mapping_golden(spark):
 
 def test_company_mapping_missing_required(spark):
     rows = [r for r in COVER_ROWS if "EDINETCode" not in r[0]]
-    companies, rejects = conform.conform_companies(_std(spark, rows))
-    assert companies.count() == 0
-    rej = rejects.first()
+    bundle = conform.conform_all_with_mappings(_std(spark, rows))
+    assert bundle["companies"].count() == 0
+    rej = bundle["company_rejects"].first()
     assert "edinet_code" in rej["reason"]
 
 
@@ -186,9 +186,9 @@ def test_company_mapping_elementless_filing_quarantined(spark):
     the rejects (the reference raises ValueError for it) — not silently
     vanish from both tables and quarantine."""
     rows = [row("jppfs_cor:NetSales", value="100")]  # no cover elements
-    companies, rejects = conform.conform_companies(_std(spark, rows))
-    assert companies.count() == 0
-    rej = rejects.first()
+    bundle = conform.conform_all_with_mappings(_std(spark, rows))
+    assert bundle["companies"].count() == 0
+    rej = bundle["company_rejects"].first()
     assert rej is not None and "required keys missing" in rej["reason"]
 
 
@@ -196,17 +196,15 @@ def test_report_of_rejected_company_quarantined(spark):
     """A filing rejected at the company stage must land a report_rejects
     row instead of being dropped by the inner join to companies."""
     rows = [r for r in COVER_ROWS if "EDINETCode" not in r[0]]
-    std = _std(spark, rows)
-    companies, company_rejects = conform.conform_companies(std)
-    assert company_rejects.count() == 1
-    reports, report_rejects = conform.conform_reports(std, companies)
-    assert reports.count() == 0
-    reasons = [r["reason"] for r in report_rejects.collect()]
+    bundle = conform.conform_all_with_mappings(_std(spark, rows))
+    assert bundle["company_rejects"].count() == 1
+    assert bundle["reports"].count() == 0
+    reasons = [r["reason"] for r in bundle["report_rejects"].collect()]
     assert any("company rejected" in r for r in reasons)
 
 
 def test_conform_all_elementless_filing_in_both_quarantines(spark):
-    """End-to-end (conform_all): a filing with no cover elements — mixed
+    """End-to-end: a filing with no cover elements — mixed
     into a batch with one healthy filing — must appear in BOTH
     company_rejects and report_rejects and in NEITHER dim table, while its
     batch-mates conform normally (the reference's per-filing transaction
@@ -219,7 +217,7 @@ def test_conform_all_elementless_filing_in_both_quarantines(spark):
     std = standardize.standardize_raw(
         good.unionByName(bad), filing_id_col="filing_id"
     )
-    out = conform.conform_all(std)
+    out = conform.conform_all_with_mappings(std)
     assert out["companies"].count() == 1  # only GOOD
     assert out["reports"].count() == 1
     crej = out["company_rejects"].filter(SF.col("filing_id") == "BAD")
@@ -232,11 +230,9 @@ def test_conform_all_elementless_filing_in_both_quarantines(spark):
 
 
 def test_report_mapping_golden(spark):
-    std = _std(spark, COVER_ROWS)
-    companies, _ = conform.conform_companies(std)
-    reports, rejects = conform.conform_reports(std, companies)
-    assert rejects.count() == 0
-    r = reports.first()
+    bundle = conform.conform_all_with_mappings(_std(spark, COVER_ROWS))
+    assert bundle["report_rejects"].count() == 0
+    r = bundle["reports"].first()
     assert r["document_type"] == "四半期報告書"
     assert r["fiscal_year"] == "2023"
     assert r["quarter_type"] == "Q3"
@@ -251,11 +247,9 @@ def test_report_mapping_invalid_date_quarantined(spark):
                  unit="－", unit_name="－", value="2023/6/31")  # June 31st
         for r in COVER_ROWS
     ]
-    std = _std(spark, rows)
-    companies, _ = conform.conform_companies(std)
-    reports, rejects = conform.conform_reports(std, companies)
-    assert reports.count() == 0
-    assert "invalid fiscal_year_end" in rejects.first()["reason"]
+    bundle = conform.conform_all_with_mappings(_std(spark, rows))
+    assert bundle["reports"].count() == 0
+    assert "invalid fiscal_year_end" in bundle["report_rejects"].first()["reason"]
 
 
 def test_report_mapping_unparsable_period(spark):
@@ -265,11 +259,9 @@ def test_report_mapping_unparsable_period(spark):
                  unit="－", unit_name="－", value="意味のない文字列")
         for r in COVER_ROWS
     ]
-    std = _std(spark, rows)
-    companies, _ = conform.conform_companies(std)
-    reports, rejects = conform.conform_reports(std, companies)
-    assert reports.count() == 0
-    assert "extraction failed" in rejects.first()["reason"]
+    bundle = conform.conform_all_with_mappings(_std(spark, rows))
+    assert bundle["reports"].count() == 0
+    assert "extraction failed" in bundle["report_rejects"].first()["reason"]
 
 
 # ---------------------------------------------------------------------------
@@ -302,10 +294,7 @@ def test_fact_mapping_duration_and_nulls(spark):
         row("jppfs_cor:Assets", value="－", context="CurrentQuarterInstant",
             period="時点"),
     ]
-    std = _std(spark, rows)
-    companies, _ = conform.conform_companies(std)
-    reports, _ = conform.conform_reports(std, companies)
-    facts = conform.conform_facts(std, reports)
+    facts = conform.conform_all_with_mappings(_std(spark, rows))["facts"]
     got = {r["context_id"]: r for r in facts.collect()}
     ns = got["CurrentYTDDuration"]
     assert ns["duration_type"] == "Duration"
@@ -360,7 +349,7 @@ def test_financial_summary_end_to_end(spark):
     std = standardize.standardize_raw(
         f1.unionByName(f2), filing_id_col="filing_id"
     )
-    bundle = conform.conform_all(std)
+    bundle = conform.conform_all_with_mappings(std)
     assert bundle["company_rejects"].count() == 0
     assert bundle["report_rejects"].count() == 0
     # one company (same edinet code in both filings, deduped by key);
@@ -394,7 +383,7 @@ def test_summary_chart_frame_golden(spark):
                                "1000000000", "0", "80000000", "60000000",
                                "jppfs_cor:NetSales"), filing="F2")
     std = standardize.standardize_raw(f2, filing_id_col="filing_id")
-    bundle = conform.conform_all(std)
+    bundle = conform.conform_all_with_mappings(std)
     dto = summary_q.financial_summary(
         bundle["companies"], bundle["reports"], bundle["facts"], bundle["items"]
     )
@@ -418,7 +407,7 @@ def test_summary_priority_coalesce(spark):
                                "500000000", "50000000", "40000000", "30000000",
                                "jppfs_cor:OperatingRevenue1"), filing="F1")
     std = standardize.standardize_raw(f1, filing_id_col="filing_id")
-    bundle = conform.conform_all(std)
+    bundle = conform.conform_all_with_mappings(std)
     dto = summary_q.financial_summary(
         bundle["companies"], bundle["reports"], bundle["facts"], bundle["items"]
     ).first()
@@ -437,7 +426,7 @@ def test_summary_priority_present_null_blocks_fallback(spark):
                    "jppfs_cor:NetSales")
     rows.append(row("jppfs_cor:OperatingRevenue1", value="999999"))
     std = standardize.standardize_raw(raw_df(spark, rows), filing_id_col="filing_id")
-    bundle = conform.conform_all(std)
+    bundle = conform.conform_all_with_mappings(std)
     dto = summary_q.financial_summary(
         bundle["companies"], bundle["reports"], bundle["facts"], bundle["items"]
     ).first()
@@ -518,7 +507,7 @@ def test_item_time_series(spark):
                                "1000000000", "0", "80000000", "60000000",
                                "jppfs_cor:NetSales"), filing="F2")
     std = standardize.standardize_raw(f1.unionByName(f2), filing_id_col="filing_id")
-    bundle = conform.conform_all(std)
+    bundle = conform.conform_all_with_mappings(std)
     company_id = bundle["companies"].first()["company_id"]
     item_id = (
         bundle["items"].filter(F.col("element_id") == "jppfs_cor:NetSales")
@@ -532,8 +521,7 @@ def test_item_time_series(spark):
 
 
 def test_company_selection_list(spark):
-    std = _std(spark, COVER_ROWS)
-    companies, _ = conform.conform_companies(std)
+    companies = conform.conform_all_with_mappings(_std(spark, COVER_ROWS))["companies"]
     got = summary_q.company_selection_list(companies).first()
     assert got["company_name"] == "株式会社　山梨中央銀行"
     assert got["edinet_code"] == "E03562"

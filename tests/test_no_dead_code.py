@@ -9,14 +9,16 @@ such as a registry key or a lazy import still counts as used. An attribute
 of another library does not: ``<alias>.<name>`` is not a use of ``<name>``
 when the file binds ``<alias>`` by importing from outside
 ``ir_analyses_spark`` (``pq.write_table`` names pyarrow's function), and
-a docstring in the defining file is not a use either.
+a comment or docstring, in any file, is not a use either.
 """
 
 from __future__ import annotations
 
 import ast
+import io
 import os
 import re
+import tokenize
 from collections import Counter
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -43,6 +45,8 @@ KEEP = {
     "explains remove_global_duplicate_units' cut (llm/linedup.py)",
     "nfkc_normalize_df": "the full-NFKC tier of llm/textnorm.py, which the "
     "JVM clean_text_expr tier cannot express",
+    "clean_text_sql": "the DuckDB twin of clean_text_df, which "
+    "tests/test_textnorm.py holds clean_text_df to",
 }
 
 
@@ -84,9 +88,10 @@ def _foreign_aliases(source: str) -> set[str]:
     return out
 
 
-def _docstring_lines(source: str) -> set[int]:
-    """1-based numbers of the lines of every docstring in ``source``."""
-    out = set()
+def _code_lines(source: str) -> list[str]:
+    """``source``'s lines with every comment cut off and every docstring
+    line blanked: what is left is what the code names."""
+    docs = set()
     for node in ast.walk(ast.parse(source)):
         body = getattr(node, "body", None)
         if (
@@ -95,8 +100,13 @@ def _docstring_lines(source: str) -> set[int]:
             and isinstance(body[0].value, ast.Constant)
             and isinstance(body[0].value.value, str)
         ):
-            out.update(range(body[0].lineno, body[0].end_lineno + 1))
-    return out
+            docs.update(range(body[0].lineno, body[0].end_lineno + 1))
+    lines = source.split("\n")  # the lines tokenize numbers
+    for tok in tokenize.generate_tokens(io.StringIO(source).readline):
+        if tok.type == tokenize.COMMENT:
+            row, col = tok.start
+            lines[row - 1] = lines[row - 1][:col]
+    return ["" if i in docs else line for i, line in enumerate(lines, 1)]
 
 
 def _named(source: str, aliases: set[str]) -> set[str]:
@@ -110,29 +120,27 @@ def _named(source: str, aliases: set[str]) -> set[str]:
 
 
 def test_every_engine_definition_has_a_caller_outside_tests():
-    sources, aliases, files_naming = {}, {}, {}
+    sources, code, aliases, files_naming = {}, {}, {}, {}
     for path in _py_files():
         with open(path, encoding="utf-8") as fh:
             sources[path] = fh.read()
+        code[path] = _code_lines(sources[path])
         aliases[path] = _foreign_aliases(sources[path])
-        for w in _named(sources[path], aliases[path]):
+        for w in _named("\n".join(code[path]), aliases[path]):
             files_naming.setdefault(w, set()).add(path)
 
     dead = []
     for path, source in sources.items():
         if not path.startswith(PACKAGE + os.sep):
             continue
-        lines = source.splitlines()
-        docs = _docstring_lines(source)
         for name, first, last in _definitions(path, source):
             if name in KEEP:
                 continue
             elsewhere = files_naming.get(name, set()) - {path}
-            # within its own file, only code outside the definition counts:
-            # a docstring that mentions the name does not call it
+            # within its own file, only code outside the definition counts
             rest = "\n".join(
-                line for i, line in enumerate(lines, 1)
-                if not first <= i <= last and i not in docs
+                line for i, line in enumerate(code[path], 1)
+                if not first <= i <= last
             )
             if not elsewhere and name not in _named(rest, aliases[path]):
                 dead.append(f"{os.path.relpath(path, REPO)}:{first} {name}")

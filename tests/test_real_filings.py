@@ -30,7 +30,7 @@ pytestmark = pytest.mark.skipif(
 def real_bundle(spark):
     raw = sources.read_filing_csvs(spark, DOWNLOAD_GLOB)
     std = standardize.standardize_raw(raw, filing_id_col="_filing_path")
-    bundle = conform.conform_all(std)
+    bundle = conform.conform_all_with_mappings(std)
     out = summary_q.financial_summary(
         bundle["companies"], bundle["reports"], bundle["facts"], bundle["items"]
     )
